@@ -1641,7 +1641,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from parallel_louvain_method_spark.sources.corpus import densify
 
     edges, mapping = densify(str_edges)
-    res = louvain(spark, edges, n_blocks=1)
+    res = louvain(spark, edges)
     return (
         res.assignment.join(mapping.withColumnRenamed("new_id", "vtx"), "vtx")
         .select(F.col("name").alias("source"), F.col("comm").alias("community"))
@@ -1736,8 +1736,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # personalized PageRank: uniform teleport over the seed set vtx < 100
     # (the low custkeys), zero elsewhere — exercises the reset path of the
-    # DataFrame engine (ids here are sparse, so the broadcast engine's
-    # dense gate routes around itself; broadcast-engine parity is pinned
+    # DataFrame engine (ids here are sparse, so the barrier engine's
+    # dense gate routes around itself; barrier-engine parity is pinned
     # in pytest)
     def _ppr_k3(s, d):
         sym = G.symmetric_edges(_edges(s, d))
@@ -2038,9 +2038,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # multilevel Louvain to convergence: the gate's ONLY rows-only
     # operator (unbounded levels + coarsening; its algebra is gated by
     # louvain_sweep1 + louvain_coarsen_sweep)
-    q["louvain_communities"] = lambda s, d: louvain(
-        s, _edges(s, d), n_blocks=1
-    ).assignment
+    q["louvain_communities"] = lambda s, d: louvain(s, _edges(s, d)).assignment
     # full LPA run: oracled — at sf0.01 the run executes exactly
     # max_iter=20 rounds (convergence streak never fires), so the rounds
     # unroll into SQL like lpa_k2 (see oracle_sql)

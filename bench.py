@@ -14,8 +14,8 @@ Env:
                       builds always run once — their cache materialization
                       is not re-runnable honestly)
   SPARK_GRAFT_LOUVAIN_ENGINE  superstep engine override (auto|barrier|
-                      numpy_broadcast|sql) — `sql` forces the join-based
-                      at-scale path for scaling measurement
+                      sql) — `sql` forces the join-based at-scale path
+                      for scaling measurement
   SPARK_GRAFT_QUIET_LOAD  1-min loadavg below which the host counts as
                       quiet (default 4.0)
   SPARK_GRAFT_QUIET_WAIT  max seconds to wait for a quiet window before
@@ -301,7 +301,7 @@ def main() -> None:
             extra += 1
         t0 = time.monotonic()
         r = louvain(
-            spark, file_edges, n_blocks=cpus,
+            spark, file_edges,
             n_vertices=nv_file, assume_dense=True,
             superstep_engine=louvain_engine,
         )

@@ -52,14 +52,13 @@ def main(argv: list[str] | None = None) -> int:
     lv.add_argument("--out", required=True)
     lv.add_argument("--checkpoint")
     lv.add_argument("--resume", action="store_true")
-    lv.add_argument("--blocks", type=int, default=32)
     lv.add_argument("--anneal", action="store_true")
     lv.add_argument(
         "--engine",
-        choices=["auto", "barrier", "numpy_broadcast", "sql"],
+        choices=["auto", "barrier", "sql"],
         default="auto",
         help="superstep engine (auto: barrier while dense ids fit memory, "
-        "else sql)",
+        "else sql; sql also when barrier scheduling is unavailable)",
     )
     lv.add_argument(
         "--mode",
@@ -722,7 +721,6 @@ def main(argv: list[str] | None = None) -> int:
         res = louvain(
             spark,
             read_edge_parquet(spark, args.edges),
-            n_blocks=args.blocks,
             anneal=args.anneal,
             checkpoint_dir=args.checkpoint,
             resume=args.resume,
@@ -747,9 +745,8 @@ def main(argv: list[str] | None = None) -> int:
 
         reset = None
         if args.seeds:
-            # dedupe: a repeated seed would otherwise split the teleport
-            # mass across duplicate rows (broadcast engine overwrites,
-            # DataFrame engine duplicates output rows)
+            # dedupe: both engines reject a reset table that names a
+            # vertex twice
             seeds = sorted(
                 {int(v) for v in args.seeds.split(",") if v.strip()}
             )

@@ -6,9 +6,9 @@ built by ``Graph::sparsify`` /root/reference/src/graph.cpp:51-63) and runs the
 Louvain local-move sweep as a sequential scan over vertices
 (/root/reference/src/community.cpp:64-102).  These kernels reproduce that
 behavior bit-for-bit where the golden tests pin it, and are invoked from
-Spark via ``applyInPandas`` over Arrow batches (one call per partition
-block).  Keeping them free of any Spark import makes them unit-testable in
-microseconds.
+the engines in operators/louvain.py: in the driver for local levels, and
+once per barrier task for superstep levels.  Keeping them free of any
+Spark import makes them unit-testable in microseconds.
 
 Semantics pinned by the reference (see SURVEY.md §1.5, §2.4):
 
@@ -295,8 +295,8 @@ def _vectorized_moves(
     # reproduces the reference's best_increase = 0.0 init
     # (src/community.cpp:108, src/distcommunity.cpp:551): a vertex never
     # moves INTO a negative-gain community, even when staying scores worse —
-    # matching the sequential kernels here (louvain_sequential,
-    # louvain_block_moves), which start their argmax at 0.  min_gain is the
+    # matching the sequential kernel here (louvain_sequential), which
+    # starts its argmax at 0.  min_gain is the
     # anneal temperature margin (A4, src/distcommunity.cpp:549-562);
     # min_gain == 0 reduces to the reference's plain strict >.
     base = np.maximum(gain_own, 0.0) + min_gain
@@ -308,113 +308,6 @@ def _vectorized_moves(
     bs, bc, bpos = bs[o2], bc[o2], bpos[o2]
     first = np.concatenate(([True], bs[1:] != bs[:-1]))
     return bpos[first], bc[first]
-
-
-def louvain_block_local(
-    src: np.ndarray,
-    src_comm: np.ndarray,
-    src_deg: np.ndarray,
-    dst: np.ndarray,
-    dst_comm: np.ndarray,
-    weight: np.ndarray,
-    tot_src: np.ndarray,
-    tot_dst: np.ndarray,
-    m2: float,
-    min_gain: float = 0.0,
-    max_inner: int = 20,
-    seed: int = 0,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Run a partition block to LOCAL convergence (ghost-freezing Louvain).
-
-    The block owns every vertex appearing as ``src``; neighbors outside the
-    block keep their sweep-start communities (ghosts).  Inside the block,
-    vertices move repeatedly — community totals are updated by local deltas
-    and in-block neighbors see each other's new communities — until an
-    inner pass moves nothing.  Inner passes alternate pseudo-random active
-    halves (seeded by ``seed``) to avoid internal synchronous oscillation.
-
-    This collapses most of the convergence into one Spark superstep: the
-    classic distributed-Louvain design the reference approximates with its
-    per-vertex MPI protocol (src/distcommunity.cpp:212-385), re-expressed
-    as a vectorized numpy kernel per Arrow batch.
-
-    Returns (vertices, new_comms) for all block vertices.
-    """
-    if len(src) == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-
-    # block vertex table (sorted unique src)
-    v_order = np.argsort(src, kind="stable")
-    flags = np.concatenate(([True], src[v_order][1:] != src[v_order][:-1]))
-    v_first = v_order[flags]
-    v_ids = src[v_first]
-    v_comm = src_comm[v_first].copy()
-    v_deg = src_deg[v_first].astype(np.float64)
-
-    # community-total table: union of communities seen on either side
-    all_comm = np.concatenate([src_comm, dst_comm])
-    all_tot = np.concatenate([tot_src, tot_dst]).astype(np.float64)
-    c_ids, c_first = np.unique(all_comm, return_index=True)
-    c_tot = all_tot[c_first].copy()
-
-    def comm_index(c):
-        return np.searchsorted(c_ids, c)
-
-    # COO with self-loops excluded; classify dst as in-block or ghost
-    keep = src != dst
-    s = src[keep]
-    d = dst[keep]
-    w = weight[keep].astype(np.float64)
-    # structural row->block-position maps, ONCE per call (not per inner
-    # pass): searchsorted costs ~600 ns/row on this host, so it must never
-    # sit inside the pass loop
-    s_pos = np.searchsorted(v_ids, s)
-    d_pos = np.searchsorted(v_ids, d)
-    d_pos = np.clip(d_pos, 0, len(v_ids) - 1)
-    d_in_block = v_ids[d_pos] == d
-    ghost_comm = dst_comm[keep]  # frozen for ghosts
-
-    zero_streak = 0
-    for inner in range(max_inner):
-        # current neighbor communities: live for in-block dsts, frozen ghosts
-        c_now = np.where(d_in_block, v_comm[d_pos], ghost_comm)
-        # hashed active halves on EVERY pass — a full synchronous first pass
-        # makes singleton neighbors pair-swap en masse (verified on the
-        # golden fixture: Q drops below the singleton baseline)
-        h = (v_ids * np.int64(0x9E3779B9) + np.int64(seed * 1315423911 + inner)) & np.int64(0x7FFFFFFF)
-        active = (h >> 13) & 1 == 0
-        mover_pos, mover_comm = _vectorized_moves(
-            s_pos,
-            c_now,
-            w,
-            v_comm,
-            v_deg,
-            lambda cc: c_tot[comm_index(cc)],
-            m2,
-            min_gain,
-            active=active,
-        )
-        if len(mover_pos) == 0:
-            # each pass activates an independent pseudo-random half, so
-            # three mover-free passes in a row leave any still-movable
-            # vertex a <=1/8 chance of having been missed
-            zero_streak += 1
-            if zero_streak >= 3:
-                break
-            continue
-        zero_streak = 0
-        # apply moves + update local totals (new communities must exist in
-        # c_ids — a move target is always some neighbor's community)
-        old_c = v_comm[mover_pos]
-        np.subtract.at(c_tot, comm_index(old_c), v_deg[mover_pos])
-        np.add.at(c_tot, comm_index(mover_comm), v_deg[mover_pos])
-        v_comm[mover_pos] = mover_comm
-        # near-converged block: the outer superstep loop will pick up the
-        # stragglers with fresh ghosts — inner passes past this point cost
-        # a full groupby-sort each for almost no movement
-        if inner >= 2 and len(mover_pos) <= max(1, len(v_ids) // 500):
-            break
-    return v_ids, v_comm
 
 
 class DenseBlockPrep(NamedTuple):
@@ -473,12 +366,11 @@ def louvain_block_local_dense(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Block-local-convergence kernel for DENSE global state arrays.
 
-    The broadcast-state superstep ships ``comm_arr`` / ``deg_arr`` /
-    ``tot_arr`` indexed directly by vertex/community id, so every totals
-    lookup is a vectorized gather instead of a binary search into a sorted
-    community table — profiling shows `searchsorted` into a 10^6-entry
-    table costs ~400 ms per megarow pass vs ~20 ms for direct indexing,
-    making this ~4x the general kernel (:func:`louvain_block_local`).
+    The barrier engine holds ``comm_arr`` / ``deg_arr`` / ``tot_arr``
+    indexed directly by vertex/community id, so every totals lookup is a
+    vectorized gather instead of a binary search into a sorted community
+    table — profiling shows `searchsorted` into a 10^6-entry table costs
+    ~400 ms per megarow pass vs ~20 ms for direct indexing.
 
     ``pre`` (optional): the block's :class:`DenseBlockPrep`, for callers
     that run MANY sweeps over the same block (the barrier engine) — the
@@ -657,97 +549,3 @@ def louvain_vectorized_edges(
             if zero_streak >= 3:
                 break
     return ids, ids[best_comm], sweeps, best_q, improved
-
-
-def louvain_block_moves_vectorized(
-    src: np.ndarray,
-    src_comm: np.ndarray,
-    src_deg: np.ndarray,
-    dst: np.ndarray,
-    dst_comm: np.ndarray,
-    weight: np.ndarray,
-    tot_src: np.ndarray,
-    tot_dst: np.ndarray,
-    m2: float,
-    min_gain: float = 0.0,
-) -> tuple[np.ndarray, np.ndarray]:
-    """ONE synchronous vectorized move pass over a partition block.
-
-    gain(v, c) = w(v→c) − (tot[c] − deg(v)·[c = comm(v)]) · deg(v) / m2
-    — the reference's formula after removal (src/community.cpp:151-159),
-    strict > against the stay-home gain (candidate order: current community
-    first, src/community.cpp:106-118).  Equivalent to
-    :func:`louvain_block_local` with ``max_inner=1``; kept as the
-    single-pass kernel option.  Returns (vertices, new_comms).
-    """
-    return louvain_block_local(
-        src, src_comm, src_deg, dst, dst_comm, weight,
-        tot_src, tot_dst, m2, min_gain, max_inner=1,
-    )
-
-
-def louvain_block_moves(
-    src: np.ndarray,
-    src_comm: np.ndarray,
-    src_deg: np.ndarray,
-    dst: np.ndarray,
-    dst_comm: np.ndarray,
-    weight: np.ndarray,
-    tot_by_comm: dict[int, float],
-    m2: float,
-    min_gain: float = 0.0,
-) -> tuple[np.ndarray, np.ndarray]:
-    """One sequential local-move sweep over a partition block.
-
-    Input is the block's adjacency in COO form, sorted by src: one row per
-    (src, dst) with the *current global* community of both endpoints and the
-    current global community totals for every community touched by the block
-    (``tot_by_comm``).  Vertices outside the block are frozen (their
-    communities are read, never written) — the Spark superstep re-joins and
-    re-aggregates globally between sweeps, so staleness is bounded by one
-    sweep, replacing the reference's per-vertex MPI barrier protocol
-    (src/distcommunity.cpp:212-385) with bulk-synchronous rounds.
-
-    Community totals are updated locally as vertices move, so moves within a
-    block observe each other (the reference's sequential property, per
-    block).  Returns ``(vertices, new_comms)`` for the block's vertices.
-    """
-    # (src, dst) sort reproduces the reference's sorted-adjacency candidate
-    # order (std::set, src/graph.h:25), which the strict-> argmax tie-break
-    # depends on
-    order = np.lexsort((dst, src))
-    src, src_comm, src_deg = src[order], src_comm[order], src_deg[order]
-    dst, dst_comm, weight = dst[order], dst_comm[order], weight[order]
-
-    uniq, starts = np.unique(src, return_index=True)
-    bounds = np.append(starts, len(src))
-    tot = dict(tot_by_comm)
-    comm_of: dict[int, int] = {}  # moved-this-sweep overrides (block-local)
-    n_vtx = len(uniq)
-    out_v = np.empty(n_vtx, dtype=np.int64)
-    out_c = np.empty(n_vtx, dtype=np.int64)
-
-    for i in range(n_vtx):
-        node = int(uniq[i])
-        lo, hi = bounds[i], bounds[i + 1]
-        nc = comm_of.get(node, int(src_comm[lo]))
-        d_node = float(src_deg[lo])
-        w_to: dict[int, float] = {nc: 0.0}
-        for j in range(lo, hi):
-            nb = int(dst[j])
-            if nb == node:
-                continue
-            c = comm_of.get(nb, int(dst_comm[j]))
-            w_to[c] = w_to.get(c, 0.0) + float(weight[j])
-        tot[nc] = tot.get(nc, d_node) - d_node
-        # beat-by-margin acceptance (min_gain == 0 -> plain strict >)
-        best_c, best_inc = nc, 0.0
-        for c, dnc in w_to.items():
-            inc = dnc - tot.get(c, 0.0) * d_node / m2
-            if inc > best_inc + min_gain:
-                best_c, best_inc = c, inc
-        tot[best_c] = tot.get(best_c, 0.0) + d_node
-        comm_of[node] = best_c
-        out_v[i] = node
-        out_c[i] = best_c
-    return out_v, out_c

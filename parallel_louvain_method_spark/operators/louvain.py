@@ -8,15 +8,15 @@ an immutable edge table, with community totals recomputed by aggregation
 recompute is order-free and shuffle-parallel) and a zero-move sweep as the
 convergence signal (src/community.cpp:98).
 
-A level picks one of five execution strategies by size:
+A level picks one of three execution strategies:
 
-1. **local/sequential** (≤ ``sequential_threshold`` sym rows): one
-   ``applyInPandas`` task runs the reference-exact CSR kernel — ascending
-   visit order, strict-> argmax, current-community-first tie break — the
-   semantics the golden tests pin (tests/main_test.cpp:64-81);
-2. **local/vectorized** (≤ ``local_threshold``): one task, whole-graph
+1. **local** (≤ ``local_threshold`` symmetric rows): the whole level runs
+   in the driver — ``local/sequential`` (≤ ``sequential_threshold``) is
+   the reference-exact CSR kernel — ascending visit order, strict-> argmax,
+   current-community-first tie break — the semantics the golden tests pin
+   (tests/main_test.cpp:64-81); ``local/vectorized`` is the whole-graph
    numpy loop;
-3. **superstep/barrier** (the production default while vertex ids are
+2. **superstep/barrier** (the production default while vertex ids are
    dense 0..n-1 and per-vertex state fits executor memory,
    ``broadcast_vertex_threshold``): the WHOLE level runs inside one Spark
    barrier stage — each task holds its src-partition's packed adjacency in
@@ -27,12 +27,9 @@ A level picks one of five execution strategies by size:
    MPI protocol (src/distcommunity.cpp:212-385), with the barrier
    scheduler replacing MPI_Barrier and allGather replacing its
    communicate-deltas rounds;
-4. **superstep/numpy_broadcast** (fallback when barrier scheduling is
-   unavailable): per-vertex state ships as numpy broadcast arrays, one
-   ``mapInPandas`` pass per sweep, movers-only Arrow collect.  Same kernel
-   as (3) but re-pays the edge-table transfer every sweep;
-5. **superstep/sql** (auto-selected past the broadcast threshold or on
-   sparse ids): every sweep is PURE DataFrame algebra — the small
+3. **superstep/sql** (auto-selected past the broadcast threshold or on
+   sparse ids, and the fallback whenever barrier scheduling is
+   unavailable): every sweep is PURE DataFrame algebra — the small
    assignment/degree/totals tables broadcast-hash-join onto the edges,
    candidate weights aggregate with map-side partials, the gain/argmax
    runs as codegen'd expressions.  The edge table never moves; one
@@ -70,7 +67,7 @@ from parallel_louvain_method_spark.operators.graph import (
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 ASSIGN_SCHEMA = "vtx long, comm long"
-PROPOSAL_SCHEMA = "vtx long, comm long, moved int"
+SUPERSTEP_ENGINES = ("auto", "barrier", "sql")
 
 # one probe per SparkContext: can this cluster schedule a barrier stage at
 # all?  (local[N] always can; a dynamic-allocation cluster cannot, and its
@@ -110,6 +107,14 @@ def _barrier_supported(sc) -> bool:
     return _BARRIER_PROBED[key]
 
 
+def _reset_sweep_stats(stats: "LevelStats") -> None:
+    """Forget a failed barrier attempt's sweeps before the level reruns."""
+    stats.moves_per_sweep.clear()
+    stats.sweeps = 0
+    stats.phase_crit.clear()
+    stats.phase_sum.clear()
+
+
 @dataclass
 class LevelStats:
     level: int
@@ -125,7 +130,7 @@ class LevelStats:
     modularity: float = float("nan")
     wall_sec: float = 0.0
     # which execution strategy actually ran the level ("local/sequential",
-    # "local/vectorized", "barrier", "numpy_broadcast", "sql", "block/..."):
+    # "local/vectorized", "barrier", "sql"):
     # audit telemetry — a resumed/checkpointed run shows which path produced
     # each level, and the auto-cutover (barrier -> sql past the broadcast
     # threshold) becomes a testable seam instead of an invisible branch
@@ -221,269 +226,6 @@ def modularity_df(
     return float(row["q"]) if row["q"] is not None else 0.0
 
 
-def _make_block_udf(m2: float, min_gain: float, kernel: str = "local", sweep: int = 0):
-    def block_moves(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "vtx": pd.Series(dtype="int64"),
-                    "comm": pd.Series(dtype="int64"),
-                    "moved": pd.Series(dtype="int32"),
-                }
-            )
-        if kernel in ("local", "vectorized"):
-            out_v, out_c = kernels.louvain_block_local(
-                pdf["src"].to_numpy(),
-                pdf["src_comm"].to_numpy(),
-                pdf["src_deg"].to_numpy(),
-                pdf["dst"].to_numpy(),
-                pdf["dst_comm"].to_numpy(),
-                pdf["weight"].to_numpy(),
-                pdf["tot_src"].to_numpy(),
-                pdf["tot_dst"].to_numpy(),
-                m2,
-                min_gain,
-                max_inner=20 if kernel == "local" else 1,
-                seed=sweep,
-            )
-        else:  # "sequential": reference semantics within the block
-            tot_by_comm: dict[int, float] = {}
-            for c, t in zip(pdf["dst_comm"].to_numpy(), pdf["tot_dst"].to_numpy()):
-                tot_by_comm[int(c)] = float(t)
-            for c, t in zip(pdf["src_comm"].to_numpy(), pdf["tot_src"].to_numpy()):
-                tot_by_comm[int(c)] = float(t)
-            out_v, out_c = kernels.louvain_block_moves(
-                pdf["src"].to_numpy(),
-                pdf["src_comm"].to_numpy(),
-                pdf["src_deg"].to_numpy(),
-                pdf["dst"].to_numpy(),
-                pdf["dst_comm"].to_numpy(),
-                pdf["weight"].to_numpy(),
-                tot_by_comm,
-                m2,
-                min_gain,
-            )
-        # moved flag: compare against the sweep-start community (first row
-        # per src — pdf is the block's full adjacency)
-        start = (
-            pdf[["src", "src_comm"]]
-            .drop_duplicates("src")
-            .set_index("src")["src_comm"]
-        )
-        moved = (start.reindex(out_v).to_numpy() != out_c).astype("int32")
-        return pd.DataFrame({"vtx": out_v, "comm": out_c, "moved": moved})
-
-    return block_moves
-
-
-def _broadcast_superstep_level(
-    spark: SparkSession,
-    sym_edges: DataFrame,
-    m2: float,
-    n_vertices: int,
-    max_sweeps: int,
-    anneal: bool,
-    stats: LevelStats,
-    min_moves_frac: float,
-) -> tuple[DataFrame, DataFrame]:
-    """Superstep loop with BROADCAST vertex state (the mid-scale fast path).
-
-    While per-vertex state (community, degree, community totals — ~24 bytes
-    per vertex) fits executor memory, shipping it as numpy broadcast arrays
-    removes BOTH per-sweep shuffles: the edge table is partitioned by src
-    once and never moves again; each sweep is one ``mapInPandas`` pass over
-    the cached partitions plus an Arrow collect of MOVERS ONLY (~16 B per
-    moved vertex — the mover set decays geometrically after sweep 0, so the
-    serial driver cost shrinks with convergence).  Sweep cost becomes pure
-    parallel kernel compute — this is what makes core-count scaling
-    visible.  Beyond ~10^8 vertices the join-based sql engine (see the
-    caller) takes over; on a real cluster the driver is the reduce point of
-    this path, which is exactly why the cutover threshold exists — it is
-    the same broadcast-vs-shuffle-join decision Catalyst makes for
-    dimension tables.
-
-    Requires DENSE vertex ids 0..n-1 (the caller renumbers level 0; coarsen
-    guarantees it afterwards).  Returns ``(assign, deg)``.
-
-    Transport layout: ids cast to int32 (the engine only runs below the
-    2^31 vertex threshold) — 16 B/row instead of 24.  Weights stay
-    float64: on COARSE levels they are community-internal sums that exceed
-    float32's exact-integer range (2^24) long before the vertex gate, and
-    the 1e-6 modularity guarantee must hold at every level.
-    """
-    import numpy as np
-
-    sc = spark.sparkContext
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges_p = (
-        sym_edges.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-            F.col("weight").cast("double").alias("weight"),
-        )
-        .repartition(n_parts, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    # warm-up pass INSTEAD of a count(): materializes the cache through the
-    # same Python/Arrow path the sweeps use, so sweep 0 doesn't pay worker
-    # fork + numpy import + first Arrow conversion (~10 s measured at sf0.1
-    # on a cold 32-core session — the single biggest serial cost of the
-    # level before this)
-    def _warm(batches):
-        import pandas as _pd
-        from parallel_louvain_method_spark.functions import kernels as _k  # noqa: F401
-        n = 0
-        for b in batches:
-            n += len(b)
-        yield _pd.DataFrame({"n": [n]})
-
-    n_rows = int(
-        edges_p.mapInPandas(_warm, schema="n long").agg(F.sum("n")).first()[0] or 0
-    )
-    if stats.n_edges_sym == 0:
-        stats.n_edges_sym = n_rows
-
-    # weighted degrees from the src-partitioned cache: the aggregation's
-    # grouping key matches the cached outputPartitioning, so this is a
-    # map-side-only pass — no second shuffle of the edge table
-    deg = edges_p.groupBy(F.col("src").alias("vtx")).agg(
-        F.sum(F.col("weight").cast("double")).alias("degree")
-    )
-    deg_pdf = deg.toPandas().astype({"vtx": "int64"})
-    deg_arr = np.zeros(n_vertices, dtype=np.float64)
-    deg_arr[deg_pdf["vtx"].to_numpy()] = deg_pdf["degree"].to_numpy()
-    comm_arr = np.arange(n_vertices, dtype=np.int64)
-    deg_bc = sc.broadcast(deg_arr)
-
-    best_moves = float("inf")
-    best_sweep = -1
-    for sweep in range(max_sweeps):
-        min_gain = math.exp(-(sweep + 1)) if anneal else 0.0
-        tot_arr = np.bincount(comm_arr, weights=deg_arr, minlength=n_vertices)
-        state_bc = sc.broadcast((comm_arr, tot_arr))
-        sweep_no = sweep
-
-        def run(batches, _state=state_bc, _deg=deg_bc, _m2=m2, _mg=min_gain, _sw=sweep_no):
-            # mapInArrow, not mapInPandas: this engine pays the JVM→Python
-            # conversion EVERY sweep, and the pandas Series wrapper was
-            # measured at ~2× the raw Arrow→numpy cost (same finding as the
-            # barrier engine's pack step)
-            import numpy as _np
-            import pyarrow as _pa
-
-            ss, dd, ww = [], [], []
-            for b in batches:
-                ss.append(b.column(0).to_numpy(zero_copy_only=False))
-                dd.append(b.column(1).to_numpy(zero_copy_only=False))
-                ww.append(b.column(2).to_numpy(zero_copy_only=False))
-            if not ss:
-                yield _pa.RecordBatch.from_pydict(
-                    {
-                        "vtx": _np.empty(0, _np.int64),
-                        "comm": _np.empty(0, _np.int64),
-                        "moved": _np.empty(0, _np.int32),
-                    }
-                )
-                return
-            s = _np.concatenate(ss)
-            d = _np.concatenate(dd)
-            w = _np.concatenate(ww)
-            comm, tot = _state.value
-            degv = _deg.value
-            out_v, out_c = kernels.louvain_block_local_dense(
-                s, d, w, comm, degv, tot, _m2, _mg, max_inner=6, seed=_sw,
-            )
-            # ship MOVERS ONLY back to the driver: after sweep 0 the mover
-            # set decays geometrically, so the Arrow collect (the one serial
-            # cost of this engine) shrinks with it instead of staying
-            # O(n_vertices) every sweep
-            keep = comm[out_v] != out_c
-            out_v, out_c = out_v[keep], out_c[keep]
-            yield _pa.RecordBatch.from_pydict(
-                {
-                    "vtx": out_v.astype("int64"),
-                    "comm": out_c.astype("int64"),
-                    "moved": _np.ones(len(out_v), dtype="int32"),
-                }
-            )
-
-        t_sw = time.monotonic()
-        proposals = edges_p.mapInArrow(run, schema=PROPOSAL_SCHEMA).toPandas()
-        state_bc.destroy()
-        if os.environ.get("PLM_DEBUG_SWEEPS"):
-            print(
-                f"[louvain] sweep {sweep}: map+collect "
-                f"{time.monotonic() - t_sw:.1f}s movers={len(proposals)}",
-                file=sys.stderr,
-                flush=True,
-            )
-        moves = len(proposals)
-        comm_arr = comm_arr.copy()
-        comm_arr[proposals["vtx"].to_numpy()] = proposals["comm"].to_numpy()
-        stats.moves_per_sweep.append(moves)
-        stats.sweeps = sweep + 1
-
-        if moves == 0:
-            # full active sets + locally-converged blocks: a zero-move
-            # superstep is a global fixed point
-            break
-        threshold = int(min_moves_frac * n_vertices)
-        if sweep > 0 and threshold > 0 and moves <= threshold:
-            break
-        if sweep > 0 and moves >= 50 and moves >= 0.9 * stats.moves_per_sweep[-2]:
-            break
-        if moves < best_moves:
-            best_moves, best_sweep = moves, sweep
-        elif sweep - best_sweep >= 8:
-            break
-
-    # level modularity with ONE scalar pass over the still-cached edges:
-    # Q = W_internal/m2 − Σ_c (tot[c]/m2)².  The first term is LINEAR in the
-    # internal symmetric weight, so each partition returns one float — no
-    # joins, no per-community rows over the wire.  tot comes from the
-    # driver-side state (self-loop rows count once, the engine convention).
-    final_bc = sc.broadcast(comm_arr)
-
-    def _internal_w(batches, _c=final_bc):
-        import pandas as _pd
-        comm = _c.value
-        tot_w = 0.0
-        for b in batches:
-            s = b["src"].to_numpy()
-            d = b["dst"].to_numpy()
-            same = comm[s] == comm[d]
-            tot_w += float(b["weight"].to_numpy()[same].sum())
-        yield _pd.DataFrame({"w": [tot_w]})
-
-    w_int = float(
-        edges_p.mapInPandas(_internal_w, schema="w double")
-        .agg(F.sum("w"))
-        .first()[0]
-        or 0.0
-    )
-    tot_final = np.bincount(comm_arr, weights=deg_arr, minlength=n_vertices)
-    stats.modularity = float(
-        w_int / m2 - np.sum((tot_final[tot_final > 0] / m2) ** 2)
-    )
-    final_bc.destroy()
-
-    deg_bc.destroy()
-    edges_p.unpersist()
-    assign_pdf = __import__("pandas").DataFrame(
-        {"vtx": np.arange(n_vertices, dtype=np.int64), "comm": comm_arr}
-    )
-    assign = spark.createDataFrame(assign_pdf, schema=ASSIGN_SCHEMA).localCheckpoint(
-        eager=True
-    )
-    # deg re-materialized as a plain DataFrame for the caller (tiny: one
-    # row per vertex, already on the driver)
-    deg_out = spark.createDataFrame(
-        deg_pdf, schema="vtx long, degree double"
-    ).localCheckpoint(eager=True)
-    return assign, deg_out
-
-
 def _barrier_superstep_level(
     spark: SparkSession,
     sym_edges: DataFrame,
@@ -498,11 +240,11 @@ def _barrier_superstep_level(
 ) -> tuple[DataFrame, DataFrame]:
     """Whole-level barrier execution: ALL sweeps inside ONE Spark stage.
 
-    The measured bottleneck of per-sweep ``mapInPandas`` (the
-    ``numpy_broadcast`` engine) is not the kernel — it is Spark re-reading
-    the cached edge table and re-serializing it JVM→Arrow→Python EVERY
-    sweep (the kernel itself scales at ~1.0 efficiency 8→32 processes;
-    tools/kernel_scaling.py).  This engine pays the transfer ONCE: each
+    The measured bottleneck of a per-sweep ``mapInPandas`` pass is not the
+    kernel — it is Spark re-reading the cached edge table and
+    re-serializing it JVM→Arrow→Python EVERY sweep (the kernel itself
+    scales at ~1.0 efficiency 8→32 processes; tools/kernel_scaling.py).
+    This engine pays the transfer ONCE: each
     src-partition's adjacency is packed into a single numpy blob, and a
     barrier stage (``RDD.barrier().mapPartitions``) holds it in worker
     memory for the whole level, exchanging per-sweep MOVER DELTAS through
@@ -522,8 +264,7 @@ def _barrier_superstep_level(
 
     Cluster requirement (standard for barrier mode): one concurrent slot
     per partition; partition count is capped at ``defaultParallelism``.
-    Requires DENSE ids 0..n-1, like the broadcast engine.  Returns
-    ``(assign, deg)``.
+    Requires DENSE ids 0..n-1.  Returns ``(assign, deg)``.
 
     ``force_allgather=True`` skips the TCP setup entirely and syncs every
     sweep over ``ctx.allGather`` — the retry path after a mid-level
@@ -1435,7 +1176,6 @@ def _sql_sweep_loop(
 def louvain_level(
     spark: SparkSession,
     sym_edges: DataFrame,
-    n_blocks: int = 1,
     m2: float | None = None,
     max_sweeps: int = 100,
     anneal: bool = False,
@@ -1443,7 +1183,6 @@ def louvain_level(
     mode: str = "auto",
     local_threshold: int = 1_500_000,
     sequential_threshold: int = 150_000,
-    kernel: str = "local",
     min_moves_frac: float = 0.001,
     broadcast_vertex_threshold: int = 20_000_000,
     barrier_rows_per_task: int = 12_000_000,
@@ -1475,26 +1214,32 @@ def louvain_level(
     partitioning.  Direct callers may omit them.
 
     ``mode``:
-    - ``"superstep"`` — bulk-synchronous supersteps: one shuffle join +
-      block kernel per superstep (the at-scale path).  ``kernel`` picks the
-      block kernel: ``"local"`` (default — each block runs to LOCAL
-      convergence against frozen ghosts, collapsing most convergence into
-      2-4 supersteps), ``"vectorized"`` (one synchronous pass per
-      superstep), or ``"sequential"`` (reference per-vertex semantics
-      within the block);
-    - ``"local"`` — the whole level runs to convergence inside ONE
-      ``applyInPandas`` call.  Below ``sequential_threshold`` symmetric
-      rows it uses the reference-sequential kernel (ascending visit order —
-      the golden-test semantics); above, the whole-graph vectorized numpy
-      loop.  One Spark job per level — per-job overhead dominates below
+    - ``"superstep"`` — bulk-synchronous supersteps on the engine that
+      ``superstep_engine`` names: ``"barrier"`` (whole level in one barrier
+      stage; needs dense ids and per-vertex state under
+      ``broadcast_vertex_threshold``), ``"sql"`` (pure DataFrame sweeps),
+      or ``"auto"`` (barrier while it fits and no task holds more than
+      ``barrier_rows_per_task`` rows, else sql).  Whenever the barrier
+      engine does not fit or cannot be scheduled the level runs on sql; a
+      worker-side error inside the barrier stage propagates;
+    - ``"local"`` — the whole level runs to convergence in the driver.
+      Below ``sequential_threshold`` symmetric rows it uses the
+      reference-sequential kernel (ascending visit order — the
+      golden-test semantics); above, the whole-graph vectorized numpy
+      loop.  No Spark job per sweep — per-job overhead dominates below
       ~10^6 edges, and coarsening shrinks every real graph into this regime
       after a level or two;
     - ``"auto"`` — local iff the symmetric table has ≤ ``local_threshold``
       rows.
     """
+    if superstep_engine not in SUPERSTEP_ENGINES:
+        raise ValueError(
+            f"superstep_engine must be one of {SUPERSTEP_ENGINES}, "
+            f"got {superstep_engine!r}"
+        )
     t0 = time.monotonic()
     spark_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", str(n_blocks))
+        spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
     if n_vertices_hint is not None and dense_hint is not None:
         # hinted path: ONE count+sum scan for m2 + row count; no degree
@@ -1590,10 +1335,10 @@ def louvain_level(
 
     # Engine auto-selection (the same broadcast-vs-shuffle decision Catalyst
     # makes for dimension tables): while per-vertex state fits executor
-    # memory AND ids are dense 0..n-1, the broadcast-state engine removes
-    # BOTH per-sweep shuffles and collapses convergence into ~4 supersteps
-    # (measured ~3x the sql engine at sf0.1); past the threshold, or on
-    # sparse ids, the sql engine's broadcast-join sweeps take over.
+    # memory AND ids are dense 0..n-1, the barrier engine holds the level
+    # in worker memory and collapses convergence into a few supersteps;
+    # past the threshold, or on sparse ids, the sql engine's
+    # broadcast-join sweeps take over.
     #
     # Second gate, PER-TASK adjacency size: a barrier task materializes its
     # whole src-partition's adjacency in worker memory (that is the point —
@@ -1605,7 +1350,7 @@ def louvain_level(
     # cluster: more executors → smaller slices → barrier stays viable, the
     # same "fits in executor memory" rule as the vertex threshold.
     engine = superstep_engine
-    if engine in ("auto", "barrier", "numpy_broadcast"):
+    if engine in ("auto", "barrier"):
         fits = is_dense and n_vertices <= broadcast_vertex_threshold
         if engine == "auto":
             n_parts_eff = max(
@@ -1614,10 +1359,7 @@ def louvain_level(
             fits = fits and (
                 n_edges_sym / n_parts_eff <= barrier_rows_per_task
             )
-        if not fits:
-            engine = "sql" if engine == "auto" else "block"
-        elif engine == "auto":
-            engine = "barrier"
+        engine = "barrier" if fits else "sql"
 
     if engine == "barrier" and not _barrier_supported(spark.sparkContext):
         # cheap upfront probe (once per SparkContext): a cluster that cannot
@@ -1625,18 +1367,18 @@ def louvain_level(
         # must not pay the pack + slot-check retry loop on the real job
         print(
             "[louvain] barrier scheduling unavailable (probe failed); "
-            "using numpy_broadcast",
+            "using sql",
             file=sys.stderr,
         )
-        engine = "numpy_broadcast"
+        engine = "sql"
 
     if engine == "barrier":
         # whole level in ONE barrier stage, mover deltas via allGather —
-        # falls back to the per-sweep broadcast engine ONLY for barrier
-        # SCHEDULING failures.  A worker-side Python error (kernel or data
-        # bug) carries its traceback in the Spark message and MUST
-        # propagate: silently rerunning it on numpy_broadcast would mask
-        # real defects and double wall time.
+        # falls back to the sql engine ONLY for barrier SCHEDULING
+        # failures.  A worker-side Python error (kernel or data bug)
+        # carries its traceback in the Spark message and MUST propagate:
+        # silently rerunning it on sql would mask real defects and double
+        # wall time.
         try:
             assign, deg = _barrier_superstep_level(
                 spark, sym_edges, m2, n_vertices,
@@ -1657,10 +1399,7 @@ def louvain_level(
                     "the level over coordinator allGather",
                     file=sys.stderr,
                 )
-                stats.moves_per_sweep.clear()
-                stats.sweeps = 0
-                stats.phase_crit.clear()
-                stats.phase_sum.clear()
+                _reset_sweep_stats(stats)
                 assign, deg = _barrier_superstep_level(
                     spark, sym_edges, m2, n_vertices,
                     max_sweeps, anneal, stats, min_moves_frac,
@@ -1674,24 +1413,10 @@ def louvain_level(
                 raise  # kernel/data bug inside the stage — surface it
             print(
                 f"[louvain] barrier engine unavailable ({exc!r}); "
-                "falling back to numpy_broadcast",
+                "falling back to sql",
                 file=sys.stderr,
             )
-            stats.moves_per_sweep.clear()
-            stats.sweeps = 0
-            engine = "numpy_broadcast"
-
-    if engine == "numpy_broadcast":
-        # the helper owns partitioning (by src), warm-up, the degree table
-        # (map-side over its own cache), and the level's modularity (one
-        # scalar pass over the cached edges before they unpersist)
-        assign, deg = _broadcast_superstep_level(
-            spark, sym_edges, m2, n_vertices,
-            max_sweeps, anneal, stats, min_moves_frac,
-        )
-        stats.engine = "numpy_broadcast"
-        stats.wall_sec = time.monotonic() - t0
-        return assign, deg, m2, stats
+            _reset_sweep_stats(stats)
 
     # pre-partition by dst: the per-sweep assignment join hits dst, and a
     # cached repartition exposes its outputPartitioning to the planner so
@@ -1710,143 +1435,25 @@ def louvain_level(
     # pure-SQL supersteps: broadcast-hash-join the small state onto the
     # edges, codegen'd gain/argmax, one partial-agg shuffle per sweep —
     # the edge table never moves and no Python touches it
-    if engine == "sql":
-        t_loop = time.monotonic()
-        assign = _sql_superstep_level(
-            spark, sym_edges, deg, m2, n_vertices,
-            max_sweeps, anneal, stats, min_moves_frac,
-            unique_pairs=unique_pairs, skew_salt=skew_salt,
-        )
-        stats.engine = "sql"
-        t_q = time.monotonic()
-        stats.modularity = modularity_df(sym_edges, assign, deg, m2)
-        if os.environ.get("PLM_DEBUG_SWEEPS"):
-            print(
-                f"[louvain/sql] level {level_no}: setup "
-                f"{t_loop - t0:.1f}s loop {t_q - t_loop:.1f}s "
-                f"modularity {time.monotonic() - t_q:.1f}s",
-                file=sys.stderr, flush=True,
-            )
-        stats.wall_sec = time.monotonic() - t0
-        return assign, deg, m2, stats
-
-    stats.engine = f"block/{kernel}"
-    # singleton init (src/community.cpp:25-29)
-    assign = deg.select(F.col("vtx"), F.col("vtx").alias("comm")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    t_loop = time.monotonic()
+    assign = _sql_superstep_level(
+        spark, sym_edges, deg, m2, n_vertices,
+        max_sweeps, anneal, stats, min_moves_frac,
+        unique_pairs=unique_pairs, skew_salt=skew_salt,
     )
-    assign.count()
-
-    # Parallel-move oscillation breaker (SURVEY.md §7.3 hard part (a)):
-    # synchronous moves let adjacent vertices swap into each other's
-    # communities forever.  Each sweep activates a PSEUDO-RANDOM half of the
-    # vertices (hash(vtx, sweep)) — unlike strict parity alternation, the
-    # active sets vary every sweep, so period-2 cycles cannot lock in
-    # (verified: strict parity oscillates on the golden16 fixture, hashed
-    # halves converge in ~8 sweeps).  Convergence = 3 consecutive zero-move
-    # sweeps (different active sets), plus a stall detector: if the moves
-    # floor hasn't improved for 8 sweeps, end the level and let coarsening
-    # merge the oscillators.
-    # all kernels activate pseudo-random vertex subsets, so demand repeated
-    # zero-move supersteps before declaring the level converged
-    zero_streak_needed = 1 if n_blocks == 1 else (2 if kernel == "local" else 3)
-    zero_streak = 0
-    best_moves = float("inf")
-    best_sweep = -1
-    for sweep in range(max_sweeps):
-        min_gain = math.exp(-(sweep + 1)) if anneal else 0.0
-        # one consolidated per-vertex state table (vtx, comm, deg, tot):
-        # two SMALL joins here buy the big edge table exactly TWO shuffle
-        # joins per sweep instead of five
-        tot = comm_totals(assign, deg).select("comm", "tot")
-        state = assign.join(deg, "vtx").join(tot, "comm")
-        s_dst = state.select(
-            F.col("vtx").alias("dst"),
-            F.col("comm").alias("dst_comm"),
-            F.col("tot").alias("tot_dst"),
-        )
-        s_src = state.select(
-            F.col("vtx").alias("src"),
-            F.col("comm").alias("src_comm"),
-            F.col("degree").alias("src_deg"),
-            F.col("tot").alias("tot_src"),
-        )
-        joined = sym_edges.join(s_dst, "dst").join(s_src, "src")
-        if n_blocks > 1 and kernel != "local":
-            # per-sweep pseudo-random active half (seeded by sweep number).
-            # The block-local-convergence kernel instead needs its block's
-            # FULL row set and handles oscillation with internal hashed
-            # halves (seeded by the superstep number).
-            joined = joined.filter(
-                F.pmod(F.xxhash64("src", F.lit(sweep)), F.lit(2)) == 0
-            )
-        # community-aware blocking: routing a vertex's adjacency by its
-        # CURRENT community puts forming communities in one block, so the
-        # block-local kernel merges them wholesale instead of one stale
-        # vertex at a time (sweep 0 is identical to hash(src): comm == vtx).
-        # Skew note: a community bigger than one block's memory would need
-        # salting here; Louvain communities at level 0 are bounded by the
-        # coarsen cadence, and AQE skew-split covers the join itself.
-        block_key = (
-            F.pmod(F.hash("src_comm"), F.lit(n_blocks))
-            if kernel == "local"
-            else F.pmod(F.hash("src"), F.lit(n_blocks))
-        )
-        joined = joined.withColumn("block", block_key)
-        proposals = joined.groupBy("block").applyInPandas(
-            _make_block_udf(m2, min_gain, kernel, sweep),
-            schema=PROPOSAL_SCHEMA,
-        )
-        if kernel != "local" and n_blocks > 1:
-            # active-half kernels only see half the vertices; frozen ones
-            # keep their assignment via union with the previous state
-            prop_assign = proposals.select("vtx", "comm")
-            frozen = assign.join(prop_assign.select("vtx"), "vtx", "left_anti")
-            new_state = prop_assign.union(frozen)
-            new_assign = (
-                new_state.join(proposals.select("vtx", "moved"), "vtx", "left")
-                .na.fill({"moved": 0})
-            )
-        else:
-            # every vertex of the level appears as src in exactly one block,
-            # so the kernel output IS the next assignment — no join needed
-            new_assign = proposals
-        # truncate lineage EVERY sweep: the sweep plan references assign
-        # several times, so without truncation the logical plan grows
-        # exponentially and analysis time explodes (state is tiny next to
-        # the edge table, so an eager localCheckpoint per sweep is cheap)
-        new_assign = fresh_checkpoint(new_assign)
-        moves = int(new_assign.agg(F.sum("moved")).first()[0] or 0)
-        stats.moves_per_sweep.append(moves)
-        stats.sweeps = sweep + 1
-
-        old = assign
-        assign = new_assign.select("vtx", "comm")
-        old.unpersist()
-
-        zero_streak = zero_streak + 1 if moves == 0 else 0
-        if zero_streak >= zero_streak_needed:
-            break
-        # near-convergence exit: when under min_moves_frac of vertices still
-        # move, the residual Q gain is marginal — coarsen and let the next
-        # (much smaller) level finish the job
-        threshold = int(min_moves_frac * n_vertices)
-        if sweep > 0 and threshold > 0 and moves <= threshold:
-            break
-        # plateau break: when a sweep retires <10% of the previous sweep's
-        # movers, the remainder is label churn (communities collectively
-        # hopping ids), not structure — coarsening resolves it at the next,
-        # far smaller level
-        if sweep > 0 and moves >= 50 and moves >= 0.9 * stats.moves_per_sweep[-2]:
-            break
-        if moves < best_moves:
-            best_moves, best_sweep = moves, sweep
-        elif sweep - best_sweep >= 8:
-            break  # stalled: coarsen and continue at the next level
-
+    stats.engine = "sql"
+    t_q = time.monotonic()
     stats.modularity = modularity_df(sym_edges, assign, deg, m2)
+    if os.environ.get("PLM_DEBUG_SWEEPS"):
+        print(
+            f"[louvain/sql] level {level_no}: setup "
+            f"{t_loop - t0:.1f}s loop {t_q - t_loop:.1f}s "
+            f"modularity {time.monotonic() - t_q:.1f}s",
+            file=sys.stderr, flush=True,
+        )
     stats.wall_sec = time.monotonic() - t0
     return assign, deg, m2, stats
+
 
 
 def coarsen(
@@ -1897,7 +1504,6 @@ def coarsen(
 def louvain(
     spark: SparkSession,
     edges: DataFrame,
-    n_blocks: int = 1,
     max_levels: int = 20,
     max_sweeps: int = 100,
     min_q_gain: float = 1e-6,
@@ -1906,7 +1512,6 @@ def louvain(
     resume: bool = False,
     mode: str = "auto",
     local_threshold: int = 1_500_000,
-    kernel: str = "local",
     superstep_engine: str = "auto",
     broadcast_vertex_threshold: int = 20_000_000,
     barrier_rows_per_task: int = 12_000_000,
@@ -1977,7 +1582,7 @@ def louvain(
     q_prev = -math.inf
     start_level = 0
 
-    # dense ids unlock the broadcast-state superstep path at level 0 (and
+    # dense ids unlock the barrier superstep engine at level 0 (and
     # match the reference's renumber-first pipeline, renumber.py).  The
     # dense check is ONE aggregation over the distinct vertex set; when a
     # renumber is needed it rewrites the RAW edge table (half the rows of
@@ -1993,7 +1598,7 @@ def louvain(
         n_verts = int(vrow[0] or 0)
         # dense means ids are EXACTLY 0..n-1: max == n-1 AND min >= 0 (a
         # negative id can hide behind a matching max and would wrap numpy
-        # indexing in the broadcast/barrier engines)
+        # indexing in the barrier engine)
         if vrow[1] is not None and (
             int(vrow[1]) != n_verts - 1 or int(vrow[2]) < 0
         ):
@@ -2060,13 +1665,11 @@ def louvain(
         assign, deg, m2, stats = louvain_level(
             spark,
             sym,
-            n_blocks=n_blocks,
             max_sweeps=max_sweeps,
             anneal=anneal,
             level_no=level_no,
             mode=mode,
             local_threshold=local_threshold,
-            kernel=kernel,
             superstep_engine=superstep_engine,
             broadcast_vertex_threshold=broadcast_vertex_threshold,
             barrier_rows_per_task=barrier_rows_per_task,
@@ -2098,8 +1701,8 @@ def louvain(
         moved = sum(stats.moves_per_sweep) > 0
         t_co = time.monotonic()
         # Coarsen + flat composition.  FAST PATH while the assignment fits
-        # driver memory (the same O(|V|)-state budget the barrier /
-        # broadcast engines already spend): the community renumber
+        # driver memory (the same O(|V|)-state budget the barrier
+        # engine already spends): the community renumber
         # (np.unique = sorted distinct, exactly dense_ids' rank), the
         # relabel, and the flat-composition join all run as numpy array
         # ops, and the coarse-graph aggregation joins the edge table

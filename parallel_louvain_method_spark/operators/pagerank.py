@@ -1,19 +1,20 @@
 """PageRank over the canonical edge table (SURVEY.md A10, [NR] north rule).
 
-Two engines, the same broadcast-vs-shuffle split as Louvain
+Two engines, the same barrier-vs-relational split as Louvain
 (operators/louvain.py):
 
-- **broadcast engine** (default while the DENSE vertex count fits driver /
-  executor memory, ``broadcast_vertex_threshold``): ranks live as a numpy
-  array broadcast per iteration; one ``mapInPandas`` pass over the cached
-  dst-partitioned edge table returns each partition's EXACT per-dst
-  contribution sums (dst-partitioning makes partials disjoint), collected
-  as ~16 B/vertex.  One Spark job per iteration, no joins, no per-iteration
-  broadcast-exchange collects;
-- **DataFrame engine** (sparse ids or past the threshold): pure DataFrame
-  loop — one shuffle join (ranks onto edges by src) + one aggregation per
-  iteration, rank table localCheckpoint'ed each round (iterative-lineage
-  rule).  Nothing per-vertex lands on one machine: the 10^9-vertex path.
+- **barrier engine** (default while ids are dense 0..n-1 and the vertex
+  count fits driver / executor memory, ``broadcast_vertex_threshold``):
+  ALL iterations run inside one Spark barrier stage.  Each task holds its
+  dst-partitioned slice of the edge table in memory and exchanges its
+  EXACT per-dst contribution sums (dst-partitioning makes partials
+  disjoint) every iteration, so the edges cross the JVM→Python boundary
+  once per run;
+- **DataFrame engine** (sparse ids, past the threshold, and the fallback
+  whenever barrier scheduling is unavailable): pure DataFrame loop — one
+  shuffle join (ranks onto edges by src) + one aggregation per iteration,
+  rank table localCheckpoint'ed each round (iterative-lineage rule).
+  Nothing per-vertex lands on one machine: the 10^9-vertex path.
 
 Scale notes:
 - the edge table is persisted once, partitioned by the relevant key, so
@@ -21,16 +22,18 @@ Scale notes:
 - dangling mass (vertices with no out-edges) is redistributed uniformly —
   on a symmetrized graph danglings are only isolated vertices, but the
   operator also accepts directed input;
-- convergence check ``max|Δ|`` is driver-side numpy on the broadcast
-  engine; one extra small aggregation per iteration on the DataFrame
-  engine; pass ``tol=None`` to run exactly ``max_iter`` rounds (needed
-  for fixed-k SQL-oracle comparison);
+- convergence check ``max|Δ|`` is task-local numpy on the barrier engine
+  (every task holds the same ranks); one extra small aggregation per
+  iteration on the DataFrame engine; pass ``tol=None`` to run exactly
+  ``max_iter`` rounds (needed for fixed-k SQL-oracle comparison);
 - ``reset`` (a ``DataFrame[vtx, p]`` teleport distribution) turns either
   engine into personalized PageRank; the classic path keeps its exact
   original expression shapes.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
@@ -50,10 +53,10 @@ def _pagerank_barrier(
 ) -> DataFrame | None:
     """Whole-run barrier engine: ALL iterations inside ONE Spark stage.
 
-    The broadcast engine's measured per-iteration bound is not the kernel
-    (bincount A/B parity) but Spark re-reading the cached edge table and
-    re-serializing it JVM→Arrow→Python EVERY iteration — the same finding
-    that motivated the Louvain barrier engine, re-applied here.  Each
+    A per-iteration ``mapInArrow`` engine is bound not by the kernel but
+    by Spark re-reading the cached edge table and re-serializing it
+    JVM→Arrow→Python EVERY iteration — the same finding that motivated
+    the Louvain barrier engine, re-applied here.  Each
     dst-partitioned slice crosses the boundary ONCE (zstd-packed blob);
     per-iteration traffic is the task's own per-dst partial sums
     (disjoint under dst-partitioning, ~12 B per touched dst) over the
@@ -64,16 +67,18 @@ def _pagerank_barrier(
     barrier invariant.
 
     Returns None when barrier scheduling is unavailable (dynamic
-    allocation, no slots) — the caller falls back to the per-iteration
-    broadcast engine.  Values match the broadcast engine's to within
-    summation-order ulps (both engines' per-dst sums are bincounts over
-    partition rows; the gate's 8-decimal rounding and the cross-engine
-    parity tests bound the difference).
+    allocation, no slots) or the stage fails for a reason other than a
+    worker-side Python error — the caller falls back to the DataFrame
+    engine.  Values match the DataFrame engine's to within
+    summation-order ulps (the cross-engine parity test bounds the
+    difference).
     """
     import numpy as np
 
     from parallel_louvain_method_spark.operators.louvain import (
         _barrier_supported,
+        _is_transport_error,
+        _is_worker_python_error,
     )
 
     spark = edges.sparkSession
@@ -97,7 +102,7 @@ def _pagerank_barrier(
     ep.count()
 
     # out-weight per src (iteration-invariant): one JVM aggregation over
-    # the cache, broadcast once — identical to the broadcast engine's
+    # the cache, broadcast once
     ow_pdf = ep.groupBy("src").agg(F.sum("weight").alias("w")).toPandas()
     out_w = np.zeros(n, dtype=np.float64)
     out_w[ow_pdf["src"].to_numpy(dtype=np.int64)] = ow_pdf["w"].to_numpy()
@@ -263,17 +268,32 @@ def _pagerank_barrier(
         # strided slice: tasks hold identical ranks, driver reassembles
         yield (pid, pickle.dumps(ranks[pid::np_], protocol=4))
 
-    results = blobs.rdd.barrier().mapPartitions(_run).collect()
+    # a worker-side Python error (kernel or data bug) propagates; a
+    # scheduling or star-transport failure returns None so the caller
+    # reruns on the DataFrame engine.  Either way the edge cache and the
+    # broadcasts are released.
+    try:
+        results = blobs.rdd.barrier().mapPartitions(_run).collect()
+    except Exception as exc:
+        if _is_worker_python_error(exc) and not _is_transport_error(exc):
+            raise
+        print(
+            f"[pagerank] barrier engine unavailable ({exc!r}); "
+            "falling back to the DataFrame engine",
+            file=sys.stderr,
+        )
+        return None
+    finally:
+        ow_bc.destroy()
+        dm_bc.destroy()
+        if p_bc is not None:
+            p_bc.destroy()
+        ep.unpersist()
     import pickle as _pickle
 
     ranks_arr = np.empty(nv, dtype=np.float64)
     for pid, rblob in results:
         ranks_arr[pid::np_] = _pickle.loads(bytes(rblob))
-    ow_bc.destroy()
-    dm_bc.destroy()
-    if p_bc is not None:
-        p_bc.destroy()
-    ep.unpersist()
     import pandas as pd
 
     return (
@@ -287,115 +307,23 @@ def _pagerank_barrier(
     )
 
 
-def _pagerank_broadcast(
-    edges: DataFrame,
-    n: int,
-    damping: float,
-    max_iter: int,
-    tol: float | None,
-    weighted: bool,
-    p=None,
-) -> DataFrame:
-    """Broadcast-state engine: dense ids 0..n-1 required (caller checks).
-
-    ``p`` (numpy float64[n], Σ=1) is the teleport distribution for
-    personalized PageRank; None means uniform (classic)."""
+def _dense_reset(reset: DataFrame, n: int):
+    """``reset`` as a float64[n] teleport vector over dense ids 0..n-1."""
     import numpy as np
 
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    wcol = F.col("weight").cast("double") if weighted else F.lit(1.0)
-    ep = (
-        edges.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-            wcol.alias("weight"),
-        )
-        .repartition(n_parts, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ep.count()
-
-    # out-weight per src, once, as a broadcast array (0 for danglings)
-    ow_pdf = (
-        ep.groupBy("src").agg(F.sum("weight").alias("w")).toPandas()
-    )
-    out_w = np.zeros(n, dtype=np.float64)
-    out_w[ow_pdf["src"].to_numpy(dtype=np.int64)] = ow_pdf["w"].to_numpy()
-    dangling_mask = out_w == 0.0
-    has_danglings = bool(dangling_mask.any())
-    # guard against division for danglings (they contribute via mass term)
-    safe_out = np.where(dangling_mask, 1.0, out_w)
-
-    if p is None:
-        ranks = np.full(n, 1.0 / n, dtype=np.float64)
-        base = (1.0 - damping) / n  # scalar: classic uniform teleport
-    else:
-        ranks = p.copy()
-        base = (1.0 - damping) * p  # vector: personalized teleport
-    ow_bc = sc.broadcast(safe_out)
-
-    nv = int(n)
-    for _ in range(max_iter):
-        state_bc = sc.broadcast(ranks)
-
-        def contribs(batches, _r=state_bc, _ow=ow_bc, _n=nv):
-            # mapInArrow + a dense bincount accumulator: the pandas Series
-            # wrapper was measured at ~2x the raw Arrow->numpy cost (the
-            # louvain barrier-pack finding), and the old per-batch
-            # np.unique + union1d merge was O(rows log rows) per batch —
-            # the dense accumulator is one O(rows) scatter-add per batch
-            # with the SAME summation tree (bincount accumulates in row
-            # order within a batch; acc += part adds batch partials in the
-            # same sequence), so the sums are bit-identical.  Per-task
-            # memory is one float64[n] — the same O(n) budget the ranks
-            # broadcast already spends.
-            import numpy as _np
-            import pyarrow as _pa
-
-            r = _r.value
-            ow = _ow.value
-            acc = _np.zeros(_n, dtype=_np.float64)
-            seen = _np.zeros(_n, dtype=bool)
-            for b in batches:
-                s = b.column(0).to_numpy(zero_copy_only=False)
-                d = b.column(1).to_numpy(zero_copy_only=False)
-                w = b.column(2).to_numpy(zero_copy_only=False)
-                contrib = w / ow[s] * r[s]
-                # dst-partitioned: this partition owns every row of its dsts
-                acc += _np.bincount(d, weights=contrib, minlength=_n)
-                seen[d] = True
-            dv = _np.flatnonzero(seen)
-            yield _pa.RecordBatch.from_pydict(
-                {"vtx": dv.astype("int64"), "in_sum": acc[dv]}
-            )
-
-        pdf = ep.mapInArrow(contribs, schema="vtx long, in_sum double").toPandas()
-        state_bc.destroy()
-        in_sum = np.zeros(n, dtype=np.float64)
-        in_sum[pdf["vtx"].to_numpy()] = pdf["in_sum"].to_numpy()
-        dangling = float(ranks[dangling_mask].sum()) if has_danglings else 0.0
-        if p is None:
-            new_ranks = base + damping * in_sum + damping * dangling / n
-        else:
-            new_ranks = base + damping * in_sum + damping * dangling * p
-        delta = float(np.abs(new_ranks - ranks).max())
-        ranks = new_ranks
-        if tol is not None and delta < tol:
-            break
-
-    ow_bc.destroy()
-    ep.unpersist()
-    import pandas as pd
-
-    return (
-        spark.createDataFrame(
-            pd.DataFrame({"vtx": np.arange(n, dtype=np.int64), "rank": ranks}),
-            schema="vtx long, rank double",
-        )
-        .localCheckpoint(eager=True)
-    )
+    rp = reset.select("vtx", "p").toPandas()
+    vs = rp["vtx"].to_numpy(dtype=np.int64)
+    # validate before indexing: a negative id would WRAP numpy indexing
+    # (silently teleporting to vertex n-1), and a duplicate would
+    # overwrite instead of summing — both corrupt the distribution
+    # without an error
+    if len(vs) and (vs.min() < 0 or vs.max() >= n):
+        raise ValueError(f"reset contains vertex ids outside 0..{n - 1}")
+    if len(np.unique(vs)) != len(vs):
+        raise ValueError("reset contains duplicate vertex ids")
+    p_vec = np.zeros(n, dtype=np.float64)
+    p_vec[vs] = rp["p"].to_numpy(dtype=np.float64)
+    return p_vec
 
 
 def pagerank(
@@ -436,44 +364,28 @@ def pagerank(
     if n == 0:
         return verts.withColumn("rank", F.lit(0.0))
 
-    # broadcast engine while ids are dense and state fits memory (same
+    # barrier engine while ids are dense and state fits memory (same
     # decision as louvain's engine selection)
     if n <= broadcast_vertex_threshold:
         # dense gate needs BOTH bounds: {-1, 0, 1, 3} has n == max+1 but a
-        # negative id would silently wrap numpy indexing in the broadcast
+        # negative id would silently wrap numpy indexing in the barrier
         # engine — require min >= 0, else use the DataFrame engine
         mx, mn = verts.agg(F.max("vtx"), F.min("vtx")).first()
         if mx is not None and int(mx) == n - 1 and int(mn) >= 0:
-            p_vec = None
-            if reset is not None:
-                import numpy as np
-
-                rp = reset.select("vtx", "p").toPandas()
-                vs = rp["vtx"].to_numpy(dtype=np.int64)
-                # validate before indexing: a negative id would WRAP
-                # numpy indexing (silently teleporting to vertex n-1),
-                # and a duplicate would overwrite instead of summing —
-                # both corrupt the distribution without an error
-                if len(vs) and (vs.min() < 0 or vs.max() >= n):
-                    raise ValueError(
-                        f"reset contains vertex ids outside 0..{n - 1}"
-                    )
-                if len(np.unique(vs)) != len(vs):
-                    raise ValueError("reset contains duplicate vertex ids")
-                p_vec = np.zeros(n, dtype=np.float64)
-                p_vec[vs] = rp["p"].to_numpy(dtype=np.float64)
-            verts.unpersist()
             # whole-run barrier stage while the cluster can schedule one
             # (edges cross the Python boundary once, not once per
-            # iteration); per-iteration broadcast engine otherwise
-            res = _pagerank_barrier(
-                edges, n, damping, max_iter, tol, weighted, p=p_vec
-            )
+            # iteration); the DataFrame loop below otherwise
+            try:
+                p_vec = None if reset is None else _dense_reset(reset, n)
+                res = _pagerank_barrier(
+                    edges, n, damping, max_iter, tol, weighted, p=p_vec
+                )
+            except Exception:
+                verts.unpersist()
+                raise
             if res is not None:
+                verts.unpersist()
                 return res
-            return _pagerank_broadcast(
-                edges, n, damping, max_iter, tol, weighted, p=p_vec
-            )
 
     hint = (lambda df: F.broadcast(df)) if n <= broadcast_vertex_threshold else (lambda df: df)
 

@@ -75,13 +75,13 @@ def test_pagerank_golden16(spark, golden16_df):
         assert got[v] == pytest.approx(want[v], abs=1e-6), f"vtx {v}"
 
 
-def test_pagerank_barrier_matches_broadcast(spark, golden16_df):
-    """The whole-run barrier engine must agree with the per-iteration
-    broadcast engine bit-for-bit on both fixed-k and tol modes (identical
-    kernels, disjoint dst-partitioned partials, same update expression)."""
+def test_pagerank_barrier_matches_dataframe(spark, golden16_df):
+    """The whole-run barrier engine must agree with the DataFrame engine
+    (``broadcast_vertex_threshold=0``) and the numpy oracle on both
+    fixed-k and tol modes (same update expression, summation order
+    differs only by ulps)."""
     from parallel_louvain_method_spark.operators.pagerank import (
         _pagerank_barrier,
-        _pagerank_broadcast,
     )
 
     sym = symmetric_edges(golden16_df)
@@ -91,13 +91,87 @@ def test_pagerank_barrier_matches_broadcast(spark, golden16_df):
         a = {r["vtx"]: r["rank"] for r in bar.collect()}
         b = {
             r["vtx"]: r["rank"]
-            for r in _pagerank_broadcast(
-                sym, 16, 0.85, kwargs["max_iter"], kwargs["tol"], True
+            for r in pagerank(
+                sym, broadcast_vertex_threshold=0, **kwargs
             ).collect()
         }
         assert set(a) == set(b) == set(range(16))
         for v in range(16):
             assert a[v] == pytest.approx(b[v], abs=1e-12), f"vtx {v}"
+    # the fixed-k run against the independent oracle
+    want = _np_pagerank(GOLDEN16_EDGES, 16, iters=7)
+    bar7 = {
+        r["vtx"]: r["rank"]
+        for r in _pagerank_barrier(sym, 16, 0.85, 7, None, True).collect()
+    }
+    for v in range(16):
+        assert bar7[v] == pytest.approx(want[v], abs=1e-12), f"vtx {v}"
+
+
+def _inject_barrier_failure(monkeypatch, spark, message):
+    """Make every barrier stage's collect raise ``message`` (the barrier
+    probe is pinned to "schedulable", so the failure hits the real stage)."""
+    from pyspark.rdd import RDDBarrier
+
+    from parallel_louvain_method_spark.operators.louvain import _BARRIER_PROBED
+
+    monkeypatch.setitem(_BARRIER_PROBED, spark.sparkContext.applicationId, True)
+    orig = RDDBarrier.mapPartitions
+
+    def mapPartitions(self, f, preservesPartitioning=False):
+        rdd = orig(self, f, preservesPartitioning)
+
+        def collect():
+            raise Exception(message)
+
+        rdd.collect = collect
+        return rdd
+
+    monkeypatch.setattr(RDDBarrier, "mapPartitions", mapPartitions)
+
+
+def _persisted_caches(spark) -> set:
+    """Ids of persisted RDDs that are not local checkpoints.  A returned
+    rank table is itself a local checkpoint, released by GC once dropped;
+    a ``persist()`` the engine forgets to undo stays here for the session."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(k) for k in m.keySet().toArray()
+        if not m.get(k).rdd().isLocallyCheckpointed()
+    }
+
+
+def test_pagerank_barrier_scheduling_failure_falls_back(
+    spark, golden16_df, monkeypatch, capfd
+):
+    """A barrier scheduling failure reruns PageRank on the DataFrame
+    engine with the same ranks and releases the barrier engine's edge
+    cache and broadcasts; a worker-side Python error still raises."""
+    sym = symmetric_edges(golden16_df)
+    want = _np_pagerank(GOLDEN16_EDGES, 16, iters=30)
+    _inject_barrier_failure(
+        monkeypatch, spark,
+        "[SPARK-24819] Barrier execution mode does not support scheduling "
+        "because the total number of slots is fewer than tasks",
+    )
+    before = _persisted_caches(spark)
+    got = {r["vtx"]: r["rank"] for r in pagerank(sym, max_iter=30, tol=None).collect()}
+    assert _persisted_caches(spark) == before
+    assert set(got) == set(range(16))
+    for v in range(16):
+        assert got[v] == pytest.approx(want[v], abs=1e-6), f"vtx {v}"
+    assert "falling back to the DataFrame engine" in capfd.readouterr().err
+
+    _inject_barrier_failure(
+        monkeypatch, spark,
+        "Job aborted due to stage failure ... PythonException: Traceback "
+        "(most recent call last): IndexError: index 15 is out of bounds",
+    )
+    before = _persisted_caches(spark)
+    with pytest.raises(Exception, match="Traceback"):
+        pagerank(sym, max_iter=30, tol=None)
+    assert _persisted_caches(spark) == before
+    assert "falling back" not in capfd.readouterr().err
 
 
 def _np_ppr(edges, n, p, damping=0.85, iters=30):

@@ -82,7 +82,7 @@ def test_cocommit_edges_cap(spark, corpus):
 def test_repo_graph_louvain_recovers_pools(spark, corpus):
     edges, mapping, dropped = build_repo_graph(corpus)
     assert dropped.count() == 0
-    res = louvain(spark, edges, n_blocks=1)
+    res = louvain(spark, edges)
     # 40 repos in 4 pools of 10 with sparse cross links -> Louvain should
     # recover ~4 communities with high modularity
     assert res.modularity > 0.5

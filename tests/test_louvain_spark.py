@@ -33,7 +33,7 @@ def test_golden16_single_block(spark, golden16_df):
     q0 = modularity_df(sym, assign0, deg, m2)
     assert q0 == pytest.approx(GOLDEN16_Q_INITIAL, abs=EPS)
 
-    assign, deg, m2u, stats = louvain_level(spark, sym, n_blocks=1)
+    assign, deg, m2u, stats = louvain_level(spark, sym)
     assert stats.modularity == pytest.approx(GOLDEN16_Q_FINAL, abs=EPS)
     assert assign.select("comm").distinct().count() == GOLDEN16_N_COMMUNITIES
     # north rule: PER-VERTEX assignment matches the reference semantics
@@ -47,21 +47,9 @@ def test_golden16_anneal_converges(spark, golden16_df):
     golden16 — it suppresses early marginal moves and lands at Q=0.374
     with 3 communities (same quality class as the plain result)."""
     sym = G.symmetric_edges(golden16_df)
-    assign, deg, m2, stats = louvain_level(spark, sym, n_blocks=1, anneal=True)
+    assign, deg, m2, stats = louvain_level(spark, sym, anneal=True)
     assert stats.modularity == pytest.approx(0.3743622448979591, abs=EPS)
     assert assign.select("comm").distinct().count() == 3
-
-
-def test_golden16_multiblock_converges(spark, golden16_df):
-    sym = G.symmetric_edges(golden16_df)
-    assign, deg, m2, stats = louvain_level(spark, sym, n_blocks=4, mode="superstep")
-    # bulk-synchronous multi-block must still converge (0-move sweep) and
-    # land in the same quality class as the sequential result
-    assert stats.moves_per_sweep[-1] == 0
-    # single-LEVEL Q on a 16-vertex toy varies with the stochastic active
-    # sets (sequential semantics land at 0.346; synchronous dynamics land
-    # anywhere in ~0.27-0.35); the multilevel test below pins final quality
-    assert stats.modularity >= 0.25
 
 
 def test_golden16_barrier_engine(spark, golden16_df):
@@ -99,7 +87,7 @@ def test_golden16_barrier_engine(spark, golden16_df):
 
 def test_golden16_coarsen(spark, golden16_df):
     sym = G.symmetric_edges(golden16_df)
-    assign, deg, m2, stats = louvain_level(spark, sym, n_blocks=1)
+    assign, deg, m2, stats = louvain_level(spark, sym)
     coarse, cmap = coarsen(sym, assign)
     # 4 communities -> coarse graph has 4 vertices, ids dense 0..3
     verts = sorted(r["v"] for r in G.vertex_ids(coarse).collect())
@@ -113,7 +101,7 @@ def test_golden16_coarsen(spark, golden16_df):
 
 
 def test_multilevel_louvain(spark, golden16_df):
-    res = louvain(spark, golden16_df, n_blocks=1)
+    res = louvain(spark, golden16_df)
     assert res.modularity >= GOLDEN16_Q_FINAL - EPS
     assert res.n_communities <= GOLDEN16_N_COMMUNITIES
     # every original vertex keeps exactly one assignment
@@ -134,8 +122,8 @@ def test_louvain_input_symmetric_parity(spark, golden16_df):
         .groupBy("src", "dst")
         .agg(F.sum("weight").alias("weight"))
     )
-    base = louvain(spark, golden16_df, n_blocks=1)
-    skip = louvain(spark, pre, n_blocks=1, input_symmetric=True)
+    base = louvain(spark, golden16_df)
+    skip = louvain(spark, pre, input_symmetric=True)
     assert skip.modularity == pytest.approx(base.modularity, abs=1e-9)
     a = {r["vtx"]: r["comm"] for r in base.assignment.collect()}
     b = {r["vtx"]: r["comm"] for r in skip.assignment.collect()}
@@ -162,22 +150,21 @@ def test_louvain_input_symmetric_parity(spark, golden16_df):
 
 def test_checkpoint_resume(spark, golden16_df, tmp_path):
     ck = str(tmp_path / "ck")
-    res1 = louvain(spark, golden16_df, n_blocks=1, checkpoint_dir=ck)
+    res1 = louvain(spark, golden16_df, checkpoint_dir=ck)
     from parallel_louvain_method_spark.sources.checkpoint import latest_level
 
     lvl = latest_level(spark, ck)
     assert lvl is not None
-    res2 = louvain(spark, golden16_df, n_blocks=1, checkpoint_dir=ck, resume=True)
+    res2 = louvain(spark, golden16_df, checkpoint_dir=ck, resume=True)
     # resume from the final level converges immediately to the same Q class
     assert res2.modularity >= res1.modularity - 1e-9
 
 
-@pytest.mark.parametrize("engine", ["sql", "numpy_broadcast", "barrier"])
+@pytest.mark.parametrize("engine", ["sql", "barrier"])
 def test_golden16_engine_matrix(spark, golden16_df, engine):
-    """Every superstep engine converges on golden16 to the same quality
-    class with a consistent assignment — guards the non-default engines
-    (auto picks barrier; sql serves sparse/overflow graphs, and
-    numpy_broadcast is the barrier fallback)."""
+    """Both superstep engines converge on golden16 to the same quality
+    class with a consistent assignment (auto picks barrier; sql serves
+    sparse/overflow graphs and is the barrier fallback)."""
     sym = G.symmetric_edges(golden16_df)
     assign, deg, m2, stats = louvain_level(
         spark, sym, mode="superstep", superstep_engine=engine
@@ -205,8 +192,8 @@ def test_barrier_engine_deterministic(spark, golden16_df):
 
 def test_barrier_error_classification_unit():
     """Scheduling failures fall back; worker-side Python errors re-raise
-    (r2 ADVICE: a blanket `except Exception` masked kernel bugs by
-    silently rerunning the level on numpy_broadcast)."""
+    (a blanket `except Exception` would mask kernel bugs by silently
+    rerunning the level on the fallback engine)."""
     from parallel_louvain_method_spark.operators.louvain import (
         _is_worker_python_error,
     )
@@ -226,7 +213,7 @@ def test_barrier_error_classification_unit():
 def test_barrier_kernel_error_propagates(spark, golden16_df, capfd):
     """A worker-side bug inside the barrier stage (injected: an n_vertices
     hint too small for the real id range -> out-of-bounds numpy indexing)
-    must RAISE, not silently rerun on numpy_broadcast."""
+    must RAISE, not silently rerun on the sql fallback."""
     sym = G.symmetric_edges(golden16_df)
     with pytest.raises(Exception):
         louvain_level(
@@ -238,7 +225,32 @@ def test_barrier_kernel_error_propagates(spark, golden16_df, capfd):
             dense_hint=True,
         )
     err = capfd.readouterr().err
-    assert "falling back to numpy_broadcast" not in err
+    assert "falling back" not in err
+
+
+def test_barrier_probe_failed_falls_back_to_sql(
+    spark, golden16_df, monkeypatch, capfd
+):
+    """A cluster that cannot schedule barrier stages (the cached probe
+    says so) runs the level on the sql engine: it converges to a
+    zero-move sweep and assigns every vertex exactly once."""
+    from parallel_louvain_method_spark.operators.louvain import _BARRIER_PROBED
+
+    monkeypatch.setitem(_BARRIER_PROBED, spark.sparkContext.applicationId, False)
+    sym = G.symmetric_edges(golden16_df)
+    assign, deg, m2, stats = louvain_level(spark, sym, mode="superstep")
+    assert stats.engine == "sql"
+    assert stats.moves_per_sweep[-1] == 0
+    assert stats.modularity >= 0.25
+    assert assign.count() == 16
+    assert assign.select("vtx").distinct().count() == 16
+    assert "probe failed); using sql" in capfd.readouterr().err
+
+
+def test_louvain_rejects_unknown_engine(spark, golden16_df):
+    sym = G.symmetric_edges(golden16_df)
+    with pytest.raises(ValueError, match="superstep_engine"):
+        louvain_level(spark, sym, mode="superstep", superstep_engine="block")
 
 
 def test_louvain_engine_cutover_and_telemetry(spark, golden16_df):
@@ -274,7 +286,7 @@ def test_checkpoint_metrics_record_engine(spark, golden16_df, tmp_path):
     )
 
     ck = str(tmp_path / "ck_engine")
-    louvain(spark, golden16_df, n_blocks=1, checkpoint_dir=ck)
+    louvain(spark, golden16_df, checkpoint_dir=ck)
     lvl = latest_level(spark, ck)
     assert lvl is not None
     for k in range(lvl + 1):
@@ -440,8 +452,8 @@ def test_multigraph_parallel_edges_sum(spark, golden16_df):
         .union(split.withColumn("weight", F.col("weight") * 0.25))
         .union(split.withColumn("weight", F.col("weight") * 0.75))
     )
-    r_simple = louvain(spark, base, n_blocks=1)
-    r_multi = louvain(spark, multi, n_blocks=1)
+    r_simple = louvain(spark, base)
+    r_multi = louvain(spark, multi)
     assert r_multi.modularity == pytest.approx(r_simple.modularity, abs=EPS)
     got_m = {r["vtx"]: r["comm"] for r in r_multi.assignment.collect()}
     got_s = {r["vtx"]: r["comm"] for r in r_simple.assignment.collect()}

@@ -47,7 +47,7 @@ def test_read_golden16_weighted_shards(spark):
     sym = G.symmetric_edges(edges)
     assert sym.count() // 2 == 28
 
-    assign, deg, m2, stats = louvain_level(spark, sym, n_blocks=1)
+    assign, deg, m2, stats = louvain_level(spark, sym)
     assert stats.modularity == pytest.approx(GOLDEN16_Q_FINAL, abs=EPS)
     got = {r["vtx"]: r["comm"] for r in assign.collect()}
     assert got == GOLDEN16_ASSIGNMENT
@@ -59,7 +59,7 @@ def test_read_golden16_raw_2col_shards(spark):
     assert edges.count() == 28
     assert edges.agg(F.min("weight"), F.max("weight")).first() == (1.0, 1.0)
 
-    res = louvain(spark, edges, n_blocks=1)
+    res = louvain(spark, edges)
     assert res.modularity >= GOLDEN16_Q_FINAL - EPS
     assert res.n_communities <= GOLDEN16_N_COMMUNITIES
 
@@ -108,7 +108,7 @@ def test_cora_louvain_pinned(spark):
     kernel bit-for-bit (north rule), plus pinned Q / community count."""
     raw = read_edge_text(spark, f"{REF}/cora/cora.cites", weighted=False)
     sym = G.symmetric_edges(raw)
-    assign, deg, m2, stats = louvain_level(spark, sym, n_blocks=1)
+    assign, deg, m2, stats = louvain_level(spark, sym)
     assert stats.modularity == pytest.approx(CORA_L0_Q, abs=1e-5)
     assert assign.select("comm").distinct().count() == CORA_L0_NCOMM
 
@@ -125,7 +125,7 @@ def test_cora_louvain_pinned(spark):
 def test_cora_multilevel_improves(spark):
     """Multi-level Louvain on cora coarsens past level 0 and improves Q."""
     raw = read_edge_text(spark, f"{REF}/cora/cora.cites", weighted=False)
-    res = louvain(spark, raw, n_blocks=1)
+    res = louvain(spark, raw)
     assert len(res.levels) >= 2
     assert res.modularity > CORA_L0_Q
     assert res.assignment.count() == CORA_VCOUNT

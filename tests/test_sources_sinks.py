@@ -7,6 +7,7 @@ membership sink shape, and the corpus reader's parquet seam.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from parallel_louvain_method_spark.operators import graph as G
@@ -41,7 +42,7 @@ def test_write_communities_roundtrip(spark, golden16_df, tmp_path):
     src/distcommunity.cpp:637-709; a parallel parquet writer replaces it)."""
     from parallel_louvain_method_spark.operators.louvain import louvain
 
-    res = louvain(spark, golden16_df, n_blocks=1)
+    res = louvain(spark, golden16_df)
     out = str(tmp_path / "comms")
     write_communities(res.assignment, out)
     back = spark.read.parquet(out)
@@ -71,6 +72,40 @@ def test_read_corpus_parquet_seam(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_cli_louvain_engine_flags(spark, tmp_path, golden16_df, capsys,
+                                  monkeypatch):
+    """``plm louvain --help`` parses and offers only the barrier and sql
+    engines (no ``--blocks``, no ``numpy_broadcast``), and ``--engine sql``
+    reaches ``louvain(superstep_engine="sql")``."""
+    from parallel_louvain_method_spark import cli
+    from parallel_louvain_method_spark.operators import louvain as L
+
+    with pytest.raises(SystemExit) as ex:
+        cli.main(["louvain", "--help"])
+    assert ex.value.code == 0
+    helptext = capsys.readouterr().out
+    assert "--engine" in helptext and "{auto,barrier,sql}" in helptext
+    assert "--blocks" not in helptext and "numpy_broadcast" not in helptext
+    for bad in (["--blocks", "4"], ["--engine", "numpy_broadcast"]):
+        with pytest.raises(SystemExit) as ex:
+            cli.main(["louvain", "--edges", "e", "--out", "o", *bad])
+        assert ex.value.code == 2, bad
+
+    edges_path = str(tmp_path / "edges")
+    golden16_df.write.parquet(edges_path)
+    seen = {}
+
+    def fake_louvain(spark_, edges, **kw):
+        seen.update(kw)
+        raise RuntimeError("stop after dispatch")
+
+    monkeypatch.setattr(L, "louvain", fake_louvain)
+    with pytest.raises(RuntimeError, match="stop after dispatch"):
+        cli.main(["louvain", "--edges", edges_path, "--out",
+                  str(tmp_path / "o"), "--engine", "sql"])
+    assert seen["superstep_engine"] == "sql"
+
+
 def test_cli_louvain_sql_skew_salt(spark, tmp_path, golden16_df):
     """The louvain subcommand drives the sql engine with explicit salting
     end-to-end: parquet edges in, community parquet out, same communities
@@ -83,7 +118,7 @@ def test_cli_louvain_sql_skew_salt(spark, tmp_path, golden16_df):
     out = str(tmp_path / "comms")
     assert main(["louvain", "--edges", edges_path, "--out", out,
                  "--mode", "superstep", "--engine", "sql",
-                 "--skew-salt", "4", "--blocks", "4"]) == 0
+                 "--skew-salt", "4"]) == 0
     got = {r["vtx"]: r["comm"] for r in spark.read.parquet(out).collect()}
     ref = louvain(spark, golden16_df, mode="superstep",
                   superstep_engine="sql")

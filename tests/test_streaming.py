@@ -325,7 +325,7 @@ def test_prune_state_and_louvain_over_state(spark, tmp_path):
 
     edges_str = edges_from_state(spark, state)
     edges, mapping = densify(edges_str)
-    res = louvain(spark, edges, n_blocks=1)
+    res = louvain(spark, edges)
     assert res.modularity > 0.3
     assert res.n_communities == 2
 
