@@ -20,13 +20,15 @@ A level picks one of three execution strategies:
    dense 0..n-1 and per-vertex state fits executor memory,
    ``broadcast_vertex_threshold``): the WHOLE level runs inside one Spark
    barrier stage — each task holds its src-partition's packed adjacency in
-   memory for every sweep and exchanges per-sweep MOVER DELTAS via
-   ``BarrierTaskContext.allGather``.  The edge table crosses the
-   JVM→Python boundary exactly once per level; per-sweep traffic is
-   O(movers).  This is the Spark-native re-expression of the reference's
-   MPI protocol (src/distcommunity.cpp:212-385), with the barrier
-   scheduler replacing MPI_Barrier and allGather replacing its
-   communicate-deltas rounds;
+   memory for every sweep and exchanges per-sweep MOVER DELTAS over the
+   barrier runtime's in-stage raw-TCP star (functions/bsp.py), with the
+   coordinator all-gather of the barrier scheduler as its bootstrap and
+   fallback.  The edge table crosses the JVM→Python boundary exactly once
+   per level; per-sweep traffic is O(movers).  This is the Spark-native
+   re-expression of the reference's MPI protocol
+   (src/distcommunity.cpp:212-385), with the barrier scheduler replacing
+   MPI_Barrier and the star all-gather replacing its communicate-deltas
+   rounds;
 3. **superstep/sql** (auto-selected past the broadcast threshold or on
    sparse ids, and the fallback whenever barrier scheduling is
    unavailable): every sweep is PURE DataFrame algebra — the small
@@ -59,7 +61,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from parallel_louvain_method_spark.functions import kernels
+from parallel_louvain_method_spark.functions import bsp, kernels
 from parallel_louvain_method_spark.operators.graph import (
     degrees as degrees_op,
     symmetric_edges,
@@ -68,51 +70,6 @@ from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 ASSIGN_SCHEMA = "vtx long, comm long"
 SUPERSTEP_ENGINES = ("auto", "barrier", "sql")
-
-# one probe per SparkContext: can this cluster schedule a barrier stage at
-# all?  (local[N] always can; a dynamic-allocation cluster cannot, and its
-# slot check would otherwise retry ~40x15 s before failing the real job)
-_BARRIER_PROBED: dict[str, bool] = {}
-
-
-def _is_transport_error(exc: Exception) -> bool:
-    """True when a barrier-stage failure wraps a mid-level star-transport
-    loss (functions/exchange.py raises AllGatherTransportError inside the
-    worker; Spark embeds the class name in the wrapped message).  These
-    are RETRIABLE over the coordinator allGather — unlike kernel/data
-    bugs, which must propagate."""
-    return "AllGatherTransportError" in str(exc)
-
-
-def _is_worker_python_error(exc: Exception) -> bool:
-    """True when a barrier-stage failure wraps a WORKER-side Python error
-    (kernel or data bug) — those must propagate.  Spark embeds the worker
-    traceback in the Java exception message, which barrier SCHEDULING
-    failures (slot check, dynamic allocation) never carry."""
-    msg = str(exc)
-    return "Traceback" in msg or "PythonException" in msg
-
-
-def _barrier_supported(sc) -> bool:
-    key = sc.applicationId
-    if key not in _BARRIER_PROBED:
-        try:
-            n = max(1, int(sc.defaultParallelism))
-            sc.parallelize(range(n), n).barrier().mapPartitions(
-                lambda it: iter([1])
-            ).count()
-            _BARRIER_PROBED[key] = True
-        except Exception:
-            _BARRIER_PROBED[key] = False
-    return _BARRIER_PROBED[key]
-
-
-def _reset_sweep_stats(stats: "LevelStats") -> None:
-    """Forget a failed barrier attempt's sweeps before the level reruns."""
-    stats.moves_per_sweep.clear()
-    stats.sweeps = 0
-    stats.phase_crit.clear()
-    stats.phase_sum.clear()
 
 
 @dataclass
@@ -135,22 +92,14 @@ class LevelStats:
     # each level, and the auto-cutover (barrier -> sql past the broadcast
     # threshold) becomes a testable seam instead of an invisible branch
     engine: str = ""
-    # barrier engine only: per-phase CRITICAL PATH across tasks — for each
-    # instrumented phase (unpack / deg_exchange / kernel_i / gather_i), the
-    # MAX wall over all barrier tasks.  In a BSP stage the slowest task
-    # gates every barrier, so these maxima decompose the level's wall into
-    # compute (kernel_*) vs data-movement (unpack, gather_*) — the split
-    # that lets a scaling run attribute efficiency per phase instead of
-    # reporting one end-to-end scalar (BENCH_SCALING.md §0)
+    # barrier engine only, folded by functions/bsp.py ``run``: per phase
+    # (unpack / xchg_setup / deg_exchange / prep / kernel_i / gather_i) the
+    # MAX wall over tasks — the critical path, since the slowest task
+    # gates every barrier — and the SUM (total work, conserved under
+    # repartitioning: the steal-robust attribution for scaling runs,
+    # BENCH_SCALING.md §0).  A gather_i/deg_exchange wall includes
+    # waiting for the previous phase's stragglers.
     phase_crit: dict = field(default_factory=dict)
-    # ... and the SUM across tasks (total work).  The max is what gates the
-    # wall but any one stolen core inflates it; the sum is conserved under
-    # repartitioning, so comparing phase SUMS between core counts is the
-    # steal-robust attribution: kernel sum ≈ constant when compute scales,
-    # unpack sum GROWS when concurrent converters saturate the memory bus.
-    # Caveat shared with phase_crit: a task's gather_i/deg_exchange wall
-    # includes time WAITING at the barrier for stragglers of the previous
-    # phase, so comm phases absorb skew from compute/transfer phases.
     phase_sum: dict = field(default_factory=dict)
 
 
@@ -236,42 +185,29 @@ def _barrier_superstep_level(
     stats: LevelStats,
     min_moves_frac: float,
     pre_partitioned: str | None = None,
-    force_allgather: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame] | None:
     """Whole-level barrier execution: ALL sweeps inside ONE Spark stage.
 
     The measured bottleneck of a per-sweep ``mapInPandas`` pass is not the
     kernel — it is Spark re-reading the cached edge table and
     re-serializing it JVM→Arrow→Python EVERY sweep (the kernel itself
     scales at ~1.0 efficiency 8→32 processes; tools/kernel_scaling.py).
-    This engine pays the transfer ONCE: each
-    src-partition's adjacency is packed into a single numpy blob, and a
-    barrier stage (``RDD.barrier().mapPartitions``) holds it in worker
+    This engine pays the transfer ONCE: each src-partition's adjacency is
+    packed into a single blob and a barrier stage holds it in worker
     memory for the whole level, exchanging per-sweep MOVER DELTAS through
-    an in-stage raw-TCP star all-gather (functions/exchange.py) — the
-    re-expression of the reference's MPI communicate-deltas design
-    (src/distcommunity.cpp:212-385).  ``BarrierTaskContext.allGather``
-    remains the bootstrap (degree exchange + hub address + connect
-    handshake) and the verified whole-level fallback; it is not used per
-    sweep because its driver-coordinated sync has a measured ~1 s latency
-    floor per call regardless of payload.
+    the barrier runtime (functions/bsp.py) — the re-expression of the
+    reference's MPI communicate-deltas design
+    (src/distcommunity.cpp:212-385).
 
     Per-sweep traffic is O(movers), not O(edges): sweep 0 gathers ~n/2
     int32 pairs, decaying geometrically after.  Every task applies the
     same gathered deltas to its own full community array, so all tasks
-    hold identical state and take identical exit decisions — no
-    coordinator logic beyond allGather itself.
+    hold identical state and take identical exit decisions.
 
     Cluster requirement (standard for barrier mode): one concurrent slot
     per partition; partition count is capped at ``defaultParallelism``.
-    Requires DENSE ids 0..n-1.  Returns ``(assign, deg)``.
-
-    ``force_allgather=True`` skips the TCP setup entirely and syncs every
-    sweep over ``ctx.allGather`` — the retry path after a mid-level
-    transport failure (AllGatherTransportError): the level restarts from
-    consistent singleton state on the transport that needs no
-    connections, trading the ~1 s/sync coordinator floor for guaranteed
-    progress.
+    Requires DENSE ids 0..n-1.  Returns ``(assign, deg)``, or None when
+    the stage could not be scheduled (the caller runs the level on sql).
     """
     import numpy as np
 
@@ -292,392 +228,132 @@ def _barrier_superstep_level(
         # caller already partitioned by src (the projection preserves row
         # placement): the barrier stage can consume it directly — the one
         # exchange of the level's biggest table disappears
-        n_parts = sym_edges.rdd.getNumPartitions()
         edges_p = casted
     else:
         edges_p = casted.repartition(n_parts, "src")
-
-    # pack: one binary blob per partition.  NOT persisted and NOT counted —
-    # the barrier stage below is its only consumer, so the pack fuses into
-    # that stage and the full edge table crosses the JVM->Python boundary
-    # exactly ONCE per level.  mapInArrow, not mapInPandas: the pack wants
-    # raw numpy columns, and the pandas wrapper's Series construction was
-    # measured at ~2× the whole conversion cost on this path.
-    def _pack(batches):
-        import pickle
-
-        import numpy as _np
-        import pyarrow as _pa
-
-        ss, dd, ww = [], [], []
-        for b in batches:
-            ss.append(b.column(0).to_numpy(zero_copy_only=False))
-            dd.append(b.column(1).to_numpy(zero_copy_only=False))
-            ww.append(b.column(2).to_numpy(zero_copy_only=False))
-        s = _np.concatenate(ss) if ss else _np.empty(0, _np.int32)
-        d = _np.concatenate(dd) if dd else _np.empty(0, _np.int32)
-        w = _np.concatenate(ww) if ww else _np.empty(0, _np.float64)
-        # sort by src + delta-encode + zstd: the blob crosses two more
-        # process boundaries (Python->JVM, JVM->barrier-Python) before the
-        # kernel sees it, and at scale-test sizes those crossings are the
-        # level's bandwidth bill.  Sorted src deltas are mostly tiny ints
-        # and level-0 weights repeat, so zstd-1 lands ~4x (measured 139 MB
-        # -> 35 MB per 8.7M rows at ~0.7 s compress + ~0.6 s decompress,
-        # both fully parallel) — trading a little task CPU for 4x fewer
-        # bytes on the shared bus here and 4x less shuffle I/O on a real
-        # cluster.  Sorted rows also make the kernel's structural prep and
-        # its per-pass group-sort cache-friendlier.
-        if len(s):
-            # the JVM already sorted within the partition
-            # (sortWithinPartitions below) — verify cheaply (one sequential
-            # pass) and only fall back to a local argsort if something
-            # upstream stopped guaranteeing it
-            if len(s) > 1 and not bool((s[1:] >= s[:-1]).all()):
-                order = _np.argsort(s, kind="stable")
-                s, d, w = s[order], d[order], w[order]
-            sdelta = _np.diff(s, prepend=_np.int32(0)).astype(_np.int32)
-        else:
-            sdelta = s
-        raw = pickle.dumps((sdelta, d, w), protocol=4)
-        comp = _pa.Codec("zstd", compression_level=1).compress(
-            raw, asbytes=True
-        )
-        yield _pa.RecordBatch.from_pydict(
-            {"n": [len(s)], "raw_len": [len(raw)], "blob": [comp]}
-        )
-
-    # sort on the JVM side (whole-stage-codegen'd, narrow — preserves the
-    # src partitioning): the pack's delta encoding wants src-sorted rows,
-    # and the JVM sort is far cheaper than a numpy argsort in the Python
-    # worker (~2 s per 8.7M rows on this host)
-    blobs = edges_p.sortWithinPartitions("src").mapInArrow(
-        _pack, schema="n long, raw_len long, blob binary"
-    )
 
     nv = int(n_vertices)
     m2_ = float(m2)
     anneal_ = bool(anneal)
     max_sweeps_ = int(max_sweeps)
     mmf_ = float(min_moves_frac)
-    n_parts_ = int(n_parts)
-    force_ag_ = bool(force_allgather)
-    # failure-injection hook (tests only), read DRIVER-side and shipped in
-    # the closure — the reused python-worker daemons never see env changes
-    # made after session start.  At this sweep rank 0 kills its transport
-    # sockets, simulating hub death mid-level.
-    _kill_sweep_ = int(os.environ.get("PLM_TEST_KILL_TRANSPORT_SWEEP", "-1"))
 
-    def _level(rows):
-        import base64
+    def _level(comm, s, d, w):
         import math as _math
         import pickle
 
         import numpy as _np
-        from pyspark import BarrierTaskContext
 
         from parallel_louvain_method_spark.functions import kernels as _k
 
-        import time as _time
-
-        ctx = BarrierTaskContext.get()
-        pid = ctx.partitionId()
-        t_start = _time.monotonic()
-        blob = None
-        raw_len = 0
-        for r in rows:
-            blob = r["blob"]
-            raw_len = r["raw_len"]
-        if blob is not None:
-            import pyarrow as _pa
-
-            raw = _pa.Codec("zstd").decompress(
-                bytes(blob), int(raw_len), asbytes=True
-            )
-            sdelta, d, w = pickle.loads(raw)
-            # src was delta-encoded against 0 by the pack step; cumsum in
-            # int64 (no overflow), back to the ids' native int32
-            s = _np.cumsum(sdelta, dtype=_np.int64).astype(_np.int32)
-        else:
-            s = _np.empty(0, _np.int32)
-            d = _np.empty(0, _np.int32)
-            w = _np.empty(0, _np.float32)
-        timings: dict[str, float] = {"unpack": _time.monotonic() - t_start}
-
         # one-time degree exchange: src-partitioning makes per-task degree
         # partials EXACT for the task's own vertices (the reference's
-        # ghost-degree Allgather, src/distcommunity.cpp init), so one
-        # allGather of ~(srcs/partition) sparse pairs replaces a full
-        # aggregation job + driver broadcast
-        s64 = s.astype(_np.int64)
-        d64 = d.astype(_np.int64)
-        if len(s):
-            my_v = _np.unique(s64)
-            idx = _np.searchsorted(my_v, s64)
-            my_deg = _np.bincount(
-                idx, weights=w.astype(_np.float64), minlength=len(my_v)
-            )
-        else:
-            my_v = _np.empty(0, _np.int64)
-            my_deg = _np.empty(0, _np.float64)
-        # per-sweep sync transport: ctx.allGather routes through the
-        # driver's BarrierCoordinator whose task-side wait loop has a
-        # measured ~1.0 s floor PER SYNC regardless of payload (hardcoded
-        # Thread.sleep poll) — sweeps x 1 s of pure latency.  The star
-        # transport (functions/exchange.py, the MPI_Allgather analog)
-        # exchanges per-sweep movers over raw TCP inside the stage;
-        # task 0's address rides the one-time degree allGather below, and
-        # a status allGather confirms EVERY task connected before anyone
-        # commits — all tasks take the same branch or all fall back, so
-        # the sync semantics are preserved either way.
-        from parallel_louvain_method_spark.functions.exchange import (
-            StarAllGather,
-        )
-
-        xg = StarAllGather(pid, n_parts_)
-        hub_addr = None
-        if pid == 0 and n_parts_ > 1 and not force_ag_:
-            try:
-                hub_addr = xg.listen()
-            except OSError:
-                hub_addr = None
-
-        t0 = _time.monotonic()
-        degv = _np.zeros(nv, dtype=_np.float64)
-        if n_parts_ > 1 and force_ag_:
-            # coordinator-only mode (transport-failure retry): one
-            # combined gather carries the degree partials, as before
-            deg_payload = base64.b64encode(
-                pickle.dumps(
-                    (my_v.astype(_np.int32), my_deg, hub_addr), protocol=4
+        # ghost-degree Allgather, src/distcommunity.cpp init), so one round
+        # of ~(srcs/partition) sparse pairs replaces a full aggregation
+        # job + driver broadcast
+        with comm.phase("deg_exchange"):
+            s64 = s.astype(_np.int64)
+            if len(s):
+                my_v = _np.unique(s64)
+                my_deg = _np.bincount(
+                    _np.searchsorted(my_v, s64), weights=w, minlength=len(my_v)
                 )
-            ).decode("ascii")
-            for g in ctx.allGather(deg_payload):
-                gv, gd, gaddr = pickle.loads(base64.b64decode(g))
-                if gaddr is not None:
-                    hub_addr = gaddr
-                if len(gv):
-                    degv[gv.astype(_np.int64)] = gd
-        elif n_parts_ > 1:
-            # each coordinator allGather has a measured ~1 s latency
-            # floor: keep round 1 minimal (the hub address only) and ride
-            # the degree partials on round 2, which the handshake needs
-            # anyway — two floors total instead of three, and the bulky
-            # partials cross the coordinator once, not alongside an
-            # already-serialized address round
-            for g in ctx.allGather(
-                base64.b64encode(pickle.dumps(hub_addr, protocol=4)).decode(
-                    "ascii"
-                )
-            ):
-                gaddr = pickle.loads(base64.b64decode(g))
-                if gaddr is not None:
-                    hub_addr = gaddr
-        elif len(my_v):
-            # single partition: everything is local, no sync needed
-            degv[my_v] = my_deg
-        timings["deg_exchange"] = _time.monotonic() - t0
-
-        t0 = _time.monotonic()
-        use_sockets = n_parts_ == 1
-        if n_parts_ > 1 and not force_ag_:
-            try:
-                if hub_addr is None:
-                    raise ConnectionError("no hub advertised")
-                if pid == 0:
-                    xg.accept_all()
-                else:
-                    xg.connect(tuple(hub_addr))
-                st = "ok"
-            except Exception as e:
-                st = f"fail: {e!r}"
-            statuses = ctx.allGather(st)
-            use_sockets = all(x == "ok" for x in statuses)
-            # degree partials: over the raw-TCP star when it came up
-            # (sub-second), over the coordinator only on the rare
-            # handshake-failure fallback — either way every task applies
-            # the same disjoint (src-partitioned) partials
-            deg_blob = pickle.dumps(
-                (my_v.astype(_np.int32), my_deg), protocol=4
-            )
-            if use_sockets:
-                deg_frames = xg.exchange(deg_blob)
             else:
-                deg_frames = [
-                    base64.b64decode(g)
-                    for g in ctx.allGather(
-                        base64.b64encode(deg_blob).decode("ascii")
-                    )
-                ]
-            for fr in deg_frames:
+                my_v = _np.empty(0, _np.int64)
+                my_deg = _np.empty(0, _np.float64)
+            degv = _np.zeros(nv, dtype=_np.float64)
+            for fr in comm.exchange(
+                pickle.dumps((my_v.astype(_np.int32), my_deg), protocol=4)
+            ):
                 gv, gd = pickle.loads(fr)
                 if len(gv):
                     degv[gv.astype(_np.int64)] = gd
-            if not use_sockets:
-                xg.close()
-                if pid == 0:
-                    # one diagnosable line: on multi-homed hosts a
-                    # non-routable _advertise_host pick lands here, and
-                    # the silent 10x slowdown (1 s/sync coordinator
-                    # floor) was otherwise invisible
-                    import sys as _sys
-
-                    bad = [x for x in statuses if x != "ok"]
-                    print(
-                        "[louvain/barrier] star-transport handshake failed"
-                        f" on {len(bad)}/{n_parts_} tasks"
-                        f" (hub={hub_addr}, first={bad[0] if bad else '?'});"
-                        " level falls back to coordinator allGather"
-                        " (~1 s/sync)",
-                        file=_sys.stderr,
-                        flush=True,
-                    )
-        timings["xchg_setup"] = _time.monotonic() - t0
         # structural prep (self-loop filter + row->position maps) ONCE per
         # level: it is community-independent, and leaving it inside the
         # kernel re-paid it every sweep (searchsorted alone measured ~5 s
         # per 8.7M-row call on this host)
-        t0 = _time.monotonic()
-        pre = _k.prepare_dense_block(s, d, w, nv) if len(s) else None
-        timings["prep"] = _time.monotonic() - t0
-        comm = _np.arange(nv, dtype=_np.int64)
+        with comm.phase("prep"):
+            pre = _k.prepare_dense_block(s, d, w, nv) if len(s) else None
+        labels = _np.arange(nv, dtype=_np.int64)
         moves_log: list[int] = []
         best_moves, best_sweep = float("inf"), -1
-        slowest_sweep = 0.0
-        try:
-            for sweep in range(max_sweeps_):
-                t0 = _time.monotonic()
+        for sweep in range(max_sweeps_):
+            with comm.phase(f"kernel_{sweep}"):
                 min_gain = _math.exp(-(sweep + 1)) if anneal_ else 0.0
-                tot = _np.bincount(comm, weights=degv, minlength=nv)
+                tot = _np.bincount(labels, weights=degv, minlength=nv)
                 if len(s):
                     out_v, out_c = _k.louvain_block_local_dense(
-                        s, d, w, comm, degv, tot, m2_, min_gain,
+                        s, d, w, labels, degv, tot, m2_, min_gain,
                         max_inner=6, seed=sweep, pre=pre,
                     )
-                    keep = comm[out_v] != out_c
+                    keep = labels[out_v] != out_c
                     mv_v = out_v[keep].astype(_np.int32)
                     mv_c = out_c[keep].astype(_np.int32)
                 else:
                     mv_v = _np.empty(0, _np.int32)
                     mv_c = _np.empty(0, _np.int32)
                 payload = pickle.dumps((mv_v, mv_c), protocol=4)
-                timings[f"kernel_{sweep}"] = _time.monotonic() - t0
-                t0 = _time.monotonic()
-                # the superstep barrier: every task contributes its
-                # (disjoint — src-partitioned) movers and receives
-                # everyone's; both transports return the same multiset on
-                # every task, so exit decisions stay identical
-                if use_sockets:
-                    if pid == 0 and sweep == _kill_sweep_:
-                        xg.kill_for_test()  # injected hub death (tests)
-                    # a socket failure here raises AllGatherTransportError
-                    # (exchange.py): NOT downgraded task-locally, because
-                    # a partially-delivered round leaves tasks disagreeing
-                    # on the current sweep — the driver retries the whole
-                    # level over allGather from consistent state instead
-                    frames = xg.exchange(payload)
-                else:
-                    frames = [
-                        base64.b64decode(g)
-                        for g in ctx.allGather(
-                            base64.b64encode(payload).decode("ascii")
-                        )
-                    ]
-                timings[f"gather_{sweep}"] = _time.monotonic() - t0
-                if use_sockets:
-                    # adapt the round timeout to the slowest sweep seen:
-                    # gather wall includes waiting for the slowest peer's
-                    # kernel, so 20x that is generous for stragglers while
-                    # bounding a dead-hub stall to minutes, not the old
-                    # fixed hour
-                    slowest_sweep = max(
-                        slowest_sweep,
-                        timings[f"kernel_{sweep}"] + timings[f"gather_{sweep}"],
-                    )
-                    xg.set_round_timeout(20.0 * slowest_sweep)
-                total_moves = 0
-                for fr in frames:
-                    gv, gc = pickle.loads(fr)
-                    if len(gv):
-                        comm[gv.astype(_np.int64)] = gc.astype(_np.int64)
-                    total_moves += len(gv)
-                moves_log.append(int(total_moves))
-                # identical inputs -> identical exit decision on every task
-                if total_moves == 0:
-                    break
-                threshold = int(mmf_ * nv)
-                if sweep > 0 and threshold > 0 and total_moves <= threshold:
-                    break
-                if (
-                    sweep > 0
-                    and total_moves >= 50
-                    and total_moves >= 0.9 * moves_log[-2]
-                ):
-                    break
-                if total_moves < best_moves:
-                    best_moves, best_sweep = total_moves, sweep
-                elif sweep - best_sweep >= 8:
-                    break
-        finally:
-            # python workers are REUSED across tasks — sockets must not
-            # leak into the next task on this worker
-            xg.close()
+            # the superstep barrier: every task contributes its (disjoint —
+            # src-partitioned) movers and receives everyone's
+            with comm.phase(f"gather_{sweep}"):
+                frames = comm.exchange(payload)
+            total_moves = 0
+            for fr in frames:
+                gv, gc = pickle.loads(fr)
+                if len(gv):
+                    labels[gv.astype(_np.int64)] = gc.astype(_np.int64)
+                total_moves += len(gv)
+            moves_log.append(int(total_moves))
+            # identical inputs -> identical exit decision on every task
+            if total_moves == 0:
+                break
+            threshold = int(mmf_ * nv)
+            if sweep > 0 and threshold > 0 and total_moves <= threshold:
+                break
+            if (
+                sweep > 0
+                and total_moves >= 50
+                and total_moves >= 0.9 * moves_log[-2]
+            ):
+                break
+            if total_moves < best_moves:
+                best_moves, best_sweep = total_moves, sweep
+            elif sweep - best_sweep >= 8:
+                break
         # local internal-weight partial for the level's modularity
         if len(s):
-            same = comm[s64] == comm[d64]
-            w_int = float(w[same].astype(_np.float64).sum())
+            same = labels[s64] == labels[d.astype(_np.int64)]
+            w_int = float(w[same].sum())
         else:
             w_int = 0.0
         # strided assignment slice: tasks hold identical state, so each
-        # returns 1/n_parts of it and the driver reassembles
-        assign_slice = comm[pid::n_parts_]
-        yield (
-            pid,
+        # returns 1/n of it and the driver reassembles
+        return (
             int(len(s)),
             w_int,
-            moves_log if pid == 0 else None,
-            pickle.dumps(assign_slice, protocol=4),
-            pickle.dumps((my_v, my_deg), protocol=4),
-            {k: round(v, 3) for k, v in timings.items()},
+            moves_log if comm.rank == 0 else None,
+            labels[comm.rank::comm.n],
+            (my_v, my_deg),
         )
 
-    t_job = time.monotonic()
-    # larger Arrow batches for the one bulk transfer of the level: the
-    # session default (64k rows) is sized for wide documents/media rows,
-    # but the pack reads 3 fixed-width columns — fewer, bigger batches
-    # measurably cut the JVM→Python conversion wall.  Restore on exit.
-    _abatch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
-    try:
-        results = blobs.rdd.barrier().mapPartitions(_level).collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", _abatch)
-    import pickle as _pickle
+    res = bsp.run(bsp.pack(edges_p), _level, "louvain", "sql")
+    if res is None:
+        return None
+    outs, stats.phase_crit, stats.phase_sum = res
 
     comm_arr = np.empty(nv, dtype=np.int64)
     deg_arr = np.zeros(nv, dtype=np.float64)
     w_int_total = 0.0
     n_rows = 0
     moves_log = []
-    for pid, n_part, w_int, mlog, ablob, dblob, tm in results:
-        comm_arr[pid::n_parts] = _pickle.loads(bytes(ablob))
-        dv, dd = _pickle.loads(bytes(dblob))
+    for rank, (n_part, w_int, mlog, labels, (dv, dd)) in enumerate(outs):
+        comm_arr[rank::len(outs)] = labels
         if len(dv):
             deg_arr[dv] = dd
         w_int_total += w_int
         n_rows += n_part
         if mlog is not None:
             moves_log = list(mlog)
-        for k, v in (tm or {}).items():
-            # max(), not a > guard: a 0.000-rounded phase must still CREATE
-            # its key so crit/sum stay aligned
-            stats.phase_crit[k] = max(stats.phase_crit.get(k, 0.0), v)
-            stats.phase_sum[k] = stats.phase_sum.get(k, 0.0) + v
-    if os.environ.get("PLM_DEBUG_SWEEPS"):
-        print(
-            f"[louvain] barrier level: job={time.monotonic() - t_job:.1f}s "
-            f"phase_crit={ {k: round(v, 2) for k, v in stats.phase_crit.items()} }",
-            file=sys.stderr, flush=True,
-        )
     if stats.n_edges_sym == 0:
         stats.n_edges_sym = int(n_rows)
     stats.moves_per_sweep.extend(int(m) for m in moves_log)
@@ -1361,7 +1037,7 @@ def louvain_level(
             )
         engine = "barrier" if fits else "sql"
 
-    if engine == "barrier" and not _barrier_supported(spark.sparkContext):
+    if engine == "barrier" and not bsp.barrier_supported(spark.sparkContext):
         # cheap upfront probe (once per SparkContext): a cluster that cannot
         # schedule ANY barrier stage (dynamic allocation, too few slots)
         # must not pay the pack + slot-check retry loop on the real job
@@ -1373,50 +1049,19 @@ def louvain_level(
         engine = "sql"
 
     if engine == "barrier":
-        # whole level in ONE barrier stage, mover deltas via allGather —
-        # falls back to the sql engine ONLY for barrier SCHEDULING
-        # failures.  A worker-side Python error (kernel or data bug)
-        # carries its traceback in the Spark message and MUST propagate:
-        # silently rerunning it on sql would mask real defects and double
-        # wall time.
-        try:
-            assign, deg = _barrier_superstep_level(
-                spark, sym_edges, m2, n_vertices,
-                max_sweeps, anneal, stats, min_moves_frac,
-                pre_partitioned=pre_partitioned,
-            )
+        # whole level in ONE barrier stage; None means the stage could not
+        # be scheduled (the runtime said so on stderr) and the level runs
+        # on sql.  A worker-side error raises out of the runtime.
+        out = _barrier_superstep_level(
+            spark, sym_edges, m2, n_vertices,
+            max_sweeps, anneal, stats, min_moves_frac,
+            pre_partitioned=pre_partitioned,
+        )
+        if out is not None:
+            assign, deg = out
             stats.engine = "barrier"
             stats.wall_sec = time.monotonic() - t0
             return assign, deg, m2, stats
-        except Exception as exc:
-            if _is_transport_error(exc):
-                # mid-level socket loss (hub/peer death): the level state
-                # is consistent only at singleton init, so rerun the WHOLE
-                # level on the connectionless coordinator transport —
-                # bounded outage = adaptive ROUND_TIMEOUT + one level rerun
-                print(
-                    "[louvain] star transport failed mid-level; retrying "
-                    "the level over coordinator allGather",
-                    file=sys.stderr,
-                )
-                _reset_sweep_stats(stats)
-                assign, deg = _barrier_superstep_level(
-                    spark, sym_edges, m2, n_vertices,
-                    max_sweeps, anneal, stats, min_moves_frac,
-                    pre_partitioned=pre_partitioned,
-                    force_allgather=True,
-                )
-                stats.engine = "barrier"
-                stats.wall_sec = time.monotonic() - t0
-                return assign, deg, m2, stats
-            if _is_worker_python_error(exc):
-                raise  # kernel/data bug inside the stage — surface it
-            print(
-                f"[louvain] barrier engine unavailable ({exc!r}); "
-                "falling back to sql",
-                file=sys.stderr,
-            )
-            _reset_sweep_stats(stats)
 
     # pre-partition by dst: the per-sweep assignment join hits dst, and a
     # cached repartition exposes its outputPartitioning to the planner so

@@ -5,8 +5,10 @@ Two engines, the same barrier-vs-relational split as Louvain
 
 - **barrier engine** (default while ids are dense 0..n-1 and the vertex
   count fits driver / executor memory, ``broadcast_vertex_threshold``):
-  ALL iterations run inside one Spark barrier stage.  Each task holds its
-  dst-partitioned slice of the edge table in memory and exchanges its
+  ALL iterations run inside one Spark barrier stage of the runtime
+  Louvain shares (functions/bsp.py: the pack, the handshake, the
+  exchange, the transport-loss retry and the teardown).  Each task holds
+  its dst-partitioned slice of the edge table in memory and exchanges its
   EXACT per-dst contribution sums (dst-partitioning makes partials
   disjoint) every iteration, so the edges cross the JVM→Python boundary
   once per run;
@@ -33,11 +35,10 @@ Scale notes:
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from parallel_louvain_method_spark.functions import bsp
 from parallel_louvain_method_spark.operators.graph import vertex_ids
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
@@ -56,34 +57,26 @@ def _pagerank_barrier(
     A per-iteration ``mapInArrow`` engine is bound not by the kernel but
     by Spark re-reading the cached edge table and re-serializing it
     JVM→Arrow→Python EVERY iteration — the same finding that motivated
-    the Louvain barrier engine, re-applied here.  Each
-    dst-partitioned slice crosses the boundary ONCE (zstd-packed blob);
-    per-iteration traffic is the task's own per-dst partial sums
-    (disjoint under dst-partitioning, ~12 B per touched dst) over the
-    raw-TCP star exchange (functions/exchange.py), with the coordinator
-    ``allGather`` as handshake and fallback.  Every task applies the same
-    gathered partials to its full rank vector, so all tasks hold
-    identical state and take identical tol-exit decisions — the Louvain
-    barrier invariant.
+    the Louvain barrier engine, re-applied here.  Each dst-partitioned
+    slice crosses the boundary ONCE (the barrier runtime's packed blob,
+    functions/bsp.py); per-iteration traffic is the task's own per-dst
+    partial sums (disjoint under dst-partitioning, ~12 B per touched dst)
+    over the runtime's exchange.  Every task applies the same gathered
+    partials to its full rank vector, so all tasks hold identical state
+    and take identical tol-exit decisions.
 
     Returns None when barrier scheduling is unavailable (dynamic
-    allocation, no slots) or the stage fails for a reason other than a
-    worker-side Python error — the caller falls back to the DataFrame
-    engine.  Values match the DataFrame engine's to within
-    summation-order ulps (the cross-engine parity test bounds the
-    difference).
+    allocation, no slots) — the caller falls back to the DataFrame
+    engine.  A worker-side Python error raises; a star-transport loss is
+    retried by the runtime over the coordinator.  Values match the
+    DataFrame engine's to within summation-order ulps (the cross-engine
+    parity test bounds the difference).
     """
     import numpy as np
 
-    from parallel_louvain_method_spark.operators.louvain import (
-        _barrier_supported,
-        _is_transport_error,
-        _is_worker_python_error,
-    )
-
     spark = edges.sparkSession
     sc = spark.sparkContext
-    if not _barrier_supported(sc):
+    if not bsp.barrier_supported(sc):
         return None
     n_parts = min(
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
@@ -113,187 +106,73 @@ def _pagerank_barrier(
     dm_bc = sc.broadcast(dangling_mask)
     p_bc = sc.broadcast(p) if p is not None else None
 
-    def _pack(batches):
-        import pickle
-
-        import numpy as _np
-        import pyarrow as _pa
-
-        ss, dd, ww = [], [], []
-        for b in batches:
-            ss.append(b.column(0).to_numpy(zero_copy_only=False))
-            dd.append(b.column(1).to_numpy(zero_copy_only=False))
-            ww.append(b.column(2).to_numpy(zero_copy_only=False))
-        s = _np.concatenate(ss) if ss else _np.empty(0, _np.int32)
-        d = _np.concatenate(dd) if dd else _np.empty(0, _np.int32)
-        w = _np.concatenate(ww) if ww else _np.empty(0, _np.float64)
-        raw = pickle.dumps((s, d, w), protocol=4)
-        comp = _pa.Codec("zstd", compression_level=1).compress(
-            raw, asbytes=True
-        )
-        yield _pa.RecordBatch.from_pydict(
-            {"raw_len": [len(raw)], "blob": [comp]}
-        )
-
-    blobs = ep.mapInArrow(_pack, schema="raw_len long, blob binary")
-
     nv = int(n)
     d_ = float(damping)
     mi_ = int(max_iter)
     tol_ = tol
-    np_ = int(n_parts)
     has_d_ = has_danglings
 
-    def _run(rows):
-        import base64
+    def _run(comm, dcol, s, w):
         import pickle
 
         import numpy as _np
-        from pyspark import BarrierTaskContext
 
-        from parallel_louvain_method_spark.functions.exchange import (
-            StarAllGather,
-        )
-
-        ctx = BarrierTaskContext.get()
-        pid = ctx.partitionId()
-        blob = None
-        raw_len = 0
-        for r in rows:
-            blob = r["blob"]
-            raw_len = r["raw_len"]
-        if blob is not None:
-            import pyarrow as _pa
-
-            s, dcol, w = pickle.loads(
-                _pa.Codec("zstd").decompress(
-                    bytes(blob), int(raw_len), asbytes=True
-                )
-            )
-        else:
-            s = _np.empty(0, _np.int32)
-            dcol = _np.empty(0, _np.int32)
-            w = _np.empty(0, _np.float64)
         s64 = s.astype(_np.int64)
         d64 = dcol.astype(_np.int64)
         ow = ow_bc.value
         dmask = dm_bc.value
         pv = p_bc.value if p_bc is not None else None
-
-        xg = StarAllGather(pid, np_)
-        hub_addr = None
-        if pid == 0 and np_ > 1:
-            try:
-                hub_addr = xg.listen()
-            except OSError:
-                hub_addr = None
-        use_sockets = np_ == 1
-        if np_ > 1:
-            for g in ctx.allGather(
-                base64.b64encode(pickle.dumps(hub_addr, protocol=4)).decode(
-                    "ascii"
-                )
-            ):
-                ga = pickle.loads(base64.b64decode(g))
-                if ga is not None:
-                    hub_addr = ga
-            try:
-                if hub_addr is None:
-                    raise ConnectionError("no hub advertised")
-                if pid == 0:
-                    xg.accept_all()
-                else:
-                    xg.connect(tuple(hub_addr))
-                st = "ok"
-            except Exception as e:
-                st = f"fail: {e!r}"
-            use_sockets = all(x == "ok" for x in ctx.allGather(st))
-            if not use_sockets:
-                xg.close()
-
         if pv is None:
             ranks = _np.full(nv, 1.0 / nv, dtype=_np.float64)
             base = (1.0 - d_) / nv
         else:
             ranks = pv.copy()
             base = (1.0 - d_) * pv
-        try:
-            for _it in range(mi_):
-                if len(s64):
-                    contrib = w / ow[s64] * ranks[s64]
-                    part = _np.bincount(
-                        d64, weights=contrib, minlength=nv
-                    )
-                    dv = _np.flatnonzero(part)
-                else:
-                    part = None
-                    dv = _np.empty(0, _np.int64)
-                payload = pickle.dumps(
-                    (
-                        dv.astype(_np.int32),
-                        part[dv] if part is not None else
-                        _np.empty(0, _np.float64),
-                    ),
-                    protocol=4,
-                )
-                if use_sockets:
-                    frames = xg.exchange(payload)
-                else:
-                    frames = [
-                        base64.b64decode(g)
-                        for g in ctx.allGather(
-                            base64.b64encode(payload).decode("ascii")
-                        )
-                    ]
-                in_sum = _np.zeros(nv, dtype=_np.float64)
-                for fr in frames:
-                    gv, gs = pickle.loads(fr)
-                    if len(gv):
-                        # dst-partitioned: partials are disjoint scatters
-                        in_sum[gv.astype(_np.int64)] = gs
-                dangling = (
-                    float(ranks[dmask].sum()) if has_d_ else 0.0
-                )
-                if pv is None:
-                    new_ranks = base + d_ * in_sum + d_ * dangling / nv
-                else:
-                    new_ranks = base + d_ * in_sum + d_ * dangling * pv
-                delta = float(_np.abs(new_ranks - ranks).max())
-                ranks = new_ranks
-                # identical state everywhere -> identical exit decision
-                if tol_ is not None and delta < tol_:
-                    break
-        finally:
-            xg.close()
+        for _it in range(mi_):
+            if len(s64):
+                contrib = w / ow[s64] * ranks[s64]
+                part = _np.bincount(d64, weights=contrib, minlength=nv)
+                dv = _np.flatnonzero(part)
+                payload = (dv.astype(_np.int32), part[dv])
+            else:
+                payload = (_np.empty(0, _np.int32), _np.empty(0, _np.float64))
+            in_sum = _np.zeros(nv, dtype=_np.float64)
+            for fr in comm.exchange(pickle.dumps(payload, protocol=4)):
+                gv, gs = pickle.loads(fr)
+                if len(gv):
+                    # dst-partitioned: partials are disjoint scatters
+                    in_sum[gv.astype(_np.int64)] = gs
+            dangling = float(ranks[dmask].sum()) if has_d_ else 0.0
+            if pv is None:
+                new_ranks = base + d_ * in_sum + d_ * dangling / nv
+            else:
+                new_ranks = base + d_ * in_sum + d_ * dangling * pv
+            delta = float(_np.abs(new_ranks - ranks).max())
+            ranks = new_ranks
+            # identical state everywhere -> identical exit decision
+            if tol_ is not None and delta < tol_:
+                break
         # strided slice: tasks hold identical ranks, driver reassembles
-        yield (pid, pickle.dumps(ranks[pid::np_], protocol=4))
+        return ranks[comm.rank::comm.n]
 
-    # a worker-side Python error (kernel or data bug) propagates; a
-    # scheduling or star-transport failure returns None so the caller
-    # reruns on the DataFrame engine.  Either way the edge cache and the
-    # broadcasts are released.
+    # the edge cache and the broadcasts are released on every exit path
     try:
-        results = blobs.rdd.barrier().mapPartitions(_run).collect()
-    except Exception as exc:
-        if _is_worker_python_error(exc) and not _is_transport_error(exc):
-            raise
-        print(
-            f"[pagerank] barrier engine unavailable ({exc!r}); "
-            "falling back to the DataFrame engine",
-            file=sys.stderr,
+        res = bsp.run(
+            bsp.pack(ep.select("dst", "src", "weight")), _run,
+            "pagerank", "the DataFrame engine",
         )
-        return None
     finally:
         ow_bc.destroy()
         dm_bc.destroy()
         if p_bc is not None:
             p_bc.destroy()
         ep.unpersist()
-    import pickle as _pickle
-
+    if res is None:
+        return None
+    outs = res[0]
     ranks_arr = np.empty(nv, dtype=np.float64)
-    for pid, rblob in results:
-        ranks_arr[pid::np_] = _pickle.loads(bytes(rblob))
+    for rank, slice_ in enumerate(outs):
+        ranks_arr[rank::len(outs)] = slice_
     import pandas as pd
 
     return (

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from parallel_louvain_method_spark.session import get_spark
@@ -30,9 +32,23 @@ GOLDEN16_ASSIGNMENT = {
 }
 
 
+def _test_driver_memory() -> str:
+    """The smaller of 8g and half the host's memory: the 48g library
+    default lets the test JVM grow until a small shared host's OOM killer
+    takes it, failing every later test."""
+    with open("/proc/meminfo") as f:
+        mem_mb = int(f.readline().split()[1]) // 1024
+    return f"{max(1024, min(8192, mem_mb // 2))}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="plm-tests", cores=4, shuffle_partitions=4)
+    conf = {}
+    if not os.environ.get("PLM_DRIVER_MEM"):
+        conf["spark.driver.memory"] = _test_driver_memory()
+    s = get_spark(
+        app_name="plm-tests", cores=4, shuffle_partitions=4, extra_conf=conf
+    )
     yield s
     s.stop()
 

@@ -113,7 +113,7 @@ def _inject_barrier_failure(monkeypatch, spark, message):
     probe is pinned to "schedulable", so the failure hits the real stage)."""
     from pyspark.rdd import RDDBarrier
 
-    from parallel_louvain_method_spark.operators.louvain import _BARRIER_PROBED
+    from parallel_louvain_method_spark.functions.bsp import _BARRIER_PROBED
 
     monkeypatch.setitem(_BARRIER_PROBED, spark.sparkContext.applicationId, True)
     orig = RDDBarrier.mapPartitions
@@ -172,6 +172,35 @@ def test_pagerank_barrier_scheduling_failure_falls_back(
         pagerank(sym, max_iter=30, tol=None)
     assert _persisted_caches(spark) == before
     assert "falling back" not in capfd.readouterr().err
+
+
+def test_pagerank_barrier_transport_loss_retries_on_allgather(
+    spark, golden16_df, monkeypatch, capfd
+):
+    """Rank 0 kills the star transport at exchange round 2: the runtime
+    reruns the stage over the coordinator allGather instead of leaving
+    the barrier engine, and the ranks equal an uninterrupted barrier run
+    exactly (per-dst partials are disjoint scatters, so the transport
+    cannot change a sum).  No persisted cache outlives the call."""
+    from parallel_louvain_method_spark.functions import bsp
+
+    sym = symmetric_edges(golden16_df)
+    want = {
+        r["vtx"]: r["rank"]
+        for r in pagerank(sym, max_iter=10, tol=None).collect()
+    }
+    capfd.readouterr()
+    monkeypatch.setattr(bsp, "_KILL_ROUND", 2)
+    before = _persisted_caches(spark)
+    got = {
+        r["vtx"]: r["rank"]
+        for r in pagerank(sym, max_iter=10, tol=None).collect()
+    }
+    assert _persisted_caches(spark) == before
+    assert got == want
+    err = capfd.readouterr().err
+    assert "retrying the stage over coordinator allGather" in err
+    assert "falling back to the DataFrame engine" not in err
 
 
 def _np_ppr(edges, n, p, damping=0.85, iters=30):

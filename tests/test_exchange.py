@@ -138,3 +138,63 @@ def test_star_allgather_adaptive_round_timeout_clamps():
     finally:
         g0.close()
         g1.close()
+
+
+def test_star_allgather_hub_rejects_stray_connection():
+    """A stray socket that reaches the hub first and sends a wrong first
+    frame must not take a rank's slot: the hub closes it, keeps
+    accepting, and every real rank gets the same n-frame gathers."""
+    import socket
+    import struct
+
+    n = 4
+    rounds = [[b"r%d-rank%d" % (r, k) for k in range(n)] for r in range(3)]
+    results = [[None] * len(rounds) for _ in range(n)]
+    errors = []
+    addr_box = {}
+    addr_ready = threading.Event()
+    stray_sent = threading.Event()
+
+    def rank_fn(rank):
+        g = StarAllGather(rank, n)
+        try:
+            if rank == 0:
+                addr_box["hub"] = g.listen()
+                addr_ready.set()
+                g.accept_all()
+            else:
+                stray_sent.wait(10)
+                g.connect(addr_box["hub"])
+            for r, payloads in enumerate(rounds):
+                results[rank][r] = g.exchange(payloads[rank])
+        except Exception as e:
+            errors.append((rank, e))
+        finally:
+            g.close()
+
+    # daemon threads: a rank stuck behind a stolen slot must not keep the
+    # test process alive once the join timeout gives up on it
+    threads = [
+        threading.Thread(target=rank_fn, args=(i,), daemon=True)
+        for i in range(n)
+    ]
+    threads[0].start()
+    assert addr_ready.wait(10)
+    host, port = addr_box["hub"][:2]
+    stray = socket.create_connection((host, port), timeout=5)
+    try:
+        stray.sendall(struct.pack(">I", 16) + b"x" * 16)
+        stray_sent.set()
+        for t in threads[1:]:
+            t.start()
+        for t in threads:
+            t.join(20)
+    finally:
+        stray.close()
+    assert not errors, errors
+    for r in range(len(rounds)):
+        for rank in range(n):
+            got = results[rank][r]
+            assert got is not None, (rank, r)
+            assert sorted(got) == sorted(rounds[r])
+            assert got == results[0][r]

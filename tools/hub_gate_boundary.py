@@ -36,7 +36,7 @@ import sys
 import time
 
 
-def _rank_proc(rank, n, addr_q, res_q, payload_sizes):
+def _rank_proc(rank, n, hub_q, res_q, payload_sizes):
     import os
 
     # abspath: a relative __file__ ("tools/x.py") would resolve to
@@ -48,12 +48,14 @@ def _rank_proc(rank, n, addr_q, res_q, payload_sizes):
 
     g = StarAllGather(rank, n)
     if rank == 0:
-        addr = g.listen()
+        # (host, port, token): the hub admits only peers presenting the
+        # token, so every rank gets the whole tuple
+        hub = g.listen()
         for _ in range(n - 1):
-            addr_q.put(addr)
+            hub_q.put(hub)
         g.accept_all()
     else:
-        g.connect(addr_q.get(timeout=60))
+        g.connect(hub_q.get(timeout=60))
     walls = []
     egress = []
     for size in payload_sizes:
@@ -88,11 +90,11 @@ def main() -> None:
     per_rank_sizes = [m * 8 // n for m in movers]  # int32 pairs, split evenly
 
     ctx = mp.get_context("fork")
-    addr_q = ctx.Queue()
+    hub_q = ctx.Queue()
     res_q = ctx.Queue()
     procs = [
         ctx.Process(
-            target=_rank_proc, args=(r, n, addr_q, res_q, per_rank_sizes)
+            target=_rank_proc, args=(r, n, hub_q, res_q, per_rank_sizes)
         )
         for r in range(n)
     ]
