@@ -549,3 +549,34 @@ def louvain_vectorized_edges(
             if zero_streak >= 3:
                 break
     return ids, ids[best_comm], sweeps, best_q, improved
+
+
+def min_root(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Connected components of the undirected edges ``(u[i], v[i])`` over
+    the dense range ``[0, n)``: ``root[x]`` is the least index in ``x``'s
+    component.
+
+    Each round every root hooks onto the least root across its edges
+    (``np.minimum.at``), then pointer jumping flattens the forest.  A
+    parent only ever decreases, so the forest stays acyclic and every
+    round that finds an edge between two trees removes at least one root:
+    the loop ends without a round cap, and each root is the least index of
+    its tree.  An edge whose ends share a root stays inside one tree for
+    good (trees only merge), so it is dropped.  Edge direction, duplicates
+    and self-loops do not matter.
+    """
+    root = np.arange(n, dtype=np.int64)
+    u = np.asarray(u, dtype=np.int64)
+    v = np.asarray(v, dtype=np.int64)
+    while True:
+        ru, rv = root[u], root[v]
+        live = ru != rv
+        if not live.any():
+            return root
+        u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+        np.minimum.at(root, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped

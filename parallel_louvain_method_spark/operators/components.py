@@ -1,161 +1,84 @@
-"""Connected components — min-label propagation with pointer jumping
-(SURVEY.md A11, [NR] north rule; exact counts required).
+"""Connected components, exact (SURVEY.md A11, [NR] north rule): every
+vertex is labeled by the least vertex id of its component.
 
-Algorithm: every vertex starts labeled with its own id; each round
-1. neighbor-min: ``label[v] <- min(label[v], min_{u~v} label[u])``, then
-2. pointer-jump: ``label[v] <- label[label[v]]``, which contracts label
-   chains and gives the logarithmic-round behavior of the
-   large-star/small-star family (PAPERS.md, "Finding connected components
-   in map-reduce in logarithmic rounds").
+Two engines, chosen by the vertex count n against
+``broadcast_vertex_threshold``:
 
-Two engines, the same broadcast-vs-shuffle split as Louvain/PageRank:
-- **broadcast engine** (dense ids, vertex set fits memory): labels are a
-  broadcast numpy array; each round is ONE ``mapInPandas`` pass over the
-  cached dst-partitioned edge table returning per-dst neighbor minima
-  (partition-disjoint, hence exact), with pointer jumping as a driver-side
-  numpy gather;
-- **DataFrame engine** (sparse/huge): one join + groupBy-min + label
-  self-join per round, localCheckpoint'ed.
-
-Terminates when a round changes nothing; the result labels each component
-by its minimum vertex id (deterministic, exact).
+- **in-memory forest** (n at or below the threshold): one ``mapInArrow``
+  pass over the raw edges.  Each partition maps its ids to local indices
+  in sorted order (``np.unique``), runs
+  :func:`~parallel_louvain_method_spark.functions.kernels.min_root` and
+  yields ``(v, root)`` for every local vertex.  The driver collects those
+  rows, maps them to indices the same way, runs the same kernel and reads
+  ``component = ids[root]``.  Sorted indices keep the least index the
+  least id, so any long id works (negative, sparse, near ±2^63), and the
+  edges may be given in either or both directions.  The kernel's parents
+  only decrease, so it ends without a round cap: the answer is exact on
+  every graph.  The collect holds Σ_partitions(local vertices) ≤
+  min(P·n, 2m) rows for P partitions and m edge rows.
+- **DataFrame engine** (above the threshold): min-label propagation plus
+  one pointer jump per round over the symmetrized edge set — one join,
+  one groupBy-min and one label self-join per round, checkpointed.  It
+  returns when a round changes nothing and raises ``RuntimeError`` when
+  round ``max_iter`` still changed labels: long chains need many rounds
+  (PAPERS.md, "Finding connected components in map-reduce in logarithmic
+  rounds", gives the log-round rewrite this engine does not have yet).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from parallel_louvain_method_spark.functions.kernels import min_root
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 from parallel_louvain_method_spark.operators.graph import (
-    symmetric_edges,
     symmetrize,
     vertex_ids,
 )
 
 
-def _cc_labels(sym: DataFrame, n: int, max_iter: int):
-    """Broadcast-state label loop over ``sym`` (dense int ids 0..n-1,
-    any column types castable to int).  Returns the final numpy label
-    array of length ``n`` — shared by the dense engine and the
-    sparse-id relabel path below."""
-    import numpy as np
+def _forest_partition(batches):
+    """``(v, root)`` for every vertex of one partition's edges, ``root``
+    the least id of ``v``'s component among those edges."""
+    import pyarrow as pa
 
-    spark = sym.sparkSession
-    sc = spark.sparkContext
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ep = (
-        sym.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-        )
-        .repartition(n_parts, "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    src, dst = [], []
+    for b in batches:
+        src.append(b.column(0).to_numpy(zero_copy_only=False))
+        dst.append(b.column(1).to_numpy(zero_copy_only=False))
+    if not src:
+        return
+    k = sum(map(len, src))
+    ids, idx = np.unique(
+        np.concatenate(src + dst).astype(np.int64), return_inverse=True
     )
-    ep.count()
-
-    labels = np.arange(n, dtype=np.int64)
-    nv = int(n)
-    for _ in range(max_iter):
-        state_bc = sc.broadcast(labels)
-
-        def nbr_min(batches, _l=state_bc, _n=nv):
-            # mapInArrow + a dense scatter-min accumulator (min is
-            # order-free, so the result is exact): one O(rows) pass per
-            # batch instead of per-batch np.unique + union1d merges, and
-            # no pandas Series wrapper on the per-round bulk transfer.
-            # Per-task memory is one int64[n] — the O(n) budget the label
-            # broadcast already spends.
-            import numpy as _np
-            import pyarrow as _pa
-
-            lab = _l.value
-            sentinel = _np.iinfo(_np.int64).max
-            acc = _np.full(_n, sentinel)
-            for b in batches:
-                s = b.column(0).to_numpy(zero_copy_only=False)
-                d = b.column(1).to_numpy(zero_copy_only=False)
-                # per-dst min over neighbor labels (exact: dst-partitioned)
-                _np.minimum.at(acc, d, lab[s])
-            dv = _np.flatnonzero(acc != sentinel)
-            yield _pa.RecordBatch.from_pydict(
-                {"vtx": dv.astype("int64"), "m": acc[dv]}
-            )
-
-        pdf = ep.mapInArrow(nbr_min, schema="vtx long, m long").toPandas()
-        state_bc.destroy()
-        new_labels = labels.copy()
-        v = pdf["vtx"].to_numpy()
-        np.minimum.at(new_labels, v, pdf["m"].to_numpy())
-        # pointer jumping until the label forest is flat (driver-side numpy)
-        while True:
-            jumped = new_labels[new_labels]
-            if np.array_equal(jumped, new_labels):
-                break
-            new_labels = jumped
-        if np.array_equal(new_labels, labels):
-            break
-        labels = new_labels
-
-    ep.unpersist()
-    return labels
+    root = min_root(idx[:k], idx[k:], len(ids))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids), pa.array(ids[root])], names=["v", "root"]
+    )
 
 
-def _cc_broadcast(sym: DataFrame, n: int, max_iter: int) -> DataFrame:
-    """Broadcast-state engine; caller guarantees dense ids 0..n-1."""
-    import numpy as np
+def _cc_forest(edges: DataFrame) -> DataFrame:
+    """The in-memory engine: per-partition forests, one driver merge."""
     import pandas as pd
 
-    labels = _cc_labels(sym, n, max_iter)
-    return sym.sparkSession.createDataFrame(
-        pd.DataFrame({"vtx": np.arange(n, dtype=np.int64), "component": labels}),
-        schema="vtx long, component long",
-    ).localCheckpoint(eager=True)
-
-
-def _cc_broadcast_sparse(
-    sym: DataFrame, verts: DataFrame, n: int, max_iter: int
-) -> DataFrame:
-    """Broadcast-state engine for SPARSE/arbitrary long ids that still fit
-    the vertex threshold: relabel ids to dense 0..n-1 through a MONOTONE
-    (sorted) mapping, run the dense label loop, and map the labels back.
-
-    Monotonicity is what preserves the min-label contract exactly: the
-    minimum dense index of a component maps back to the minimum original
-    vertex id, so the output is row-identical to the DataFrame engine's —
-    without its per-round join + checkpoint + count cadence (measured the
-    dominant cost of components over LSH pair graphs and Boruvka
-    contraction graphs, whose ids are sparse by construction).  The two
-    id-attach joins are explicit broadcasts (n is at most the broadcast
-    threshold); the label loop is the same one the dense engine runs.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = sym.sparkSession
-    ids = np.sort(verts.toPandas()["vtx"].to_numpy())
-    m = spark.createDataFrame(
-        pd.DataFrame({"v": ids, "d": np.arange(len(ids), dtype=np.int64)}),
-        schema="v long, d long",
+    rows = (
+        edges.select("src", "dst")
+        .mapInArrow(_forest_partition, schema="v long, root long")
+        .toPandas()
     )
-    dsym = (
-        sym.join(
-            F.broadcast(
-                m.select(F.col("v").alias("src"), F.col("d").alias("__ds"))
-            ),
-            "src",
-        )
-        .join(
-            F.broadcast(
-                m.select(F.col("v").alias("dst"), F.col("d").alias("__dd"))
-            ),
-            "dst",
-        )
-        .select(F.col("__ds").alias("src"), F.col("__dd").alias("dst"))
+    k = len(rows)
+    ids, idx = np.unique(
+        np.concatenate(
+            [rows["v"].to_numpy(np.int64), rows["root"].to_numpy(np.int64)]
+        ),
+        return_inverse=True,
     )
-    labels = _cc_labels(dsym, n, max_iter)
-    return spark.createDataFrame(
-        pd.DataFrame({"vtx": ids, "component": ids[labels]}),
+    root = min_root(idx[:k], idx[k:], len(ids))
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"vtx": ids, "component": ids[root]}),
         schema="vtx long, component long",
     ).localCheckpoint(eager=True)
 
@@ -164,114 +87,85 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     broadcast_vertex_threshold: int = 5_000_000,
-    input_symmetric: bool = False,
 ) -> DataFrame:
     """Returns ``DataFrame[vtx: long, component: long]`` with
-    ``component = min vertex id of the component``.
+    ``component = min vertex id of the component``, over every endpoint
+    of ``edges`` (``DataFrame[src, dst, weight]``, read as undirected).
 
-    While the vertex set is below ``broadcast_vertex_threshold`` the label
-    table gets an explicit broadcast hint in the per-round join — the
-    per-round ``fresh_checkpoint`` deliberately drops statistics (see
-    plans/lineage.py: carried-over stats SQUARE through the pointer-jump
-    self-join, a doubly-exponential BigInt blowup in the stats visitor),
-    so the planner would otherwise sort-merge-join, re-sorting the cached
-    edge side every round.
-
-    ``input_symmetric=True`` declares ``edges`` already holds both
-    directions of every edge with distinct (src, dst) rows — the louvain
-    ``input_symmetric`` contract — and skips the symmetrize union +
-    distinct (one full shuffle of the biggest table here); a wrong
-    declaration under-connects one direction.
+    Up to ``broadcast_vertex_threshold`` vertices the in-memory forest
+    engine runs (no rounds, no cap; the driver collects at most
+    min(P·n, 2m) rows for P partitions, n vertices and m edge rows);
+    above it the DataFrame engine runs, and ``max_iter`` bounds only that
+    engine's rounds — it raises ``RuntimeError`` instead of returning
+    labels that are still moving.
     """
-    if input_symmetric:
-        sym = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        # one distinct over the symmetrize union: reachability only needs
-        # the (src, dst) pair set, so the weight-aware dedup pass of
-        # symmetric_edges would be a second, redundant hash aggregation
-        sym = (
-            symmetrize(edges)
-            .select("src", "dst")
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    if vertex_ids(edges).count() <= broadcast_vertex_threshold:
+        return _cc_forest(edges)
+    # one distinct over the symmetrize union: reachability only needs
+    # the (src, dst) pair set, so the weight-aware dedup pass of
+    # symmetric_edges would be a second, redundant hash aggregation
+    sym = (
+        symmetrize(edges)
+        .select("src", "dst")
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # the symmetric table's src column covers every vertex (both endpoints
     # appear as src), so the vertex set is a one-sided distinct of the
     # (cached) sym table instead of a union+distinct over the raw input
     verts = sym.select(F.col("src").alias("vtx")).distinct()
-    n = verts.count()
-    if n == 0:
-        sym.unpersist()
-        return verts.withColumn("component", F.col("vtx"))
-    if n <= broadcast_vertex_threshold:
-        # dense gate needs BOTH bounds: {-1, 0, 1, 3} has n == max+1 but a
-        # negative id would silently wrap numpy indexing in the broadcast
-        # engine — require min >= 0; sparse/negative ids that still fit
-        # the threshold take the monotone-relabel broadcast path instead
-        # (row-identical output, see _cc_broadcast_sparse)
-        mx, mn = verts.agg(F.max("vtx"), F.min("vtx")).first()
-        if mx is not None and int(mx) == n - 1 and int(mn) >= 0:
-            out = _cc_broadcast(sym, n, max_iter)
-        else:
-            out = _cc_broadcast_sparse(sym, verts, n, max_iter)
-        sym.unpersist()
-        return out
-    hint = (
-        (lambda df: F.broadcast(df))
-        if n <= broadcast_vertex_threshold
-        else (lambda df: df)
-    )
     labels = fresh_checkpoint(
         verts.select("vtx", F.col("vtx").alias("component"))
     )
-
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(hint(labels.withColumnRenamed("vtx", "dst")), "dst")
-            .groupBy(F.col("src").alias("vtx"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        stepped = (
-            labels.join(hint(nbr_min), "vtx", "left")
-            .select(
+    try:
+        for _ in range(max_iter):
+            nbr_min = (
+                sym.join(labels.withColumnRenamed("vtx", "dst"), "dst")
+                .groupBy(F.col("src").alias("vtx"))
+                .agg(F.min("component").alias("nbr_component"))
+            )
+            stepped = labels.join(nbr_min, "vtx", "left").select(
                 "vtx",
                 F.least(
                     F.col("component"),
                     F.coalesce(F.col("nbr_component"), F.col("component")),
                 ).alias("component"),
             )
-        )
-        # pointer jump: component <- component's own current label
-        jumped = (
-            stepped.alias("a")
-            .join(
-                hint(
+            # pointer jump: component <- component's own current label
+            jumped = (
+                stepped.alias("a")
+                .join(
                     stepped.select(
                         F.col("vtx").alias("component"),
                         F.col("component").alias("parent"),
-                    ).alias("b")
-                ),
-                "component",
-                "left",
+                    ).alias("b"),
+                    "component",
+                    "left",
+                )
+                .select(
+                    F.col("vtx"),
+                    F.coalesce(F.col("parent"), F.col("component")).alias(
+                        "component"
+                    ),
+                )
             )
-            .select(
-                F.col("vtx"),
-                F.coalesce(F.col("parent"), F.col("component")).alias("component"),
+            jumped = fresh_checkpoint(jumped)
+            changed = (
+                jumped.withColumnRenamed("component", "new_component")
+                .join(labels, "vtx")
+                .filter(F.col("new_component") != F.col("component"))
+                .count()
             )
-        )
-        jumped = fresh_checkpoint(jumped)
-        changed = (
-            jumped.withColumnRenamed("component", "new_component")
-            .join(labels, "vtx")
-            .filter(F.col("new_component") != F.col("component"))
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            break
-
-    sym.unpersist()
-    return labels
+            labels = jumped
+            if changed == 0:
+                return labels
+    finally:
+        sym.unpersist()
+    raise RuntimeError(
+        f"connected_components: labels still changed in round max_iter="
+        f"{max_iter}; raise max_iter, or broadcast_vertex_threshold to run "
+        f"the in-memory engine"
+    )
 
 
 def component_counts(edges: DataFrame) -> DataFrame:
@@ -304,7 +198,6 @@ def refine_communities(
     edges: DataFrame,
     assignment: DataFrame,
     max_iter: int = 50,
-    input_symmetric: bool = False,
 ) -> DataFrame:
     """Leiden-style connectivity refinement: split every community that
     is not internally connected into its connected parts.
@@ -326,28 +219,18 @@ def refine_communities(
     because parts are disjoint vertex sets).  A vertex with no
     intra-community edge becomes its own singleton.
 
-    Plan shape: two vertex-keyed joins to restrict the symmetric edge
-    table to same-community pairs (the community columns never leave the
-    join), then :func:`connected_components` on the induced subgraph —
-    which is strictly sparser than the input graph, so the refinement
-    costs less than one extra CC run at full scale — then one left join
-    back onto the assignment with a singleton fallback.
-
-    ``input_symmetric=True`` declares ``edges`` is already the engine's
-    working representation (both directions present, (src, dst) unique —
-    the ``louvain`` driver's per-level ``sym`` table) and skips the
-    symmetrize union + dedup aggregation; same contract and same
-    corruption warning as ``louvain(input_symmetric=True)``.
+    Plan shape: two vertex-keyed joins restrict ``edges`` (read as
+    given — either or both directions) to same-community pairs (the
+    community columns never leave the join), then
+    :func:`connected_components` on that induced subgraph, which is
+    strictly sparser than the input graph, then one left join back onto
+    the assignment with a singleton fallback.  ``max_iter`` bounds only
+    the DataFrame engine of :func:`connected_components`.
     """
     a = assignment.select("vtx", "comm")
-    base = (
-        edges.select("src", "dst")
-        if input_symmetric
-        else symmetric_edges(edges).select("src", "dst").distinct()
-    )
-    sym = base.filter(F.col("src") != F.col("dst"))
     intra = (
-        sym.join(
+        edges.filter(F.col("src") != F.col("dst"))
+        .join(
             a.select(F.col("vtx").alias("src"), F.col("comm").alias("cs")),
             "src",
         )
@@ -358,12 +241,7 @@ def refine_communities(
         .filter(F.col("cs") == F.col("cd"))
         .select("src", "dst", F.lit(1.0).alias("weight"))
     )
-    # intra inherits symmetry + distinctness from the base (the filter is
-    # symmetric in (src, dst)), so components can skip its own
-    # symmetrize-union + distinct — one fewer full shuffle per refine call
-    parts = connected_components(
-        intra, max_iter=max_iter, input_symmetric=True
-    )
+    parts = connected_components(intra, max_iter=max_iter)
     return a.join(parts, "vtx", "left").select(
         "vtx", F.coalesce(F.col("component"), F.col("vtx")).alias("comm")
     )
@@ -386,6 +264,8 @@ def incremental_components(
     stay ``min vertex id`` (min of mins under merging), so chained calls
     and a from-scratch rebuild agree exactly.  Edge REMOVALS can split
     components and need the full recompute — out of scope by design.
+    ``max_iter`` bounds only the DataFrame engine of
+    :func:`connected_components`.
     """
     pts = (
         new_edges.select(F.col("src").alias("vtx"))

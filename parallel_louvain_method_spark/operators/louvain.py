@@ -1337,9 +1337,7 @@ def louvain(
             # so the recomputed value both corrects the level stats and
             # keeps the min_q_gain convergence test monotone
             assign = fresh_checkpoint(
-                refine_communities(
-                    sym, assign.select("vtx", "comm"), input_symmetric=True
-                )
+                refine_communities(sym, assign.select("vtx", "comm"))
             )
             stats.modularity = modularity_df(sym, assign, deg, m2)
         levels.append(stats)

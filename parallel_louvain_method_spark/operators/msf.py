@@ -26,8 +26,8 @@ Per round, everything is an equi-join or a map-side-combined aggregate:
 3. contract: the picked edges projected to ``(la, lb)`` pairs form a
    pseudo-forest over component labels; its min-label components
    (:func:`~parallel_louvain_method_spark.operators.components
-   .connected_components` — log-round pointer jumping over a relation
-   that is <= #components rows) become the new labels, applied to the
+   .connected_components` — one forest pass over a relation that is
+   <= #components rows) become the new labels, applied to the
    vertex→label table with one equi-join.
 
 Weights pass through ``MIN`` only — no arithmetic — so fixed-round

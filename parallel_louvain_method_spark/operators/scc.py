@@ -133,7 +133,11 @@ def _forward_colors(live_v: DataFrame, live_e: DataFrame) -> DataFrame:
         # colors only ever decrease (min-propagation + pointer jumps), so
         # an unchanged SUM proves an unchanged state — one aggregate
         # replaces the per-round join-and-count
-        f_sum = int(jumped.agg(F.sum("f")).first()[0] or 0)
+        # summed as decimal(38,0): a long sum overflows on ids near 2^62
+        f_sum = int(
+            jumped.agg(F.sum(F.col("f").cast("decimal(38,0)"))).first()[0]
+            or 0
+        )
         f = jumped
         if prev_sum is not None and f_sum == prev_sum:
             return f

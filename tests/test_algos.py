@@ -53,7 +53,7 @@ def _np_components(edges, n):
     for v in range(n):
         r = find(v)
         comp.setdefault(r, []).append(v)
-    return {v: min(members) for r, members in comp.items() for v in members}
+    return {v: m for ms in comp.values() for m in [min(ms)] for v in ms}
 
 
 def _np_triangles(edges, n):
@@ -365,17 +365,80 @@ def test_connected_components_exact(spark):
     assert sizes == {0: 3, 3: 2, 5: 1}
 
 
-def test_connected_components_random(spark):
-    rng = np.random.default_rng(7)
-    n, m = 60, 60
-    edges = [(int(a), int(b)) for a, b in rng.integers(0, n, (m, 2)) if a != b]
-    df = spark.createDataFrame(
-        [(a, b, 1.0) for a, b in edges], "src long, dst long, weight double"
+def _random_edges(seed=7, n=60, m=60):
+    rng = np.random.default_rng(seed)
+    return [(int(a), int(b)) for a, b in rng.integers(0, n, (m, 2)) if a != b]
+
+
+def _permuted_path(n, seed=0):
+    p = np.random.default_rng(seed).permutation(n)
+    return [(int(p[i]) * 3 + 1, int(p[i + 1]) * 3 + 1) for i in range(n - 1)]
+
+
+def _edges_df(spark, edges):
+    import pandas as pd
+
+    pdf = pd.DataFrame(edges, columns=["src", "dst"], dtype="int64")
+    return spark.createDataFrame(
+        pdf.assign(weight=1.0), "src long, dst long, weight double"
     )
-    got = {r["vtx"]: r["component"] for r in connected_components(df).collect()}
-    want = _np_components(edges, n)
-    touched = {v for e in edges for v in e}
-    assert got == {v: c for v, c in want.items() if v in touched}
+
+
+_SPARSE = [-(2**62) - 7, -(2**62), -(2**62) + 5, -3, 5, 7,
+           2**62 - 1, 2**62, 2**62 + 9]
+_ONE_WAY = sorted({(min(a, b), max(a, b)) for a, b in _random_edges(seed=3)})
+_BOTH = (None, 0)  # the default engine, then the DataFrame engine
+
+
+@pytest.mark.parametrize(
+    "edges, thresholds",
+    [
+        pytest.param(_random_edges(), _BOTH, id="random"),
+        pytest.param(
+            [(a - 30, b - 30) for a, b in _random_edges(seed=5)], _BOTH,
+            id="negative_ids",
+        ),
+        pytest.param(
+            [(_SPARSE[a], _SPARSE[b]) for a, b in _random_edges(11, 9, 8)],
+            _BOTH, id="sparse_ids_near_2^62",
+        ),
+        pytest.param([], _BOTH, id="empty"),
+        pytest.param(
+            [(5, 5), (-2, -2), (2**62, 2**62)], _BOTH, id="self_loops_only"
+        ),
+        pytest.param(_ONE_WAY, _BOTH, id="one_direction"),
+        pytest.param(
+            _ONE_WAY + [(b, a) for a, b in _ONE_WAY], _BOTH,
+            id="both_directions",
+        ),
+        pytest.param(_permuted_path(200_000), (None,), id="permuted_path_200k"),
+    ],
+)
+def test_connected_components_random(spark, edges, thresholds):
+    """Each engine against a union-find oracle on any long ids; no
+    persisted cache outlives the call."""
+    df = _edges_df(spark, edges)
+    ids = sorted({v for e in edges for v in e})
+    pos = {v: i for i, v in enumerate(ids)}
+    dense = _np_components([(pos[a], pos[b]) for a, b in edges], len(ids))
+    want = {ids[i]: ids[c] for i, c in dense.items()}
+    for thr in thresholds:
+        kw = {} if thr is None else {"broadcast_vertex_threshold": thr}
+        before = _persisted_caches(spark)
+        got = {
+            r["vtx"]: r["component"]
+            for r in connected_components(df, **kw).collect()
+        }
+        assert _persisted_caches(spark) == before
+        assert got == want, f"broadcast_vertex_threshold={thr}"
+
+
+def test_connected_components_dataframe_cap_raises(spark):
+    """A DataFrame-engine run whose last allowed round still moved labels
+    raises instead of returning a truncated labelling."""
+    df = _edges_df(spark, _permuted_path(2_000))
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(df, max_iter=3, broadcast_vertex_threshold=0)
 
 
 def test_triangles_golden16(spark, golden16_df):
@@ -1692,6 +1755,25 @@ def test_scc_random_directed(spark):
 
     empty = spark.createDataFrame([], "src long, dst long, weight double")
     assert strongly_connected_components(empty).count() == 0
+
+
+def test_scc_ids_near_2_62(spark):
+    """Two 2-cycles joined by one arc on ids near 2^62: the coloring's
+    convergence sum must not overflow a long."""
+    from parallel_louvain_method_spark.operators.scc import (
+        strongly_connected_components,
+    )
+
+    b = 2**62
+    pairs = [(b, b + 1), (b + 1, b), (b + 2, b + 3), (b + 3, b + 2), (b + 1, b + 2)]
+    df = spark.createDataFrame(
+        [(x, y, 1.0) for x, y in pairs], "src long, dst long, weight double"
+    )
+    got = {
+        r["vtx"]: r["component"]
+        for r in strongly_connected_components(df).collect()
+    }
+    assert got == _py_tarjan(pairs) == {b: b, b + 1: b, b + 2: b + 2, b + 3: b + 2}
 
 
 def _py_brandes(edges, sources, directed=False, max_hops=None):

@@ -246,3 +246,52 @@ def test_barrier_blob_delta_zstd_roundtrip():
     a = sorted(zip(s.tolist(), d.tolist(), w.tolist()))
     b = sorted(zip(s2.tolist(), d2.tolist(), w2.tolist()))
     assert a == b
+
+
+def _py_min_root(edges, n):
+    """Plain-Python union-find: each vertex's least component member."""
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return [find(x) for x in range(n)]
+
+
+@given(
+    st.integers(1, 40).flatmap(
+        lambda n: st.tuples(
+            st.just(n),
+            st.lists(
+                st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)),
+                max_size=80,
+            ),
+        )
+    )
+)
+@settings(max_examples=200, deadline=None)
+def test_min_root_matches_union_find(case):
+    """Equal to a plain-Python union-find; ids no edge touches stay
+    singletons."""
+    n, edges = case
+    e = np.array(edges, dtype=np.int64).reshape(-1, 2)
+    got = kernels.min_root(e[:, 0], e[:, 1], n)
+    assert got.tolist() == _py_min_root(edges, n)
+
+
+@pytest.mark.parametrize("order", ["sorted", "reversed", "permuted"])
+def test_min_root_paths(order):
+    """Paths are the worst edge orders for min-hooking."""
+    n = 5_000
+    p = {
+        "sorted": np.arange(n),
+        "reversed": np.arange(n)[::-1],
+        "permuted": np.random.default_rng(1).permutation(n),
+    }[order]
+    root = kernels.min_root(p[:-1], p[1:], n + 2)
+    assert root.tolist() == [0] * n + [n, n + 1]
