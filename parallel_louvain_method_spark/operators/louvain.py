@@ -11,7 +11,7 @@ convergence signal (src/community.cpp:98).
 A level picks one of three execution strategies:
 
 1. **local** (≤ ``local_threshold`` symmetric rows): the whole level runs
-   in the driver — ``local/sequential`` (≤ ``sequential_threshold``) is
+   in the driver — ``local/sequential`` (≤ ``SEQUENTIAL_THRESHOLD``) is
    the reference-exact CSR kernel — ascending visit order, strict-> argmax,
    current-community-first tie break — the semantics the golden tests pin
    (tests/main_test.cpp:64-81); ``local/vectorized`` is the whole-graph
@@ -44,18 +44,22 @@ near-convergence exits that hand label churn to the next (much smaller)
 coarsened level, per-sweep ``fresh_checkpoint`` lineage AND statistics
 truncation (plain ``localCheckpoint`` keeps ``originStats``, whose
 sizeInBytes the per-sweep self-joins square into a doubly-exponential
-BigInt — see plans/lineage.py), and per-level parquet
-checkpoints for resume (north rule; the reference left this as a TODO,
-src/distcommunity.cpp:899).
+BigInt — see plans/lineage.py), one coarsen path (the community renumber
+runs in driver numpy while the level has at most
+``broadcast_vertex_threshold`` vertices and with ``dense_ids`` past that;
+one coarse-edge function takes either map), and per-level parquet
+checkpoints for resume, which do not change the coarsen path (north rule;
+the reference left this as a TODO, src/distcommunity.cpp:899).
 """
 
 from __future__ import annotations
 
 import math
-import os
 import sys
 import time
 from dataclasses import dataclass, field
+
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -70,6 +74,13 @@ from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 ASSIGN_SCHEMA = "vtx long, comm long"
 SUPERSTEP_ENGINES = ("auto", "barrier", "sql")
+# a local level at or under this many symmetric rows runs the
+# reference-sequential kernel, past it the vectorized one
+SEQUENTIAL_THRESHOLD = 150_000
+# a vtx -> community map is broadcast into the coarse-edge joins up to this
+# many rows (its hash relation builds serially in the driver in well under
+# a second); past it the joins shuffle-hash, keeping every byte parallel
+BROADCAST_MAP_ROWS = 200_000
 
 
 @dataclass
@@ -209,8 +220,6 @@ def _barrier_superstep_level(
     Requires DENSE ids 0..n-1.  Returns ``(assign, deg)``, or None when
     the stage could not be scheduled (the caller runs the level on sql).
     """
-    import numpy as np
-
     sc = spark.sparkContext
     n_parts = min(
         int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
@@ -363,12 +372,9 @@ def _barrier_superstep_level(
         w_int_total / m2_ - np.sum((tot_final[tot_final > 0] / m2_) ** 2)
     )
 
-    assign_pdf = pd.DataFrame(
-        {"vtx": np.arange(nv, dtype=np.int64), "comm": comm_arr}
-    )
-    assign = spark.createDataFrame(assign_pdf, schema=ASSIGN_SCHEMA).localCheckpoint(
-        eager=True
-    )
+    assign = _assign_frame(
+        spark, np.arange(nv, dtype=np.int64), comm_arr
+    ).localCheckpoint(eager=True)
     deg_pdf = pd.DataFrame(
         {"vtx": np.arange(nv, dtype=np.int64), "degree": deg_arr}
     )
@@ -780,16 +786,6 @@ def _sql_sweep_loop(
         stats.sweep_wall_sec.append(time.monotonic() - t_sw)
         stats.sweeps = sweep + 1
         prev_moves = moves
-        if os.environ.get("PLM_DEBUG_SWEEPS"):
-            tag = " (delta)" if delta_sweep else (
-                " (full-confirmation)" if full_coverage and sweep > 0 else ""
-            )
-            print(
-                f"[louvain/sql] sweep {sweep}: "
-                f"{time.monotonic() - t_sw:.1f}s moves={moves}" + tag,
-                file=sys.stderr,
-                flush=True,
-            )
 
         if moves == 0 and full_coverage:
             # a zero-move sweep that examined EVERY vertex is a global
@@ -858,7 +854,6 @@ def louvain_level(
     level_no: int = 0,
     mode: str = "auto",
     local_threshold: int = 1_500_000,
-    sequential_threshold: int = 150_000,
     min_moves_frac: float = 0.001,
     broadcast_vertex_threshold: int = 20_000_000,
     barrier_rows_per_task: int = 12_000_000,
@@ -899,7 +894,7 @@ def louvain_level(
       engine does not fit or cannot be scheduled the level runs on sql; a
       worker-side error inside the barrier stage propagates;
     - ``"local"`` — the whole level runs to convergence in the driver.
-      Below ``sequential_threshold`` symmetric rows it uses the
+      At or below ``SEQUENTIAL_THRESHOLD`` symmetric rows it uses the
       reference-sequential kernel (ascending visit order — the
       golden-test semantics); above, the whole-graph vectorized numpy
       loop.  No Spark job per sweep — per-job overhead dominates below
@@ -963,7 +958,7 @@ def louvain_level(
 
     if mode == "local":
         local_kernel = (
-            "sequential" if n_edges_sym <= sequential_threshold else "vectorized"
+            "sequential" if n_edges_sym <= SEQUENTIAL_THRESHOLD else "vectorized"
         )
         stats.engine = f"local/{local_kernel}"
         # run the kernel IN-DRIVER: the old path shipped the whole level
@@ -994,9 +989,7 @@ def louvain_level(
             max_sweeps=max_sweeps,
             anneal=anneal,
         )
-        assign = spark.createDataFrame(
-            pd.DataFrame({"vtx": v, "comm": c}), schema=ASSIGN_SCHEMA
-        ).localCheckpoint(eager=True)
+        assign = _assign_frame(spark, v, c).localCheckpoint(eager=True)
         stats.sweeps = int(sweeps)
         any_moved = bool(improved)
         # the kernel already computed level modularity over its own CSR
@@ -1080,31 +1073,64 @@ def louvain_level(
     # pure-SQL supersteps: broadcast-hash-join the small state onto the
     # edges, codegen'd gain/argmax, one partial-agg shuffle per sweep —
     # the edge table never moves and no Python touches it
-    t_loop = time.monotonic()
     assign = _sql_superstep_level(
         spark, sym_edges, deg, m2, n_vertices,
         max_sweeps, anneal, stats, min_moves_frac,
         unique_pairs=unique_pairs, skew_salt=skew_salt,
     )
     stats.engine = "sql"
-    t_q = time.monotonic()
     stats.modularity = modularity_df(sym_edges, assign, deg, m2)
-    if os.environ.get("PLM_DEBUG_SWEEPS"):
-        print(
-            f"[louvain/sql] level {level_no}: setup "
-            f"{t_loop - t0:.1f}s loop {t_q - t_loop:.1f}s "
-            f"modularity {time.monotonic() - t_q:.1f}s",
-            file=sys.stderr, flush=True,
-        )
     stats.wall_sec = time.monotonic() - t0
     return assign, deg, m2, stats
 
 
+def _assign_frame(spark: SparkSession, vtx, comm) -> DataFrame:
+    """A driver-side (vtx, comm) array pair as an assignment DataFrame."""
+    return spark.createDataFrame(
+        pd.DataFrame({"vtx": vtx, "comm": comm}), schema=ASSIGN_SCHEMA
+    )
+
+
+def _dense_comm_map(assign: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Distributed community renumber: (vtx -> new community, comm ->
+    new_comm), new ids dense 0..k-1 in sorted order (``dense_ids``)."""
+    from parallel_louvain_method_spark.operators.graph import dense_ids
+
+    cmap = dense_ids(assign.select(F.col("comm").alias("v"))).withColumnsRenamed(
+        {"v": "comm", "new_id": "new_comm"}
+    )
+    amap = assign.join(cmap.hint("shuffle_hash"), "comm").select(
+        "vtx", F.col("new_comm").alias("comm")
+    )
+    return amap, cmap
+
+
+def _coarse_edges(
+    sym_edges: DataFrame, amap: DataFrame, n_rows: int | None = None
+) -> DataFrame:
+    """The community graph of ``sym_edges`` under the vtx -> dense
+    community map ``amap``: both endpoints relabeled, weights summed per
+    (src, dst); internal edges become self-loops.  The map side is
+    broadcast while it has at most ``BROADCAST_MAP_ROWS`` rows
+    (``n_rows``) and shuffle-hashed past that or when its size is unknown,
+    so the planner never sort-merges the edge table."""
+    def hint(df: DataFrame) -> DataFrame:
+        if n_rows is not None and n_rows <= BROADCAST_MAP_ROWS:
+            return F.broadcast(df)
+        return df.hint("shuffle_hash")
+
+    a_src = amap.select(F.col("vtx").alias("src"), F.col("comm").alias("c_src"))
+    a_dst = amap.select(F.col("vtx").alias("dst"), F.col("comm").alias("c_dst"))
+    return (
+        sym_edges.join(hint(a_src), "src")
+        .join(hint(a_dst), "dst")
+        .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
+        .agg(F.sum("weight").alias("weight"))
+    )
+
 
 def coarsen(
-    sym_edges: DataFrame,
-    assign: DataFrame,
-    broadcast_assign: bool = False,
+    sym_edges: DataFrame, assign: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Build the community graph (src/community.cpp:162-201 /
     src/distcommunity.cpp:766-915): communities renumbered dense 0..k-1 by
@@ -1112,38 +1138,10 @@ def coarsen(
     edges becoming self-loops whose weight is 2× internal weight (each
     internal edge contributes both directions).
 
-    ``broadcast_assign``: hint the (localCheckpoint'ed, hence
-    statistics-less) assignment side into broadcast joins — the caller
-    gates it on its vertex count, since past ~10^7 vertices the map-side
-    relation no longer fits and the shuffle join is correct.
-
-    Returns (coarse_sym_edges, comm_renumber_map[comm, new_id]).
+    Returns (coarse_sym_edges, comm_renumber_map[comm, new_comm]).
     """
-    from parallel_louvain_method_spark.operators.graph import dense_ids
-
-    # past the broadcast gate the assignment is still the SMALL side of
-    # every join here — hint shuffle_hash so the planner never sort-merges
-    # (localCheckpoint erased the stats it would need to figure that out)
-    hint = (
-        (lambda df: F.broadcast(df))
-        if broadcast_assign
-        else (lambda df: df.hint("shuffle_hash"))
-    )
-    cmap = dense_ids(assign.select(F.col("comm").alias("v"))).withColumnsRenamed(
-        {"v": "comm", "new_id": "new_comm"}
-    )
-    a = assign.join(hint(cmap), "comm").select(
-        "vtx", F.col("new_comm").alias("comm")
-    )
-    a_src = a.select(F.col("vtx").alias("src"), F.col("comm").alias("c_src"))
-    a_dst = a.select(F.col("vtx").alias("dst"), F.col("comm").alias("c_dst"))
-    coarse = (
-        sym_edges.join(hint(a_src), "src")
-        .join(hint(a_dst), "dst")
-        .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
-        .agg(F.sum("weight").alias("weight"))
-    )
-    return coarse, cmap
+    amap, cmap = _dense_comm_map(assign)
+    return _coarse_edges(sym_edges, amap), cmap
 
 
 def louvain(
@@ -1183,11 +1181,18 @@ def louvain(
     intra-community subgraph.
 
     The flat assignment (original vtx -> final community) is maintained by
-    composing each level's coarsening map.  When ``checkpoint_dir`` is set,
-    each level's coarse edges + flat assignment + metrics land in
-    ``<dir>/level=<k>/`` and ``resume=True`` restarts after the last
-    complete level (S7; the reference's unimplemented TODO,
-    src/distcommunity.cpp:899).
+    composing each level's coarsening map.  One rule picks how that map is
+    built: a level with at most ``broadcast_vertex_threshold`` vertices
+    (the budget that admits the barrier engine) renumbers its communities
+    in driver numpy, a larger one with the distributed ``dense_ids``; both
+    feed the same coarse-edge joins and give row-identical output.  While
+    the flat table stays in numpy it is composed through a lookup table,
+    otherwise (level 0 past the budget, or a flat loaded on resume) by one
+    join.  When ``checkpoint_dir`` is set, each level's coarse edges + flat
+    assignment + metrics land in ``<dir>/level=<k>/`` and ``resume=True``
+    restarts after the last complete level (S7; the reference's
+    unimplemented TODO, src/distcommunity.cpp:899); checkpointing does not
+    change the coarsen path.
 
     ``skew_salt > 1`` enables explicit salting of the sql engine's
     per-sweep state⋈totals join (the one join in the engine keyed by
@@ -1222,7 +1227,7 @@ def louvain(
     )
 
     flat: DataFrame | None = None
-    flat_np: "tuple | None" = None  # (vtx array, comm array) fast-path flat
+    flat_np: "tuple | None" = None  # (vtx array, comm array) in-driver flat
     levels: list[LevelStats] = []
     q_prev = -math.inf
     start_level = 0
@@ -1342,129 +1347,49 @@ def louvain(
             stats.modularity = modularity_df(sym, assign, deg, m2)
         levels.append(stats)
         moved = sum(stats.moves_per_sweep) > 0
-        t_co = time.monotonic()
-        # Coarsen + flat composition.  FAST PATH while the assignment fits
-        # driver memory (the same O(|V|)-state budget the barrier
-        # engine already spends): the community renumber
-        # (np.unique = sorted distinct, exactly dense_ids' rank), the
-        # relabel, and the flat-composition join all run as numpy array
-        # ops, and the coarse-graph aggregation joins the edge table
-        # against ONE small relabeled map — replacing dense_ids' range
-        # shuffle + window, the cmap count, and two checkpointed
-        # DataFrame joins (~6 driver-serial jobs per level, measured
-        # ~1.6-2.3 s/level at sf0.1).  Past the threshold — or when
-        # per-level parquet checkpoints need the flat table as a
-        # DataFrame — the original distributed coarsen runs unchanged;
-        # both paths produce row-identical output (monotone renumber,
-        # same inner-join drop semantics).
-        use_np = (
-            nv_hint is not None
-            and nv_hint <= 5_000_000
-            and checkpoint_dir is None
-        )
-        if use_np and flat_np is None and flat is not None:
-            use_np = False  # resumed mid-run with a DataFrame flat
-        if use_np:
-            import numpy as np
-            import pandas as pd
-
+        # Coarsen + flat composition.  One rule, the level's vertex count
+        # against the budget that admits the barrier engine (which builds
+        # the same n-length arrays in the driver): at or under it the
+        # community renumber is np.unique (sorted distinct = dense_ids'
+        # rank order, so both forms are row-identical), past it dense_ids.
+        # Either map feeds the one coarse-edge function; checkpointing does
+        # not change the path.
+        n_level = stats.n_vertices
+        in_driver = n_level <= broadcast_vertex_threshold
+        if in_driver:
             apdf = assign.select("vtx", "comm").toPandas()
             av = apdf["vtx"].to_numpy()
-            ac = apdf["comm"].to_numpy()
-            uniq = np.unique(ac)  # sorted distinct = dense_ids' rank order
-            newc = np.searchsorted(uniq, ac)
-            amap = spark.createDataFrame(
-                pd.DataFrame({"vtx": av, "comm": newc.astype("int64")}),
-                schema=ASSIGN_SCHEMA,
-            )
-            # the map is a LocalRelation (known size); hint it exactly as
-            # coarsen would: broadcast while small, shuffle-hash past that
-            hint = (
-                (lambda df: F.broadcast(df))
-                if len(av) <= 200_000
-                else (lambda df: df.hint("shuffle_hash"))
-            )
-            coarse = (
-                sym.join(
-                    hint(
-                        amap.select(
-                            F.col("vtx").alias("src"),
-                            F.col("comm").alias("c_src"),
-                        )
-                    ),
-                    "src",
-                )
-                .join(
-                    hint(
-                        amap.select(
-                            F.col("vtx").alias("dst"),
-                            F.col("comm").alias("c_dst"),
-                        )
-                    ),
-                    "dst",
-                )
-                .groupBy(
-                    F.col("c_src").alias("src"), F.col("c_dst").alias("dst")
-                )
-                .agg(F.sum("weight").alias("weight"))
-            )
-            prev_k = int(nv_hint)
-            nv_hint = int(len(uniq))
-            if flat_np is None and flat is None:
-                # level 0: the relabeled assignment IS the flat table
-                flat_np = (av.copy(), newc.astype(np.int64))
-            else:
-                fv, fc = flat_np
-                # inner join flat.mid == assign.vtx, exactly as the
-                # DataFrame path: ids absent from assign drop out
-                lut = np.full(prev_k, -1, dtype=np.int64)
-                lut[av] = newc
-                mapped = lut[fc]
-                keep = mapped >= 0
-                flat_np = (fv[keep], mapped[keep])
+            uniq, newc = np.unique(apdf["comm"].to_numpy(), return_inverse=True)
+            newc = newc.astype(np.int64)
+            amap = _assign_frame(spark, av, newc)
+            nv_hint = len(uniq)
         else:
-            if flat_np is not None:
-                # crossed the threshold downward is impossible (levels
-                # shrink), but guard anyway: materialize the numpy flat
-                # into a DataFrame before continuing on the general path
-                import pandas as pd
-
-                flat = fresh_checkpoint(
-                    spark.createDataFrame(
-                        pd.DataFrame(
-                            {"vtx": flat_np[0], "comm": flat_np[1]}
-                        ),
-                        schema=ASSIGN_SCHEMA,
-                    )
-                )
-                flat_np = None
-            # broadcast the assignment only while its hash relation builds
-            # in well under a second (~200k rows) — the build is SERIAL
-            # driver work; past that the shuffle_hash fallback inside
-            # coarsen keeps every byte of the join parallel
-            coarse, cmap = coarsen(
-                sym, assign,
-                broadcast_assign=nv_hint is not None and nv_hint <= 200_000,
-            )
-            nv_hint = cmap.count()  # communities = next level's dense 0..k-1
-            relabeled = assign.join(
-                cmap.withColumnRenamed("new_comm", "final_comm"), "comm"
-            ).select("vtx", F.col("final_comm").alias("comm"))
-            if flat is None:
-                flat = relabeled
+            amap, cmap = _dense_comm_map(assign)
+            # computed once: it feeds both coarse-edge joins and the flat
+            amap = fresh_checkpoint(amap)
+            nv_hint = cmap.count()
+        coarse = _coarse_edges(sym, amap, n_level)
+        # the flat stays in numpy while it is (level 0 ran in this call
+        # under the budget; levels only shrink, so every later map is a
+        # numpy one too), composed through a lookup table; otherwise —
+        # level 0 past the budget, or a flat loaded on resume — one join.
+        # Both are inner joins: ids absent from the map drop out.
+        if flat is None and flat_np is None:
+            if in_driver:
+                flat_np = (av, newc)
             else:
-                flat = (
-                    flat.withColumnRenamed("comm", "mid")
-                    .join(relabeled.withColumnRenamed("vtx", "mid"), "mid")
-                    .select("vtx", "comm")
-                )
-            flat = fresh_checkpoint(flat)
-        if os.environ.get("PLM_DEBUG_SWEEPS"):
-            print(
-                f"[louvain] level {level_no}: wall {stats.wall_sec:.1f}s "
-                f"coarsen+flat {time.monotonic() - t_co:.1f}s "
-                f"engine={stats.engine}",
-                file=sys.stderr, flush=True,
+                flat = amap
+        elif flat_np is not None:
+            lut = np.full(n_level, -1, dtype=np.int64)
+            lut[av] = newc
+            mapped = lut[flat_np[1]]
+            keep = mapped >= 0
+            flat_np = (flat_np[0][keep], mapped[keep])
+        else:
+            flat = fresh_checkpoint(
+                flat.withColumnRenamed("comm", "mid")
+                .join(amap.withColumnRenamed("vtx", "mid"), "mid")
+                .select("vtx", "comm")
             )
         final_q = stats.modularity
 
@@ -1474,7 +1399,7 @@ def louvain(
                 checkpoint_dir,
                 level_no,
                 coarse,
-                flat,
+                flat if flat_np is None else _assign_frame(spark, *flat_np),
                 {
                     "level": level_no,
                     "modularity": stats.modularity,
@@ -1500,12 +1425,7 @@ def louvain(
     if level0_cache is not None:
         level0_cache.unpersist()
     if flat_np is not None:
-        import pandas as pd
-
-        flat = spark.createDataFrame(
-            pd.DataFrame({"vtx": flat_np[0], "comm": flat_np[1]}),
-            schema=ASSIGN_SCHEMA,
-        ).localCheckpoint(eager=True)
+        flat = _assign_frame(spark, *flat_np).localCheckpoint(eager=True)
     assert flat is not None
     if restore_map is not None:
         flat = (

@@ -6,8 +6,9 @@ here").  Layout, one directory per completed level::
 
     <dir>/level=<k>/edges/        coarse symmetric edge table (parquet)
     <dir>/level=<k>/assignment/   flat vtx -> community (parquet)
-    <dir>/level=<k>/metrics.json  modularity, sweeps, moves, wall time,
-                                  per-partition row counts (lineage)
+    <dir>/level=<k>/metrics.json  the level's record: modularity, sweeps,
+                                  moves, vertex and edge counts, wall time,
+                                  engine
 
 Parquet gives partition-parallel write/read.  ALL filesystem access —
 including the metrics sidecar and directory listing — goes through the
@@ -25,7 +26,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _fs(spark: SparkSession, path: str):
@@ -51,16 +52,6 @@ def save_level(
     d = _level_dir(base, level)
     coarse_edges.write.mode("overwrite").parquet(f"{d}/edges")
     flat_assign.write.mode("overwrite").parquet(f"{d}/assignment")
-    # per-partition lineage: row counts per shuffle partition of the state
-    part_counts = (
-        flat_assign.groupBy(F.spark_partition_id().alias("partition"))
-        .count()
-        .collect()
-    )
-    metrics = dict(metrics)
-    metrics["assignment_partitions"] = {
-        int(r["partition"]): int(r["count"]) for r in part_counts
-    }
     # metrics.json LAST = the completeness marker; Hadoop FS stream so the
     # sidecar lands on the same filesystem as the parquet (hdfs/s3a/local)
     fs, jpath = _fs(spark, f"{d}/metrics.json")

@@ -148,16 +148,69 @@ def test_louvain_input_symmetric_parity(spark, golden16_df):
         assert a_ss == b_ss, eng
 
 
+def _partition(res):
+    return {r["vtx"]: r["comm"] for r in res.assignment.collect()}
+
+
 def test_checkpoint_resume(spark, golden16_df, tmp_path):
-    ck = str(tmp_path / "ck")
-    res1 = louvain(spark, golden16_df, checkpoint_dir=ck)
+    """A crash after level k-1: every level from k on is deleted and the
+    resumed run (the parquet flat composed with each later level's map)
+    must reproduce the uninterrupted partition and modularity.  k = the
+    last complete level, as a crash during the final write leaves it, and
+    k = 1, where the re-run levels still merge communities."""
+    import shutil
+
     from parallel_louvain_method_spark.sources.checkpoint import latest_level
 
-    lvl = latest_level(spark, ck)
-    assert lvl is not None
-    res2 = louvain(spark, golden16_df, checkpoint_dir=ck, resume=True)
-    # resume from the final level converges immediately to the same Q class
-    assert res2.modularity >= res1.modularity - 1e-9
+    ck = tmp_path / "ck"
+    res1 = louvain(spark, golden16_df, checkpoint_dir=str(ck))
+    last = latest_level(spark, str(ck))
+    assert last is not None and last >= 2, last
+    for k in (last, 1):
+        for j in range(k, last + 1):
+            shutil.rmtree(ck / f"level={j}")
+        assert latest_level(spark, str(ck)) == k - 1
+        res2 = louvain(spark, golden16_df, checkpoint_dir=str(ck), resume=True)
+        assert res2.levels[0].level == k
+        assert abs(res2.modularity - res1.modularity) <= 1e-9, k
+        assert _partition(res2) == _partition(res1), k
+        assert latest_level(spark, str(ck)) == last
+
+
+def _planted_ring(spark, n_cliques=40, size=5):
+    """A ring of small cliques: Louvain merges the cliques over several
+    levels."""
+    edges = [
+        (c * size + i, c * size + j, 1.0)
+        for c in range(n_cliques)
+        for i in range(size)
+        for j in range(i + 1, size)
+    ]
+    edges += [(c * size, ((c + 1) % n_cliques) * size, 1.0) for c in range(n_cliques)]
+    return spark.createDataFrame(edges, "src long, dst long, weight double")
+
+
+@pytest.mark.parametrize("form", ["plain", "checkpoint", "relational"])
+@pytest.mark.parametrize("graph", ["golden16", "planted"])
+def test_coarsen_forms_agree(spark, golden16_df, tmp_path, form, graph):
+    """The numpy coarsen (the default at these sizes), a checkpointed run
+    and ``broadcast_vertex_threshold=0`` (the ``dense_ids`` map and the
+    join-composed flat at every level) give the same result exactly."""
+    edges = golden16_df if graph == "golden16" else _planted_ring(spark)
+    kwargs = {
+        "plain": {},
+        "checkpoint": {"checkpoint_dir": str(tmp_path / "ck")},
+        "relational": {"broadcast_vertex_threshold": 0},
+    }[form]
+    base = louvain(spark, edges)
+    if graph == "planted":
+        assert len(base.levels) >= 2, base.levels
+    res = louvain(spark, edges, **kwargs)
+    assert res.modularity == base.modularity
+    assert _partition(res) == _partition(base)
+    assert [(lv.engine, lv.n_vertices) for lv in res.levels] == [
+        (lv.engine, lv.n_vertices) for lv in base.levels
+    ]
 
 
 @pytest.mark.parametrize("engine", ["sql", "barrier"])
