@@ -1678,7 +1678,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["max_vertex_id"] = lambda s, d: _edges(s, d).agg(
         F.max(F.greatest("src", "dst")).alias("max_id")
     )
-    q["dense_renumber"] = lambda s, d: G.dense_ids(G.vertex_ids(_edges(s, d)))
+    q["dense_renumber"] = lambda s, d: G.dense_ids(G.vertex_ids(_edges(s, d)))[0]
 
     # --- joins / graph algorithms ---
     q["triangle_count"] = lambda s, d: s.createDataFrame(

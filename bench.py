@@ -329,10 +329,10 @@ def main() -> None:
         repeat_n=louvain_repeat,
     )
 
-    # the producer-invariant path: a graph store / checkpoint that already
-    # holds the symmetric weight-summed table — louvain skips the level-0
-    # symmetrize+dedup shuffle (the table build is the producer's cost and
-    # sits OUTSIDE the timed window by design)
+    # a graph store / checkpoint that already holds the symmetric
+    # weight-summed table (the table build is the producer's cost and sits
+    # OUTSIDE the timed window by design); louvain's level-0 symmetrize +
+    # dedup + weight-sum pass is idempotent on it and runs inside the row
     if not only or "louvain_repo_presym" in only:
         pre_repo = (
             G.symmetric_edges(repo_edges)
@@ -345,7 +345,7 @@ def main() -> None:
             "louvain_repo_presym",
             lambda: louvain(
                 spark, pre_repo, n_vertices=nv_repo, assume_dense=True,
-                superstep_engine=louvain_engine, input_symmetric=True,
+                superstep_engine=louvain_engine,
             ).assignment.count(),
         )
         pre_repo.unpersist()

@@ -68,14 +68,6 @@ def main(argv: list[str] | None = None) -> int:
         "superstep above — superstep forces the distributed path)",
     )
     lv.add_argument(
-        "--input-symmetric",
-        action="store_true",
-        help="declare the edge table is already the engine's working "
-        "representation (both directions present, (src,dst) unique, "
-        "weights pre-summed) — skips the level-0 symmetrize/dedup "
-        "shuffle; WRONG declarations corrupt results",
-    )
-    lv.add_argument(
         "--refine-levels",
         action="store_true",
         help="Leiden-style connectivity refinement per level: split every "
@@ -726,7 +718,6 @@ def main(argv: list[str] | None = None) -> int:
             resume=args.resume,
             mode=args.mode,
             superstep_engine=args.engine,
-            input_symmetric=args.input_symmetric,
             skew_salt=args.skew_salt,
             refine_levels=args.refine_levels,
         )

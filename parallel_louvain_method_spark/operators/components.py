@@ -2,9 +2,9 @@
 vertex is labeled by the least vertex id of its component.
 
 Two engines, chosen by the vertex count n against
-``broadcast_vertex_threshold``:
+``plans.strategy.DRIVER_VERTICES``:
 
-- **in-memory forest** (n at or below the threshold): one ``mapInArrow``
+- **in-memory forest** (n at or below the limit): one ``mapInArrow``
   pass over the raw edges.  Each partition maps its ids to local indices
   in sorted order (``np.unique``), runs
   :func:`~parallel_louvain_method_spark.functions.kernels.min_root` and
@@ -16,9 +16,10 @@ Two engines, chosen by the vertex count n against
   only decrease, so it ends without a round cap: the answer is exact on
   every graph.  The collect holds Σ_partitions(local vertices) ≤
   min(P·n, 2m) rows for P partitions and m edge rows.
-- **DataFrame engine** (above the threshold): min-label propagation plus
+- **DataFrame engine** (above the limit): min-label propagation plus
   one pointer jump per round over the symmetrized edge set — one join,
-  one groupBy-min and one label self-join per round, checkpointed.  It
+  one groupBy-min and one label self-join per round, checkpointed (the
+  superseded round released).  It
   returns when a round changes nothing and raises ``RuntimeError`` when
   round ``max_iter`` still changed labels: long chains need many rounds
   (PAPERS.md, "Finding connected components in map-reduce in logarithmic
@@ -32,7 +33,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from parallel_louvain_method_spark.functions.kernels import min_root
-from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
+from parallel_louvain_method_spark.plans import strategy
+from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint, release
 from parallel_louvain_method_spark.operators.graph import (
     symmetrize,
     vertex_ids,
@@ -86,20 +88,19 @@ def _cc_forest(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    broadcast_vertex_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Returns ``DataFrame[vtx: long, component: long]`` with
     ``component = min vertex id of the component``, over every endpoint
     of ``edges`` (``DataFrame[src, dst, weight]``, read as undirected).
 
-    Up to ``broadcast_vertex_threshold`` vertices the in-memory forest
+    Up to ``strategy.DRIVER_VERTICES`` vertices the in-memory forest
     engine runs (no rounds, no cap; the driver collects at most
     min(P·n, 2m) rows for P partitions, n vertices and m edge rows);
     above it the DataFrame engine runs, and ``max_iter`` bounds only that
     engine's rounds — it raises ``RuntimeError`` instead of returning
     labels that are still moving.
     """
-    if vertex_ids(edges).count() <= broadcast_vertex_threshold:
+    if vertex_ids(edges).count() <= strategy.DRIVER_VERTICES:
         return _cc_forest(edges)
     # one distinct over the symmetrize union: reachability only needs
     # the (src, dst) pair set, so the weight-aware dedup pass of
@@ -156,15 +157,17 @@ def connected_components(
                 .filter(F.col("new_component") != F.col("component"))
                 .count()
             )
+            release(labels)
             labels = jumped
             if changed == 0:
                 return labels
     finally:
         sym.unpersist()
+    release(labels)
     raise RuntimeError(
         f"connected_components: labels still changed in round max_iter="
-        f"{max_iter}; raise max_iter, or broadcast_vertex_threshold to run "
-        f"the in-memory engine"
+        f"{max_iter} (the DataFrame engine, above "
+        f"{strategy.DRIVER_VERTICES} vertices); raise max_iter"
     )
 
 

@@ -114,8 +114,9 @@ def vertex_ids(edges: DataFrame) -> DataFrame:
     )
 
 
-def dense_ids(ids: DataFrame, col: str = "v") -> DataFrame:
-    """Map distinct ids -> dense 0..N-1 by SORTED order
+def dense_ids(ids: DataFrame, col: str = "v") -> tuple[DataFrame, int]:
+    """Map distinct ids -> dense 0..N-1 by SORTED order; returns
+    ``(mapping[col, new_id], N)``
     (renumber.py:19-34 gathers + sorts the global vertex set; verified
     against the reference's own renumbered output, data/cora8 vs
     data/cora/cora.cites, in tests/test_reference_data.py).
@@ -130,7 +131,8 @@ def dense_ids(ids: DataFrame, col: str = "v") -> DataFrame:
     3. ``row_number`` within each partition + offset = global dense rank.
 
     The only window runs per-partition, so no stage funnels the full id set
-    through one task at any scale.
+    through one task at any scale.  ``N`` (the prefix sum's total) sizes
+    the callers' joins without a count job.
     """
     from pyspark.sql import Window
 
@@ -161,12 +163,7 @@ def dense_ids(ids: DataFrame, col: str = "v") -> DataFrame:
         .localCheckpoint(eager=True)
     )
     with_pid.unpersist()
-    # the checkpoint erased Catalyst's statistics, but the prefix-sum
-    # already computed the exact row count — stash it so consumers
-    # (corpus builders, the louvain driver) can pick broadcast vs shuffle
-    # join strategies without an extra count job
-    out._plm_count = acc  # type: ignore[attr-defined]
-    return out
+    return out, acc
 
 
 def renumber_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -174,7 +171,7 @@ def renumber_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Two equi-joins against the mapping; at scale the mapping is usually far
     smaller than the edge table and AQE converts these to broadcast joins."""
-    mapping = dense_ids(vertex_ids(edges))
+    mapping, _ = dense_ids(vertex_ids(edges))
     out = (
         edges.join(mapping.withColumnRenamed("v", "src"), "src")
         .drop("src")

@@ -16,7 +16,9 @@ Synchronous weighted LPA with deterministic semantics:
   sets) or ``max_iter``.
 
 Everything is built-in DataFrame ops: one join + two aggregations per
-round, label table localCheckpoint'ed per round.
+round, label table ``fresh_checkpoint``-ed per round (the superseded one
+released) and broadcast into the round's joins up to
+``plans.strategy.DRIVER_VERTICES`` vertices (``small_side``).
 """
 
 from __future__ import annotations
@@ -24,7 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
+from parallel_louvain_method_spark.plans import strategy
+from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint, release
+from parallel_louvain_method_spark.plans.strategy import small_side
 from parallel_louvain_method_spark.operators.graph import (
     exclude_self_loops,
     symmetric_edges,
@@ -36,24 +40,15 @@ def label_propagation(
     edges: DataFrame,
     max_iter: int = 20,
     weighted: bool = True,
-    broadcast_vertex_threshold: int = 5_000_000,
 ) -> DataFrame:
-    """Returns ``DataFrame[vtx: long, label: long]``.
-
-    Label table broadcast-hinted per round below
-    ``broadcast_vertex_threshold`` (the per-round ``fresh_checkpoint``
-    drops statistics by design; see plans/lineage.py)."""
+    """Returns ``DataFrame[vtx: long, label: long]``."""
     sym = (
         exclude_self_loops(symmetric_edges(edges))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     verts = vertex_ids(edges).withColumnRenamed("v", "vtx")
     n_verts = verts.count()
-    hint = (
-        (lambda df: F.broadcast(df))
-        if n_verts <= broadcast_vertex_threshold
-        else (lambda df: df)
-    )
+    limit = strategy.DRIVER_VERTICES
     labels = fresh_checkpoint(verts.select("vtx", F.col("vtx").alias("label")))
     wcol = F.col("weight") if weighted else F.lit(1.0)
 
@@ -72,7 +67,10 @@ def label_propagation(
             .drop("rnd")
         )
         label_w = (
-            active.join(hint(labels.withColumnRenamed("vtx", "dst")), "dst")
+            active.join(
+                small_side(labels, n_verts, limit).withColumnRenamed("vtx", "dst"),
+                "dst",
+            )
             .groupBy(F.col("src").alias("vtx"), F.col("label"))
             .agg(F.sum(wcol).alias("w"))
         )
@@ -83,7 +81,7 @@ def label_propagation(
             ).alias("new_label")
         )
         new_labels = (
-            labels.join(hint(best), "vtx", "left")
+            labels.join(small_side(best, n_verts, limit, False), "vtx", "left")
             .select(
                 "vtx",
                 F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
@@ -96,6 +94,7 @@ def label_propagation(
             .filter(F.col("nl") != F.col("label"))
             .count()
         )
+        release(labels)
         labels = new_labels
         zero_streak = zero_streak + 1 if changed == 0 else 0
         if zero_streak >= 3:  # three independent pseudo-random halves quiet

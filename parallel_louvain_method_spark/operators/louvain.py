@@ -18,18 +18,18 @@ A level picks one of three execution strategies:
    numpy loop;
 2. **superstep/barrier** (the production default while vertex ids are
    dense 0..n-1 and per-vertex state fits executor memory,
-   ``broadcast_vertex_threshold``): the WHOLE level runs inside one Spark
-   barrier stage — each task holds its src-partition's packed adjacency in
-   memory for every sweep and exchanges per-sweep MOVER DELTAS over the
-   barrier runtime's in-stage raw-TCP star (functions/bsp.py), with the
-   coordinator all-gather of the barrier scheduler as its bootstrap and
-   fallback.  The edge table crosses the JVM→Python boundary exactly once
-   per level; per-sweep traffic is O(movers).  This is the Spark-native
-   re-expression of the reference's MPI protocol
-   (src/distcommunity.cpp:212-385), with the barrier scheduler replacing
-   MPI_Barrier and the star all-gather replacing its communicate-deltas
-   rounds;
-3. **superstep/sql** (auto-selected past the broadcast threshold or on
+   ``plans.strategy.BARRIER_VERTICES``): the WHOLE level runs inside one
+   Spark barrier stage — each task holds its src-partition's packed
+   adjacency in memory for every sweep and exchanges per-sweep MOVER
+   DELTAS over the barrier runtime's in-stage raw-TCP star
+   (functions/bsp.py), with the coordinator all-gather of the barrier
+   scheduler as its bootstrap and fallback.  The edge table crosses the
+   JVM→Python boundary exactly once per level; per-sweep traffic is
+   O(movers).  This is the Spark-native re-expression of the reference's
+   MPI protocol (src/distcommunity.cpp:212-385), with the barrier
+   scheduler replacing MPI_Barrier and the star all-gather replacing its
+   communicate-deltas rounds;
+3. **superstep/sql** (auto-selected past that limit or on
    sparse ids, and the fallback whenever barrier scheduling is
    unavailable): every sweep is PURE DataFrame algebra — the small
    assignment/degree/totals tables broadcast-hash-join onto the edges,
@@ -46,7 +46,7 @@ truncation (plain ``localCheckpoint`` keeps ``originStats``, whose
 sizeInBytes the per-sweep self-joins square into a doubly-exponential
 BigInt — see plans/lineage.py), one coarsen path (the community renumber
 runs in driver numpy while the level has at most
-``broadcast_vertex_threshold`` vertices and with ``dense_ids`` past that;
+``strategy.BARRIER_VERTICES`` vertices and with ``dense_ids`` past that;
 one coarse-edge function takes either map), and per-level parquet
 checkpoints for resume, which do not change the coarsen path (north rule;
 the reference left this as a TODO, src/distcommunity.cpp:899).
@@ -70,6 +70,8 @@ from parallel_louvain_method_spark.operators.graph import (
     degrees as degrees_op,
     symmetric_edges,
 )
+from parallel_louvain_method_spark.plans import strategy
+from parallel_louvain_method_spark.plans.strategy import small_side
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 ASSIGN_SCHEMA = "vtx long, comm long"
@@ -77,10 +79,6 @@ SUPERSTEP_ENGINES = ("auto", "barrier", "sql")
 # a local level at or under this many symmetric rows runs the
 # reference-sequential kernel, past it the vectorized one
 SEQUENTIAL_THRESHOLD = 150_000
-# a vtx -> community map is broadcast into the coarse-edge joins up to this
-# many rows (its hash relation builds serially in the driver in well under
-# a second); past it the joins shuffle-hash, keeping every byte parallel
-BROADCAST_MAP_ROWS = 200_000
 
 
 @dataclass
@@ -100,8 +98,8 @@ class LevelStats:
     # which execution strategy actually ran the level ("local/sequential",
     # "local/vectorized", "barrier", "sql"):
     # audit telemetry — a resumed/checkpointed run shows which path produced
-    # each level, and the auto-cutover (barrier -> sql past the broadcast
-    # threshold) becomes a testable seam instead of an invisible branch
+    # each level, and the auto-cutover (barrier -> sql past the vertex
+    # limit) becomes a testable seam instead of an invisible branch
     engine: str = ""
     # barrier engine only, folded by functions/bsp.py ``run``: per phase
     # (unpack / xchg_setup / deg_exchange / prep / kernel_i / gather_i) the
@@ -855,8 +853,6 @@ def louvain_level(
     mode: str = "auto",
     local_threshold: int = 1_500_000,
     min_moves_frac: float = 0.001,
-    broadcast_vertex_threshold: int = 20_000_000,
-    barrier_rows_per_task: int = 12_000_000,
     superstep_engine: str = "auto",
     n_vertices_hint: int | None = None,
     dense_hint: bool | None = None,
@@ -888,10 +884,10 @@ def louvain_level(
     - ``"superstep"`` — bulk-synchronous supersteps on the engine that
       ``superstep_engine`` names: ``"barrier"`` (whole level in one barrier
       stage; needs dense ids and per-vertex state under
-      ``broadcast_vertex_threshold``), ``"sql"`` (pure DataFrame sweeps),
+      ``strategy.BARRIER_VERTICES``), ``"sql"`` (pure DataFrame sweeps),
       or ``"auto"`` (barrier while it fits and no task holds more than
-      ``barrier_rows_per_task`` rows, else sql).  Whenever the barrier
-      engine does not fit or cannot be scheduled the level runs on sql; a
+      ``strategy.BARRIER_ROWS_PER_TASK`` rows, else sql).  Whenever the
+      barrier engine does not fit or cannot be scheduled the level runs on sql; a
       worker-side error inside the barrier stage propagates;
     - ``"local"`` — the whole level runs to convergence in the driver.
       At or below ``SEQUENTIAL_THRESHOLD`` symmetric rows it uses the
@@ -1006,27 +1002,25 @@ def louvain_level(
     # makes for dimension tables): while per-vertex state fits executor
     # memory AND ids are dense 0..n-1, the barrier engine holds the level
     # in worker memory and collapses convergence into a few supersteps;
-    # past the threshold, or on sparse ids, the sql engine's
+    # past the limit, or on sparse ids, the sql engine's
     # broadcast-join sweeps take over.
     #
     # Second gate, PER-TASK adjacency size: a barrier task materializes its
     # whole src-partition's adjacency in worker memory (that is the point —
     # one JVM→Python transfer per level), so the binding constraint is rows
-    # per task, not total edges.  Measured: 8.7M rows/task runs clean; at
-    # ~22M rows/task (87M-edge graph on 8 cores) the one-time transfer
-    # alone costs ~160 s and worker memory pressure stalls kernels — the
-    # streaming sql engine wins there.  The gate self-scales with the
-    # cluster: more executors → smaller slices → barrier stays viable, the
-    # same "fits in executor memory" rule as the vertex threshold.
+    # per task, not total edges (strategy.BARRIER_ROWS_PER_TASK has the
+    # measurement).  The gate self-scales with the cluster: more executors
+    # → smaller slices → barrier stays viable, the same "fits in executor
+    # memory" rule as the vertex limit.
     engine = superstep_engine
     if engine in ("auto", "barrier"):
-        fits = is_dense and n_vertices <= broadcast_vertex_threshold
+        fits = is_dense and n_vertices <= strategy.BARRIER_VERTICES
         if engine == "auto":
             n_parts_eff = max(
                 1, min(spark_parts, spark.sparkContext.defaultParallelism)
             )
             fits = fits and (
-                n_edges_sym / n_parts_eff <= barrier_rows_per_task
+                n_edges_sym / n_parts_eff <= strategy.BARRIER_ROWS_PER_TASK
             )
         engine = "barrier" if fits else "sql"
 
@@ -1091,18 +1085,17 @@ def _assign_frame(spark: SparkSession, vtx, comm) -> DataFrame:
     )
 
 
-def _dense_comm_map(assign: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _dense_comm_map(assign: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     """Distributed community renumber: (vtx -> new community, comm ->
-    new_comm), new ids dense 0..k-1 in sorted order (``dense_ids``)."""
+    new_comm, k), new ids dense 0..k-1 in sorted order (``dense_ids``)."""
     from parallel_louvain_method_spark.operators.graph import dense_ids
 
-    cmap = dense_ids(assign.select(F.col("comm").alias("v"))).withColumnsRenamed(
-        {"v": "comm", "new_id": "new_comm"}
-    )
+    cmap, k = dense_ids(assign.select(F.col("comm").alias("v")))
+    cmap = cmap.withColumnsRenamed({"v": "comm", "new_id": "new_comm"})
     amap = assign.join(cmap.hint("shuffle_hash"), "comm").select(
         "vtx", F.col("new_comm").alias("comm")
     )
-    return amap, cmap
+    return amap, cmap, k
 
 
 def _coarse_edges(
@@ -1111,19 +1104,14 @@ def _coarse_edges(
     """The community graph of ``sym_edges`` under the vtx -> dense
     community map ``amap``: both endpoints relabeled, weights summed per
     (src, dst); internal edges become self-loops.  The map side is
-    broadcast while it has at most ``BROADCAST_MAP_ROWS`` rows
+    broadcast while it has at most ``strategy.BROADCAST_MAP_ROWS`` rows
     (``n_rows``) and shuffle-hashed past that or when its size is unknown,
     so the planner never sort-merges the edge table."""
-    def hint(df: DataFrame) -> DataFrame:
-        if n_rows is not None and n_rows <= BROADCAST_MAP_ROWS:
-            return F.broadcast(df)
-        return df.hint("shuffle_hash")
-
     a_src = amap.select(F.col("vtx").alias("src"), F.col("comm").alias("c_src"))
     a_dst = amap.select(F.col("vtx").alias("dst"), F.col("comm").alias("c_dst"))
     return (
-        sym_edges.join(hint(a_src), "src")
-        .join(hint(a_dst), "dst")
+        sym_edges.join(small_side(a_src, n_rows, strategy.BROADCAST_MAP_ROWS), "src")
+        .join(small_side(a_dst, n_rows, strategy.BROADCAST_MAP_ROWS), "dst")
         .groupBy(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .agg(F.sum("weight").alias("weight"))
     )
@@ -1140,7 +1128,7 @@ def coarsen(
 
     Returns (coarse_sym_edges, comm_renumber_map[comm, new_comm]).
     """
-    amap, cmap = _dense_comm_map(assign)
+    amap, cmap, _ = _dense_comm_map(assign)
     return _coarse_edges(sym_edges, amap), cmap
 
 
@@ -1156,11 +1144,8 @@ def louvain(
     mode: str = "auto",
     local_threshold: int = 1_500_000,
     superstep_engine: str = "auto",
-    broadcast_vertex_threshold: int = 20_000_000,
-    barrier_rows_per_task: int = 12_000_000,
     n_vertices: int | None = None,
     assume_dense: bool = False,
-    input_symmetric: bool = False,
     skew_salt: int = 0,
     refine_levels: bool = False,
 ) -> LouvainResult:
@@ -1182,7 +1167,7 @@ def louvain(
 
     The flat assignment (original vtx -> final community) is maintained by
     composing each level's coarsening map.  One rule picks how that map is
-    built: a level with at most ``broadcast_vertex_threshold`` vertices
+    built: a level with at most ``strategy.BARRIER_VERTICES`` vertices
     (the budget that admits the barrier engine) renumbers its communities
     in driver numpy, a larger one with the distributed ``dense_ids``; both
     feed the same coarse-edge joins and give row-identical output.  While
@@ -1206,19 +1191,9 @@ def louvain(
     is exactly ``n_vertices``.  Wrong hints corrupt results; omit them for
     arbitrary input.
 
-    ``input_symmetric=True`` declares that ``edges`` is ALREADY the
-    engine's working representation — both directions of every edge
-    present, (src, dst) unique with weights pre-summed, self-loops one
-    row — i.e. exactly what ``symmetric_edges`` + the per-(src, dst)
-    weight collapse below would produce.  True for coarsen output, for
-    any level checkpoint written by this driver, and for a symmetric
-    adjacency table a graph store maintains natively.  Level 0 then skips
-    the symmetrize union AND the two hash aggregations and pays only the
-    single partitioning exchange — at 100 TB that is the difference
-    between re-shuffling the full edge corpus and a straight repartition
-    of it.  Like ``assume_dense``, a wrong declaration corrupts results
-    (asymmetric input under-counts one direction's degrees); omit for
-    arbitrary input.
+    Level 0 always symmetrizes, set-dedups and weight-sums ``edges``; the
+    pass is idempotent on a table that already is that representation
+    (coarsen output, a level checkpoint), which gives the same partition.
     """
     from parallel_louvain_method_spark.sources.checkpoint import (
         latest_level,
@@ -1269,7 +1244,7 @@ def louvain(
 
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     will_sql = superstep_engine == "sql" or (
-        superstep_engine == "auto" and n_verts > broadcast_vertex_threshold
+        superstep_engine == "auto" and n_verts > strategy.BARRIER_VERTICES
     )
     part_key = "dst" if will_sql else "src"
     # then a weight-sum collapse of parallel edges: set-dedup keeps parallel
@@ -1279,20 +1254,12 @@ def louvain(
     # every level the unique-(src, dst) invariant the sql engine's sweep-0
     # fast path needs (coarsen output already has it), and is another
     # exchange-free hash aggregation on the same single-key partitioning
-    if input_symmetric:
-        # producer-declared working representation (see docstring): no
-        # union, no set-dedup, no weight collapse — one exchange onto the
-        # engine's join/pack key and the level-0 cache is ready
-        sym = edges.select("src", "dst", "weight").repartition(
-            n_parts, part_key
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        sym = (
-            dedup_op(symmetrize_op(edges).repartition(n_parts, part_key))
-            .groupBy("src", "dst")
-            .agg(F.sum("weight").alias("weight"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    sym = (
+        dedup_op(symmetrize_op(edges).repartition(n_parts, part_key))
+        .groupBy("src", "dst")
+        .agg(F.sum("weight").alias("weight"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     level0_cache: DataFrame | None = sym
     pre_part: str | None = part_key
 
@@ -1321,8 +1288,6 @@ def louvain(
             mode=mode,
             local_threshold=local_threshold,
             superstep_engine=superstep_engine,
-            broadcast_vertex_threshold=broadcast_vertex_threshold,
-            barrier_rows_per_task=barrier_rows_per_task,
             n_vertices_hint=nv_hint,
             dense_hint=True if nv_hint is not None else None,
             pre_partitioned=pre_part if level_no == start_level else None,
@@ -1355,7 +1320,7 @@ def louvain(
         # Either map feeds the one coarse-edge function; checkpointing does
         # not change the path.
         n_level = stats.n_vertices
-        in_driver = n_level <= broadcast_vertex_threshold
+        in_driver = n_level <= strategy.BARRIER_VERTICES
         if in_driver:
             apdf = assign.select("vtx", "comm").toPandas()
             av = apdf["vtx"].to_numpy()
@@ -1364,10 +1329,9 @@ def louvain(
             amap = _assign_frame(spark, av, newc)
             nv_hint = len(uniq)
         else:
-            amap, cmap = _dense_comm_map(assign)
+            amap, _, nv_hint = _dense_comm_map(assign)
             # computed once: it feeds both coarse-edge joins and the flat
             amap = fresh_checkpoint(amap)
-            nv_hint = cmap.count()
         coarse = _coarse_edges(sym, amap, n_level)
         # the flat stays in numpy while it is (level 0 ran in this call
         # under the budget; levels only shrink, so every later map is a

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .graph import exclude_self_loops, symmetric_edges, vertex_ids
+from ..plans import strategy
+from ..plans.strategy import small_side
 
 
 def degree_assortativity(edges: DataFrame, weighted: bool = False) -> DataFrame:
@@ -194,7 +196,9 @@ def neighborhood_function(
     verts = vertex_ids(edges)
     rows: list[tuple[int, int]] = []
     if method == "hll":
-        hint = _sketch_hint(verts.count(), lg_k)
+        # the per-hop checkpoint leaves the sketch state stats-free; size it
+        # by its worst-case bytes, n · 2^lg_k
+        sketch_bytes = verts.count() * (1 << lg_k)
         state = verts.groupBy(F.col("v").alias("vtx")).agg(
             F.hll_sketch_agg("v", F.lit(lg_k)).alias("sketch")
         )
@@ -202,7 +206,9 @@ def neighborhood_function(
         prev = None
         for h in range(1, max_hops + 1):
             contrib = sym.join(
-                hint(state.select(F.col("vtx").alias("dst"), "sketch")), "dst"
+                small_side(state, sketch_bytes, strategy.SKETCH_BROADCAST_BYTES)
+                .select(F.col("vtx").alias("dst"), "sketch"),
+                "dst",
             ).select(F.col("src").alias("vtx"), "sketch")
             state = fresh_checkpoint(
                 state.select("vtx", "sketch")
@@ -254,17 +260,6 @@ def effective_diameter(nf: DataFrame, alpha: float = 0.9) -> int:
     return pts[-1][0]
 
 
-def _sketch_hint(n_verts: int, lg_k: int, budget_bytes: int = 128 << 20):
-    """Join-strategy hint for a per-vertex HLL-sketch state table: the
-    per-round checkpoint leaves it stats-free, so without a hint the
-    planner sort-merge-joins it onto the big edge side every hop.
-    Broadcast while the worst-case sketch bytes (n · 2^lg_k) fit the
-    budget; shuffle-hash past that (never a per-hop sort of the edges)."""
-    if n_verts * (1 << lg_k) <= budget_bytes:
-        return lambda df: F.broadcast(df)
-    return lambda df: df.hint("shuffle_hash")
-
-
 def _ball_centrality_scan(
     edges: DataFrame,
     max_hops: int,
@@ -300,7 +295,9 @@ def _ball_centrality_scan(
     )
     verts = sym.select(F.col("src").alias("v")).distinct()
     if method == "hll":
-        hint = _sketch_hint(verts.count(), lg_k)
+        # the per-hop checkpoint leaves the sketch state stats-free; size it
+        # by its worst-case bytes, n · 2^lg_k
+        sketch_bytes = verts.count() * (1 << lg_k)
         state = fresh_checkpoint(
             verts.groupBy(F.col("v").alias("vtx"))
             .agg(F.hll_sketch_agg("v", F.lit(lg_k)).alias("sketch"))
@@ -315,7 +312,9 @@ def _ball_centrality_scan(
         prev_total = None
         for h in range(1, max_hops + 1):
             contrib = sym.join(
-                hint(state.select(F.col("vtx").alias("dst"), "sketch")), "dst"
+                small_side(state, sketch_bytes, strategy.SKETCH_BROADCAST_BYTES)
+                .select(F.col("vtx").alias("dst"), "sketch"),
+                "dst",
             ).select(F.col("src").alias("vtx"), "sketch")
             merged = state.select(
                 "vtx", "sketch", "est", "harm", "dsum"

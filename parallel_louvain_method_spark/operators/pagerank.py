@@ -4,7 +4,7 @@ Two engines, the same barrier-vs-relational split as Louvain
 (operators/louvain.py):
 
 - **barrier engine** (default while ids are dense 0..n-1 and the vertex
-  count fits driver / executor memory, ``broadcast_vertex_threshold``):
+  count fits driver / executor memory, ``plans.strategy.DRIVER_VERTICES``):
   ALL iterations run inside one Spark barrier stage of the runtime
   Louvain shares (functions/bsp.py: the pack, the handshake, the
   exchange, the transport-loss retry and the teardown).  Each task holds
@@ -12,10 +12,10 @@ Two engines, the same barrier-vs-relational split as Louvain
   EXACT per-dst contribution sums (dst-partitioning makes partials
   disjoint) every iteration, so the edges cross the JVM→Python boundary
   once per run;
-- **DataFrame engine** (sparse ids, past the threshold, and the fallback
+- **DataFrame engine** (sparse ids, past the limit, and the fallback
   whenever barrier scheduling is unavailable): pure DataFrame loop — one
-  shuffle join (ranks onto edges by src) + one aggregation per iteration,
-  rank table localCheckpoint'ed each round (iterative-lineage rule).
+  join (ranks onto edges by src) + one aggregation per iteration, rank
+  table checkpointed each round and the superseded one released.
   Nothing per-vertex lands on one machine: the 10^9-vertex path.
 
 Scale notes:
@@ -40,7 +40,9 @@ from pyspark.storagelevel import StorageLevel
 
 from parallel_louvain_method_spark.functions import bsp
 from parallel_louvain_method_spark.operators.graph import vertex_ids
-from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
+from parallel_louvain_method_spark.plans import strategy
+from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint, release
+from parallel_louvain_method_spark.plans.strategy import small_side
 
 
 def _pagerank_barrier(
@@ -211,7 +213,6 @@ def pagerank(
     max_iter: int = 20,
     tol: float | None = 1e-6,
     weighted: bool = True,
-    broadcast_vertex_threshold: int = 5_000_000,
     reset: DataFrame | None = None,
 ) -> DataFrame:
     """Returns ``DataFrame[vtx: long, rank: double]``; Σ rank = 1.
@@ -225,16 +226,12 @@ def pagerank(
     edges).  Both the (1-d) base term and the dangling-mass
     redistribution use p instead of 1/n, and iteration starts from p, so
     uniform p reproduces the classic operator.  The table is joined once
-    onto the vertex set (broadcast below the threshold) — a seed set of
-    any size up to |V| works; None keeps the classic uniform teleport on
-    the exact original expression shapes.
+    onto the vertex set (broadcast up to ``strategy.DRIVER_VERTICES``) —
+    a seed set of any size up to |V| works; None keeps the classic
+    uniform teleport on the exact original expression shapes.
 
-    While the vertex set is below ``broadcast_vertex_threshold`` the rank
-    table gets an explicit broadcast hint in the per-iteration join:
-    ``localCheckpoint`` erases its statistics, so the planner would
-    otherwise assume it is huge and sort-merge-join — re-sorting the big
-    cached edge side EVERY iteration.  Past the threshold the hint is
-    withheld and the pre-partitioned edge cache carries the join.
+    The DataFrame loop's joins are sized by ``strategy.small_side``: the
+    rank table is broadcast up to the limit, shuffle-hashed past it.
     """
     verts = vertex_ids(edges).withColumnRenamed("v", "vtx").persist(
         StorageLevel.MEMORY_AND_DISK
@@ -245,7 +242,7 @@ def pagerank(
 
     # barrier engine while ids are dense and state fits memory (same
     # decision as louvain's engine selection)
-    if n <= broadcast_vertex_threshold:
+    if n <= strategy.DRIVER_VERTICES:
         # dense gate needs BOTH bounds: {-1, 0, 1, 3} has n == max+1 but a
         # negative id would silently wrap numpy indexing in the barrier
         # engine — require min >= 0, else use the DataFrame engine
@@ -266,8 +263,7 @@ def pagerank(
                 verts.unpersist()
                 return res
 
-    hint = (lambda df: F.broadcast(df)) if n <= broadcast_vertex_threshold else (lambda df: df)
-
+    limit = strategy.DRIVER_VERTICES
     wcol = F.col("weight") if weighted else F.lit(1.0)
     out_w = edges.groupBy(F.col("src").alias("vtx")).agg(
         F.sum(wcol).alias("out_w")
@@ -278,7 +274,9 @@ def pagerank(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     trans = (
-        edges.join(hint(out_w.withColumnRenamed("vtx", "src")), "src")
+        edges.join(
+            small_side(out_w, n, limit, False).withColumnRenamed("vtx", "src"), "src"
+        )
         .select("src", "dst", (wcol / F.col("out_w")).alias("frac"))
         .repartition(n_parts, "src")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -298,7 +296,9 @@ def pagerank(
         if reset.groupBy("vtx").count().filter("count > 1").count():
             raise ValueError("reset contains duplicate vertex ids")
         verts_p = (
-            verts.join(hint(reset.select("vtx", "p")), "vtx", "left")
+            verts.join(
+                small_side(reset.select("vtx", "p"), n, limit, False), "vtx", "left"
+            )
             .na.fill({"p": 0.0})
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -317,11 +317,16 @@ def pagerank(
     has_danglings = danglings.count() > 0
 
     for _ in range(max_iter):
+        # the rank table is a stats-free checkpoint leaf, the other sides
+        # are shuffle-backed
         contrib = (
-            trans.join(hint(ranks.withColumnRenamed("vtx", "src")), "src")
+            trans.join(
+                small_side(ranks, n, limit).withColumnRenamed("vtx", "src"), "src"
+            )
             .groupBy(F.col("dst").alias("vtx"))
             .agg(F.sum(F.col("frac") * F.col("rank")).alias("in_sum"))
         )
+        in_sums = small_side(contrib, n, limit, leaf=False)
         # dangling mass: rank held by vertices with no out-edges
         dangling = (
             (
@@ -345,7 +350,7 @@ def pagerank(
             params = edges.sparkSession.createDataFrame(
                 [(float(redistribute),)], "redistribute double"
             )
-            new_ranks = verts.join(hint(contrib), "vtx", "left").na.fill(
+            new_ranks = verts.join(in_sums, "vtx", "left").na.fill(
                 {"in_sum": 0.0}
             ).crossJoin(F.broadcast(params)).select(
                 "vtx",
@@ -360,7 +365,7 @@ def pagerank(
             params = edges.sparkSession.createDataFrame(
                 [(float(damping * dangling),)], "dmass double"
             )
-            new_ranks = verts_p.join(hint(contrib), "vtx", "left").na.fill(
+            new_ranks = verts_p.join(in_sums, "vtx", "left").na.fill(
                 {"in_sum": 0.0}
             ).crossJoin(F.broadcast(params)).select(
                 "vtx",
@@ -375,6 +380,7 @@ def pagerank(
         # iteration regardless, so deferring the checkpoint only re-runs
         # the previous join inside the next one (measured slower)
         new_ranks = fresh_checkpoint(new_ranks)
+        delta = None
         if tol is not None:
             delta = (
                 new_ranks.withColumnRenamed("rank", "new_rank")
@@ -382,11 +388,10 @@ def pagerank(
                 .agg(F.max(F.abs(F.col("new_rank") - F.col("rank"))))
                 .first()[0]
             )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
+        release(ranks)
+        ranks = new_ranks
+        if delta is not None and delta < tol:
+            break
 
     trans.unpersist()
     verts.unpersist()

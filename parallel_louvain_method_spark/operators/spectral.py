@@ -20,8 +20,9 @@ Both are bounded-shuffle power iterations with the engine's standard
 loop posture (same as operators/pagerank.py):
 
 - one vertex-keyed equi-join + one map-side-combined aggregation per
-  half-step — Catalyst plans a plain shuffle-hash/sort-merge join, AQE
-  splits skewed hub keys;
+  half-step; the checkpointed state side is broadcast up to
+  ``plans.strategy.DRIVER_VERTICES`` vertices and shuffle-hashed past
+  that (``strategy.small_side``), and AQE splits skewed hub keys;
 - the L1 normalizer rides as a broadcast 1-row cross join (never a
   driver round-trip inside the loop);
 - per-iteration ``fresh_checkpoint`` (plans/lineage.py) keeps lineage
@@ -45,14 +46,15 @@ from parallel_louvain_method_spark.operators.graph import (
     symmetric_edges,
     vertex_ids,
 )
+from parallel_louvain_method_spark.plans import strategy
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
+from parallel_louvain_method_spark.plans.strategy import small_side
 
 
 def eigenvector_centrality(
     edges: DataFrame,
     max_iter: int = 20,
     tol: float | None = 1e-6,
-    broadcast_vertex_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Power-iteration eigenvector centrality over the undirected graph.
 
@@ -85,17 +87,12 @@ def eigenvector_centrality(
     )
     # the per-iteration state is checkpointed (stats-free leaves — see
     # plans/lineage.py), so the planner would sort-merge-join it onto the
-    # big edge side every round; hint it broadcast while the vertex count
-    # says it fits (the pagerank/louvain posture, guide §3.1)
-    hint = (
-        (lambda df: F.broadcast(df))
-        if n <= broadcast_vertex_threshold
-        else (lambda df: df.hint("shuffle_hash"))
-    )
+    # big edge side every round
+    limit = strategy.DRIVER_VERTICES
     for _ in range(max_iter):
         raw = (
             sym.join(
-                hint(state.select(F.col("vtx").alias("src"), "score")), "src"
+                small_side(state, n, limit).withColumnRenamed("vtx", "src"), "src"
             )
             .groupBy(F.col("dst").alias("vtx"))
             .agg(F.sum(F.col("weight") * F.col("score")).alias("raw"))
@@ -129,7 +126,6 @@ def hits(
     edges: DataFrame,
     max_iter: int = 20,
     tol: float | None = 1e-6,
-    broadcast_vertex_threshold: int = 5_000_000,
 ) -> DataFrame:
     """HITS hub/authority scores over the DIRECTED edge table.
 
@@ -163,15 +159,9 @@ def hits(
             [], "vtx long, hub double, authority double"
         )
     verts = fresh_checkpoint(verts)
-    # scores are checkpointed stats-free leaves each round — hint the
-    # (small) state side of the propagation joins broadcast while the
-    # vertex count fits, shuffle-hash past that (never sort-merge the big
-    # edge side per half-step; guide §3.1)
-    hint = (
-        (lambda df: F.broadcast(df))
-        if n <= broadcast_vertex_threshold
-        else (lambda df: df.hint("shuffle_hash"))
-    )
+    # scores are checkpointed stats-free leaves each round: never
+    # sort-merge the big edge side per half-step
+    limit = strategy.DRIVER_VERTICES
     state = verts.select(
         "vtx",
         F.lit(1.0 / n).alias("hub"),
@@ -187,7 +177,9 @@ def hits(
         and are zero-filled once at the end — not with a full-vertex
         join per half-step."""
         raw = (
-            e.join(hint(scores.withColumnRenamed("vtx", key_in)), key_in)
+            e.join(
+                small_side(scores, n, limit).withColumnRenamed("vtx", key_in), key_in
+            )
             .groupBy(F.col(key_out).alias("vtx"))
             .agg(F.sum(F.col("weight") * F.col("sc")).alias("raw"))
         )
@@ -203,9 +195,13 @@ def hits(
         """Zero-fill the sparse half-step outputs over the full vertex
         set (absent rows are exact zeros — see ``_half``)."""
         return (
-            verts.join(hint(hub.withColumnRenamed("sc", "hub")), "vtx", "left")
+            verts.join(
+                small_side(hub, n, limit).withColumnRenamed("sc", "hub"), "vtx", "left"
+            )
             .join(
-                hint(auth.withColumnRenamed("sc", "authority")), "vtx", "left"
+                small_side(auth, n, limit).withColumnRenamed("sc", "authority"),
+                "vtx",
+                "left",
             )
             .select(
                 "vtx",
@@ -267,7 +263,6 @@ def katz_centrality(
     beta: float = 0.05,
     max_iter: int = 20,
     tol: float | None = 1e-9,
-    broadcast_vertex_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Katz centrality (Katz 1953) over the undirected graph.
 
@@ -304,26 +299,21 @@ def katz_centrality(
     n = verts.count()
     if n == 0:
         return spark.createDataFrame([], "vtx long, katz double")
-    # checkpointed state is stats-free (plans/lineage.py): hint the small
-    # walk-term side broadcast while the vertex count fits, shuffle-hash
-    # past that — never a per-iteration sort-merge of the edge side
-    hint = (
-        (lambda df: F.broadcast(df))
-        if n <= broadcast_vertex_threshold
-        else (lambda df: df.hint("shuffle_hash"))
-    )
+    # checkpointed state is stats-free (plans/lineage.py): never a
+    # per-iteration sort-merge of the edge side
+    limit = strategy.DRIVER_VERTICES
     # state: walk term c (sparse join source) + accumulator katz
     term = verts.select("vtx", F.lit(1.0).alias("c"))
     acc = verts.select("vtx", F.lit(0.0).alias("katz"))
     for _ in range(max_iter):
         new_term = (
-            sym.join(hint(term.withColumnRenamed("vtx", "src")), "src")
+            sym.join(small_side(term, n, limit).withColumnRenamed("vtx", "src"), "src")
             .groupBy(F.col("dst").alias("vtx"))
             .agg((F.lit(beta) * F.sum(F.col("weight") * F.col("c"))).alias("c"))
         )
         new_term = fresh_checkpoint(new_term)
         acc = fresh_checkpoint(
-            acc.join(hint(new_term), "vtx", "left").select(
+            acc.join(small_side(new_term, n, limit), "vtx", "left").select(
                 "vtx",
                 (F.col("katz") + F.coalesce(F.col("c"), F.lit(0.0))).alias(
                     "katz"

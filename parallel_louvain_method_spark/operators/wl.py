@@ -54,13 +54,14 @@ class WLResult:
     converged: bool  # color-class count stable before the bound hit
 
 
-def _relabel(sig: DataFrame) -> DataFrame:
-    """(vtx, sig) -> (vtx, color): dense rank of the distinct signature
-    strings via the two-phase distributed rank (no global window)."""
-    mapping = dense_ids(sig.select("sig"), col="sig")
+def _relabel(sig: DataFrame) -> tuple[DataFrame, int]:
+    """(vtx, sig) -> ((vtx, color), color count): dense rank of the
+    distinct signature strings via the two-phase distributed rank (no
+    global window)."""
+    mapping, n_colors = dense_ids(sig.select("sig"), col="sig")
     return sig.join(mapping, "sig").select(
         "vtx", F.col("new_id").alias("color")
-    )
+    ), n_colors
 
 
 def wl_colors(
@@ -94,7 +95,7 @@ def wl_colors(
         )
     )
 
-    def one_round(state: DataFrame) -> DataFrame:
+    def one_round(state: DataFrame) -> tuple[DataFrame, int]:
         nbr = sym.join(
             state.select(
                 F.col("vtx").alias("dst"), F.col("color").alias("nc")
@@ -122,20 +123,18 @@ def wl_colors(
         )
         return _relabel(sig)
 
+    n_colors = state.agg(F.countDistinct("color")).first()[0] or 0
     if rounds is not None:
         for _ in range(rounds):
             # dense_ids localCheckpoints its mapping, so per-round state
             # lineage is already truncated at the relabel join
-            state = one_round(state)
-        final = state.select("vtx", "color")
-        n_colors = final.agg(F.countDistinct("color")).first()[0] or 0
-        return WLResult(final, rounds, n_colors, converged=False)
+            state, n_colors = one_round(state)
+        return WLResult(
+            state.select("vtx", "color"), rounds, n_colors, converged=False
+        )
 
-    n_colors = state.agg(F.countDistinct("color")).first()[0] or 0
     for it in range(max_iter):
-        state = one_round(state)
-        # colors are dense 0..k-1 by construction: max+1 == class count
-        n_new = (state.agg(F.max("color")).first()[0] or 0) + 1
+        state, n_new = one_round(state)
         if n_new == n_colors:
             return WLResult(
                 state.select("vtx", "color"), it + 1, n_new, converged=True

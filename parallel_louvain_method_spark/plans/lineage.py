@@ -65,6 +65,24 @@ def fresh_checkpoint(df: DataFrame) -> DataFrame:
     return out
 
 
+def release(df: DataFrame) -> None:
+    """Unpersist the rows under a superseded :func:`fresh_checkpoint`
+    result (JVM GC would hold them): the first persisted RDD at most three
+    hops below its ``LogicalRDD``, never a cache upstream of it."""
+    jdf = getattr(df, "_jdf", None)  # None on Spark Connect: GC frees it
+    plan = None if jdf is None else jdf.queryExecution().analyzed()
+    if plan is None or not plan.getClass().getName().endswith(".LogicalRDD"):
+        return
+    rdd = plan.rdd()
+    for _ in range(3):
+        if rdd.getStorageLevel().isValid():
+            rdd.unpersist(False)
+            return
+        if rdd.dependencies().isEmpty():
+            return
+        rdd = rdd.dependencies().head().rdd()
+
+
 def size_in_bytes_digits(df: DataFrame) -> int:
     """Digit count of the optimized plan's ``sizeInBytes`` statistic.
 

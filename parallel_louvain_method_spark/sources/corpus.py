@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parallel_louvain_method_spark.operators.graph import dense_ids
+from parallel_louvain_method_spark.plans import strategy
+from parallel_louvain_method_spark.plans.strategy import small_side
 
 CORPUS_COLUMNS = ["repo", "path", "commit", "lang", "content"]
 _LANGS = ["py", "c", "cpp", "java", "rs"]
@@ -196,14 +198,15 @@ def densify(string_edges: DataFrame) -> tuple[DataFrame, DataFrame]:
         .union(string_edges.select(F.col("node_b").alias("name")))
         .distinct()
     )
-    mapping = dense_ids(ids, "name")
+    mapping, n = dense_ids(ids, "name")
+    limit = strategy.DRIVER_VERTICES
     edges = (
         string_edges.join(
-            _map_hint(mapping).withColumnRenamed("name", "node_a"), "node_a"
+            small_side(mapping, n, limit).withColumnRenamed("name", "node_a"), "node_a"
         )
         .withColumnRenamed("new_id", "src")
         .join(
-            _map_hint(mapping)
+            small_side(mapping, n, limit)
             .withColumnRenamed("name", "node_b")
             .withColumnRenamed("new_id", "dst"),
             "node_b",
@@ -211,19 +214,6 @@ def densify(string_edges: DataFrame) -> tuple[DataFrame, DataFrame]:
         .select("src", "dst", "weight")
     )
     return edges, mapping
-
-
-def _map_hint(mapping: DataFrame) -> DataFrame:
-    """Join-strategy hint for a ``dense_ids`` name→id map: its checkpoint
-    erased Catalyst's statistics (the planner would sort-merge the big
-    corpus side), but dense_ids stashed the exact row count — broadcast
-    while it fits, shuffle-hash past that.  At broadcast size the corpus
-    strings never cross a shuffle at all: the one string exchange the
-    ints-early design budgeted for disappears."""
-    k = getattr(mapping, "_plm_count", None)
-    if k is not None and k <= 5_000_000:
-        return F.broadcast(mapping)
-    return mapping.hint("shuffle_hash")
 
 
 def _capped_pair_edges_int(
@@ -284,13 +274,15 @@ def build_repo_graph(
     test_int_builders_match_string_pipeline.)
     """
     names = corpus.select(F.col("repo").alias("name")).distinct()
-    mapping = dense_ids(names, "name")
+    mapping, n = dense_ids(names, "name")
     keyed = (
         corpus.select(
             F.col("repo").alias("name"),
             F.xxhash64("content").alias("bucket"),
         )
-        .join(_map_hint(mapping), "name")
+        # at broadcast size the corpus strings never cross a shuffle: the
+        # one string exchange the ints-early design budgeted for is gone
+        .join(small_side(mapping, n, strategy.DRIVER_VERTICES), "name")
         .select("bucket", F.col("new_id").alias("id"))
         .distinct()
     )
@@ -309,13 +301,13 @@ def build_file_graph(
     """
     name = F.concat(F.col("repo"), F.lit("::"), F.col("path"))
     names = corpus.select(name.alias("name")).distinct()
-    mapping = dense_ids(names, "name")
+    mapping, n = dense_ids(names, "name")
     keyed = (
         corpus.select(
             name.alias("name"),
             F.xxhash64("repo", "commit").alias("bucket"),
         )
-        .join(_map_hint(mapping), "name")
+        .join(small_side(mapping, n, strategy.DRIVER_VERTICES), "name")
         .select("bucket", F.col("new_id").alias("id"))
         .distinct()
     )

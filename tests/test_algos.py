@@ -17,6 +17,7 @@ from parallel_louvain_method_spark.operators.triangles import (
     triangles_per_vertex,
 )
 from parallel_louvain_method_spark.operators.graph import symmetric_edges
+from parallel_louvain_method_spark.plans import strategy
 from tests.conftest import GOLDEN16_EDGES
 
 
@@ -75,9 +76,9 @@ def test_pagerank_golden16(spark, golden16_df):
         assert got[v] == pytest.approx(want[v], abs=1e-6), f"vtx {v}"
 
 
-def test_pagerank_barrier_matches_dataframe(spark, golden16_df):
+def test_pagerank_barrier_matches_dataframe(spark, golden16_df, monkeypatch):
     """The whole-run barrier engine must agree with the DataFrame engine
-    (``broadcast_vertex_threshold=0``) and the numpy oracle on both
+    (``strategy.DRIVER_VERTICES = 0``) and the numpy oracle on both
     fixed-k and tol modes (same update expression, summation order
     differs only by ulps)."""
     from parallel_louvain_method_spark.operators.pagerank import (
@@ -89,12 +90,9 @@ def test_pagerank_barrier_matches_dataframe(spark, golden16_df):
         bar = _pagerank_barrier(sym, 16, 0.85, kwargs["max_iter"], kwargs["tol"], True)
         assert bar is not None  # local mode always schedules barrier stages
         a = {r["vtx"]: r["rank"] for r in bar.collect()}
-        b = {
-            r["vtx"]: r["rank"]
-            for r in pagerank(
-                sym, broadcast_vertex_threshold=0, **kwargs
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(strategy, "DRIVER_VERTICES", 0)
+            b = {r["vtx"]: r["rank"] for r in pagerank(sym, **kwargs).collect()}
         assert set(a) == set(b) == set(range(16))
         for v in range(16):
             assert a[v] == pytest.approx(b[v], abs=1e-12), f"vtx {v}"
@@ -218,7 +216,7 @@ def _np_ppr(edges, n, p, damping=0.85, iters=30):
     return r
 
 
-def test_pagerank_personalized(spark, golden16_df):
+def test_pagerank_personalized(spark, golden16_df, monkeypatch):
     """reset= exercises both engines; seeds {0, 5}, uniform over them.
     Broadcast engine (dense ids) vs numpy oracle, and uniform reset must
     reproduce the classic run bit-near-exactly."""
@@ -244,14 +242,13 @@ def test_pagerank_personalized(spark, golden16_df):
     }
     assert got[0] > classic[0] and got[5] > classic[5]
 
-    # DataFrame engine (threshold 0 forbids broadcast) — same answer
-    got_df = {
-        r["vtx"]: r["rank"]
-        for r in pagerank(
-            sym, max_iter=30, tol=None, reset=reset,
-            broadcast_vertex_threshold=0,
-        ).collect()
-    }
+    # DataFrame engine (a 0 limit forbids broadcast) — same answer
+    with monkeypatch.context() as m:
+        m.setattr(strategy, "DRIVER_VERTICES", 0)
+        got_df = {
+            r["vtx"]: r["rank"]
+            for r in pagerank(sym, max_iter=30, tol=None, reset=reset).collect()
+        }
     for v in range(16):
         assert got_df[v] == pytest.approx(want[v], abs=1e-9), f"vtx {v}"
 
@@ -273,15 +270,52 @@ def test_pagerank_personalized(spark, golden16_df):
     )
     r0 = spark.createDataFrame([(0, 1.0)], "vtx long, p double")
     for thr in (5_000_000, 0):  # broadcast engine, then DataFrame engine
+        monkeypatch.setattr(strategy, "DRIVER_VERTICES", thr)
         got_ch = {
             r["vtx"]: r["rank"]
-            for r in pagerank(
-                chain, max_iter=40, tol=None, reset=r0,
-                broadcast_vertex_threshold=thr,
-            ).collect()
+            for r in pagerank(chain, max_iter=40, tol=None, reset=r0).collect()
         }
         assert sum(got_ch.values()) == pytest.approx(1.0, abs=1e-9), thr
         assert got_ch[0] > got_ch[2], thr
+
+
+@pytest.mark.parametrize("op", ["pagerank", "label_propagation", "cc"])
+def test_dataframe_loops_release_superseded_rounds(
+    spark, golden16_df, monkeypatch, op
+):
+    """A 30-round DataFrame loop keeps at most its returned table
+    registered: each superseded round's checkpoint is released, not left
+    for JVM GC (the PageRank loop used to leave ~20)."""
+    monkeypatch.setattr(strategy, "DRIVER_VERTICES", 0)
+    sym = symmetric_edges(golden16_df)
+    run = {
+        "pagerank": lambda: pagerank(sym, max_iter=30, tol=None),
+        "label_propagation": lambda: label_propagation(sym, max_iter=30),
+        "cc": lambda: connected_components(sym, max_iter=30),
+    }[op]
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    out = run()
+    assert rdds().size() <= before + 1
+    assert out.count() == 16
+
+
+def test_dense_ids_returns_row_count(spark):
+    """``dense_ids`` returns its mapping with the exact distinct-id count
+    (0 for an empty input): callers size their joins from it."""
+    from parallel_louvain_method_spark.operators.graph import dense_ids
+
+    ids = spark.createDataFrame(
+        [(v,) for v in (7, -3, 7, 2**62, 0, -3)], "v long"
+    )
+    mapping, n = dense_ids(ids)
+    assert n == mapping.count() == 4
+    assert {r["v"]: r["new_id"] for r in mapping.collect()} == {
+        -3: 0, 0: 1, 7: 2, 2**62: 3
+    }
+    empty, n0 = dense_ids(spark.createDataFrame([], "v long"))
+    assert n0 == 0
+    assert empty.count() == 0
 
 
 def test_pagerank_dangling(spark):
@@ -414,7 +448,7 @@ _BOTH = (None, 0)  # the default engine, then the DataFrame engine
         pytest.param(_permuted_path(200_000), (None,), id="permuted_path_200k"),
     ],
 )
-def test_connected_components_random(spark, edges, thresholds):
+def test_connected_components_random(spark, edges, thresholds, monkeypatch):
     """Each engine against a union-find oracle on any long ids; no
     persisted cache outlives the call."""
     df = _edges_df(spark, edges)
@@ -423,22 +457,24 @@ def test_connected_components_random(spark, edges, thresholds):
     dense = _np_components([(pos[a], pos[b]) for a, b in edges], len(ids))
     want = {ids[i]: ids[c] for i, c in dense.items()}
     for thr in thresholds:
-        kw = {} if thr is None else {"broadcast_vertex_threshold": thr}
+        if thr is not None:
+            monkeypatch.setattr(strategy, "DRIVER_VERTICES", thr)
         before = _persisted_caches(spark)
         got = {
             r["vtx"]: r["component"]
-            for r in connected_components(df, **kw).collect()
+            for r in connected_components(df).collect()
         }
         assert _persisted_caches(spark) == before
-        assert got == want, f"broadcast_vertex_threshold={thr}"
+        assert got == want, f"DRIVER_VERTICES={thr}"
 
 
-def test_connected_components_dataframe_cap_raises(spark):
+def test_connected_components_dataframe_cap_raises(spark, monkeypatch):
     """A DataFrame-engine run whose last allowed round still moved labels
     raises instead of returning a truncated labelling."""
     df = _edges_df(spark, _permuted_path(2_000))
+    monkeypatch.setattr(strategy, "DRIVER_VERTICES", 0)
     with pytest.raises(RuntimeError, match="max_iter=3"):
-        connected_components(df, max_iter=3, broadcast_vertex_threshold=0)
+        connected_components(df, max_iter=3)
 
 
 def test_triangles_golden16(spark, golden16_df):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parallel_louvain_method_spark.operators import graph as G
+from parallel_louvain_method_spark.plans import strategy
 from parallel_louvain_method_spark.operators.louvain import (
     coarsen,
     louvain,
@@ -109,12 +110,12 @@ def test_multilevel_louvain(spark, golden16_df):
     assert res.assignment.select("vtx").distinct().count() == 16
 
 
-def test_louvain_input_symmetric_parity(spark, golden16_df):
-    """input_symmetric=True on the pre-built working representation must
-    reproduce the raw-input run exactly — same Q, same per-vertex
-    assignment — in both the local and superstep paths.  The declared
-    table is exactly what the level-0 build would have produced
-    (symmetrize + set-dedup + per-(src,dst) weight collapse)."""
+def test_louvain_presymmetrized_input_parity(spark, golden16_df):
+    """The working representation as input (symmetrized, set-deduped,
+    weight-summed per (src, dst) — what a level checkpoint or a graph
+    store holds) must reproduce the raw-input run exactly — same Q, same
+    per-vertex assignment — in both the local and superstep paths: the
+    level-0 symmetrize + dedup + weight-sum pass is idempotent on it."""
     from parallel_louvain_method_spark.operators.graph import symmetric_edges
 
     pre = (
@@ -123,7 +124,7 @@ def test_louvain_input_symmetric_parity(spark, golden16_df):
         .agg(F.sum("weight").alias("weight"))
     )
     base = louvain(spark, golden16_df)
-    skip = louvain(spark, pre, input_symmetric=True)
+    skip = louvain(spark, pre)
     assert skip.modularity == pytest.approx(base.modularity, abs=1e-9)
     a = {r["vtx"]: r["comm"] for r in base.assignment.collect()}
     b = {r["vtx"]: r["comm"] for r in skip.assignment.collect()}
@@ -136,10 +137,7 @@ def test_louvain_input_symmetric_parity(spark, golden16_df):
         base_ss = louvain(
             spark, golden16_df, mode="superstep", superstep_engine=eng
         )
-        skip_ss = louvain(
-            spark, pre, mode="superstep", superstep_engine=eng,
-            input_symmetric=True,
-        )
+        skip_ss = louvain(spark, pre, mode="superstep", superstep_engine=eng)
         assert skip_ss.modularity == pytest.approx(
             base_ss.modularity, abs=1e-9
         ), eng
@@ -192,19 +190,19 @@ def _planted_ring(spark, n_cliques=40, size=5):
 
 @pytest.mark.parametrize("form", ["plain", "checkpoint", "relational"])
 @pytest.mark.parametrize("graph", ["golden16", "planted"])
-def test_coarsen_forms_agree(spark, golden16_df, tmp_path, form, graph):
+def test_coarsen_forms_agree(
+    spark, golden16_df, tmp_path, monkeypatch, form, graph
+):
     """The numpy coarsen (the default at these sizes), a checkpointed run
-    and ``broadcast_vertex_threshold=0`` (the ``dense_ids`` map and the
+    and ``strategy.BARRIER_VERTICES = 0`` (the ``dense_ids`` map and the
     join-composed flat at every level) give the same result exactly."""
     edges = golden16_df if graph == "golden16" else _planted_ring(spark)
-    kwargs = {
-        "plain": {},
-        "checkpoint": {"checkpoint_dir": str(tmp_path / "ck")},
-        "relational": {"broadcast_vertex_threshold": 0},
-    }[form]
+    kwargs = {"checkpoint_dir": str(tmp_path / "ck")} if form == "checkpoint" else {}
     base = louvain(spark, edges)
     if graph == "planted":
         assert len(base.levels) >= 2, base.levels
+    if form == "relational":
+        monkeypatch.setattr(strategy, "BARRIER_VERTICES", 0)
     res = louvain(spark, edges, **kwargs)
     assert res.modularity == base.modularity
     assert _partition(res) == _partition(base)
@@ -306,26 +304,24 @@ def test_louvain_rejects_unknown_engine(spark, golden16_df):
         louvain_level(spark, sym, mode="superstep", superstep_engine="block")
 
 
-def test_louvain_engine_cutover_and_telemetry(spark, golden16_df):
-    """Past broadcast_vertex_threshold the auto selection must cut over
+def test_louvain_engine_cutover_and_telemetry(spark, golden16_df, monkeypatch):
+    """Past strategy.BARRIER_VERTICES the auto selection must cut over
     barrier -> sql (the only path past 20M vertices), and per-level engine
     telemetry records which strategy ran each level."""
-    res = louvain(
-        spark,
-        golden16_df,
-        mode="superstep",
-        broadcast_vertex_threshold=4,  # golden16 has 16 > 4 vertices
-    )
+    with monkeypatch.context() as m:
+        m.setattr(strategy, "BARRIER_VERTICES", 4)  # golden16 has 16 > 4
+        res = louvain(spark, golden16_df, mode="superstep")
     assert res.levels[0].engine == "sql"
     assert res.modularity >= 0.25
     assert res.assignment.count() == 16
-    # below the threshold auto picks barrier again (both directions tested)
+    # below the limit auto picks barrier again (both directions tested)
     res2 = louvain(spark, golden16_df, mode="superstep")
     assert res2.levels[0].engine == "barrier"
     # the PER-TASK adjacency gate also cuts over to sql: a barrier task
     # materializes its whole partition in worker memory, so rows/task —
     # not total edges — is the binding constraint
-    res3 = louvain(spark, golden16_df, mode="superstep", barrier_rows_per_task=2)
+    monkeypatch.setattr(strategy, "BARRIER_ROWS_PER_TASK", 2)
+    res3 = louvain(spark, golden16_df, mode="superstep")
     assert res3.levels[0].engine == "sql"
     assert res3.modularity >= 0.25
 

@@ -213,3 +213,132 @@ def test_bloom_semi_join_plan_quality(spark):
 
     assert len(re.findall(r"\(\d+\) BroadcastHashJoin", text)) == 3, text
     assert "BatchEvalPython" not in text
+
+
+# ---- size-gated join choices (plans/strategy.py) --------------------------
+# Each operator sizes its small join side with ``strategy.small_side``: at
+# the default limits the side is broadcast; with the limit at 0 a
+# stats-free leaf is shuffle-hashed, never sort-merged onto the big side.
+
+def _joins(df, col: str) -> list[tuple[str, str]]:
+    """``(operator, build side)`` of every join in ``df``'s physical plan
+    whose right input carries column ``col``.  Reads AQE's initial plan
+    (the strategy the hints chose) and does not enter cached sub-plans."""
+    todo, found = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        p = todo.pop()
+        if p.nodeName() == "AdaptiveSparkPlan":
+            todo.append(p.inputPlan())
+            continue
+        if p.nodeName().endswith("Join"):
+            out = p.right().output()
+            if col in {out.apply(i).name() for i in range(out.size())}:
+                name = p.nodeName()
+                side = p.buildSide().toString() if "Hash" in name else ""
+                found.append((name, side))
+        ch = p.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+    return found
+
+
+def _captured(monkeypatch, module, name: str, arg: int | None) -> list:
+    """Wrap ``module.name`` so each call records its ``arg``-th positional
+    argument (its return value when ``arg`` is None)."""
+    seen, orig = [], getattr(module, name)
+
+    def spy(*a, **kw):
+        out = orig(*a, **kw)
+        seen.append(out if arg is None else a[arg])
+        return out
+
+    monkeypatch.setattr(module, name, spy)
+    return seen
+
+
+def _assert_gated(joins, limit_zero: bool):
+    assert joins, "gated join not found in the plan"
+    if limit_zero:
+        assert all(j == ("ShuffledHashJoin", "BuildRight") for j in joins), joins
+    else:
+        assert all(j == ("BroadcastHashJoin", "BuildRight") for j in joins), joins
+
+
+@pytest.mark.parametrize("limit_zero", [False, True], ids=["default", "zero"])
+def test_pagerank_iteration_join_strategy(
+    spark, golden16_df, monkeypatch, limit_zero
+):
+    """The rank table joins onto the cached edge side by ``small_side``.
+    The barrier engine is bypassed so the DataFrame loop runs; with the
+    limit at 0 it runs past the limit."""
+    from parallel_louvain_method_spark.operators import pagerank as pr_mod
+    from parallel_louvain_method_spark.plans import strategy
+
+    monkeypatch.setattr(pr_mod, "_pagerank_barrier", lambda *a, **k: None)
+    if limit_zero:
+        monkeypatch.setattr(strategy, "DRIVER_VERTICES", 0)
+    rounds = _captured(monkeypatch, pr_mod, "fresh_checkpoint", 0)
+    pr_mod.pagerank(golden16_df, max_iter=2, tol=None)
+    # rounds[0] is the initial rank table, rounds[1] the first iteration
+    _assert_gated(_joins(rounds[1], "rank"), limit_zero)
+
+
+@pytest.mark.parametrize("limit_zero", [False, True], ids=["default", "zero"])
+def test_label_propagation_label_join_strategy(
+    spark, golden16_df, monkeypatch, limit_zero
+):
+    from parallel_louvain_method_spark.operators import labelprop
+    from parallel_louvain_method_spark.plans import strategy
+
+    if limit_zero:
+        monkeypatch.setattr(strategy, "DRIVER_VERTICES", 0)
+    rounds = _captured(monkeypatch, labelprop, "fresh_checkpoint", 0)
+    labelprop.label_propagation(golden16_df, max_iter=1)
+    _assert_gated(_joins(rounds[1], "label"), limit_zero)
+
+
+@pytest.mark.parametrize("limit_zero", [False, True], ids=["default", "zero"])
+def test_file_graph_name_map_join_strategy(spark, monkeypatch, limit_zero):
+    """The ``dense_ids`` name→id map joins onto the corpus rows."""
+    from parallel_louvain_method_spark.plans import strategy
+    from parallel_louvain_method_spark.sources import corpus
+
+    if limit_zero:
+        monkeypatch.setattr(strategy, "DRIVER_VERTICES", 0)
+    keyed = _captured(monkeypatch, corpus, "_capped_pair_edges_int", 0)
+    corpus.build_file_graph(
+        corpus.synth_corpus(spark, n_repos=6, files_per_repo=4, commits_per_repo=2)
+    )
+    _assert_gated(_joins(keyed[0], "new_id"), limit_zero)
+
+
+@pytest.mark.parametrize("limit_zero", [False, True], ids=["default", "zero"])
+def test_louvain_coarse_edge_map_join_strategy(
+    spark, golden16_df, monkeypatch, limit_zero
+):
+    """Both vtx→community map joins of the coarse-edge builder."""
+    from parallel_louvain_method_spark.operators import louvain as lv
+    from parallel_louvain_method_spark.plans import strategy
+
+    if limit_zero:
+        monkeypatch.setattr(strategy, "BROADCAST_MAP_ROWS", 0)
+    coarse = _captured(monkeypatch, lv, "_coarse_edges", None)
+    lv.louvain(spark, golden16_df)
+    joins = _joins(coarse[0], "c_src") + _joins(coarse[0], "c_dst")
+    assert len(joins) == 2, joins
+    _assert_gated(joins, limit_zero)
+
+
+def test_small_side_rule(spark):
+    """Broadcast at or under the limit; past it (or unsized) shuffle_hash
+    on a leaf and no hint on a shuffle-backed side."""
+    from parallel_louvain_method_spark.plans.strategy import small_side
+
+    df = spark.range(4)
+
+    def hints(d):
+        return d._jdf.queryExecution().analyzed().toString()
+
+    assert "strategy=broadcast" in hints(small_side(df, 4, 4))
+    assert "shuffle_hash" in hints(small_side(df, 5, 4))
+    assert "shuffle_hash" in hints(small_side(df, None, 4))
+    assert small_side(df, 5, 4, leaf=False) is df

@@ -3,7 +3,7 @@
 VERDICT r4 "What's wrong" #2b: the hub egress is n × Σpayload per sweep —
 fine in principle at the gated tier, but the constant was never measured
 at the GATE BOUNDARY before anyone trusts it on a real cluster.  The gate
-(operators/louvain.py, ``barrier_rows_per_task`` = 12M symmetric rows per
+(plans/strategy.py, ``BARRIER_ROWS_PER_TASK`` = 12M symmetric rows per
 task, capped at 32 tasks) admits graphs up to 384M symmetric edges; at
 the bench graphs' mean degree ~29 that is ~13.2M vertices, and sweep 0
 moves ~n/2 of them — each mover is an (int32, int32) pair, so

@@ -57,7 +57,7 @@ spark.sparkContext.setLogLevel("ERROR")
 edges = spark.read.parquet({path!r})
 t0 = time.monotonic()
 res = louvain(spark, edges, n_vertices={nverts}, assume_dense=True,
-              superstep_engine={engine!r}, input_symmetric={presym})
+              superstep_engine={engine!r})
 wall = time.monotonic() - t0
 print("RESULT " + json.dumps({{
     "cpus": {cpus}, "wall": round(wall, 2),
@@ -100,12 +100,9 @@ def _settle(threshold: float = 2.0, max_wait_s: int = 180) -> None:
         time.sleep(10)
 
 
-def run(
-    cpus: int, path: str, nverts: int, engine: str, presym: bool = False
-) -> dict:
+def run(cpus: int, path: str, nverts: int, engine: str) -> dict:
     code = _RUN.format(
-        repo=REPO, cpus=cpus, path=path, nverts=nverts, engine=engine,
-        presym=presym,
+        repo=REPO, cpus=cpus, path=path, nverts=nverts, engine=engine
     )
     out = subprocess.run(
         ["taskset", "-c", f"0-{cpus - 1}", sys.executable, "-c", code],
@@ -150,11 +147,11 @@ def main() -> None:
     with open(path + ".nverts") as f:
         nverts = int(f.read().strip())
 
-    # SCALING_PRESYM=1: measure the producer-declared working-
-    # representation path (louvain(input_symmetric=True)) — the
-    # checkpointed/graph-store deployment where level 0 skips the
-    # symmetrize+dedup shuffle.  The symmetric weight-summed table is
-    # materialized ONCE here (it is the producer in this scenario).
+    # SCALING_PRESYM=1: run on the working representation a checkpoint or
+    # graph store already holds (louvain's level-0 symmetrize + dedup +
+    # weight-sum pass is idempotent on it and still runs).  The symmetric
+    # weight-summed table is materialized ONCE here (it is the producer in
+    # this scenario).
     presym = os.environ.get("SCALING_PRESYM", "") == "1"
     if presym:
         sym_path = path.removesuffix(".parquet") + "_sym.parquet"
@@ -191,9 +188,9 @@ spark.stop()
     pairs = int(os.environ.get("SCALING_PAIRS", "1"))
     lo_runs, hi_runs = [], []
     for _ in range(pairs):
-        lo_runs.append(run(lo, path, nverts, engine, presym=presym))
+        lo_runs.append(run(lo, path, nverts, engine))
         _settle()
-        hi_runs.append(run(hi, path, nverts, engine, presym=presym))
+        hi_runs.append(run(hi, path, nverts, engine))
         _settle()
 
     def _median_run(runs: list[dict]) -> dict:
@@ -267,7 +264,7 @@ spark.stop()
                 "repos": repos,
                 "files_per_repo": files,
                 "n_vertices": nverts,
-                "input_symmetric": presym,
+                "presym_input": presym,
                 f"local[{lo}]": r_lo,
                 f"local[{hi}]": r_hi,
                 "eff_wall": round(eff, 3),
