@@ -281,7 +281,7 @@ def main() -> None:
         repeat_n=1,
     )
     repo_edges.count()
-    # the builders densify ids to 0..n-1 (sources/corpus.py _densify), so
+    # the builders densify ids to 0..n-1 (sources/corpus.py _build_int_graph), so
     # n_vertices = max id + 1 — pass the producer guarantee to louvain()
     nv_file = G.max_vertex_id(file_edges) + 1
     nv_repo = G.max_vertex_id(repo_edges) + 1

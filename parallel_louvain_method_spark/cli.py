@@ -690,9 +690,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "build-graph":
         from parallel_louvain_method_spark.sources.corpus import (
             build_file_graph,
+            densify,
             read_corpus,
             shared_content_edges,
-            _densify,
         )
 
         corpus = read_corpus(spark, args.corpus)
@@ -700,7 +700,7 @@ def main(argv: list[str] | None = None) -> int:
             str_edges, dropped = shared_content_edges(
                 corpus, node_col=args.node, max_group=args.max_group
             )
-            edges, mapping = _densify(str_edges)
+            edges, mapping = densify(str_edges)
         else:
             edges, mapping, dropped = build_file_graph(corpus, args.max_group)
         edges.write.mode("overwrite").parquet(f"{args.out}/edges")

@@ -17,9 +17,10 @@ all designed so the heavy lifting stays JVM-side:
                    O(n²) baseline — the scale path lives in
                    operators/similarity.py (LSH buckets).
 
-Every bucketed candidate generator (minhash bands, simhash chunks) caps
-bucket size (``max_bucket``) and reports dropped buckets — one degenerate
-bucket is a k²/2 pair bomb at corpus scale.
+Every bucketed candidate generator (minhash bands, simhash chunks) is a
+``graph.capped_pairs`` self-join: it caps bucket size (``max_bucket``) and
+reports dropped buckets — one degenerate bucket is a k²/2 pair bomb at
+corpus scale.
 
 Determinism: permutation constants derive from fixed literals, not RNG
 state; every argmax/keeper choice ties-breaks on the lowest doc_id.
@@ -28,6 +29,8 @@ state; every argmax/keeper choice ties-breaks on the lowest doc_id.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from parallel_louvain_method_spark.operators.graph import capped_pairs
 
 # Mersenne prime 2^31-1: universal-hash modulus small enough that
 # a*h + b stays far below 2^63 (ANSI mode makes long overflow an ERROR,
@@ -46,22 +49,6 @@ def _splitmix64(i: int) -> int:
     z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _U64
     z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _U64
     return z ^ (z >> 31)
-
-
-def _cap_buckets(
-    df: DataFrame, key_cols: list[str], max_bucket: int
-) -> tuple[DataFrame, DataFrame]:
-    """Drop LSH bucket groups larger than ``max_bucket`` — the skew cap
-    (house pattern, sources/corpus.py shared_content_edges): a bucket with k
-    members emits k(k-1)/2 candidate pairs in the self-join, so one
-    degenerate bucket (empty docs, boilerplate, all-zero chunks) is a pair
-    bomb at scale.  Oversized buckets are excluded EXPLICITLY and observably
-    (returned, not silently salted).  Returns ``(kept, dropped)`` where
-    ``dropped`` lists the oversized bucket keys with member counts."""
-    sizes = df.groupBy(*key_cols).agg(F.count("*").alias("n_members"))
-    dropped = sizes.filter(F.col("n_members") > max_bucket)
-    kept = df.join(F.broadcast(dropped.select(*key_cols)), key_cols, "left_anti")
-    return kept, dropped
 
 
 def exact_duplicates(
@@ -207,9 +194,10 @@ def minhash_lsh_pairs(
 
     Band buckets holding more than ``max_bucket`` docs (degenerate content:
     empty docs, boilerplate) are dropped from candidate generation — k docs
-    in one bucket is a k²/2 pair bomb.  ``return_dropped=True`` returns
-    ``(pairs, dropped)`` with the oversized ``(band, bucket, n_members)``
-    rows for observability.
+    in one bucket is a k²/2 pair bomb (``graph.capped_pairs``).
+    ``return_dropped=True`` returns ``(pairs, dropped)`` with the oversized
+    ``(band, bucket, n_members)`` rows for observability.  Runs two eager
+    jobs: the signature checkpoint and the banded-table checkpoint.
     """
     rows_per_band = n_hashes // bands
     # localCheckpoint, not persist: sigs feeds BOTH banding and the verify
@@ -233,20 +221,11 @@ def minhash_lsh_pairs(
                 ]
             )
         ).alias("band", "bucket"),
-    ).localCheckpoint(eager=True)
-    # checkpointed: three plan arms consume it (bucket sizes + both
-    # self-join sides) — without materialization each re-runs the
-    # band-hash explode over the signature table
-    banded, dropped = _cap_buckets(banded, ["band", "bucket"], max_bucket)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "bucket"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
     )
+    joined, dropped = capped_pairs(banded, ["band", "bucket"], "doc_id", max_bucket)
+    cand = joined.select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).distinct()
     verified = (
         cand.join(sigs.withColumnsRenamed({"doc_id": "doc_a", "sig": "sig_a"}), "doc_a")
         .join(sigs.withColumnsRenamed({"doc_id": "doc_b", "sig": "sig_b"}), "doc_b")
@@ -266,7 +245,7 @@ def minhash_lsh_pairs(
         .filter(F.col("est_jaccard") >= threshold)
     )
     if return_dropped:
-        return verified, dropped
+        return verified, dropped.withColumnRenamed("n", "n_members")
     return verified
 
 
@@ -286,7 +265,9 @@ def ngram_jaccard_pairs(
     DuckDB oracle in __spark_entry__ runs the same algebra.
     """
     # localCheckpoint, not persist — released with the result's lifetime
-    # instead of pinned for the session (see minhash_lsh_pairs)
+    # instead of pinned for the session (see minhash_lsh_pairs).  Not a
+    # graph.capped_pairs caller: grams also feeds the per-doc sizes, and
+    # the helper's own checkpoint would materialize it a second time
     grams = docs.select(
         "doc_id", F.explode(_word_ngrams(text_col, n)).alias("g")
     ).localCheckpoint(eager=True)
@@ -378,7 +359,10 @@ def simhash_near_dups(
     >= 4 bits — beyond that the pigeonhole guarantee breaks (chunks would
     need to shrink below 1 bit of discrimination) and every doc collides.
     Chunk buckets larger than ``max_bucket`` are dropped from candidate
-    generation (pair-bomb cap); ``return_dropped=True`` also returns them."""
+    generation (the ``graph.capped_pairs`` pair-bomb cap);
+    ``return_dropped=True`` also returns them as
+    ``(chunk_no, chunk, n_members)``.  Runs two eager jobs: the signature
+    checkpoint and the chunk-table checkpoint."""
     if max_hamming > 15:
         raise ValueError(
             f"max_hamming={max_hamming} > 15: the 16-chunk pigeonhole bound "
@@ -408,28 +392,21 @@ def simhash_near_dups(
                 ]
             )
         ).alias("chunk_no", "chunk"),
-    ).localCheckpoint(eager=True)
-    # same three-consumer shape as the MinHash banding — materialize once
-    chunks, dropped = _cap_buckets(chunks, ["chunk_no", "chunk"], max_bucket)
-    cand = (
-        chunks.alias("x")
-        .join(chunks.alias("y"), ["chunk_no", "chunk"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sig_a"),
-            F.col("y.simhash").alias("sig_b"),
-        )
-        .distinct()
     )
+    joined, dropped = capped_pairs(chunks, ["chunk_no", "chunk"], "doc_id", max_bucket)
+    cand = joined.select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.simhash").alias("sig_a"),
+        F.col("b.simhash").alias("sig_b"),
+    ).distinct()
     pairs = cand.select(
         "doc_a",
         "doc_b",
         F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
     if return_dropped:
-        return pairs, dropped
+        return pairs, dropped.withColumnRenamed("n", "n_members")
     return pairs
 
 

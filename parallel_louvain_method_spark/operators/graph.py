@@ -187,15 +187,65 @@ def renumber_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return out, mapping
 
 
+def capped_pairs(
+    rel: DataFrame, keys: list[str], node: str, max_group: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """The engine's one bucket self-join with its skew cap.
+
+    ``rel`` holds one row per (bucket, member): the ``keys`` columns name
+    the bucket, ``node`` the member.  A bucket with k members emits
+    k·(k−1)/2 pairs, so buckets of more than ``max_group`` members are
+    dropped from pair generation EXPLICITLY and observably (the
+    no-silent-caps rule) instead of being salted into the join; the
+    per-key group size is exactly the join-output bound of PAPERS.md
+    "Efficient Computation of Quantiles over Joins".  ``max_group=None``
+    keeps every bucket.
+
+    Returns ``(pairs, dropped)``:
+
+    - ``pairs``: the self-join of the kept rows on ``keys`` with the two
+      sides aliased ``a`` and ``b`` and ``a.<node> < b.<node>`` — one row
+      per unordered member pair per shared bucket; callers select
+      ``a.<col>`` / ``b.<col>`` for any carried column;
+    - ``dropped``: ``DataFrame[*keys, n]``, the capped buckets and their
+      member counts (empty when ``max_group`` is None).
+
+    Runs one eager job: ``rel`` is materialized once with
+    ``localCheckpoint`` because three plan arms read it (the sizes
+    aggregation and both self-join sides).  Under a cap the self-join is
+    hinted ``shuffle_hash``: no kept group exceeds ``max_group`` rows, so
+    each hash build is bounded and sorting both sides (the planner's
+    default sort-merge) buys nothing.  The hint also keeps adaptive
+    execution from turning a small table's join into a runtime
+    broadcast.  Uncapped, a group is unbounded, so the join is left to
+    the planner (a sort-merge can spill).
+    """
+    rel = rel.localCheckpoint(eager=True)
+    sizes = rel.groupBy(*keys).agg(F.count("*").alias("n"))
+    if max_group is None:
+        dropped = sizes.filter(F.lit(False))
+        a = b = rel
+    else:
+        dropped = sizes.filter(F.col("n") > max_group)
+        a = rel.join(F.broadcast(dropped.select(*keys)), keys, "left_anti")
+        b = a.hint("shuffle_hash")
+    pairs = (
+        a.alias("a")
+        .join(b.alias("b"), keys)
+        .filter(F.col(f"a.{node}") < F.col(f"b.{node}"))
+    )
+    return pairs, dropped
+
+
 def bipartite_projection(
     pairs: DataFrame,
     left_col: str,
     right_col: str,
-    max_right_degree: int = 1000,
+    max_right_degree: int | None = 1000,
 ) -> tuple[DataFrame, DataFrame]:
     """One-mode projection of a bipartite relation onto its left side —
-    the generic form of the corpus edge builders (sources/corpus.py J5/J6
-    specialize this to (repo, sha256) and (file, commit)).
+    the corpus edge builders (sources/corpus.py J5/J6 and the ints-early
+    builders) are this projection over their (node, bucket) relation.
 
     ``pairs``: any DataFrame holding the two columns; duplicates collapse
     first (set semantics — a left node relates to a right key once).
@@ -207,32 +257,22 @@ def bipartite_projection(
     - ``dropped``: ``DataFrame[<right_col>, n_left]`` — right keys whose
       left-side group exceeded ``max_right_degree``.
 
-    A right key shared by k left nodes emits k·(k−1)/2 pairs, so the
-    projection is quadratic in group size — the single most common
-    web-scale blow-up (a boilerplate file shared by 10⁶ repos would emit
-    5·10¹¹ pairs).  The cap excludes those groups EXPLICITLY and
-    observably (the no-silent-caps rule, operators/dedup.py); pass
-    ``max_right_degree=None`` for the exact projection.
+    A right key shared by k left nodes emits k·(k−1)/2 pairs — the single
+    most common web-scale blow-up (a boilerplate file shared by 10⁶ repos
+    would emit 5·10¹¹ pairs); :func:`capped_pairs` excludes those groups
+    observably.  Pass ``max_right_degree=None`` for the exact projection.
+    Runs one eager job (the :func:`capped_pairs` checkpoint).
     """
-    rel = pairs.select(
-        F.col(left_col).alias("node"), F.col(right_col).alias("rk")
-    ).distinct()
-    sizes = rel.groupBy("rk").agg(F.count("*").alias("n_left"))
-    if max_right_degree is None:
-        dropped = sizes.filter(F.lit(False))
-        ok = rel
-    else:
-        dropped = sizes.filter(F.col("n_left") > max_right_degree)
-        ok = rel.join(F.broadcast(dropped.select("rk")), "rk", "left_anti")
-    a = ok.select("rk", F.col("node").alias("src"))
-    b = ok.select("rk", F.col("node").alias("dst"))
+    rel = pairs.select(right_col, left_col).distinct()
+    joined, dropped = capped_pairs(rel, [right_col], left_col, max_right_degree)
     edges = (
-        a.join(b, "rk")
-        .filter(F.col("src") < F.col("dst"))
+        joined.select(
+            F.col(f"a.{left_col}").alias("src"), F.col(f"b.{left_col}").alias("dst")
+        )
         .groupBy("src", "dst")
         .agg(F.count("*").cast("double").alias("weight"))
     )
-    return edges, dropped.withColumnRenamed("rk", right_col)
+    return edges, dropped.withColumnRenamed("n", "n_left")
 
 
 def ego_subgraph(

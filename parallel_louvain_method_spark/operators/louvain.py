@@ -1187,7 +1187,7 @@ def louvain(
     ``n_vertices`` + ``assume_dense=True`` skip the level-0 dense-id check
     (one count-distinct over the full vertex set) when the PRODUCER
     guarantees dense 0..n-1 ids — true for every `build_*_graph` /
-    `_densify` output (sources/corpus.py), whose renumber map's row count
+    `densify` output (sources/corpus.py), whose renumber map's row count
     is exactly ``n_vertices``.  Wrong hints corrupt results; omit them for
     arbitrary input.
 

@@ -23,11 +23,15 @@ embeddings) at the cost of the k-means build.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
+
+from parallel_louvain_method_spark.operators.graph import capped_pairs
 
 
 def _normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -133,7 +137,9 @@ def knn_lsh(
     from the first row.  Buckets holding more than ``max_bucket`` vectors
     (hub regions, zero vectors) are dropped from THAT table's candidate
     generation — k vectors in one bucket is a k²/2 pair bomb; other tables
-    usually still cover those vectors.
+    usually still cover those vectors.  Runs two eager jobs (the
+    normalized table and the ``graph.capped_pairs`` checkpoint of all
+    tables' buckets) plus the ``dim`` probe when ``dim`` is None.
 
     ``planes``: ``"random"`` (default) — seeded random hyperplanes via a
     vectorized pandas UDF; ``"axis"`` — sign-of-coordinate planes, pure
@@ -148,31 +154,35 @@ def knn_lsh(
     # and the two score joins, and must release with the result instead of
     # living for the session (see operators/dedup.py minhash_lsh_pairs)
     base = _normalized(embeddings, id_col, vec_col).localCheckpoint(eager=True)
-    cands = None
+    tables = []
     for t in range(n_tables):
         if planes == "axis":
             # sign(raw) == sign(normalized) for any norm > 0, so bucketing
             # on the raw column is equivalent and skips the normalize
-            bucketed = raw.select(
+            bucket = raw.select(
                 "id", _axis_bucket("raw_v", dim, n_planes, t).alias("bucket")
             )
         else:
             sig = _signature_udf(dim, n_planes, seed + t)
-            bucketed = base.select("id", sig("v").alias("bucket"))
-        # skew cap (house pattern, sources/corpus.py): drop oversized buckets
-        sizes = bucketed.groupBy("bucket").agg(F.count("*").alias("n_members"))
-        oversized = sizes.filter(F.col("n_members") > max_bucket)
-        bucketed = bucketed.join(
-            F.broadcast(oversized.select("bucket")), "bucket", "left_anti"
+            bucket = base.select("id", sig("v").alias("bucket"))
+        tables.append(bucket.select(F.lit(t).alias("t"), "id", "bucket"))
+    # every table's buckets in one graph.capped_pairs self-join keyed on
+    # (table, bucket): the skew cap drops oversized buckets per table
+    joined, _ = capped_pairs(
+        functools.reduce(DataFrame.union, tables), ["t", "bucket"], "id", max_bucket
+    )
+    cands = joined.select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.col("a.id").alias("query_id"), F.col("b.id").alias("neighbor_id")
+                ),
+                F.struct(
+                    F.col("b.id").alias("query_id"), F.col("a.id").alias("neighbor_id")
+                ),
+            )
         )
-        pair = (
-            bucketed.alias("a")
-            .join(bucketed.alias("b"), "bucket")
-            .filter(F.col("a.id") != F.col("b.id"))
-            .select(F.col("a.id").alias("query_id"), F.col("b.id").alias("neighbor_id"))
-        )
-        cands = pair if cands is None else cands.union(pair)
-    cands = cands.distinct()
+    ).distinct()
     scored = (
         cands.join(base.withColumnsRenamed({"id": "query_id", "v": "qv"}), "query_id")
         .join(base.withColumnsRenamed({"id": "neighbor_id", "v": "nv"}), "neighbor_id")

@@ -10,7 +10,7 @@ are the batch halves of that question:
   between users co-occurring in the same ``(key, time-bucket)``.  The
   bucket self-join is quadratic in group size, so the hot-group defense
   is the engine's no-silent-caps rule (``max_group`` drops oversized
-  groups OBSERVABLY, same contract as ``bipartite_projection``).
+  groups OBSERVABLY — the self-join is ``graph.capped_pairs``).
 - :func:`temporal_reachability` computes earliest-arrival times from a
   seed set under time-respecting paths: an edge ``(u, v, t)`` is usable
   only if ``t >= arrival(u)``, and then ``arrival(v) <= t``.  This is
@@ -39,6 +39,7 @@ import itertools
 
 from pyspark.sql import DataFrame, functions as F
 
+from parallel_louvain_method_spark.operators.graph import capped_pairs
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 
@@ -61,6 +62,8 @@ def contact_edges(
     - ``dropped``: ``DataFrame[key, t, n_users]`` — groups whose user
       count exceeded ``max_group`` (k users emit k·(k−1) directed rows,
       the quadratic blow-up; ``max_group=None`` for exact).
+
+    Runs one eager job (the ``graph.capped_pairs`` checkpoint).
     """
     occ = events.select(
         F.col(user_col).alias("u"),
@@ -69,21 +72,17 @@ def contact_edges(
         .cast("long")
         .alias("t"),
     ).distinct()
-    sizes = occ.groupBy("key", "t").agg(F.count("*").alias("n_users"))
-    if max_group is not None:
-        dropped = sizes.filter(F.col("n_users") > max_group)
-        occ = occ.join(dropped.select("key", "t"), ["key", "t"], "left_anti")
-    else:
-        dropped = sizes.filter(F.lit(False))
-    a = occ.select("key", "t", F.col("u").alias("src"))
-    b = occ.select("key", "t", F.col("u").alias("dst"))
-    contacts = (
-        a.join(b, ["key", "t"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", "t")
-        .distinct()
-    )
-    return contacts, dropped
+    joined, dropped = capped_pairs(occ, ["key", "t"], "u", max_group)
+    # both directions from the one join
+    contacts = joined.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("a.u").alias("src"), F.col("b.u").alias("dst"), "t"),
+                F.struct(F.col("b.u").alias("src"), F.col("a.u").alias("dst"), "t"),
+            )
+        )
+    ).distinct()
+    return contacts, dropped.withColumnRenamed("n", "n_users")
 
 
 def _reach_round(state: DataFrame, contacts: DataFrame) -> DataFrame:

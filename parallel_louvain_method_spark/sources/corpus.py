@@ -7,17 +7,19 @@ Input table shape (Iceberg at 10^12-file scale; parquet in tests)::
 Operators:
 - ``with_sha256``      — per-row ``sha2(content, 256)`` (built-in, vectorized;
                          the per-row invariant the driver checks);
-- ``shared_content_edges`` — repo pairs sharing content hashes (self-join on
-                         hash) with an explicit frequency cap: top hashes
-                         (empty file, license boilerplate) are O(k²) pair
-                         bombs, so groups larger than ``max_group`` are
-                         dropped and counted, not exploded;
-- ``cocommit_edges``   — file pairs co-occurring in a commit (self-join on
-                         the (repo, commit) group key) with the same cap;
+- ``shared_content_edges`` — repo pairs sharing content hashes;
+- ``cocommit_edges``   — file pairs co-occurring in a commit (the
+                         (repo, commit) group key);
 - ``build_repo_graph`` / ``build_file_graph`` — the ints-early production
                          builders: node names dense-ranked once, then
                          dedup/cap/self-join/aggregation run entirely on
                          longs (strings cross the shuffle exactly once).
+
+Every builder is ``operators/graph.py`` ``bipartite_projection`` over its
+(node, bucket) relation, so the skew cap and the bucket self-join live in
+``graph.capped_pairs``: top buckets (empty file, license boilerplate,
+mega-commits) are O(k²) pair bombs, so groups larger than ``max_group``
+are dropped and counted, not exploded.
 
 Column pruning is load-bearing at 100 TB: every builder projects
 ``content`` away immediately after hashing, so the scan schema the optimizer
@@ -32,9 +34,13 @@ no RNG state, no external data.  Repos are grouped into content pools of 10
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from parallel_louvain_method_spark.operators.graph import dense_ids
+from parallel_louvain_method_spark.operators.graph import (
+    bipartite_projection,
+    capped_pairs,
+    dense_ids,
+)
 from parallel_louvain_method_spark.plans import strategy
 from parallel_louvain_method_spark.plans.strategy import small_side
 
@@ -129,61 +135,46 @@ def shared_content_edges(
     max_group: int = 1000,
     content_col: str = "content",
 ) -> tuple[DataFrame, DataFrame]:
-    """J5: edges between ``node_col`` values sharing ≥1 content sha256;
-    ``weight`` = number of shared hashes.
+    """J5: edges ``[node_a, node_b, weight]`` between ``node_col`` values
+    sharing ≥1 content sha256; ``weight`` = number of shared hashes.
 
-    Returns ``(edges, dropped)`` where ``dropped`` lists hashes whose
-    distinct-node group exceeded ``max_group`` (the skew cap — a hash shared
-    by k nodes emits k(k-1)/2 pairs, so boilerplate hashes are excluded
-    EXPLICITLY and observably rather than salted into the join).
+    Returns ``(edges, dropped)`` where ``dropped[h, n_nodes]`` lists hashes
+    whose distinct-node group exceeded ``max_group`` (the
+    ``graph.capped_pairs`` skew cap).  Runs one eager job.
     """
-    h = (
-        corpus.select(
-            F.col(node_col).alias("node"),
-            F.sha2(F.col(content_col), 256).alias("h"),
-        )
-        .distinct()
+    h = corpus.select(
+        F.col(node_col).alias("node"),
+        F.sha2(F.col(content_col), 256).alias("h"),
     )
-    sizes = h.groupBy("h").agg(F.count("*").alias("n_nodes"))
-    dropped = sizes.filter(F.col("n_nodes") > max_group)
-    ok = h.join(F.broadcast(dropped.select("h")), "h", "left_anti")
-    a = ok.select("h", F.col("node").alias("node_a"))
-    b = ok.select("h", F.col("node").alias("node_b"))
-    edges = (
-        a.join(b, "h")
-        .filter(F.col("node_a") < F.col("node_b"))
-        .groupBy("node_a", "node_b")
-        .agg(F.count("*").cast("double").alias("weight"))
-    )
-    return edges, dropped
+    return _named_pairs(bipartite_projection(h, "node", "h", max_group), "n_nodes")
 
 
 def cocommit_edges(
     corpus: DataFrame,
     max_group: int = 1000,
 ) -> tuple[DataFrame, DataFrame]:
-    """J6: edges between files (repo-qualified paths) co-occurring in a
-    commit; ``weight`` = number of commits where they co-occur.
-
-    Same explicit skew cap as :func:`shared_content_edges` — a mega-commit
-    touching k files is a k²/2 pair bomb.
+    """J6: edges ``[node_a, node_b, weight]`` between files (repo-qualified
+    paths) co-occurring in a commit; ``weight`` = number of commits where
+    they co-occur.  ``dropped[ck, n_files]`` lists the commits over the
+    cap — a mega-commit touching k files is a k²/2 pair bomb.  Runs one
+    eager job.
     """
     fc = corpus.select(
         F.concat(F.col("repo"), F.lit("::"), F.col("path")).alias("file"),
         F.concat(F.col("repo"), F.lit("@"), F.col("commit")).alias("ck"),
-    ).distinct()
-    sizes = fc.groupBy("ck").agg(F.count("*").alias("n_files"))
-    dropped = sizes.filter(F.col("n_files") > max_group)
-    ok = fc.join(F.broadcast(dropped.select("ck")), "ck", "left_anti")
-    a = ok.select("ck", F.col("file").alias("node_a"))
-    b = ok.select("ck", F.col("file").alias("node_b"))
-    edges = (
-        a.join(b, "ck")
-        .filter(F.col("node_a") < F.col("node_b"))
-        .groupBy("node_a", "node_b")
-        .agg(F.count("*").cast("double").alias("weight"))
     )
-    return edges, dropped
+    return _named_pairs(bipartite_projection(fc, "file", "ck", max_group), "n_files")
+
+
+def _named_pairs(
+    projected: tuple[DataFrame, DataFrame], n_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The string builders' column names on a ``bipartite_projection``."""
+    edges, dropped = projected
+    return (
+        edges.withColumnsRenamed({"src": "node_a", "dst": "node_b"}),
+        dropped.withColumnRenamed("n_left", n_col),
+    )
 
 
 def densify(string_edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -216,38 +207,25 @@ def densify(string_edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return edges, mapping
 
 
-def _capped_pair_edges_int(
-    keyed: DataFrame, max_group: int
-) -> tuple[DataFrame, DataFrame]:
-    """``(bucket: long, id: long)`` distinct rows -> dense-id edge table
-    ``(src, dst, weight)`` with the explicit k²/2 skew cap.
-
-    The all-long twin of the string pair builders: every shuffle column
-    (dedup, cap count, self-join, pair aggregation) is 8 bytes, not a
-    repo/path/commit string — at corpus scale the strings are the shuffle
-    bill, and they only need to cross the wire ONCE (the name->dense-id
-    join in the callers below).
-    """
-    # three consumers (cap counts + both self-join sides) would otherwise
-    # re-run the upstream name-join + distinct three times — materialize
-    # the (tiny, all-long) deduped table once
-    keyed = keyed.localCheckpoint(eager=True)
-    sizes = keyed.groupBy("bucket").agg(F.count("*").alias("n"))
-    dropped = sizes.filter(F.col("n") > max_group)
-    ok = keyed.join(F.broadcast(dropped.select("bucket")), "bucket", "left_anti")
-    a = ok.select("bucket", F.col("id").alias("src"))
-    b = ok.select("bucket", F.col("id").alias("dst"))
-    edges = (
-        # shuffle_hash, not the planner's default sort-merge: the
-        # checkpointed keyed table is a stats-free leaf, and sorting both
-        # 8-byte-keyed sides is pure overhead for a self-join whose group
-        # sizes the cap already bounds at max_group
-        a.join(b.hint("shuffle_hash"), "bucket")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").cast("double").alias("weight"))
+def _build_int_graph(
+    corpus: DataFrame, name: Column, bucket: Column, max_group: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The ints-early builder behind :func:`build_repo_graph` and
+    :func:`build_file_graph`: node names are dense-ranked FIRST (one
+    string shuffle), then dedup / cap / self-join / pair aggregation all
+    run on longs — every shuffle column is 8 bytes, not a repo/path/commit
+    string.  Runs the ``dense_ids`` jobs and one eager checkpoint."""
+    names = corpus.select(name.alias("name")).distinct()
+    mapping, n = dense_ids(names, "name")
+    keyed = (
+        corpus.select(name.alias("name"), bucket.alias("bucket"))
+        # at broadcast size the corpus strings never cross a shuffle: the
+        # one string exchange the ints-early design budgeted for is gone
+        .join(small_side(mapping, n, strategy.DRIVER_VERTICES), "name")
+        .select("bucket", F.col("new_id").alias("id"))
     )
-    return edges, dropped
+    edges, dropped = bipartite_projection(keyed, "id", "bucket", max_group)
+    return edges, mapping, dropped.withColumnRenamed("n_left", "n")
 
 
 def build_repo_graph(
@@ -255,11 +233,9 @@ def build_repo_graph(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared-content repo graph: ``(edges[src,dst,weight], id_map, dropped)``.
 
-    Ints-early pipeline: repo names are dense-ranked FIRST (one string
-    shuffle), then dedup / cap / self-join / pair aggregation all run on
-    longs.  Output is identical to densify(shared_content_edges(...)) —
-    dense ids are monotone in sorted names, so ``src < dst`` selects the
-    same canonical pair direction — but the content hashes and node names
+    Output is identical to densify(shared_content_edges(...)) — dense ids
+    are monotone in sorted names, so ``src < dst`` selects the same
+    canonical pair direction — but the content hashes and node names
     never re-cross the wire.  The bucket key is ``xxhash64(content)``
     rather than the sha256 string: equality differs only on an xxhash64
     collision (P ≈ k²/2⁶⁵ — ~0.03 even at 10⁹ distinct contents; a
@@ -273,21 +249,9 @@ def build_repo_graph(
     with no isolated nodes the two pipelines are row-identical; pinned by
     test_int_builders_match_string_pipeline.)
     """
-    names = corpus.select(F.col("repo").alias("name")).distinct()
-    mapping, n = dense_ids(names, "name")
-    keyed = (
-        corpus.select(
-            F.col("repo").alias("name"),
-            F.xxhash64("content").alias("bucket"),
-        )
-        # at broadcast size the corpus strings never cross a shuffle: the
-        # one string exchange the ints-early design budgeted for is gone
-        .join(small_side(mapping, n, strategy.DRIVER_VERTICES), "name")
-        .select("bucket", F.col("new_id").alias("id"))
-        .distinct()
+    return _build_int_graph(
+        corpus, F.col("repo"), F.xxhash64("content"), max_group
     )
-    edges, dropped = _capped_pair_edges_int(keyed, max_group)
-    return edges, mapping, dropped
 
 
 def build_file_graph(
@@ -299,20 +263,12 @@ def build_file_graph(
     (``repo::path``) cross the shuffle once into the dense-id map, and the
     co-commit bucket is ``xxhash64(repo, commit)`` (collision note above).
     """
-    name = F.concat(F.col("repo"), F.lit("::"), F.col("path"))
-    names = corpus.select(name.alias("name")).distinct()
-    mapping, n = dense_ids(names, "name")
-    keyed = (
-        corpus.select(
-            name.alias("name"),
-            F.xxhash64("repo", "commit").alias("bucket"),
-        )
-        .join(small_side(mapping, n, strategy.DRIVER_VERTICES), "name")
-        .select("bucket", F.col("new_id").alias("id"))
-        .distinct()
+    return _build_int_graph(
+        corpus,
+        F.concat(F.col("repo"), F.lit("::"), F.col("path")),
+        F.xxhash64("repo", "commit"),
+        max_group,
     )
-    edges, dropped = _capped_pair_edges_int(keyed, max_group)
-    return edges, mapping, dropped
 
 
 def shared_content_postings(
@@ -328,23 +284,6 @@ def shared_content_postings(
         F.col(node_col).alias("node"),
         F.sha2(F.col(content_col), 256).alias("h"),
     ).distinct()
-
-
-def _pair_contrib(posts: DataFrame, max_group: int, sign: int) -> DataFrame:
-    """Signed pair counts of a postings snapshot under the skew cap —
-    hashes whose group exceeds ``max_group`` contribute nothing (the same
-    cap rule as :func:`shared_content_edges`)."""
-    sizes = posts.groupBy("h").agg(F.count("*").alias("n"))
-    capped = sizes.filter(F.col("n") > max_group).select("h")
-    ok = posts.join(F.broadcast(capped), "h", "left_anti")
-    a = ok.select("h", F.col("node").alias("node_a"))
-    b = ok.select("h", F.col("node").alias("node_b"))
-    return (
-        a.join(b, "h")
-        .filter(F.col("node_a") < F.col("node_b"))
-        .groupBy("node_a", "node_b")
-        .agg((F.count("*") * sign).cast("double").alias("dw"))
-    )
 
 
 def incremental_pair_edges(
@@ -373,8 +312,10 @@ def incremental_pair_edges(
     regardless of corpus size — the daily-ingest path for a 10^12-file
     corpus where full rebuilds are off the table.  The signed-contribution
     trick (new snapshot pairs at +1, old snapshot pairs at -1, summed into
-    a weight delta) keeps cap-crossing retractions in the same two
-    aggregations as additions instead of a special case.
+    a weight delta) keeps cap-crossing retractions in the same
+    aggregation as additions instead of a special case.  Runs two eager
+    jobs: the new postings, then the ``graph.capped_pairs`` checkpoint of
+    both touched snapshots.
     """
     new_post = (
         new_postings.select("node", "h")
@@ -384,18 +325,19 @@ def incremental_pair_edges(
         .localCheckpoint(eager=True)  # reused 3x: touched, union, state-out
     )
     touched = new_post.select("h").distinct()
-    old_t = (
+    # both snapshots of the touched buckets in one table, each row tagged
+    # with its contribution's sign: the old rows once before the batch
+    # (-1) and once after (+1), the new rows after (+1); keyed on
+    # (sign, h), the cap counts each snapshot on its own
+    snaps = (
         old_postings.join(touched, "h", "left_semi")
-        .select("node", "h")
-        .localCheckpoint(eager=True)
+        .select("node", "h", F.explode(F.array(F.lit(-1), F.lit(1))).alias("sign"))
+        .union(new_post.select("node", "h", F.lit(1).alias("sign")))
     )
-    all_t = old_t.union(new_post)
-    delta = (
-        _pair_contrib(all_t, max_group, 1)
-        .union(_pair_contrib(old_t, max_group, -1))
-        .groupBy("node_a", "node_b")
-        .agg(F.sum("dw").alias("dw"))
-    )
+    joined, dropped = capped_pairs(snaps, ["sign", "h"], "node", max_group)
+    delta = joined.groupBy(
+        F.col("a.node").alias("node_a"), F.col("b.node").alias("node_b")
+    ).agg(F.sum("sign").cast("double").alias("dw"))
     edges = (
         old_edges.join(delta, ["node_a", "node_b"], "full")
         .select(
@@ -408,10 +350,8 @@ def incremental_pair_edges(
         )
         .filter(F.col("weight") > 0)
     )
-    dropped = (
-        all_t.groupBy("h")
-        .agg(F.count("*").alias("n_nodes"))
-        .filter(F.col("n_nodes") > max_group)
+    dropped = dropped.filter(F.col("sign") == 1).select(
+        "h", F.col("n").alias("n_nodes")
     )
     return edges, old_postings.union(new_post), dropped
 
@@ -445,10 +385,6 @@ def cocommit_postings(corpus: DataFrame) -> DataFrame:
         F.concat(F.col("repo"), F.lit("::"), F.col("path")).alias("node"),
         F.concat(F.col("repo"), F.lit("@"), F.col("commit")).alias("h"),
     ).distinct()
-
-
-# retained alias for older call sites; densify is the public name
-_densify = densify
 
 
 def association_edge_weights(

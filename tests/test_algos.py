@@ -2705,6 +2705,73 @@ def test_bipartite_projection_known(spark):
     assert len(drows) == 1 and drows[0]["k"] == "x" and drows[0]["n_left"] == 3
 
 
+# (band, bucket, doc_id, sig): band 0 has a 3-member and a 4-member
+# bucket; band 1 reuses bucket value 10 for other docs, so only the
+# two-column key keeps the bands apart
+_CAPPED_ROWS = [
+    (0, 10, 1, 100), (0, 10, 2, 200), (0, 10, 3, 300),
+    (0, 11, 4, 400), (0, 11, 5, 500), (0, 11, 6, 600), (0, 11, 7, 700),
+    (1, 10, 1, 100), (1, 10, 4, 400),
+    (1, 12, 9, 900),
+]
+
+
+def _capped_pairs_oracle(pdf, keys, max_group):
+    """pandas twin of ``graph.capped_pairs``: ``(pair rows, dropped rows)``."""
+    sizes = pdf.groupby(keys).size().rename("n").reset_index()
+    over = sizes[sizes["n"] > max_group] if max_group is not None else sizes[:0]
+    kept = pdf.merge(over[keys], on=keys, how="left", indicator=True)
+    kept = kept[kept["_merge"] == "left_only"].drop(columns="_merge")
+    pairs = kept.merge(kept, on=keys, suffixes=("_a", "_b"))
+    pairs = pairs[pairs["doc_id_a"] < pairs["doc_id_b"]]
+    cols = keys + ["doc_id_a", "doc_id_b", "sig_a", "sig_b"]
+    return (
+        sorted(tuple(int(x) for x in r) for r in pairs[cols].to_numpy()),
+        sorted(tuple(int(x) for x in r) for r in over[keys + ["n"]].to_numpy()),
+    )
+
+
+@pytest.mark.parametrize(
+    "keys,max_group,n_rows,want_dropped",
+    [
+        # the 3-member bucket is kept at exactly max_group; the 4-member
+        # one is dropped with its exact size
+        (["band", "bucket"], 3, None, [(0, 11, 4)]),
+        (["band", "bucket"], None, None, []),
+        # one key column merges band 0's and band 1's bucket 10 (5 rows,
+        # doc 1 twice) while bucket 11 sits at exactly max_group
+        (["bucket"], 4, None, [(10, 5)]),
+        (["band", "bucket"], 3, 0, []),
+    ],
+    ids=["boundary", "uncapped", "one_key", "empty"],
+)
+def test_capped_pairs_matches_pandas(spark, keys, max_group, n_rows, want_dropped):
+    import pandas as pd
+
+    from parallel_louvain_method_spark.operators.graph import capped_pairs
+
+    rows = _CAPPED_ROWS[:n_rows]
+    schema = "band long, bucket long, doc_id long, sig long"
+    rel = spark.createDataFrame(rows, schema)
+    pairs, dropped = capped_pairs(rel, keys, "doc_id", max_group)
+    assert dropped.columns == keys + ["n"]
+    got = sorted(
+        tuple(r)
+        for r in pairs.select(
+            *keys, "a.doc_id", "b.doc_id", "a.sig", "b.sig"
+        ).collect()
+    )
+    got_dropped = sorted(tuple(r) for r in dropped.collect())
+    assert got_dropped == want_dropped
+    assert all(r[len(keys)] < r[len(keys) + 1] for r in got)
+    # the carried column rides along with its own side's node
+    assert all(r[-2] == 100 * r[len(keys)] and r[-1] == 100 * r[len(keys) + 1] for r in got)
+    pdf = pd.DataFrame(rows, columns=["band", "bucket", "doc_id", "sig"])
+    assert (got, got_dropped) == _capped_pairs_oracle(pdf, keys, max_group)
+    if n_rows == 0:
+        assert got == []
+
+
 def test_ego_subgraph_hops(spark):
     from parallel_louvain_method_spark.operators.graph import ego_subgraph
 

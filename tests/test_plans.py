@@ -37,13 +37,44 @@ def test_column_pruning_reaches_scan(spark):
     ), schemas
 
 
-def test_content_pruned_after_hashing(spark):
+def _plan_nodes(df):
+    """Every node of ``df``'s physical plan, reading AQE's initial plan
+    (the strategy the hints chose) and not entering cached sub-plans."""
+    todo, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        p = todo.pop()
+        if p.nodeName() == "AdaptiveSparkPlan":
+            todo.append(p.inputPlan())
+            continue
+        nodes.append(p)
+        ch = p.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+    return nodes
+
+
+def _names(seq) -> list[str]:
+    return [seq.apply(i).name() for i in range(seq.size())]
+
+
+def _exchanged_columns(df) -> set[str]:
+    """Names of the columns any Exchange of ``df``'s plan ships."""
+    return {
+        c
+        for p in _plan_nodes(df)
+        if "Exchange" in p.nodeName()
+        for c in _names(p.output())
+    }
+
+
+def test_content_pruned_after_hashing(spark, monkeypatch):
     """The corpus rule: nothing downstream of sha2() may rescan content."""
+    from parallel_louvain_method_spark.operators import graph
     from parallel_louvain_method_spark.sources.corpus import shared_content_edges
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         F.col("source"), F.col("text").alias("content")
     )
+    rels = _captured(monkeypatch, graph, "capped_pairs", 0)
     # edges derive from the hash only; 'text' must not survive into the agg
     edges, _ = shared_content_edges(docs, node_col="source")
     # scan reads (source, text) but the post-hash plan projects text away
@@ -51,6 +82,11 @@ def test_content_pruned_after_hashing(spark):
     from parallel_louvain_method_spark.plans.explain import plan_text
     plan = plan_text(edges)
     assert "content#" not in plan.split("Exchange")[-1]
+    # edges sit on the capped_pairs checkpoint, so the scan and the hash
+    # are in the plan of the table it materializes: no shuffle there may
+    # ship the file bodies
+    assert len(rels) == 1 and "sha2" in plan_text(rels[0])
+    assert not {"content", "text"} & _exchanged_columns(rels[0])
 
 
 def test_small_dim_join_broadcasts(spark):
@@ -165,9 +201,11 @@ def test_new_graph_ops_stay_jvm_side(spark, golden16_df):
     assert "BroadcastNestedLoopJoin" in plan_text(pq)
 
 
-def test_incremental_edges_plan_quality(spark):
+def test_incremental_edges_plan_quality(spark, monkeypatch):
     """The incremental merge must never drag `content` past the hash and
     never fall into row-Python: postings carry (node, sha256) only."""
+    from parallel_louvain_method_spark.operators import graph
+    from parallel_louvain_method_spark.sources import corpus as corpus_mod
     from parallel_louvain_method_spark.sources.corpus import (
         incremental_shared_content_edges,
         shared_content_edges,
@@ -179,8 +217,11 @@ def test_incremental_edges_plan_quality(spark):
     corpus = synth_corpus(spark, n_repos=20)
     old = corpus.filter(F.pmod(F.xxhash64("repo", "commit"), F.lit(3)) != 0)
     batch = corpus.filter(F.pmod(F.xxhash64("repo", "commit"), F.lit(3)) == 0)
+    postings = shared_content_postings(old)
+    built = _captured(monkeypatch, graph, "capped_pairs", 0)
+    merged = _captured(monkeypatch, corpus_mod, "capped_pairs", 0)
     edges, _, _ = incremental_shared_content_edges(
-        shared_content_postings(old),
+        postings,
         shared_content_edges(old)[0],
         batch,
     )
@@ -190,6 +231,15 @@ def test_incremental_edges_plan_quality(spark):
     # the sha2 projection (localCheckpointed inputs hide upstream scans;
     # assert on the live plan's attributes)
     assert "sha2" not in text.split("Exchange")[-1]
+    # the scans live in the tables capped_pairs materializes (the full
+    # build's postings, then both touched snapshots in one table) and in
+    # the postings state: the hash runs there and no shuffle ships the
+    # file bodies
+    assert len(built) == 1 and "sha2" in plan_text(built[0])
+    assert len(merged) == 1
+    for df in built + merged + [postings]:
+        assert "BatchEvalPython" not in plan_text(df)
+        assert "content" not in _exchanged_columns(df)
 
 
 def test_bloom_semi_join_plan_quality(spark):
@@ -222,22 +272,13 @@ def test_bloom_semi_join_plan_quality(spark):
 
 def _joins(df, col: str) -> list[tuple[str, str]]:
     """``(operator, build side)`` of every join in ``df``'s physical plan
-    whose right input carries column ``col``.  Reads AQE's initial plan
-    (the strategy the hints chose) and does not enter cached sub-plans."""
-    todo, found = [df._jdf.queryExecution().executedPlan()], []
-    while todo:
-        p = todo.pop()
-        if p.nodeName() == "AdaptiveSparkPlan":
-            todo.append(p.inputPlan())
-            continue
-        if p.nodeName().endswith("Join"):
-            out = p.right().output()
-            if col in {out.apply(i).name() for i in range(out.size())}:
-                name = p.nodeName()
-                side = p.buildSide().toString() if "Hash" in name else ""
-                found.append((name, side))
-        ch = p.children()
-        todo.extend(ch.apply(i) for i in range(ch.size()))
+    whose right input carries column ``col``."""
+    found = []
+    for p in _plan_nodes(df):
+        name = p.nodeName()
+        if name.endswith("Join") and col in _names(p.right().output()):
+            side = p.buildSide().toString() if "Hash" in name else ""
+            found.append((name, side))
     return found
 
 
@@ -299,12 +340,13 @@ def test_label_propagation_label_join_strategy(
 @pytest.mark.parametrize("limit_zero", [False, True], ids=["default", "zero"])
 def test_file_graph_name_map_join_strategy(spark, monkeypatch, limit_zero):
     """The ``dense_ids`` name→id map joins onto the corpus rows."""
+    from parallel_louvain_method_spark.operators import graph
     from parallel_louvain_method_spark.plans import strategy
     from parallel_louvain_method_spark.sources import corpus
 
     if limit_zero:
         monkeypatch.setattr(strategy, "DRIVER_VERTICES", 0)
-    keyed = _captured(monkeypatch, corpus, "_capped_pair_edges_int", 0)
+    keyed = _captured(monkeypatch, graph, "capped_pairs", 0)
     corpus.build_file_graph(
         corpus.synth_corpus(spark, n_repos=6, files_per_repo=4, commits_per_repo=2)
     )
@@ -342,3 +384,118 @@ def test_small_side_rule(spark):
     assert "shuffle_hash" in hints(small_side(df, 5, 4))
     assert "shuffle_hash" in hints(small_side(df, None, 4))
     assert small_side(df, 5, 4, leaf=False) is df
+
+
+# ---- the bucket self-join (operators/graph.py capped_pairs) ---------------
+
+def _self_join_strategies(df, keys: list[str]) -> list[str]:
+    """Operator of every inner equi-join in ``df``'s plan keyed on exactly
+    ``keys`` on both sides — the bucket self-join of a pair builder."""
+    def key_names(seq):
+        return [seq.apply(i).toString().split("#")[0] for i in range(seq.size())]
+
+    return [
+        p.nodeName()
+        for p in _plan_nodes(df)
+        if p.nodeName() in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+        and p.joinType().toString() == "Inner"
+        and key_names(p.leftKeys()) == keys == key_names(p.rightKeys())
+    ]
+
+
+def _file_graph(spark):
+    from parallel_louvain_method_spark.sources.corpus import (
+        build_file_graph,
+        synth_corpus,
+    )
+
+    corpus = synth_corpus(spark, n_repos=6, files_per_repo=4, commits_per_repo=2)
+    return build_file_graph(corpus)[0]
+
+
+def _shared_content(spark):
+    from parallel_louvain_method_spark.sources.corpus import (
+        shared_content_edges,
+        synth_corpus,
+    )
+
+    return shared_content_edges(synth_corpus(spark, n_repos=6))[0]
+
+
+def _bipartite(spark):
+    from parallel_louvain_method_spark.operators.graph import bipartite_projection
+
+    rel = spark.createDataFrame(
+        [(1, "x"), (2, "x"), (3, "x"), (1, "y"), (2, "y")], "node long, k string"
+    )
+    return bipartite_projection(rel, "node", "k")[0]
+
+
+def _minhash(spark):
+    from parallel_louvain_method_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over lazy dog {i % 3}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    return minhash_lsh_pairs(docs, threshold=0.5)
+
+
+def _knn_axis(spark):
+    from parallel_louvain_method_spark.operators.similarity import knn_lsh
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3) - 1.0, 1.0, float(i % 2) - 0.5]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    return knn_lsh(emb, k=2, n_planes=2, n_tables=2, dim=3, planes="axis")
+
+
+def _contacts(spark):
+    from parallel_louvain_method_spark.operators.temporal import contact_edges
+
+    ev = spark.createDataFrame(
+        [(u, "view", "2024-01-01 00:00:00") for u in range(4)],
+        "user_id long, event_type string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    return contact_edges(ev)[0]
+
+
+@pytest.mark.parametrize(
+    "build,keys",
+    [
+        (_file_graph, ["bucket"]),
+        (_shared_content, ["h"]),
+        (_bipartite, ["k"]),
+        (_minhash, ["band", "bucket"]),
+        (_knn_axis, ["t", "bucket"]),
+        (_contacts, ["key", "t"]),
+    ],
+    ids=[
+        "build_file_graph",
+        "shared_content_edges",
+        "bipartite_projection",
+        "minhash_lsh_pairs",
+        "knn_lsh_axis",
+        "contact_edges",
+    ],
+)
+def test_bucket_self_join_is_shuffle_hash(spark, build, keys):
+    """Every pair builder's bucket self-join is the ``capped_pairs`` one:
+    a ShuffledHashJoin, never a SortMergeJoin."""
+    joins = _self_join_strategies(build(spark), keys)
+    assert joins == ["ShuffledHashJoin"], joins
+
+
+def test_uncapped_self_join_left_to_planner(spark):
+    """Without a cap no group is bounded, so ``capped_pairs`` forces no
+    in-memory hash build: the join carries no ``shuffle_hash`` hint."""
+    from parallel_louvain_method_spark.operators.graph import bipartite_projection
+
+    rel = spark.createDataFrame(
+        [(1, "x"), (2, "x"), (3, "x"), (1, "y"), (2, "y")], "node long, k string"
+    )
+    edges = bipartite_projection(rel, "node", "k", max_right_degree=None)[0]
+    joins = _self_join_strategies(edges, ["k"])
+    assert len(joins) == 1 and "ShuffledHashJoin" not in joins, joins
+    assert "shuffle_hash" not in edges._jdf.queryExecution().optimizedPlan().toString()
