@@ -5,10 +5,11 @@ protocol (``MPI_Allgather``, src/distcommunity.cpp:212-385); this module
 is that protocol for the barrier operators (Louvain levels, PageRank).  An
 operator packs its edge table once (:func:`pack`) and hands :func:`run` a
 *step*, its per-task vertex program.  The runtime owns the rest: the
-barrier probe and failure classification, the pack/unpack, the star
-handshake (functions/exchange.py) bootstrapped over the coordinator
-``allGather``, per-round ``exchange`` with an adaptive timeout, teardown,
-the coordinator-only rerun after a transport loss, and phase timings.
+barrier probe and failure classification, the pack/unpack, the star hub
+(functions/exchange.py) that :func:`run` hosts in the driver for the
+stage's lifetime, per-round ``exchange`` with an adaptive timeout,
+teardown, the coordinator-only rerun after a transport loss, and phase
+timings.
 
 Every task applies the same gathered frames to its own state, so all
 tasks hold identical state and take identical exit decisions.
@@ -27,7 +28,11 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from parallel_louvain_method_spark.functions.exchange import StarAllGather
+from parallel_louvain_method_spark.functions.exchange import (
+    AllGatherTransportError,
+    StarAllGather,
+    StarHub,
+)
 
 # one probe per SparkContext: can this cluster schedule a barrier stage at
 # all?  (local[N] always can; a dynamic-allocation cluster cannot, and its
@@ -35,7 +40,7 @@ from parallel_louvain_method_spark.functions.exchange import StarAllGather
 _BARRIER_PROBED: dict[str, bool] = {}
 
 # failure injection (tests only): at this exchange round rank 0 kills its
-# star sockets, simulating hub death mid-stage.  Read on the driver and
+# star socket, simulating a NIC death mid-stage.  Read on the driver and
 # shipped in the task closure — the reused Python worker daemons never see
 # a change made after session start.
 _KILL_ROUND = -1
@@ -45,12 +50,15 @@ _ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _is_transport_error(exc: Exception) -> bool:
-    """True when a barrier-stage failure wraps a mid-stage star-transport
-    loss (functions/exchange.py raises AllGatherTransportError inside the
-    worker; Spark embeds the class name in the wrapped message).  These
-    are RETRIABLE over the coordinator allGather — unlike kernel/data
-    bugs, which must propagate."""
-    return "AllGatherTransportError" in str(exc)
+    """True when a barrier-stage failure is a star-transport loss: the
+    driver could not open the hub, or a worker raised
+    AllGatherTransportError (functions/exchange.py; Spark embeds the class
+    name in the wrapped message).  These are RETRIABLE over the
+    coordinator allGather — unlike kernel/data bugs, which must
+    propagate."""
+    return isinstance(exc, AllGatherTransportError) or (
+        "AllGatherTransportError" in str(exc)
+    )
 
 
 def _is_worker_python_error(exc: Exception) -> bool:
@@ -139,10 +147,16 @@ class Comm:
     :meth:`exchange` and :meth:`phase`.
 
     ``ctx.allGather`` has a measured ~1 s floor per sync, so rounds go
-    over the star (functions/exchange.py) and the coordinator carries only
-    the handshake: the hub address and token, then a status round
-    confirming EVERY task connected.  All tasks take the same branch, so a
-    failed handshake leaves the whole stage on the coordinator.
+    over the star (functions/exchange.py) to the hub :func:`run` hosts in
+    the driver; the hub address ships in the task closure, so no round
+    ever touches the coordinator on the star path.  A task that cannot
+    reach the hub raises AllGatherTransportError, which fails the stage,
+    and :func:`run` reruns it with ``hub=None``: coordinator rounds only.
+    Every task gets the same ``hub``, so all tasks take the same path
+    without a sync.  Spark never re-attempts the stage itself (a failed
+    barrier ResultStage aborts the job, and barrier tasks are not retried
+    one by one), so no second attempt's task can meet a hub that already
+    holds the first attempt's peers.
     """
 
     # a round's wall includes waiting for the slowest peer's compute, so
@@ -150,7 +164,7 @@ class Comm:
     # while bounding a hung-hub stall to minutes
     ROUND_TIMEOUT_FACTOR = 20.0
 
-    def __init__(self, ctx, star: bool, kill_round: int, tag: str):
+    def __init__(self, ctx, hub: tuple | None, kill_round: int):
         self.rank = ctx.partitionId()
         self.n = len(ctx.getTaskInfos())
         self.timings: dict[str, float] = {}
@@ -158,51 +172,11 @@ class Comm:
         self._kill_round = kill_round
         self._round = 0
         self._slowest = 0.0
-        self._xg = self._handshake(tag) if star and self.n > 1 else None
+        self._xg: StarAllGather | None = None
+        if hub is not None and self.n > 1:
+            self._xg = StarAllGather(self.rank)
+            self._xg.connect(hub)
         self._t_mark = time.monotonic()
-
-    def _handshake(self, tag: str) -> StarAllGather | None:
-        xg = StarAllGather(self.rank, self.n)
-        try:
-            hub = None
-            if self.rank == 0:
-                try:
-                    hub = xg.listen()
-                except OSError:
-                    pass
-            for g in self._gather(pickle.dumps(hub, protocol=4)):
-                hub = pickle.loads(g) or hub
-            try:
-                if hub is None:
-                    raise ConnectionError("no hub advertised")
-                if self.rank == 0:
-                    xg.accept_all()
-                else:
-                    xg.connect(hub)
-                st = "ok"
-            except Exception as e:
-                st = f"fail: {e!r}"
-            statuses = self._ctx.allGather(st)
-        except BaseException:
-            xg.close()
-            raise
-        if all(x == "ok" for x in statuses):
-            return xg
-        xg.close()
-        if self.rank == 0:
-            # one diagnosable line: on multi-homed hosts a non-routable
-            # _advertise_host pick lands here, and the silent slowdown
-            # (1 s/sync coordinator floor) was otherwise invisible
-            bad = [x for x in statuses if x != "ok"]
-            hub_addr = hub[:2] if hub else None
-            print(
-                f"[{tag}/barrier] star-transport handshake failed on "
-                f"{len(bad)}/{self.n} tasks (hub={hub_addr}, first={bad[0]});"
-                " stage falls back to coordinator allGather (~1 s/sync)",
-                file=sys.stderr,
-                flush=True,
-            )
-        return None
 
     def exchange(self, payload: bytes) -> list[bytes]:
         """One all-gather round: every task contributes ``payload`` and
@@ -224,7 +198,7 @@ class Comm:
             self._round += 1
             return [payload] if self.n == 1 else self._gather(payload)
         if self.rank == 0 and self._round == self._kill_round:
-            self._xg.kill_for_test()  # injected hub death (tests)
+            self._xg.kill_for_test()  # injected transport death (tests)
         frames = self._xg.exchange(payload)
         now = time.monotonic()
         self._slowest = max(self._slowest, now - self._t_mark)
@@ -255,14 +229,14 @@ class Comm:
             self._xg.close()
 
 
-def _task(step, star: bool, kill_round: int, tag: str, rows):
+def _task(step, hub: tuple | None, kill_round: int, rows):
     from pyspark import BarrierTaskContext
 
     ctx = BarrierTaskContext.get()
     t0 = time.monotonic()
     arrays = unpack(rows)
     t1 = time.monotonic()
-    comm = Comm(ctx, star, kill_round, tag)
+    comm = Comm(ctx, hub, kill_round)
     comm.timings.update(unpack=t1 - t0, xchg_setup=time.monotonic() - t1)
     try:
         out = step(comm, *arrays)
@@ -286,11 +260,17 @@ def run(
 
     Returns None — after one stderr line naming ``fallback`` — when the
     stage fails for a reason other than a worker-side Python error, which
-    raises.  A star-transport loss reruns the stage once over the
-    coordinator ``allGather`` only: the step's state is consistent only
-    at its start, and the coordinator needs no connections.
+    raises.  The star hub runs in this (driver) process for the stage's
+    lifetime, listening on ``spark.driver.host``; executors must reach the
+    driver on that one more port.  A star-transport loss (the hub cannot
+    be opened or reached, or a round fails) reruns the stage once over
+    the coordinator ``allGather`` only: the step's state is consistent
+    only at its start, and the coordinator needs no connections.
     """
     spark = blobs.sparkSession
+    conf = spark.sparkContext.getConf()
+    host = conf.get("spark.driver.host", "127.0.0.1")
+    bind = conf.get("spark.driver.bindAddress", host)
     # larger Arrow batches for the one bulk transfer: the session default
     # (64k rows) is sized for wide documents/media rows, but the pack reads
     # 3 fixed-width columns — fewer, bigger batches measurably cut the
@@ -299,16 +279,19 @@ def run(
     spark.conf.set(_ARROW_BATCH, "262144")
     try:
         rdd = blobs.rdd
-        for star in (True, False):
-            task = functools.partial(_task, step, star, _KILL_ROUND, tag)
+        n = rdd.getNumPartitions()
+        for star in (True, False) if n > 1 else (False,):
+            hub = StarHub(n) if star else None
             try:
+                addr = hub.open(host, bind) if hub is not None else None
+                task = functools.partial(_task, step, addr, _KILL_ROUND)
                 results = rdd.barrier().mapPartitions(task).collect()
                 break
             except Exception as exc:
                 if star and _is_transport_error(exc):
                     print(
-                        f"[{tag}] star transport failed mid-stage; retrying "
-                        "the stage over coordinator allGather",
+                        f"[{tag}] star transport failed; retrying "
+                        "the stage over coordinator allGather (~1 s/round)",
                         file=sys.stderr,
                     )
                     continue
@@ -320,6 +303,9 @@ def run(
                     file=sys.stderr,
                 )
                 return None
+            finally:
+                if hub is not None:
+                    hub.close()
     finally:
         spark.conf.set(_ARROW_BATCH, batch)
     outs: list = [None] * len(results)

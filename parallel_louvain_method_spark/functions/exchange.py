@@ -9,24 +9,26 @@ pays ``sweeps × 1 s`` of pure latency, which dominates small levels and is
 a fixed serial cost at any cluster size.
 
 This module is the engine's analog of the reference's ``MPI_Allgather``
-(src/distcommunity.cpp:212-385): a task-0-hosted star exchange over raw
-TCP between the tasks of ONE barrier stage.  Barrier scheduling guarantees
-all tasks run concurrently, and executor-to-executor TCP is already a
-Spark deployment requirement (shuffle), so the only new assumption is
-that the advertised host/port of task 0 is reachable — which the caller
-(functions/bsp.py) verifies with a two-phase handshake over the (slow, but
-reliable) ``allGather`` itself, falling back to ``allGather`` for the stage
-when any task fails to connect.  The hub admits only peers that present
-the random token it advertised with its address: a stray connection from
-elsewhere on the network is closed instead of taking a rank's slot.
-Latency per round: sub-millisecond locally vs the coordinator's 1 s;
-payloads are raw bytes (no base64 inflation).
+(src/distcommunity.cpp:212-385): a star exchange over raw TCP whose hub
+(:class:`StarHub`) is a thread of the DRIVER process.  The driver opens it
+before it submits the barrier stage and ships its ``(host, port, token)``
+in the task closure, so the stage starts with no coordinator sync: every
+task, rank 0 included, is a plain :class:`StarAllGather` peer that
+connects and exchanges.  The one deployment assumption this adds is that
+executors reach the driver on one more port (they already reach it for
+RPC).  A peer that cannot reach the hub raises
+:class:`AllGatherTransportError`, and the barrier runtime
+(functions/bsp.py) reruns the stage over the coordinator ``allGather``
+(~1 s per round).  The hub admits only peers that present its random
+token: a stray connection from elsewhere on the network is closed instead
+of taking a rank's slot.  Latency per round: sub-millisecond locally vs
+the coordinator's 1 s; payloads are raw bytes (no base64 inflation).
 
-Traffic shape per round equals the coordinator path — task 0 receives
-``Σ payload`` and sends ``n × Σ payload`` — without the driver in the
-loop.  Protocol: length-prefixed frames; every round, each rank sends one
-frame and receives the concatenation of all n frames (identical bytes on
-every rank, so barrier-consistent exit decisions are preserved).
+Traffic shape per round equals the coordinator path — the hub receives
+``Σ payload`` and sends ``n × Σ payload``.  Protocol: length-prefixed
+frames; every round, each peer sends one frame and receives the
+concatenation of all n frames (identical bytes on every peer, so
+barrier-consistent exit decisions are preserved).
 """
 
 from __future__ import annotations
@@ -35,13 +37,14 @@ import hmac
 import secrets
 import socket
 import struct
-import time
+import threading
 
 _LEN = struct.Struct(">I")
 
 
 class AllGatherTransportError(ConnectionError):
-    """A star-exchange round failed mid-stage (hub or peer socket died).
+    """A star exchange failed: a peer could not reach the hub, or a round
+    failed mid-stage (hub or peer socket died).
 
     Raised INSTEAD of a silent per-task downgrade: once any round has
     partially completed, tasks may disagree on which round they are in, so
@@ -81,39 +84,112 @@ def _close(s: socket.socket | None) -> None:
             pass
 
 
-def _advertise_host() -> str:
-    """Best-effort externally-reachable address of this host.
-
-    The UDP-connect trick never sends a packet; it just asks the kernel
-    which source address would route out.  Falls back to loopback (always
-    right in local mode, verified by the caller's handshake on clusters).
-    """
-    try:
-        s = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+def _shutdown(s: socket.socket | None) -> None:
+    """Wake a thread blocked on ``s`` (``close`` alone does not)."""
+    if s is not None:
         try:
-            s.connect(("10.255.255.255", 1))
-            return s.getsockname()[0]
+            s.shutdown(socket.SHUT_RDWR)
+        except OSError:
+            pass
+
+
+class StarHub:
+    """The relay of one barrier stage's star, run as a daemon thread.
+
+    ``open(host)`` listens and returns ``(host, port, token)``; the thread
+    admits ``n`` peers that present the token as their first frame, then
+    every round receives one frame from each peer and sends all n back to
+    each.  The returned list is identical on every peer; element order is
+    admission order, NOT rank order — callers must not rely on position
+    (the Louvain and PageRank exchanges are order-independent: disjoint
+    scatters and sums).  The thread ends when any peer closes (the
+    normal end of a stage, or a failure: the hub then closes every
+    connection, so the other peers raise at once instead of waiting out
+    their round timeout) or when :meth:`close` is called.
+    """
+
+    # a real peer sends its token right after connecting; a connection
+    # that stays silent this long is not one of the stage's ranks
+    AUTH_TIMEOUT = 5.0
+
+    def __init__(self, n: int):
+        self.n = int(n)
+        self._server: socket.socket | None = None
+        self._conns: list[socket.socket] = []
+        self._token = secrets.token_bytes(16)
+        self._thread: threading.Thread | None = None
+        self._closed = False
+
+    def open(self, host: str, bind: str | None = None) -> tuple[str, int, bytes]:
+        """Listen on ``bind`` (default ``host``) and start the relay.
+        Returns the address peers connect to; a listen failure raises
+        :class:`AllGatherTransportError`."""
+        try:
+            self._server = socket.create_server(
+                (bind or host, 0), backlog=self.n
+            )
+        except OSError as e:
+            raise AllGatherTransportError(
+                f"could not open the all-gather hub on {bind or host}: {e!r}"
+            ) from e
+        port = self._server.getsockname()[1]
+        self._thread = threading.Thread(
+            target=self._serve, name=f"plm-star-hub-{port}", daemon=True
+        )
+        self._thread.start()
+        return (host, port, self._token)
+
+    def _admit(self) -> None:
+        """Accept until n peers presented the token.  No deadline: tasks
+        connect after their pack, which can take long at scale, and
+        ``close`` ends the wait when the stage is over."""
+        want = _LEN.pack(len(self._token)) + self._token
+        while len(self._conns) < self.n:
+            conn, _ = self._server.accept()
+            try:
+                # fixed-size read: a stray's length prefix must not size
+                # an allocation
+                conn.settimeout(self.AUTH_TIMEOUT)
+                ok = hmac.compare_digest(_recv_exact(conn, len(want)), want)
+            except OSError:
+                ok = False
+            if not ok or self._closed:
+                conn.close()
+                continue
+            conn.settimeout(None)
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+            self._conns.append(conn)
+        self._server.close()
+
+    def _serve(self) -> None:
+        try:
+            self._admit()
+            while True:
+                frames = [_recv_frame(c) for c in self._conns]
+                blob = _LEN.pack(len(frames)) + b"".join(
+                    _LEN.pack(len(f)) + f for f in frames
+                )
+                for c in self._conns:
+                    c.sendall(blob)
+        except (OSError, struct.error):
+            pass  # a peer closed: the stage ended or failed
         finally:
-            s.close()
-    except OSError:
-        return "127.0.0.1"
+            for s in (self._server, *self._conns):
+                _close(s)
+
+    def close(self) -> None:
+        """Stop the relay and release its sockets; returns once the
+        thread has ended."""
+        self._closed = True
+        for s in (self._server, *self._conns):
+            _shutdown(s)
+        if self._thread is not None:
+            self._thread.join(self.AUTH_TIMEOUT + 5.0)
 
 
 class StarAllGather:
-    """All-gather among ``n`` ranks; rank 0 hosts the hub.
-
-    Usage (caller coordinates the handshake — see functions/bsp.py):
-
-    - rank 0: ``listen()`` -> ``hub = (host, port, token)``; publish it;
-      ``accept_all()``
-    - rank>0: ``connect(hub)``
-    - all:    ``exchange(payload) -> [bytes] * n`` per round; ``close()``
-
-    The returned list is identical on every rank; element order is
-    arrival order, NOT rank order — callers must not rely on position
-    (the Louvain exchanges are order-independent: disjoint scatters and
-    sums).
-    """
+    """One peer's link to a :class:`StarHub`: ``connect(hub)``, then
+    ``exchange(payload) -> [bytes] * n`` per round, then ``close()``."""
 
     # initial per-round socket timeout: a round's wait legitimately spans
     # the slowest task's whole per-sweep kernel, but an HOUR of every task
@@ -131,83 +207,36 @@ class StarAllGather:
     # timeout (the failure-injection test pins <20 s); the timeout only
     # governs a peer that hangs without closing.
     ROUND_TIMEOUT = 1200.0
-    SETUP_TIMEOUT = 30.0
-    # a real peer sends its token right after connecting; a connection
-    # that stays silent this long is not one of the stage's ranks
-    AUTH_TIMEOUT = 5.0
+    # the hub listens before the stage is submitted, so a connect that is
+    # refused or stalls this long means the hub is unreachable
+    CONNECT_TIMEOUT = 10.0
     # adaptive bounds for set_round_timeout
     MIN_ROUND_TIMEOUT = 60.0
     MAX_ROUND_TIMEOUT = 3600.0
 
-    def __init__(self, rank: int, n: int):
+    def __init__(self, rank: int):
         self.rank = int(rank)
-        self.n = int(n)
-        self._server: socket.socket | None = None
-        self._conns: list[socket.socket] = []  # rank 0: n-1 peers
-        self._sock: socket.socket | None = None  # rank>0: hub link
-        self._token = b""  # rank 0: the secret peers must present
-
-    # -- setup ---------------------------------------------------------
-    def listen(self) -> tuple[str, int, bytes]:
-        assert self.rank == 0
-        srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        srv.bind(("0.0.0.0", 0))
-        srv.listen(self.n)
-        self._server = srv
-        self._token = secrets.token_bytes(16)
-        return (_advertise_host(), srv.getsockname()[1], self._token)
-
-    def accept_all(self) -> None:
-        """Accept until n-1 peers presented the token as their first
-        frame, or raise once ``SETUP_TIMEOUT`` passes.  Any other
-        connection is closed and does not take a rank's slot."""
-        assert self.rank == 0 and self._server is not None
-        want = _LEN.pack(len(self._token)) + self._token
-        deadline = time.monotonic() + self.SETUP_TIMEOUT
-        while len(self._conns) < self.n - 1:
-            left = deadline - time.monotonic()
-            if left <= 0:
-                raise TimeoutError(
-                    f"{len(self._conns)}/{self.n - 1} peers joined the hub"
-                )
-            self._server.settimeout(left)
-            conn, _ = self._server.accept()
-            try:
-                # fixed-size read: a stray's length prefix must not size
-                # an allocation
-                conn.settimeout(min(self.AUTH_TIMEOUT, left))
-                ok = hmac.compare_digest(_recv_exact(conn, len(want)), want)
-            except OSError:
-                ok = False
-            if not ok:
-                conn.close()
-                continue
-            conn.settimeout(self.ROUND_TIMEOUT)
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            self._conns.append(conn)
-        self._server.close()
-        self._server = None
+        self._sock: socket.socket | None = None
 
     def connect(self, hub: tuple[str, int, bytes]) -> None:
-        assert self.rank != 0
+        """Join the hub; raises :class:`AllGatherTransportError` when it
+        cannot be reached."""
         host, port, token = hub
-        deadline = time.monotonic() + self.SETUP_TIMEOUT
-        last: Exception | None = None
-        while time.monotonic() < deadline:
-            try:
-                s = socket.create_connection((host, port), timeout=5.0)
-                s.settimeout(self.ROUND_TIMEOUT)
-                s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-                _send_frame(s, token)
-                self._sock = s
-                return
-            except OSError as e:  # hub may not be listening yet
-                last = e
-                time.sleep(0.05)
-        raise ConnectionError(
-            f"could not reach all-gather hub {(host, port)}: {last}"
-        )
+        s = None
+        try:
+            s = socket.create_connection(
+                (host, port), timeout=self.CONNECT_TIMEOUT
+            )
+            s.settimeout(self.ROUND_TIMEOUT)
+            s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+            _send_frame(s, token)
+        except OSError as e:
+            _close(s)
+            raise AllGatherTransportError(
+                f"rank {self.rank} could not reach the all-gather hub "
+                f"{(host, port)}: {e!r}"
+            ) from e
+        self._sock = s
 
     def set_round_timeout(self, seconds: float) -> None:
         """Adapt the per-round timeout to observed sweep walls (clamped to
@@ -216,8 +245,6 @@ class StarAllGather:
         enough for any legitimate straggler, short enough that the stage
         retry + allGather fallback bounds the outage."""
         t = min(self.MAX_ROUND_TIMEOUT, max(self.MIN_ROUND_TIMEOUT, seconds))
-        for c in self._conns:
-            c.settimeout(t)
         if self._sock is not None:
             self._sock.settimeout(t)
 
@@ -228,39 +255,21 @@ class StarAllGather:
         the barrier runtime can distinguish transport loss from kernel
         bugs and rerun the stage on the coordinator path."""
         try:
-            return self._exchange(payload)
+            _send_frame(self._sock, payload)
+            (count,) = _LEN.unpack(_recv_exact(self._sock, 4))
+            return [_recv_frame(self._sock) for _ in range(count)]
         except (OSError, EOFError, struct.error) as e:
             raise AllGatherTransportError(
-                f"star all-gather round failed at rank {self.rank}/{self.n}: "
-                f"{e!r}"
+                f"star all-gather round failed at rank {self.rank}: {e!r}"
             ) from e
 
-    def _exchange(self, payload: bytes) -> list[bytes]:
-        if self.n == 1:
-            return [payload]
-        if self.rank == 0:
-            frames = [payload]
-            for c in self._conns:
-                frames.append(_recv_frame(c))
-            reply = b"".join(_LEN.pack(len(f)) + f for f in frames)
-            blob = _LEN.pack(len(frames)) + reply
-            for c in self._conns:
-                c.sendall(blob)
-            return frames
-        assert self._sock is not None
-        _send_frame(self._sock, payload)
-        (count,) = _LEN.unpack(_recv_exact(self._sock, 4))
-        return [_recv_frame(self._sock) for _ in range(count)]
-
     def kill_for_test(self) -> None:
-        """Failure injection (tests only): close the underlying sockets
-        WITHOUT forgetting them, simulating hub/NIC death — subsequent
-        rounds raise AllGatherTransportError on every rank instead of
-        silently no-opping over an empty connection list."""
-        for s in (*self._conns, self._sock):
-            _close(s)
+        """Failure injection (tests only): close the socket WITHOUT
+        forgetting it, simulating NIC death — this peer's next round
+        raises AllGatherTransportError, and the hub, seeing it close,
+        drops every other peer, whose rounds raise too."""
+        _close(self._sock)
 
     def close(self) -> None:
-        for s in (*self._conns, self._sock, self._server):
-            _close(s)
-        self._conns, self._sock, self._server = [], None, None
+        _close(self._sock)
+        self._sock = None

@@ -21,9 +21,9 @@ A level picks one of three execution strategies:
    ``plans.strategy.BARRIER_VERTICES``): the WHOLE level runs inside one
    Spark barrier stage — each task holds its src-partition's packed
    adjacency in memory for every sweep and exchanges per-sweep MOVER
-   DELTAS over the barrier runtime's in-stage raw-TCP star
-   (functions/bsp.py), with the coordinator all-gather of the barrier
-   scheduler as its bootstrap and fallback.  The edge table crosses the
+   DELTAS over the barrier runtime's raw-TCP star, whose hub runs in the
+   driver (functions/bsp.py), with the coordinator all-gather of the
+   barrier scheduler as its fallback.  The edge table crosses the
    JVM→Python boundary exactly once per level; per-sweep traffic is
    O(movers).  This is the Spark-native re-expression of the reference's
    MPI protocol (src/distcommunity.cpp:212-385), with the barrier
@@ -75,10 +75,13 @@ from parallel_louvain_method_spark.plans.strategy import small_side
 from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 ASSIGN_SCHEMA = "vtx long, comm long"
+DEGREE_SCHEMA = "vtx long, degree double"
 SUPERSTEP_ENGINES = ("auto", "barrier", "sql")
 # a local level at or under this many symmetric rows runs the
 # reference-sequential kernel, past it the vectorized one
 SEQUENTIAL_THRESHOLD = 150_000
+# a sweep moving at most this share of the vertices ends the level
+MIN_MOVES_FRAC = 0.001
 
 
 @dataclass
@@ -194,7 +197,7 @@ def _barrier_superstep_level(
     stats: LevelStats,
     min_moves_frac: float,
     pre_partitioned: str | None = None,
-) -> tuple[DataFrame, DataFrame] | None:
+) -> tuple[tuple, tuple] | None:
     """Whole-level barrier execution: ALL sweeps inside ONE Spark stage.
 
     The measured bottleneck of a per-sweep ``mapInPandas`` pass is not the
@@ -215,8 +218,9 @@ def _barrier_superstep_level(
 
     Cluster requirement (standard for barrier mode): one concurrent slot
     per partition; partition count is capped at ``defaultParallelism``.
-    Requires DENSE ids 0..n-1.  Returns ``(assign, deg)``, or None when
-    the stage could not be scheduled (the caller runs the level on sql).
+    Requires DENSE ids 0..n-1.  Returns the driver arrays ``((vtx, comm),
+    (vtx, degree))``, or None when the stage could not be scheduled (the
+    caller runs the level on sql).
     """
     sc = spark.sparkContext
     n_parts = min(
@@ -370,16 +374,8 @@ def _barrier_superstep_level(
         w_int_total / m2_ - np.sum((tot_final[tot_final > 0] / m2_) ** 2)
     )
 
-    assign = _assign_frame(
-        spark, np.arange(nv, dtype=np.int64), comm_arr
-    ).localCheckpoint(eager=True)
-    deg_pdf = pd.DataFrame(
-        {"vtx": np.arange(nv, dtype=np.int64), "degree": deg_arr}
-    )
-    deg_out = spark.createDataFrame(
-        deg_pdf, schema="vtx long, degree double"
-    ).localCheckpoint(eager=True)
-    return assign, deg_out
+    vtx = np.arange(nv, dtype=np.int64)
+    return (vtx, comm_arr), (vtx, deg_arr)
 
 
 def _sql_superstep_level(
@@ -852,7 +848,7 @@ def louvain_level(
     level_no: int = 0,
     mode: str = "auto",
     local_threshold: int = 1_500_000,
-    min_moves_frac: float = 0.001,
+    min_moves_frac: float = MIN_MOVES_FRAC,
     superstep_engine: str = "auto",
     n_vertices_hint: int | None = None,
     dense_hint: bool | None = None,
@@ -860,7 +856,10 @@ def louvain_level(
     unique_pairs: bool = False,
     skew_salt: int = 0,
 ) -> tuple[DataFrame, DataFrame, float, LevelStats]:
-    """One Louvain level.  Returns (assign, deg, m2_used, stats).
+    """One Louvain level.  Returns (assign, deg, m2_used, stats).  The
+    barrier and local engines end in the driver, so their ``assign`` (and
+    the barrier engine's ``deg``) is a DataFrame over driver arrays, built
+    without a Spark job.
 
     ``sym_edges`` must already be symmetric + deduped.  ``unique_pairs``
     declares the stronger invariant that (src, dst) is UNIQUE (parallel
@@ -899,6 +898,41 @@ def louvain_level(
     - ``"auto"`` — local iff the symmetric table has ≤ ``local_threshold``
       rows.
     """
+    assign, deg, m2, stats = _level(
+        spark, sym_edges, m2=m2, max_sweeps=max_sweeps, anneal=anneal,
+        level_no=level_no, mode=mode, local_threshold=local_threshold,
+        min_moves_frac=min_moves_frac, superstep_engine=superstep_engine,
+        n_vertices_hint=n_vertices_hint, dense_hint=dense_hint,
+        pre_partitioned=pre_partitioned, unique_pairs=unique_pairs,
+        skew_salt=skew_salt,
+    )
+    return _frame(spark, assign), _frame(spark, deg, DEGREE_SCHEMA), m2, stats
+
+
+def _level(
+    spark: SparkSession,
+    sym_edges: DataFrame,
+    *,
+    m2: float | None,
+    max_sweeps: int,
+    anneal: bool,
+    level_no: int,
+    mode: str,
+    local_threshold: int,
+    min_moves_frac: float,
+    superstep_engine: str,
+    n_vertices_hint: int | None,
+    dense_hint: bool | None,
+    pre_partitioned: str | None,
+    unique_pairs: bool,
+    skew_salt: int,
+) -> tuple:
+    """:func:`louvain_level`, except that the engines that end in the
+    driver hand back driver arrays instead of DataFrames: the barrier and
+    local engines return ``assign`` as a ``(vtx, comm)`` array pair, and
+    the barrier engine ``deg`` as ``(vtx, degree)``.  :func:`louvain`
+    coarsens from those arrays directly; :func:`_frame` turns either form
+    into a DataFrame."""
     if superstep_engine not in SUPERSTEP_ENGINES:
         raise ValueError(
             f"superstep_engine must be one of {SUPERSTEP_ENGINES}, "
@@ -966,7 +1000,8 @@ def louvain_level(
         # shuffle's arrival order was arbitrary already).
         pdf = sym_edges.select("src", "dst", "weight").toPandas()
         if len(pdf) == 0:
-            assign = spark.createDataFrame([], ASSIGN_SCHEMA)
+            empty = np.empty(0, dtype=np.int64)
+            assign = (empty, empty)
             stats.modularity = 0.0
             stats.wall_sec = time.monotonic() - t0
             if deg is None:
@@ -985,7 +1020,7 @@ def louvain_level(
             max_sweeps=max_sweeps,
             anneal=anneal,
         )
-        assign = _assign_frame(spark, v, c).localCheckpoint(eager=True)
+        assign = (v, c)
         stats.sweeps = int(sweeps)
         any_moved = bool(improved)
         # the kernel already computed level modularity over its own CSR
@@ -1078,10 +1113,14 @@ def louvain_level(
     return assign, deg, m2, stats
 
 
-def _assign_frame(spark: SparkSession, vtx, comm) -> DataFrame:
-    """A driver-side (vtx, comm) array pair as an assignment DataFrame."""
+def _frame(spark: SparkSession, cols, schema: str = ASSIGN_SCHEMA) -> DataFrame:
+    """A driver-side tuple of column arrays as a DataFrame of ``schema``
+    (no job runs); a DataFrame passes through unchanged."""
+    if isinstance(cols, DataFrame):
+        return cols
+    names = [f.split()[0] for f in schema.split(",")]
     return spark.createDataFrame(
-        pd.DataFrame({"vtx": vtx, "comm": comm}), schema=ASSIGN_SCHEMA
+        pd.DataFrame(dict(zip(names, cols))), schema=schema
     )
 
 
@@ -1279,9 +1318,13 @@ def louvain(
 
     final_q = q_prev if q_prev != -math.inf else float("nan")
     for level_no in range(start_level, max_levels):
-        assign, deg, m2, stats = louvain_level(
+        # the in-driver engines hand back (vtx, comm) arrays, coarsened
+        # below without a DataFrame round trip
+        assign, deg, m2, stats = _level(
             spark,
             sym,
+            m2=None,
+            min_moves_frac=MIN_MOVES_FRAC,
             max_sweeps=max_sweeps,
             anneal=anneal,
             level_no=level_no,
@@ -1307,9 +1350,11 @@ def louvain(
             # so the recomputed value both corrects the level stats and
             # keeps the min_q_gain convergence test monotone
             assign = fresh_checkpoint(
-                refine_communities(sym, assign.select("vtx", "comm"))
+                refine_communities(sym, _frame(spark, assign))
             )
-            stats.modularity = modularity_df(sym, assign, deg, m2)
+            stats.modularity = modularity_df(
+                sym, assign, _frame(spark, deg, DEGREE_SCHEMA), m2
+            )
         levels.append(stats)
         moved = sum(stats.moves_per_sweep) > 0
         # Coarsen + flat composition.  One rule, the level's vertex count
@@ -1322,14 +1367,16 @@ def louvain(
         n_level = stats.n_vertices
         in_driver = n_level <= strategy.BARRIER_VERTICES
         if in_driver:
-            apdf = assign.select("vtx", "comm").toPandas()
-            av = apdf["vtx"].to_numpy()
-            uniq, newc = np.unique(apdf["comm"].to_numpy(), return_inverse=True)
+            if isinstance(assign, DataFrame):
+                apdf = assign.select("vtx", "comm").toPandas()
+                assign = apdf["vtx"].to_numpy(), apdf["comm"].to_numpy()
+            av = assign[0]
+            uniq, newc = np.unique(assign[1], return_inverse=True)
             newc = newc.astype(np.int64)
-            amap = _assign_frame(spark, av, newc)
+            amap = _frame(spark, (av, newc))
             nv_hint = len(uniq)
         else:
-            amap, _, nv_hint = _dense_comm_map(assign)
+            amap, _, nv_hint = _dense_comm_map(_frame(spark, assign))
             # computed once: it feeds both coarse-edge joins and the flat
             amap = fresh_checkpoint(amap)
         coarse = _coarse_edges(sym, amap, n_level)
@@ -1363,7 +1410,7 @@ def louvain(
                 checkpoint_dir,
                 level_no,
                 coarse,
-                flat if flat_np is None else _assign_frame(spark, *flat_np),
+                _frame(spark, flat if flat_np is None else flat_np),
                 {
                     "level": level_no,
                     "modularity": stats.modularity,
@@ -1389,7 +1436,7 @@ def louvain(
     if level0_cache is not None:
         level0_cache.unpersist()
     if flat_np is not None:
-        flat = _assign_frame(spark, *flat_np).localCheckpoint(eager=True)
+        flat = _frame(spark, flat_np).localCheckpoint(eager=True)
     assert flat is not None
     if restore_map is not None:
         flat = (

@@ -6,7 +6,7 @@ Two engines, the same barrier-vs-relational split as Louvain
 - **barrier engine** (default while ids are dense 0..n-1 and the vertex
   count fits driver / executor memory, ``plans.strategy.DRIVER_VERTICES``):
   ALL iterations run inside one Spark barrier stage of the runtime
-  Louvain shares (functions/bsp.py: the pack, the handshake, the
+  Louvain shares (functions/bsp.py: the pack, the driver-hosted hub, the
   exchange, the transport-loss retry and the teardown).  Each task holds
   its dst-partitioned slice of the edge table in memory and exchanges its
   EXACT per-dst contribution sums (dst-partitioning makes partials

@@ -19,6 +19,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The smaller of 48g and half the host's ``MemTotal``: 48g on a
+    15 GB host let the local-mode JVM grow until the OOM killer took it
+    (``bench.py`` at sf0.1, 4 of 6 runs).  48g where ``meminfo`` cannot
+    be read."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "plm",
     cores: int | None = None,
@@ -50,7 +66,10 @@ def get_spark(
         # measured 3-8x sweep-wall inflation at 34.8M cached rows under the
         # previous 8g default.  On a real cluster spark-submit sizes
         # executors instead and this module is unused.
-        .config("spark.driver.memory", os.environ.get("PLM_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("PLM_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -575,3 +575,54 @@ def test_barrier_transport_death_midlevel_retries_on_allgather(
     assert assign.select("vtx").distinct().count() == 16
     err = capfd.readouterr().err
     assert "retrying the stage over coordinator allGather" in err
+
+
+def test_barrier_unreachable_hub_reruns_on_coordinator(
+    spark, golden16_df, monkeypatch, capfd
+):
+    """The driver advertises a hub address nothing listens on: every task
+    fails to connect, and the level completes through the runtime's
+    coordinator-only rerun with the partition of an uninterrupted run.
+    The hub is torn down (no thread, a closed listening socket) and no
+    persisted cache outlives the call."""
+    import socket
+    import threading
+
+    from parallel_louvain_method_spark.functions.exchange import StarHub
+    from tests.test_algos import _persisted_caches
+
+    sym = G.symmetric_edges(golden16_df)
+
+    def run():
+        assign, _, _, stats = louvain_level(
+            spark, sym, mode="superstep", superstep_engine="barrier"
+        )
+        assert stats.engine == "barrier"
+        return {r["vtx"]: r["comm"] for r in assign.collect()}
+
+    want = run()
+    capfd.readouterr()
+    hubs = []
+    real_open = StarHub.open
+
+    def open_then_misdirect(self, host, bind=None):
+        hubs.append(self)
+        real_open(self, host, bind)
+        closed = socket.socket()
+        closed.bind(("127.0.0.1", 0))
+        port = closed.getsockname()[1]
+        closed.close()
+        return ("127.0.0.1", port, self._token)
+
+    monkeypatch.setattr(StarHub, "open", open_then_misdirect)
+    before = _persisted_caches(spark)
+    got = run()
+    assert got == want
+    err = capfd.readouterr().err
+    assert "retrying the stage over coordinator allGather" in err
+    assert len(hubs) == 1
+    assert hubs[0]._server.fileno() == -1
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("plm-star-hub")
+    ]
+    assert _persisted_caches(spark) == before

@@ -11,10 +11,12 @@ moves ~n/2 of them — each mover is an (int32, int32) pair, so
     Σpayload(sweep 0) ≈ 6.6M × 8 B ≈ 53 MB
     hub egress        = n_tasks × (Σpayload + framing) ≈ 1.7 GB
 
-This harness runs the REAL transport (functions/exchange.py) with one OS
-process per rank (no GIL coupling) at exactly that worst case, with the
-measured geometric mover decay of the bench runs (n/2, n/8, n/32, n/128
-across sweeps), and prints per-round gather walls + hub egress bytes.
+This harness runs the REAL transport (functions/exchange.py) at exactly
+that worst case: the hub is a thread of this (parent) process, as it is
+of the Spark driver, and every rank is a peer in its own OS process (no
+GIL coupling between ranks).  Payloads follow the measured geometric
+mover decay of the bench runs (n/2, n/8, n/32, n/128 across sweeps); it
+prints per-round gather walls + hub egress bytes.
 
 Interpretation for a real cluster: the loopback result is an upper bound
 on per-byte cost only for the HUB HOST's kernel/socket stack; on a wire
@@ -32,30 +34,24 @@ from __future__ import annotations
 import argparse
 import json
 import multiprocessing as mp
+import os
 import sys
 import time
 
+# abspath: a relative __file__ ("tools/x.py") would resolve to "tools",
+# not the repo root.  The spawned ranks re-import this module, so they get
+# the same path.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def _rank_proc(rank, n, hub_q, res_q, payload_sizes):
-    import os
+from parallel_louvain_method_spark.functions.exchange import (  # noqa: E402
+    StarAllGather,
+    StarHub,
+)
 
-    # abspath: a relative __file__ ("tools/x.py") would resolve to
-    # "tools", not the repo root, and every rank would die on ImportError
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from parallel_louvain_method_spark.functions.exchange import StarAllGather
 
-    g = StarAllGather(rank, n)
-    if rank == 0:
-        # (host, port, token): the hub admits only peers presenting the
-        # token, so every rank gets the whole tuple
-        hub = g.listen()
-        for _ in range(n - 1):
-            hub_q.put(hub)
-        g.accept_all()
-    else:
-        g.connect(hub_q.get(timeout=60))
+def _rank_proc(rank, hub, res_q, payload_sizes):
+    g = StarAllGather(rank)
+    g.connect(hub)
     walls = []
     egress = []
     for size in payload_sizes:
@@ -63,11 +59,9 @@ def _rank_proc(rank, n, hub_q, res_q, payload_sizes):
         t0 = time.monotonic()
         frames = g.exchange(payload)
         walls.append(time.monotonic() - t0)
-        if rank == 0:
-            # hub egress this round: the concatenated blob to each of the
-            # n-1 peers (count prefix + n length-prefixed frames)
-            blob_len = 4 + sum(4 + len(f) for f in frames)
-            egress.append(blob_len * (n - 1))
+        # hub egress this round: the concatenated blob to each of the n
+        # peers (count prefix + n length-prefixed frames)
+        egress.append((4 + sum(4 + len(f) for f in frames)) * len(frames))
     g.close()
     res_q.put((rank, walls, egress))
 
@@ -89,25 +83,28 @@ def main() -> None:
     movers = [args.nv // 2, args.nv // 8, args.nv // 32, args.nv // 128]
     per_rank_sizes = [m * 8 // n for m in movers]  # int32 pairs, split evenly
 
-    ctx = mp.get_context("fork")
-    hub_q = ctx.Queue()
+    # "spawn": the peers must not inherit the hub thread's sockets
+    ctx = mp.get_context("spawn")
     res_q = ctx.Queue()
+    hub = StarHub(n)
+    t_all = time.monotonic()
+    addr = hub.open("127.0.0.1")
     procs = [
-        ctx.Process(
-            target=_rank_proc, args=(r, n, hub_q, res_q, per_rank_sizes)
-        )
+        ctx.Process(target=_rank_proc, args=(r, addr, res_q, per_rank_sizes))
         for r in range(n)
     ]
-    t_all = time.monotonic()
-    for p in procs:
-        p.start()
-    results = [res_q.get(timeout=600) for _ in range(n)]
-    for p in procs:
-        p.join(30)
+    try:
+        for p in procs:
+            p.start()
+        results = [res_q.get(timeout=600) for _ in range(n)]
+        for p in procs:
+            p.join(30)
+    finally:
+        hub.close()
     wall_total = time.monotonic() - t_all
 
     by_rank = {r: (w, e) for r, w, e in results}
-    hub_walls, hub_egress = by_rank[0][0], by_rank[0][1]
+    rank0_walls, hub_egress = by_rank[0][0], by_rank[0][1]
     out = {
         "ranks": n,
         "n_vertices": args.nv,
@@ -118,10 +115,10 @@ def main() -> None:
             round(max(by_rank[r][0][i] for r in by_rank), 3)
             for i in range(len(movers))
         ],
-        "gather_wall_hub_s": [round(w, 3) for w in hub_walls],
+        "gather_wall_rank0_s": [round(w, 3) for w in rank0_walls],
         "egress_gbps_loopback": [
             round(e * 8 / w / 1e9, 2)
-            for e, w in zip(hub_egress, hub_walls)
+            for e, w in zip(hub_egress, rank0_walls)
             if w > 0
         ],
         "total_wall_s": round(wall_total, 2),
