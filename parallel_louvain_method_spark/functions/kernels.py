@@ -551,6 +551,22 @@ def louvain_vectorized_edges(
     return ids, ids[best_comm], sweeps, best_q, improved
 
 
+def pair_sums(
+    src: np.ndarray, dst: np.ndarray, weight: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``weight`` summed per distinct ``(src, dst)`` pair, pairs ascending:
+    the coarse-edge reduce (src/community.cpp:162-201).  Ids must be
+    non-negative and below ~3·10^9, so that ``src * n + dst`` fits int64."""
+    src = np.asarray(src, dtype=np.int64)
+    dst = np.asarray(dst, dtype=np.int64)
+    if not len(src):
+        return src, dst, np.empty(0, dtype=np.float64)
+    n = int(max(src.max(), dst.max())) + 1
+    keys, inv = np.unique(src * n + dst, return_inverse=True)
+    sums = np.bincount(inv.ravel(), weights=weight, minlength=len(keys))
+    return keys // n, keys % n, sums
+
+
 def min_root(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
     """Connected components of the undirected edges ``(u[i], v[i])`` over
     the dense range ``[0, n)``: ``root[x]`` is the least index in ``x``'s

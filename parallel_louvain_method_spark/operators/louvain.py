@@ -44,12 +44,12 @@ near-convergence exits that hand label churn to the next (much smaller)
 coarsened level, per-sweep ``fresh_checkpoint`` lineage AND statistics
 truncation (plain ``localCheckpoint`` keeps ``originStats``, whose
 sizeInBytes the per-sweep self-joins square into a doubly-exponential
-BigInt — see plans/lineage.py), one coarsen path (the community renumber
-runs in driver numpy while the level has at most
-``strategy.BARRIER_VERTICES`` vertices and with ``dense_ids`` past that;
-one coarse-edge function takes either map), and per-level parquet
-checkpoints for resume, which do not change the coarsen path (north rule;
-the reference left this as a TODO, src/distcommunity.cpp:899).
+BigInt — see plans/lineage.py), the coarsen (a barrier or local level is
+summed into the next graph in driver numpy, the local levels after it
+need no Spark job; sql, refined or over-budget levels join the map onto
+the edges; see :func:`louvain`), and per-level parquet checkpoints for
+resume, which do not change the coarsen path (north rule; the reference
+left this as a TODO, src/distcommunity.cpp:899).
 """
 
 from __future__ import annotations
@@ -76,6 +76,7 @@ from parallel_louvain_method_spark.plans.lineage import fresh_checkpoint
 
 ASSIGN_SCHEMA = "vtx long, comm long"
 DEGREE_SCHEMA = "vtx long, degree double"
+EDGE_SCHEMA = "src long, dst long, weight double"
 SUPERSTEP_ENGINES = ("auto", "barrier", "sql")
 # a local level at or under this many symmetric rows runs the
 # reference-sequential kernel, past it the vectorized one
@@ -219,8 +220,9 @@ def _barrier_superstep_level(
     Cluster requirement (standard for barrier mode): one concurrent slot
     per partition; partition count is capped at ``defaultParallelism``.
     Requires DENSE ids 0..n-1.  Returns the driver arrays ``((vtx, comm),
-    (vtx, degree))``, or None when the stage could not be scheduled (the
-    caller runs the level on sql).
+    (vtx, degree), (src_comm, dst_comm, weight))``, the last the tasks'
+    coarse-edge partial sums, or None when the stage could not be
+    scheduled (the caller runs the level on sql).
     """
     sc = spark.sparkContext
     n_parts = min(
@@ -331,20 +333,19 @@ def _barrier_superstep_level(
                 best_moves, best_sweep = total_moves, sweep
             elif sweep - best_sweep >= 8:
                 break
-        # local internal-weight partial for the level's modularity
-        if len(s):
-            same = labels[s64] == labels[d.astype(_np.int64)]
-            w_int = float(w[same].sum())
-        else:
-            w_int = 0.0
+        # the slice under the final labels: the internal-weight partial for
+        # Q, and the coarse-edge partial sums the driver sums again (the
+        # reference's on-rank coarsen, src/distcommunity.cpp:781-825)
+        ls, ld = labels[s64], labels[d.astype(_np.int64)]
+        w_int = float(w[ls == ld].sum())
         # strided assignment slice: tasks hold identical state, so each
         # returns 1/n of it and the driver reassembles
         return (
-            int(len(s)),
             w_int,
             moves_log if comm.rank == 0 else None,
             labels[comm.rank::comm.n],
             (my_v, my_deg),
+            _k.pair_sums(ls, ld, w),
         )
 
     res = bsp.run(bsp.pack(edges_p), _level, "louvain", "sql")
@@ -355,18 +356,14 @@ def _barrier_superstep_level(
     comm_arr = np.empty(nv, dtype=np.int64)
     deg_arr = np.zeros(nv, dtype=np.float64)
     w_int_total = 0.0
-    n_rows = 0
     moves_log = []
-    for rank, (n_part, w_int, mlog, labels, (dv, dd)) in enumerate(outs):
+    for rank, (w_int, mlog, labels, (dv, dd), _) in enumerate(outs):
         comm_arr[rank::len(outs)] = labels
         if len(dv):
             deg_arr[dv] = dd
         w_int_total += w_int
-        n_rows += n_part
         if mlog is not None:
             moves_log = list(mlog)
-    if stats.n_edges_sym == 0:
-        stats.n_edges_sym = int(n_rows)
     stats.moves_per_sweep.extend(int(m) for m in moves_log)
     stats.sweeps = len(moves_log)
     tot_final = np.bincount(comm_arr, weights=deg_arr, minlength=nv)
@@ -375,7 +372,8 @@ def _barrier_superstep_level(
     )
 
     vtx = np.arange(nv, dtype=np.int64)
-    return (vtx, comm_arr), (vtx, deg_arr)
+    labelled = tuple(np.concatenate([o[4][i] for o in outs]) for i in range(3))
+    return (vtx, comm_arr), (vtx, deg_arr), labelled
 
 
 def _sql_superstep_level(
@@ -898,7 +896,7 @@ def louvain_level(
     - ``"auto"`` — local iff the symmetric table has ≤ ``local_threshold``
       rows.
     """
-    assign, deg, m2, stats = _level(
+    assign, deg, m2, stats, _ = _level(
         spark, sym_edges, m2=m2, max_sweeps=max_sweeps, anneal=anneal,
         level_no=level_no, mode=mode, local_threshold=local_threshold,
         min_moves_frac=min_moves_frac, superstep_engine=superstep_engine,
@@ -930,9 +928,10 @@ def _level(
     """:func:`louvain_level`, except that the engines that end in the
     driver hand back driver arrays instead of DataFrames: the barrier and
     local engines return ``assign`` as a ``(vtx, comm)`` array pair, and
-    the barrier engine ``deg`` as ``(vtx, degree)``.  :func:`louvain`
-    coarsens from those arrays directly; :func:`_frame` turns either form
-    into a DataFrame."""
+    the barrier engine ``deg`` as ``(vtx, degree)``; :func:`_frame` turns
+    either form into a DataFrame.  The fifth value, None on sql, is their
+    edges under the final labels, ``(src_comm, dst_comm, weight)``, from
+    which :func:`louvain` sums the next level's graph."""
     if superstep_engine not in SUPERSTEP_ENGINES:
         raise ValueError(
             f"superstep_engine must be one of {SUPERSTEP_ENGINES}, "
@@ -983,55 +982,18 @@ def _level(
         deg = deg_full.select("vtx", "degree")
     stats = LevelStats(level=level_no, n_vertices=n_vertices, n_edges_sym=n_edges_sym)
 
-    if mode == "auto":
-        mode = "local" if n_edges_sym <= local_threshold else "superstep"
-
-    if mode == "local":
-        local_kernel = (
-            "sequential" if n_edges_sym <= SEQUENTIAL_THRESHOLD else "vectorized"
-        )
-        stats.engine = f"local/{local_kernel}"
-        # run the kernel IN-DRIVER: the old path shipped the whole level
-        # to one applyInPandas task anyway (same O(level) memory, just on
-        # a worker), paying a shuffle + Python-worker round trip + an
-        # aggregation job for the metadata.  One Arrow toPandas + one
-        # createDataFrame replaces all of that; the kernel densifies and
-        # sorts internally, so it is invariant to row order (the grouped
-        # shuffle's arrival order was arbitrary already).
+    if _runs_local(mode, n_edges_sym, local_threshold):
+        # the kernel runs in the driver on one Arrow toPandas; it sorts
+        # internally, so the arrival order of the rows does not matter
         pdf = sym_edges.select("src", "dst", "weight").toPandas()
-        if len(pdf) == 0:
-            empty = np.empty(0, dtype=np.int64)
-            assign = (empty, empty)
-            stats.modularity = 0.0
-            stats.wall_sec = time.monotonic() - t0
-            if deg is None:
-                deg = degrees_op(sym_edges)
-            return assign, deg, m2, stats
-        fn = (
-            kernels.louvain_sequential_edges
-            if local_kernel == "sequential"
-            else kernels.louvain_vectorized_edges
+        assign, labelled = _local_level(
+            tuple(pdf[c].to_numpy() for c in ("src", "dst", "weight")),
+            m2, max_sweeps, anneal, stats,
         )
-        v, c, sweeps, q, improved = fn(
-            pdf["src"].to_numpy(),
-            pdf["dst"].to_numpy(),
-            pdf["weight"].to_numpy(),
-            m2=m2,
-            max_sweeps=max_sweeps,
-            anneal=anneal,
-        )
-        assign = (v, c)
-        stats.sweeps = int(sweeps)
-        any_moved = bool(improved)
-        # the kernel already computed level modularity over its own CSR
-        stats.modularity = float(q)
-        # kernel-internal sweeps aren't individually observable; record the
-        # level's total move signal so the multilevel driver can stop
-        stats.moves_per_sweep = [1 if any_moved else 0] * stats.sweeps
         stats.wall_sec = time.monotonic() - t0
         if deg is None:
             deg = degrees_op(sym_edges)  # lazy; callers rarely consume it
-        return assign, deg, m2, stats
+        return assign, deg, m2, stats, labelled
 
     # Engine auto-selection (the same broadcast-vs-shuffle decision Catalyst
     # makes for dimension tables): while per-vertex state fits executor
@@ -1080,10 +1042,10 @@ def _level(
             pre_partitioned=pre_partitioned,
         )
         if out is not None:
-            assign, deg = out
+            assign, deg, labelled = out
             stats.engine = "barrier"
             stats.wall_sec = time.monotonic() - t0
-            return assign, deg, m2, stats
+            return assign, deg, m2, stats, labelled
 
     # pre-partition by dst: the per-sweep assignment join hits dst, and a
     # cached repartition exposes its outputPartitioning to the planner so
@@ -1110,7 +1072,41 @@ def _level(
     stats.engine = "sql"
     stats.modularity = modularity_df(sym_edges, assign, deg, m2)
     stats.wall_sec = time.monotonic() - t0
-    return assign, deg, m2, stats
+    return assign, deg, m2, stats, None
+
+
+def _runs_local(mode: str, n_edges_sym: int, local_threshold: int) -> bool:
+    """Does :func:`louvain_level`'s ``mode`` rule run the level locally?"""
+    return mode == "local" or (mode == "auto" and n_edges_sym <= local_threshold)
+
+
+def _local_level(
+    edges: tuple, m2: float, max_sweeps: int, anneal: bool, stats: LevelStats
+) -> tuple[tuple, tuple]:
+    """The local engine on driver arrays ``(src, dst, weight)``; fills
+    ``stats`` but its wall, returns ``_level``'s assign and fifth value."""
+    s, d, w = edges
+    local_kernel = "sequential" if len(s) <= SEQUENTIAL_THRESHOLD else "vectorized"
+    stats.engine = f"local/{local_kernel}"
+    if len(s) == 0:
+        stats.modularity = 0.0
+        empty = np.empty(0, dtype=np.int64)
+        return (empty, empty), (empty, empty, np.empty(0, dtype=np.float64))
+    fn = (
+        kernels.louvain_sequential_edges
+        if local_kernel == "sequential"
+        else kernels.louvain_vectorized_edges
+    )
+    v, c, sweeps, q, improved = fn(
+        s, d, w, m2=m2, max_sweeps=max_sweeps, anneal=anneal
+    )
+    stats.sweeps = int(sweeps)
+    # the kernel already computed level modularity over its own CSR
+    stats.modularity = float(q)
+    # kernel-internal sweeps aren't individually observable; record the
+    # level's total move signal so the multilevel driver can stop
+    stats.moves_per_sweep = [1 if improved else 0] * stats.sweeps
+    return (v, c), (c[np.searchsorted(v, s)], c[np.searchsorted(v, d)], w)
 
 
 def _frame(spark: SparkSession, cols, schema: str = ASSIGN_SCHEMA) -> DataFrame:
@@ -1208,15 +1204,20 @@ def louvain(
     composing each level's coarsening map.  One rule picks how that map is
     built: a level with at most ``strategy.BARRIER_VERTICES`` vertices
     (the budget that admits the barrier engine) renumbers its communities
-    in driver numpy, a larger one with the distributed ``dense_ids``; both
-    feed the same coarse-edge joins and give row-identical output.  While
-    the flat table stays in numpy it is composed through a lookup table,
-    otherwise (level 0 past the budget, or a flat loaded on resume) by one
-    join.  When ``checkpoint_dir`` is set, each level's coarse edges + flat
-    assignment + metrics land in ``<dir>/level=<k>/`` and ``resume=True``
-    restarts after the last complete level (S7; the reference's
-    unimplemented TODO, src/distcommunity.cpp:899); checkpointing does not
-    change the coarsen path.
+    in driver numpy, a larger one with the distributed ``dense_ids``.  A
+    barrier or local level under the budget is summed into the next graph
+    in numpy, from the barrier tasks' partial sums or its own rows; the
+    levels the local engine takes after it run their kernel on those
+    arrays with no Spark job.  Sql levels, larger ones and refined labels
+    (not the labels the edges were summed under) join the map onto the
+    edge table.  Both give the same graph (exactly for integer weights).
+    While the flat table stays in numpy it is composed through a lookup
+    table, otherwise (level 0 past the budget, or a flat loaded on resume)
+    by one join.  When ``checkpoint_dir`` is set, each level's coarse edges
+    + flat assignment + metrics land in ``<dir>/level=<k>/`` and
+    ``resume=True`` restarts after the last complete level (S7; the
+    reference's unimplemented TODO, src/distcommunity.cpp:899);
+    checkpointing does not change the coarsen path.
 
     ``skew_salt > 1`` enables explicit salting of the sql engine's
     per-sweep state⋈totals join (the one join in the engine keyed by
@@ -1317,29 +1318,54 @@ def louvain(
             pre_part = None
 
     final_q = q_prev if q_prev != -math.inf else float("nan")
+    # the level's graph as driver arrays (src, dst, weight); ``sym`` is
+    # stale while it is set
+    sym_np: tuple | None = None
     for level_no in range(start_level, max_levels):
-        # the in-driver engines hand back (vtx, comm) arrays, coarsened
-        # below without a DataFrame round trip
-        assign, deg, m2, stats = _level(
-            spark,
-            sym,
-            m2=None,
-            min_moves_frac=MIN_MOVES_FRAC,
-            max_sweeps=max_sweeps,
-            anneal=anneal,
-            level_no=level_no,
-            mode=mode,
-            local_threshold=local_threshold,
-            superstep_engine=superstep_engine,
-            n_vertices_hint=nv_hint,
-            dense_hint=True if nv_hint is not None else None,
-            pre_partitioned=pre_part if level_no == start_level else None,
-            # level 0 collapsed parallel edges above; coarsen's groupBy
-            # guarantees it for every later level (and for checkpointed
-            # tables, which this driver wrote from one of the two)
-            unique_pairs=True,
-            skew_salt=skew_salt,
-        )
+        if sym_np is not None and _runs_local(mode, len(sym_np[0]), local_threshold):
+            # the kernel runs straight on the arrays: no Spark job
+            t0 = time.monotonic()
+            stats = LevelStats(level_no, nv_hint, len(sym_np[0]))
+            m2 = float(sym_np[2].sum())
+            assign, labelled = _local_level(sym_np, m2, max_sweeps, anneal, stats)
+            stats.wall_sec = time.monotonic() - t0
+        else:
+            if sym_np is not None:  # a Spark engine takes this level
+                sym, sym_np = _frame(spark, sym_np, EDGE_SCHEMA), None
+            assign, deg, m2, stats, labelled = _level(
+                spark,
+                sym,
+                m2=None,
+                min_moves_frac=MIN_MOVES_FRAC,
+                max_sweeps=max_sweeps,
+                anneal=anneal,
+                level_no=level_no,
+                mode=mode,
+                local_threshold=local_threshold,
+                superstep_engine=superstep_engine,
+                n_vertices_hint=nv_hint,
+                dense_hint=True if nv_hint is not None else None,
+                pre_partitioned=pre_part if level_no == start_level else None,
+                # level 0 collapsed parallel edges above; coarsen's groupBy
+                # guarantees it for every later level (and for checkpointed
+                # tables, which this driver wrote from one of the two)
+                unique_pairs=True,
+                skew_salt=skew_salt,
+            )
+        # Coarsen.  At or under the budget that admits the barrier engine
+        # the community renumber is np.unique (sorted distinct = dense_ids'
+        # rank order, so both forms are row-identical), past it dense_ids.
+        # Under it a level that ended in the driver is summed in numpy from
+        # its labelled edges; a sql or refined level (the edges do not
+        # carry refined labels) joins ``sym`` with the map.
+        n_level = stats.n_vertices
+        in_driver = n_level <= strategy.BARRIER_VERTICES
+        if refine_levels or not in_driver:
+            labelled = None
+        if labelled is not None and level0_cache is not None:
+            # the biggest object of the run has no further consumer
+            level0_cache.unpersist()
+            level0_cache = None
         if refine_levels:
             from parallel_louvain_method_spark.operators.components import (
                 refine_communities,
@@ -1357,15 +1383,8 @@ def louvain(
             )
         levels.append(stats)
         moved = sum(stats.moves_per_sweep) > 0
-        # Coarsen + flat composition.  One rule, the level's vertex count
-        # against the budget that admits the barrier engine (which builds
-        # the same n-length arrays in the driver): at or under it the
-        # community renumber is np.unique (sorted distinct = dense_ids'
-        # rank order, so both forms are row-identical), past it dense_ids.
-        # Either map feeds the one coarse-edge function; checkpointing does
-        # not change the path.
-        n_level = stats.n_vertices
-        in_driver = n_level <= strategy.BARRIER_VERTICES
+        stop = not moved or (stats.modularity - q_prev) <= min_q_gain
+        amap = coarse = coarse_np = None
         if in_driver:
             if isinstance(assign, DataFrame):
                 apdf = assign.select("vtx", "comm").toPandas()
@@ -1373,13 +1392,21 @@ def louvain(
             av = assign[0]
             uniq, newc = np.unique(assign[1], return_inverse=True)
             newc = newc.astype(np.int64)
-            amap = _frame(spark, (av, newc))
             nv_hint = len(uniq)
+            if labelled is None:
+                amap = _frame(spark, (av, newc))
+                coarse = _coarse_edges(sym, amap, n_level)
+            elif checkpoint_dir or not stop:
+                # each label becomes its rank in uniq, as newc did
+                ls, ld, lw = labelled
+                coarse_np = kernels.pair_sums(
+                    np.searchsorted(uniq, ls), np.searchsorted(uniq, ld), lw
+                )
         else:
             amap, _, nv_hint = _dense_comm_map(_frame(spark, assign))
             # computed once: it feeds both coarse-edge joins and the flat
             amap = fresh_checkpoint(amap)
-        coarse = _coarse_edges(sym, amap, n_level)
+            coarse = _coarse_edges(sym, amap, n_level)
         # the flat stays in numpy while it is (level 0 ran in this call
         # under the budget; levels only shrink, so every later map is a
         # numpy one too), composed through a lookup table; otherwise —
@@ -1397,6 +1424,8 @@ def louvain(
             keep = mapped >= 0
             flat_np = (flat_np[0][keep], mapped[keep])
         else:
+            if amap is None:
+                amap = _frame(spark, (av, newc))
             flat = fresh_checkpoint(
                 flat.withColumnRenamed("comm", "mid")
                 .join(amap.withColumnRenamed("vtx", "mid"), "mid")
@@ -1409,7 +1438,7 @@ def louvain(
                 spark,
                 checkpoint_dir,
                 level_no,
-                coarse,
+                coarse if coarse_np is None else _frame(spark, coarse_np, EDGE_SCHEMA),
                 _frame(spark, flat if flat_np is None else flat_np),
                 {
                     "level": level_no,
@@ -1423,13 +1452,15 @@ def louvain(
                 },
             )
 
-        if not moved or (stats.modularity - q_prev) <= min_q_gain:
+        if stop:
             break
         q_prev = stats.modularity
-        sym = fresh_checkpoint(coarse)
+        sym_np = coarse_np
+        if coarse is not None:
+            sym = fresh_checkpoint(coarse)
         if level0_cache is not None:
-            # the coarse table is checkpointed: the level-0 cache (the
-            # biggest object of the run) has no further consumer
+            # the coarse table is checkpointed: the level-0 cache has no
+            # further consumer
             level0_cache.unpersist()
             level0_cache = None
 

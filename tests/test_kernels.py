@@ -295,3 +295,20 @@ def test_min_root_paths(order):
     }[order]
     root = kernels.min_root(p[:-1], p[1:], n + 2)
     assert root.tolist() == [0] * n + [n, n + 1]
+
+
+def test_pair_sums_matches_dict_reference():
+    """``pair_sums`` against a per-row dict accumulation: every distinct
+    (src, dst) once, in ascending order, with its summed weight."""
+    rng = np.random.default_rng(5)
+    s = rng.integers(0, 30, 2000)
+    d = rng.integers(0, 30, 2000)
+    w = rng.integers(1, 4, 2000).astype(np.float64)
+    ref: dict = {}
+    for a, b, x in zip(s.tolist(), d.tolist(), w.tolist()):
+        ref[(a, b)] = ref.get((a, b), 0.0) + x
+    us, ud, uw = kernels.pair_sums(s, d, w)
+    assert list(zip(us.tolist(), ud.tolist())) == sorted(ref)
+    assert uw.tolist() == [ref[k] for k in sorted(ref)]
+    empty = kernels.pair_sums(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))
+    assert [len(a) for a in empty] == [0, 0, 0]

@@ -211,6 +211,119 @@ def test_coarsen_forms_agree(
     ]
 
 
+@pytest.mark.parametrize("graph", ["golden16", "planted"])
+def test_barrier_partial_sums_match_coarsen(spark, golden16_df, monkeypatch, graph):
+    """One barrier level over several tasks: the coarse graph the driver
+    sums from the tasks' partial sums is ``coarsen``'s join-built graph
+    row for row, with exactly equal weights."""
+    from parallel_louvain_method_spark.functions import bsp, kernels
+
+    n_tasks, driver_sums = [], []
+    run, pair_sums = bsp.run, kernels.pair_sums
+
+    def counted(*a, **kw):
+        out = run(*a, **kw)
+        n_tasks.append(len(out[0]))
+        return out
+
+    def kept(*a):
+        driver_sums.append(pair_sums(*a))
+        return driver_sums[-1]
+
+    monkeypatch.setattr(bsp, "run", counted)
+    # the driver's call only: the barrier tasks import their own module
+    monkeypatch.setattr(kernels, "pair_sums", kept)
+    edges = golden16_df if graph == "golden16" else _planted_ring(spark)
+    res = louvain(spark, edges, mode="superstep", max_levels=1)
+    assert res.levels[0].engine == "barrier"
+    assert n_tasks and n_tasks[0] >= 2, n_tasks
+    assert len(driver_sums) == 1
+    got = driver_sums[0]
+    # the level-0 flat is the renumbered community map itself
+    want = (
+        coarsen(G.symmetric_edges(edges), res.assignment)[0]
+        .toPandas()
+        .sort_values(["src", "dst"])
+    )
+    assert got[0].tolist() == want["src"].tolist()
+    assert got[1].tolist() == want["dst"].tolist()
+    assert got[2].tolist() == want["weight"].tolist()
+
+
+def _spy_calls(monkeypatch, owner, name: str, calls: list, on: dict) -> None:
+    """Record ``name`` in ``calls`` on every call of ``owner.name`` made
+    while ``on["active"]`` is set."""
+    orig = getattr(owner, name)
+
+    def spy(*a, **kw):
+        if on["active"]:
+            calls.append(name)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(owner, name, spy)
+
+
+def test_barrier_to_local_handoff(spark, monkeypatch):
+    """The co-commit shape: level 0 (880 symmetric rows, over the 500-row
+    local threshold) on the barrier engine, the later levels on
+    local/sequential.  After the barrier level no coarse-edge join,
+    checkpoint or toPandas runs, and the result is the one the join-built
+    coarsen gave (engines, vertex counts, Q and partition pinned)."""
+    from pyspark.sql import DataFrame
+
+    from parallel_louvain_method_spark.operators import louvain as lv
+
+    calls: list = []
+    on = {"active": False}
+    barrier = lv._barrier_superstep_level
+
+    def barrier_then_spy(*a, **kw):
+        out = barrier(*a, **kw)
+        on["active"] = True
+        return out
+
+    monkeypatch.setattr(lv, "_barrier_superstep_level", barrier_then_spy)
+    _spy_calls(monkeypatch, lv, "_coarse_edges", calls, on)
+    _spy_calls(monkeypatch, lv, "fresh_checkpoint", calls, on)
+    _spy_calls(monkeypatch, DataFrame, "toPandas", calls, on)
+    res = louvain(spark, _planted_ring(spark), local_threshold=500)
+    ran_barrier, on["active"] = on["active"], False
+    assert ran_barrier
+    assert calls == []
+    assert [(st.engine, st.n_vertices) for st in res.levels] == [
+        ("barrier", 200), ("local/sequential", 42), ("local/sequential", 20),
+    ]
+    assert res.modularity == 0.9045454545454543
+    assert _partition(res) == {v: v // 10 for v in range(200)}
+
+
+def test_louvain_refine_levels_after_barrier_level(spark, monkeypatch):
+    """``refine_levels`` under a barrier level 0 coarsens every level from
+    its refined labels by the join (never from the barrier tasks' partial
+    sums): the flat partition is a connectivity fixpoint, and Q is not
+    below plain Louvain's (up to the last bits of the two modularity sums,
+    the refined one recomputed in Spark)."""
+    from parallel_louvain_method_spark.operators import louvain as lv
+    from parallel_louvain_method_spark.operators.components import (
+        refine_communities,
+    )
+
+    edges = _planted_ring(spark)
+    base = louvain(spark, edges, local_threshold=500)
+    joins: list = []
+    sums: list = []
+    on = {"active": True}
+    _spy_calls(monkeypatch, lv, "_coarse_edges", joins, on)
+    _spy_calls(monkeypatch, lv.kernels, "pair_sums", sums, on)
+    ref = louvain(spark, edges, local_threshold=500, refine_levels=True)
+    assert ref.levels[0].engine == "barrier"
+    assert sums == [] and len(joins) == len(ref.levels)
+    assert ref.modularity >= base.modularity - 1e-12
+    n_comms = ref.assignment.select("comm").distinct().count()
+    again = refine_communities(edges, ref.assignment)
+    assert again.select("comm").distinct().count() == n_comms
+
+
 @pytest.mark.parametrize("engine", ["sql", "barrier"])
 def test_golden16_engine_matrix(spark, golden16_df, engine):
     """Both superstep engines converge on golden16 to the same quality

@@ -357,10 +357,13 @@ def test_file_graph_name_map_join_strategy(spark, monkeypatch, limit_zero):
 def test_louvain_coarse_edge_map_join_strategy(
     spark, golden16_df, monkeypatch, limit_zero
 ):
-    """Both vtx→community map joins of the coarse-edge builder."""
+    """Both vtx→community map joins of ``_coarse_edges``.  Under
+    ``strategy.BARRIER_VERTICES`` a local level coarsens in driver numpy,
+    so the budget is set to 0 to reach the joins."""
     from parallel_louvain_method_spark.operators import louvain as lv
     from parallel_louvain_method_spark.plans import strategy
 
+    monkeypatch.setattr(strategy, "BARRIER_VERTICES", 0)
     if limit_zero:
         monkeypatch.setattr(strategy, "BROADCAST_MAP_ROWS", 0)
     coarse = _captured(monkeypatch, lv, "_coarse_edges", None)

@@ -15,6 +15,8 @@ edge file.  Fixtures:
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +28,7 @@ from parallel_louvain_method_spark.sources.edges import read_edge_text
 from tests.conftest import (
     EPS,
     GOLDEN16_ASSIGNMENT,
+    GOLDEN16_EDGES,
     GOLDEN16_N_COMMUNITIES,
     GOLDEN16_Q_FINAL,
 )
@@ -40,9 +43,28 @@ CORA_L0_Q = 0.552602
 CORA_L0_NCOMM = 735
 
 
-def test_read_golden16_weighted_shards(spark):
+def _golden16_shards(tmp_path, weighted: bool) -> list[str]:
+    """The reference's four golden16 shards, weighted (``0..3``) or raw
+    2-column (``x00..x03``).  Without a reference checkout, the same graph
+    (FIXTURES.md F1a: golden16 split 4 ways, 7 lines each) is written to
+    ``tmp_path`` in the same line format."""
+    names = [f"{i}" if weighted else f"x0{i}" for i in range(4)]
+    if os.path.isdir(f"{REF}/graph"):
+        return [f"{REF}/graph/{n}" for n in names]
+    paths = []
+    for i, name in enumerate(names):
+        p = tmp_path / name
+        p.write_text("".join(
+            f"{a} {b} 1.0\n" if weighted else f"{a} {b}\n"
+            for a, b in GOLDEN16_EDGES[7 * i:7 * i + 7]
+        ))
+        paths.append(str(p))
+    return paths
+
+
+def test_read_golden16_weighted_shards(spark, tmp_path):
     """S1: weighted `src dst w` per-rank shards, read as one multi-file scan."""
-    edges = read_edge_text(spark, [f"{REF}/graph/{i}" for i in range(4)])
+    edges = read_edge_text(spark, _golden16_shards(tmp_path, weighted=True))
     assert edges.count() == 28
     sym = G.symmetric_edges(edges)
     assert sym.count() // 2 == 28
@@ -53,9 +75,11 @@ def test_read_golden16_weighted_shards(spark):
     assert got == GOLDEN16_ASSIGNMENT
 
 
-def test_read_golden16_raw_2col_shards(spark):
+def test_read_golden16_raw_2col_shards(spark, tmp_path):
     """S2: raw 2-column shards get unit weight and the same Louvain result."""
-    edges = read_edge_text(spark, [f"{REF}/graph/x0{i}" for i in range(4)], weighted=False)
+    edges = read_edge_text(
+        spark, _golden16_shards(tmp_path, weighted=False), weighted=False
+    )
     assert edges.count() == 28
     assert edges.agg(F.min("weight"), F.max("weight")).first() == (1.0, 1.0)
 
