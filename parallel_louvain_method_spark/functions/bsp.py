@@ -3,13 +3,13 @@
 The reference runs every distributed round through one communicate-deltas
 protocol (``MPI_Allgather``, src/distcommunity.cpp:212-385); this module
 is that protocol for the barrier operators (Louvain levels, PageRank).  An
-operator packs its edge table once (:func:`pack`) and hands :func:`run` a
-*step*, its per-task vertex program.  The runtime owns the rest: the
-barrier probe and failure classification, the pack/unpack, the star hub
-(functions/exchange.py) that :func:`run` hosts in the driver for the
-stage's lifetime, per-round ``exchange`` with an adaptive timeout,
-teardown, the coordinator-only rerun after a transport loss, and phase
-timings.
+operator hands :func:`run` its key-partitioned edge table and a *step*,
+its per-task vertex program.  The runtime owns the rest: the barrier
+probe and failure classification, each task's read of its partition's
+Arrow batches into numpy, the star hub (functions/exchange.py) that
+:func:`run` hosts in the driver for the stage's lifetime, per-round
+``exchange`` with an adaptive timeout, teardown, the coordinator-only
+rerun after a transport loss, and phase timings.
 
 Every task applies the same gathered frames to its own state, so all
 tasks hold identical state and take identical exit decisions.
@@ -45,7 +45,6 @@ _BARRIER_PROBED: dict[str, bool] = {}
 # a change made after session start.
 _KILL_ROUND = -1
 
-_BLOB_SCHEMA = "raw_len long, blob binary"
 _ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
@@ -82,63 +81,6 @@ def barrier_supported(sc) -> bool:
         except Exception:
             _BARRIER_PROBED[key] = False
     return _BARRIER_PROBED[key]
-
-
-# -- pack ------------------------------------------------------------------
-def _pack_partition(batches):
-    cols: list[list[np.ndarray]] = [[], [], []]
-    for b in batches:
-        for i in range(3):
-            cols[i].append(b.column(i).to_numpy(zero_copy_only=False))
-    k, o, w = (
-        np.concatenate(c) if c else np.empty(0, dt)
-        for c, dt in zip(cols, (np.int32, np.int32, np.float64))
-    )
-    # sort by key + delta-encode + zstd: the blob crosses two more process
-    # boundaries (Python->JVM, JVM->barrier-Python) before the step sees
-    # it, and at scale-test sizes those crossings are the stage's
-    # bandwidth bill.  Sorted key deltas are mostly tiny ints and level-0
-    # weights repeat, so zstd-1 lands ~4x (measured 139 MB -> 35 MB per
-    # 8.7M rows at ~0.7 s compress + ~0.6 s decompress, both fully
-    # parallel).  Sorted rows also make Louvain's structural prep and its
-    # per-pass group-sort cache-friendlier.
-    if len(k) > 1 and not bool((k[1:] >= k[:-1]).all()):
-        # the JVM already sorted within the partition (see pack) — only
-        # sort here if something upstream stopped guaranteeing it
-        order = np.argsort(k, kind="stable")
-        k, o, w = k[order], o[order], w[order]
-    kdelta = np.diff(k, prepend=np.int32(0)).astype(np.int32)
-    raw = pickle.dumps((kdelta, o, w), protocol=4)
-    comp = pa.Codec("zstd", compression_level=1).compress(raw, asbytes=True)
-    yield pa.RecordBatch.from_pydict({"raw_len": [len(raw)], "blob": [comp]})
-
-
-def pack(edges: DataFrame) -> DataFrame:
-    """One blob per partition of ``edges`` = ``(key int, other int,
-    weight double)``, partitioned on key.  NOT persisted and NOT counted:
-    the barrier stage is its only consumer, so the pack fuses into that
-    stage.  mapInArrow, not mapInPandas: the pack wants raw numpy columns,
-    and the pandas wrapper's Series construction was measured at ~2× the
-    whole conversion cost.  The sort runs on the JVM side
-    (whole-stage-codegen'd, narrow — it keeps the key partitioning), far
-    cheaper than a numpy argsort in the Python worker (~2 s per 8.7M
-    rows on this host)."""
-    return edges.sortWithinPartitions(edges.columns[0]).mapInArrow(
-        _pack_partition, schema=_BLOB_SCHEMA
-    )
-
-
-def unpack(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The task's ``(key int32, other int32, weight float64)`` arrays."""
-    for r in rows:  # one blob per partition; none for an empty one
-        raw = pa.Codec("zstd").decompress(
-            bytes(r["blob"]), int(r["raw_len"]), asbytes=True
-        )
-        kdelta, o, w = pickle.loads(raw)
-        # cumsum in int64 (no overflow), back to the ids' native int32
-        return np.cumsum(kdelta, dtype=np.int64).astype(np.int32), o, w
-    empty = np.empty(0, np.int32)
-    return empty, empty, np.empty(0, np.float64)
 
 
 # -- task side -------------------------------------------------------------
@@ -229,12 +171,25 @@ class Comm:
             self._xg.close()
 
 
-def _task(step, hub: tuple | None, kill_round: int, rows):
+def _columns(batches) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The partition's ``(key int32, other int32, weight float64)``
+    columns; typed empty arrays for a partition with no rows."""
+    cols: list[list[np.ndarray]] = [[], [], []]
+    for b in batches:
+        for i in range(3):
+            cols[i].append(b.column(i).to_numpy(zero_copy_only=False))
+    return tuple(
+        np.concatenate(c).astype(dt, copy=False) if c else np.empty(0, dt)
+        for c, dt in zip(cols, (np.int32, np.int32, np.float64))
+    )
+
+
+def _task(step, hub: tuple | None, kill_round: int, batches):
     from pyspark import BarrierTaskContext
 
     ctx = BarrierTaskContext.get()
     t0 = time.monotonic()
-    arrays = unpack(rows)
+    arrays = _columns(batches)
     t1 = time.monotonic()
     comm = Comm(ctx, hub, kill_round)
     comm.timings.update(unpack=t1 - t0, xchg_setup=time.monotonic() - t1)
@@ -242,15 +197,32 @@ def _task(step, hub: tuple | None, kill_round: int, rows):
         out = step(comm, *arrays)
     finally:
         comm.close()
-    yield comm.rank, out, {k: round(v, 3) for k, v in comm.timings.items()}
+    timings = {k: round(v, 3) for k, v in comm.timings.items()}
+    # one pickled binary cell per task is enough: the largest output is
+    # Louvain's strided labels plus the partial sums of at most
+    # strategy.BARRIER_ROWS_PER_TASK rows, well under Arrow's 2 GiB
+    # binary-offset limit
+    cell = pickle.dumps((comm.rank, out, timings), protocol=4)
+    yield pa.RecordBatch.from_arrays([pa.array([cell], pa.binary())], ["out"])
+
+
+def _num_partitions(df: DataFrame) -> int:
+    """The task count of a stage over ``df``, without running a job: the
+    partitioning its plan declares (a repartitioned or cached table), else
+    that of its row RDD, which for a plan with no exchange runs nothing."""
+    qe = df._jdf.queryExecution()
+    n = qe.sparkPlan().outputPartitioning().numPartitions()
+    return n if n > 0 else qe.toRdd().getNumPartitions()
 
 
 # -- driver side -----------------------------------------------------------
 def run(
-    blobs: DataFrame, step, tag: str, fallback: str
+    edges: DataFrame, step, tag: str, fallback: str
 ) -> tuple[list, dict, dict] | None:
-    """Run ``step(comm, key, other, weight)`` once per partition of the
-    packed ``blobs``, all tasks in ONE barrier stage.
+    """Run ``step(comm, key, other, weight)`` once per partition of
+    ``edges`` = ``(key int, other int, weight double)``, partitioned on
+    key, all tasks in ONE ``mapInArrow(barrier=True)`` stage that reads
+    each partition, sorted by key on the JVM, straight into numpy columns.
 
     Returns ``(outs, phase_crit, phase_sum)``: the steps' return values in
     rank order, and per phase the MAX wall over tasks (the critical path —
@@ -267,25 +239,27 @@ def run(
     the coordinator ``allGather`` only: the step's state is consistent
     only at its start, and the coordinator needs no connections.
     """
-    spark = blobs.sparkSession
+    spark = edges.sparkSession
     conf = spark.sparkContext.getConf()
     host = conf.get("spark.driver.host", "127.0.0.1")
     bind = conf.get("spark.driver.bindAddress", host)
+    edges = edges.sortWithinPartitions(edges.columns[0])
+    n = _num_partitions(edges)
     # larger Arrow batches for the one bulk transfer: the session default
-    # (64k rows) is sized for wide documents/media rows, but the pack reads
-    # 3 fixed-width columns — fewer, bigger batches measurably cut the
+    # (64k rows) is sized for wide document rows, but the stage reads 3
+    # fixed-width columns — fewer, bigger batches measurably cut the
     # JVM→Python conversion wall.  Restored on exit.
     batch = spark.conf.get(_ARROW_BATCH)
     spark.conf.set(_ARROW_BATCH, "262144")
     try:
-        rdd = blobs.rdd
-        n = rdd.getNumPartitions()
         for star in (True, False) if n > 1 else (False,):
             hub = StarHub(n) if star else None
             try:
                 addr = hub.open(host, bind) if hub is not None else None
                 task = functools.partial(_task, step, addr, _KILL_ROUND)
-                results = rdd.barrier().mapPartitions(task).collect()
+                rows = edges.mapInArrow(
+                    task, "out binary", barrier=True
+                ).collect()
                 break
             except Exception as exc:
                 if star and _is_transport_error(exc):
@@ -308,6 +282,7 @@ def run(
                     hub.close()
     finally:
         spark.conf.set(_ARROW_BATCH, batch)
+    results = [pickle.loads(r[0]) for r in rows]
     outs: list = [None] * len(results)
     crit: dict[str, float] = {}
     total: dict[str, float] = {}

@@ -141,8 +141,8 @@ class StarHub:
 
     def _admit(self) -> None:
         """Accept until n peers presented the token.  No deadline: tasks
-        connect after their pack, which can take long at scale, and
-        ``close`` ends the wait when the stage is over."""
+        connect after reading their partition, which can take long at
+        scale, and ``close`` ends the wait when the stage is over."""
         want = _LEN.pack(len(self._token)) + self._token
         while len(self._conns) < self.n:
             conn, _ = self._server.accept()

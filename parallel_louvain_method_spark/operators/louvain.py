@@ -106,12 +106,12 @@ class LevelStats:
     # limit) becomes a testable seam instead of an invisible branch
     engine: str = ""
     # barrier engine only, folded by functions/bsp.py ``run``: per phase
-    # (unpack / xchg_setup / deg_exchange / prep / kernel_i / gather_i) the
-    # MAX wall over tasks — the critical path, since the slowest task
-    # gates every barrier — and the SUM (total work, conserved under
-    # repartitioning: the steal-robust attribution for scaling runs,
-    # BENCH_SCALING.md §0).  A gather_i/deg_exchange wall includes
-    # waiting for the previous phase's stragglers.
+    # (unpack = the task's read of its Arrow batches, xchg_setup,
+    # deg_exchange, prep, kernel_i, gather_i) the MAX wall over tasks — the
+    # critical path, since the slowest task gates every barrier — and the
+    # SUM (total work, conserved under repartitioning: the steal-robust
+    # attribution for scaling runs, BENCH_SCALING.md §0).  A gather_i or
+    # deg_exchange wall includes waiting for the previous phase's stragglers.
     phase_crit: dict = field(default_factory=dict)
     phase_sum: dict = field(default_factory=dict)
 
@@ -205,8 +205,8 @@ def _barrier_superstep_level(
     kernel — it is Spark re-reading the cached edge table and
     re-serializing it JVM→Arrow→Python EVERY sweep (the kernel itself
     scales at ~1.0 efficiency 8→32 processes; tools/kernel_scaling.py).
-    This engine pays the transfer ONCE: each src-partition's adjacency is
-    packed into a single blob and a barrier stage holds it in worker
+    This engine pays the transfer ONCE: each barrier task reads its
+    src-partition's adjacency from its Arrow batches and holds it in worker
     memory for the whole level, exchanging per-sweep MOVER DELTAS through
     the barrier runtime (functions/bsp.py) — the re-expression of the
     reference's MPI communicate-deltas design
@@ -348,7 +348,7 @@ def _barrier_superstep_level(
             _k.pair_sums(ls, ld, w),
         )
 
-    res = bsp.run(bsp.pack(edges_p), _level, "louvain", "sql")
+    res = bsp.run(edges_p, _level, "louvain", "sql")
     if res is None:
         return None
     outs, stats.phase_crit, stats.phase_sum = res
@@ -1024,7 +1024,7 @@ def _level(
     if engine == "barrier" and not bsp.barrier_supported(spark.sparkContext):
         # cheap upfront probe (once per SparkContext): a cluster that cannot
         # schedule ANY barrier stage (dynamic allocation, too few slots)
-        # must not pay the pack + slot-check retry loop on the real job
+        # must not pay the slot-check retry loop on the real job
         print(
             "[louvain] barrier scheduling unavailable (probe failed); "
             "using sql",
@@ -1271,7 +1271,7 @@ def louvain(
 
             edges, restore_map = renumber_edges(edges)
     # Level-0 symmetric build, PRE-PARTITIONED on the key the chosen engine
-    # will join/pack on: symmetrize → ONE exchange on that key → dedup (a
+    # needs: symmetrize → ONE exchange on that key → dedup (a
     # hash aggregation whose clustering requirement a single-key
     # partitioning already satisfies — no second exchange) → persist.  A
     # localCheckpoint here would ERASE the partitioning (measured: the

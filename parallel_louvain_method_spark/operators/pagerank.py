@@ -6,12 +6,12 @@ Two engines, the same barrier-vs-relational split as Louvain
 - **barrier engine** (default while ids are dense 0..n-1 and the vertex
   count fits driver / executor memory, ``plans.strategy.DRIVER_VERTICES``):
   ALL iterations run inside one Spark barrier stage of the runtime
-  Louvain shares (functions/bsp.py: the pack, the driver-hosted hub, the
-  exchange, the transport-loss retry and the teardown).  Each task holds
-  its dst-partitioned slice of the edge table in memory and exchanges its
-  EXACT per-dst contribution sums (dst-partitioning makes partials
-  disjoint) every iteration, so the edges cross the JVM→Python boundary
-  once per run;
+  Louvain shares (functions/bsp.py: the Arrow read, the driver-hosted
+  hub, the exchange, the transport-loss retry and the teardown).  Each
+  task holds its dst-partitioned slice of the edge table in memory and
+  exchanges its EXACT per-dst contribution sums (dst-partitioning makes
+  partials disjoint) every iteration, so the edges cross the JVM→Python
+  boundary once per run;
 - **DataFrame engine** (sparse ids, past the limit, and the fallback
   whenever barrier scheduling is unavailable): pure DataFrame loop — one
   join (ranks onto edges by src) + one aggregation per iteration, rank
@@ -60,10 +60,10 @@ def _pagerank_barrier(
     by Spark re-reading the cached edge table and re-serializing it
     JVM→Arrow→Python EVERY iteration — the same finding that motivated
     the Louvain barrier engine, re-applied here.  Each dst-partitioned
-    slice crosses the boundary ONCE (the barrier runtime's packed blob,
-    functions/bsp.py); per-iteration traffic is the task's own per-dst
-    partial sums (disjoint under dst-partitioning, ~12 B per touched dst)
-    over the runtime's exchange.  Every task applies the same gathered
+    slice crosses the boundary ONCE (each barrier task reads its Arrow
+    batches, functions/bsp.py); per-iteration traffic is the task's own
+    per-dst partial sums (disjoint under dst-partitioning, ~12 B per
+    touched dst) over the runtime's exchange.  Every task applies the same gathered
     partials to its full rank vector, so all tasks hold identical state
     and take identical tol-exit decisions.
 
@@ -160,8 +160,8 @@ def _pagerank_barrier(
     # the edge cache and the broadcasts are released on every exit path
     try:
         res = bsp.run(
-            bsp.pack(ep.select("dst", "src", "weight")), _run,
-            "pagerank", "the DataFrame engine",
+            ep.select("dst", "src", "weight"), _run, "pagerank",
+            "the DataFrame engine",
         )
     finally:
         ow_bc.destroy()

@@ -109,23 +109,23 @@ def test_pagerank_barrier_matches_dataframe(spark, golden16_df, monkeypatch):
 def _inject_barrier_failure(monkeypatch, spark, message):
     """Make every barrier stage's collect raise ``message`` (the barrier
     probe is pinned to "schedulable", so the failure hits the real stage)."""
-    from pyspark.rdd import RDDBarrier
-
     from parallel_louvain_method_spark.functions.bsp import _BARRIER_PROBED
 
     monkeypatch.setitem(_BARRIER_PROBED, spark.sparkContext.applicationId, True)
-    orig = RDDBarrier.mapPartitions
+    frame = type(spark.range(1))
+    orig = frame.mapInArrow
 
-    def mapPartitions(self, f, preservesPartitioning=False):
-        rdd = orig(self, f, preservesPartitioning)
+    def mapInArrow(self, func, schema, barrier=False, profile=None):
+        df = orig(self, func, schema, barrier, profile)
+        if barrier:
 
-        def collect():
-            raise Exception(message)
+            def collect():
+                raise Exception(message)
 
-        rdd.collect = collect
-        return rdd
+            df.collect = collect
+        return df
 
-    monkeypatch.setattr(RDDBarrier, "mapPartitions", mapPartitions)
+    monkeypatch.setattr(frame, "mapInArrow", mapInArrow)
 
 
 def _persisted_caches(spark) -> set:

@@ -1,5 +1,5 @@
 """Unit tests for the star all-gather transport and its driver-hosted hub
-(Spark-free)."""
+(Spark-free), and for the barrier runtime's Arrow input (one Spark test)."""
 from __future__ import annotations
 
 import socket
@@ -293,3 +293,57 @@ def test_comm_star_path_makes_no_coordinator_sync():
         for rank in range(n):
             assert sorted(results[rank][r]) == want
     assert not _hub_threads()
+
+
+def test_bsp_run_arrow_input(spark):
+    """``bsp.run`` reads each key partition straight from its Arrow
+    batches: the step gets int32/int32/float64 columns sorted by key, the
+    rank whose partition is empty gets zero-length arrays of those dtypes,
+    and the steps' outputs come back in rank order."""
+    from pyspark.sql import functions as F
+
+    from parallel_louvain_method_spark.functions import bsp
+
+    # keys whose hash partition (of 4) is 3 are left out, so partition 3
+    # is empty and the other partitions hold several keys each
+    placed = (
+        spark.createDataFrame([(k,) for k in range(40)], "key int")
+        .repartition(4, "key")
+        .select("key", F.spark_partition_id().alias("p"))
+        .collect()
+    )
+    keys = [r["key"] for r in placed if r["p"] != 3]
+    rows = [(k, o, o / 2.0) for o in range(30, 0, -1) for k in reversed(keys)]
+    edges = spark.createDataFrame(
+        rows, "key int, other int, weight double"
+    ).repartition(4, "key")
+
+    def step(comm, key, other, weight):
+        comm.exchange(b"")
+        return (
+            comm.rank, (key.dtype, other.dtype, weight.dtype),
+            key.tolist(), other.tolist(), weight.tolist(),
+        )
+
+    outs, crit, total = bsp.run(edges, step, "test", "nothing")
+    assert [o[0] for o in outs] == [0, 1, 2, 3]
+    for _, dtypes, k, _, _ in outs:
+        assert dtypes == (np.int32, np.int32, np.float64)
+        assert k == sorted(k)
+    assert outs[3][2:] == ([], [], [])
+    assert max(len(set(o[2])) for o in outs) >= 2
+    got = sorted(
+        (k, o, w) for _, _, ks, os_, ws in outs for k, o, w in zip(ks, os_, ws)
+    )
+    assert got == sorted(rows)
+    assert {"unpack", "xchg_setup"} <= set(crit) and set(crit) == set(total)
+
+    # a frame whose plan declares no partitioning (rows from an RDD): the
+    # task count comes from its RDD, and each slice arrives whole
+    rdd = spark.sparkContext.parallelize(rows, 4)
+    slices = spark.createDataFrame(rdd, edges.schema)
+    outs = bsp.run(slices, step, "test", "nothing")[0]
+    assert [o[0] for o in outs] == [0, 1, 2, 3]
+    for (_, _, ks, os_, ws), part in zip(outs, rdd.glom().collect()):
+        assert ks == sorted(ks)
+        assert sorted(zip(ks, os_, ws)) == sorted(part)

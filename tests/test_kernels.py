@@ -217,37 +217,6 @@ def test_dense_kernel_prep_hoist_parity(e):
         assert c_a.tolist() == c_b.tolist()
 
 
-def test_barrier_blob_delta_zstd_roundtrip():
-    """The barrier pack's sort + delta + zstd transport encoding restores
-    (src, dst, weight) exactly, including the row reordering being a
-    permutation (multiset equality) — the transport must be lossless."""
-    import pickle
-
-    import pyarrow as pa
-
-    rng = np.random.default_rng(7)
-    n, nv = 100_000, 5_000
-    s = rng.integers(0, nv, n).astype(np.int32)
-    d = rng.integers(0, nv, n).astype(np.int32)
-    w = rng.integers(1, 9, n).astype(np.float64)
-    # encode exactly as _pack does
-    order = np.argsort(s, kind="stable")
-    ss, dd, ww = s[order], d[order], w[order]
-    sdelta = np.diff(ss, prepend=np.int32(0)).astype(np.int32)
-    raw = pickle.dumps((sdelta, dd, ww), protocol=4)
-    comp = pa.Codec("zstd", compression_level=1).compress(raw, asbytes=True)
-    assert len(comp) < len(raw)
-    # decode exactly as _level does
-    back = pa.Codec("zstd").decompress(comp, len(raw), asbytes=True)
-    s2delta, d2, w2 = pickle.loads(back)
-    s2 = np.cumsum(s2delta, dtype=np.int64).astype(np.int32)
-    assert (s2 == ss).all() and (d2 == dd).all() and (w2 == ww).all()
-    # permutation of the original rows (same multiset of edges)
-    a = sorted(zip(s.tolist(), d.tolist(), w.tolist()))
-    b = sorted(zip(s2.tolist(), d2.tolist(), w2.tolist()))
-    assert a == b
-
-
 def _py_min_root(edges, n):
     """Plain-Python union-find: each vertex's least component member."""
     parent = list(range(n))

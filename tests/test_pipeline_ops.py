@@ -1,4 +1,4 @@
-"""Dedup / similarity / text / multimodal operators on driver testdata."""
+"""Dedup / similarity / text operators on driver testdata."""
 
 from __future__ import annotations
 
@@ -8,13 +8,6 @@ from pyspark.sql import functions as F
 
 from parallel_louvain_method_spark.operators import dedup as D
 from parallel_louvain_method_spark.operators import text as T
-from parallel_louvain_method_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    extract_features,
-    resize_images,
-    sample_frames,
-    synth_media,
-)
 from parallel_louvain_method_spark.operators.similarity import (
     knn_brute_force,
     knn_lsh,
@@ -178,80 +171,6 @@ def test_fingerprints_shift_robust(spark):
     fp = {r["doc_id"]: r["fingerprint"] for r in T.fingerprints(df).collect()}
     assert fp[0] == fp[1]  # shared minimal 8-gram survives the prefix edit
     assert fp[0] != fp[2]
-
-
-def test_multimodal_real_decode(spark):
-    """decode_mode='real' is genuinely real (r3 VERDICT Missing #3 closed):
-    synth_media emits standards-conformant BMP/PNG/WAV/AVI bytes
-    (functions/codecs.py, stdlib+numpy — no PIL/ffmpeg needed), and the
-    operators decode, transform and re-encode actual content."""
-    import numpy as np
-
-    from parallel_louvain_method_spark.functions import codecs
-
-    media = synth_media(spark, 30)
-    rows = {r["media_id"]: r for r in media.collect()}
-    # payloads are REAL files: magic numbers + full decode
-    img_bmp = codecs.decode_bmp(bytes(rows[0]["payload"]))  # id 0: image/bmp
-    assert img_bmp.shape == (24, 32, 3)
-    img_png = codecs.decode_png(bytes(rows[3]["payload"]))  # id 3: image/png
-    assert img_png.shape == (24, 32, 3)
-    samples, rate = codecs.decode_wav(bytes(rows[1]["payload"]))
-    assert rate == 8000 and len(samples) == 1600
-    frames_arr, fps = codecs.decode_avi(bytes(rows[2]["payload"]))
-    assert fps == 10 and frames_arr.shape == (4, 12, 16, 3)
-
-    feats = extract_features(media).collect()  # default real
-    assert len(feats) == 30
-    assert all(r["features"] is not None and len(r["features"]) == 16 for r in feats)
-    by_id = {r["media_id"]: np.array(r["features"]) for r in feats}
-    # image features really are the 4x4 grayscale grid of the decoded image
-    want0 = codecs.image_features(img_bmp)
-    assert np.allclose(by_id[0], want0, atol=1e-6)
-    # determinism
-    again = {r["media_id"]: r["features"] for r in extract_features(media).collect()}
-    assert {k: tuple(v) for k, v in again.items()} == {
-        k: tuple(v) for k, v in by_id.items()
-    }
-
-    resized = resize_images(media, 16, 8).collect()
-    assert len(resized) == 10  # every image decoded (none dropped)
-    for r in resized:
-        arr = (
-            codecs.decode_bmp(bytes(r["payload"]))
-            if bytes(r["payload"])[:2] == b"BM"
-            else codecs.decode_png(bytes(r["payload"]))
-        )
-        assert arr.shape == (8, 16, 3)
-        assert r["meta"]["width"] == 16 and r["meta"]["height"] == 8
-
-    frames = sample_frames(media, every_ms=100).collect()
-    # 4 frames at 10 fps = 400 ms -> ts 0,100,200,300 per video; 10 videos
-    assert len(frames) == 40
-    f0 = [r for r in frames if r["media_id"] == 2 and r["frame_ts_ms"] == 0][0]
-    assert np.array_equal(codecs.decode_png(bytes(f0["frame"])), frames_arr[0])
-
-    # poisoned payload: NULL features / dropped rows, never a batch failure
-    bad = spark.createDataFrame(
-        [(999, "image", bytearray(b"not an image"), "image/bmp",
-          {"width": 1, "height": 1, "duration_ms": 0})],
-        MEDIA_SCHEMA,
-    )
-    got = extract_features(bad).collect()
-    assert len(got) == 1 and got[0]["features"] is None
-    assert resize_images(bad, 4, 4).count() == 0
-
-
-def test_multimodal_fake_plumbing(spark):
-    """The fake mode (opaque payloads) still exercises the Arrow plumbing
-    for formats outside the stdlib-decodable set."""
-    media = synth_media(spark, 12, real_payloads=False)
-    feats = extract_features(media, decode_mode="fake").collect()
-    assert len(feats) == 12
-    assert all(len(r["features"]) == 16 for r in feats)
-    resized = resize_images(media, 32, 32, decode_mode="fake").collect()
-    assert all(r["meta"]["width"] == 32 for r in resized)
-    assert sample_frames(media, every_ms=500, decode_mode="fake").count() > 0
 
 
 def test_minhash_hot_bucket_capped(spark, docs):
@@ -500,163 +419,6 @@ def test_ivf_knn_recall_and_method_parity(spark, embeddings):
     assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got_mm} == {
         (r["query_id"], r["neighbor_id"], r["rank"]) for r in got
     }
-
-
-def test_codecs_roundtrip_property():
-    """Property-based round-trips for the stdlib media codecs: any image
-    shape / sample count / frame stack must encode+decode bit-exactly
-    (no SparkSession needed — the codecs are pure functions)."""
-    from hypothesis import given, settings, strategies as st
-
-    from parallel_louvain_method_spark.functions import codecs
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        h=st.integers(1, 40), w=st.integers(1, 40), seed=st.integers(0, 2**31)
-    )
-    def roundtrip_images(h, w, seed):
-        rng = np.random.default_rng(seed)
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        assert np.array_equal(codecs.decode_bmp(codecs.encode_bmp(img)), img)
-        assert np.array_equal(codecs.decode_png(codecs.encode_png(img)), img)
-        rgba = rng.integers(0, 256, (h, w, 4), dtype=np.uint8)
-        assert np.array_equal(codecs.decode_png(codecs.encode_png(rgba)), rgba)
-        # same-size bilinear resize is the identity
-        assert np.array_equal(codecs.bilinear_resize(img, w, h), img)
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        n=st.integers(1, 5000),
-        ch=st.integers(1, 2),
-        rate=st.sampled_from([8000, 16000, 44100]),
-        seed=st.integers(0, 2**31),
-    )
-    def roundtrip_audio(n, ch, rate, seed):
-        rng = np.random.default_rng(seed)
-        s = rng.integers(-32768, 32767, (n, ch), dtype=np.int16)
-        dec, got_rate = codecs.decode_wav(codecs.encode_wav(s, rate))
-        assert got_rate == rate and np.array_equal(dec, s)
-
-    @settings(max_examples=15, deadline=None)
-    @given(
-        n=st.integers(1, 6), h=st.integers(1, 24), w=st.integers(1, 24),
-        fps=st.integers(1, 30), seed=st.integers(0, 2**31),
-    )
-    def roundtrip_video(n, h, w, fps, seed):
-        rng = np.random.default_rng(seed)
-        frames = rng.integers(0, 256, (n, h, w, 3), dtype=np.uint8)
-        dec, got_fps = codecs.decode_avi(codecs.encode_avi(frames, fps))
-        assert got_fps == fps and np.array_equal(dec, frames)
-
-    roundtrip_images()
-    roundtrip_audio()
-    roundtrip_video()
-
-
-def test_codecs_malformed_payloads_raise_valueerror():
-    """Per-row poison contract: decoders raise ValueError (and ONLY
-    ValueError) on malformed payloads — the multimodal operators catch
-    exactly that class per row, so a struct.error/zlib.error escaping
-    from a truncated chunk would kill the whole Arrow batch."""
-    from parallel_louvain_method_spark.functions import codecs
-
-    img = np.arange(4 * 5 * 3, dtype=np.uint8).reshape(4, 5, 3)
-    frames = np.arange(2 * 4 * 5 * 3, dtype=np.uint8).reshape(2, 4, 5, 3)
-    payloads = [
-        (codecs.encode_png(img), codecs.decode_png),
-        (codecs.encode_bmp(img), codecs.decode_bmp),
-        (codecs.encode_avi(frames, fps=5), codecs.decode_avi),
-        (codecs.encode_wav(np.zeros(64, np.int16)), codecs.decode_wav),
-    ]
-    for payload, dec in payloads:
-        # every truncation point: decode must return or raise ValueError —
-        # anything else (struct.error, zlib.error, IndexError) propagates
-        # and fails this test
-        for cut in range(0, len(payload), max(1, len(payload) // 40)):
-            try:
-                dec(payload[:cut])
-            except ValueError:
-                pass
-    # the reviewer's exact repro: valid PNG magic, truncated chunk
-    with pytest.raises(ValueError):
-        codecs.decode_png(codecs.encode_png(img)[:20])
-    # valid chunk framing + CRC but a non-zlib IDAT stream
-    bad_idat = (
-        codecs._PNG_MAGIC
-        + codecs._png_chunk(
-            b"IHDR",
-            __import__("struct").pack(">IIBBBBB", 5, 4, 8, 2, 0, 0, 0),
-        )
-        + codecs._png_chunk(b"IDAT", b"not a zlib stream")
-        + codecs._png_chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        codecs.decode_png(bad_idat)
-    # AVI with a length-lying RIFF size walking past the buffer
-    avi = codecs.encode_avi(frames, fps=5)
-    lying = avi[:4] + b"\xff\xff\xff\x7f" + avi[8:]
-    with pytest.raises(ValueError):
-        codecs.decode_avi(lying[: len(lying) - 8])
-
-
-def test_png_all_filters_decode():
-    """decode_png reconstructs all five scanline filters per PNG spec §9.
-    The repo encoder only emits filter 0, so this test filters a known
-    image itself (one filter type per scanline, cycling 0..4) and pins
-    the decode against the original pixels."""
-    import struct
-    import zlib
-
-    from parallel_louvain_method_spark.functions import codecs
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (10, 7, 3), dtype=np.uint8)
-    h, w, ch = img.shape
-    raw = bytearray()
-    for y in range(h):
-        f = y % 5
-        line = img[y].reshape(-1).astype(int)
-        prev = img[y - 1].reshape(-1).astype(int) if y else np.zeros(w * ch, int)
-        raw.append(f)
-        for x in range(w * ch):
-            a = int(line[x - ch]) if x >= ch else 0
-            b = int(prev[x])
-            c = int(prev[x - ch]) if x >= ch else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            raw.append((int(line[x]) - pred) & 0xFF)
-    data = (
-        codecs._PNG_MAGIC
-        + codecs._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + codecs._png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + codecs._png_chunk(b"IEND", b"")
-    )
-    assert np.array_equal(codecs.decode_png(data), img)
-
-
-def test_image_features_exact_dim():
-    """image_features returns exactly dim values for ANY dim (non-square
-    dims were truncated to ⌊√dim⌋² before, misaligning image rows with
-    audio/fake rows of the same requested dim)."""
-    from parallel_louvain_method_spark.functions import codecs
-
-    img = np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3)
-    for dim in (1, 5, 10, 16, 17):
-        feats = codecs.image_features(img, dim)
-        assert feats.shape == (dim,), dim
-    # the default 16 (perfect square) keeps the original 4x4 grid values
-    legacy = codecs.image_features(img, 16)
-    assert legacy.shape == (16,)
 
 
 def test_pyhash_whitespace_parity(spark):
