@@ -2057,7 +2057,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         sym = symmetric_edges(_cc_edges(s, d))
         assign, _deg, _m2, _stats = louvain_level(
-            s, sym, mode="superstep", superstep_engine="sql", max_sweeps=1
+            s, sym, local_threshold=0, superstep_engine="sql", max_sweeps=1
         )
         return assign.select("vtx", "comm")
 
@@ -2075,11 +2075,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         sym = symmetric_edges(_cc_edges(s, d))
         assign, _deg, _m2, _stats = louvain_level(
-            s, sym, mode="superstep", superstep_engine="sql", max_sweeps=1
+            s, sym, local_threshold=0, superstep_engine="sql", max_sweeps=1
         )
         coarse, cmap = coarsen(sym, assign)
         assign2, _, _, _ = louvain_level(
-            s, coarse, mode="superstep", superstep_engine="sql", max_sweeps=1
+            s, coarse, local_threshold=0, superstep_engine="sql", max_sweeps=1
         )
         return (
             assign.join(cmap, "comm")
@@ -2285,7 +2285,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         base = _cc_edges(s, d)
         assign, _deg, _m2, _stats = louvain_level(
-            s, symmetric_edges(base), mode="superstep",
+            s, symmetric_edges(base), local_threshold=0,
             superstep_engine="sql", max_sweeps=1,
         )
         return refine_communities(base, assign.select("vtx", "comm"))
@@ -2433,7 +2433,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         base = _cc_edges(s, d)
         assign, _deg, _m2, _stats = louvain_level(
-            s, symmetric_edges(base), mode="superstep",
+            s, symmetric_edges(base), local_threshold=0,
             superstep_engine="sql", max_sweeps=1,
         )
         blocks = assign.select(

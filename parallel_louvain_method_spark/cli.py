@@ -61,11 +61,12 @@ def main(argv: list[str] | None = None) -> int:
         "else sql; sql also when barrier scheduling is unavailable)",
     )
     lv.add_argument(
-        "--mode",
-        choices=["auto", "local", "superstep"],
-        default="auto",
-        help="level execution mode (auto: local below the edge threshold, "
-        "superstep above — superstep forces the distributed path)",
+        "--local-threshold",
+        type=int,
+        default=1_500_000,
+        help="a level of at most this many symmetric edge rows runs in the "
+        "driver, a larger one on the superstep engine (0: every non-empty "
+        "level on the superstep engine)",
     )
     lv.add_argument(
         "--refine-levels",
@@ -716,7 +717,7 @@ def main(argv: list[str] | None = None) -> int:
             anneal=args.anneal,
             checkpoint_dir=args.checkpoint,
             resume=args.resume,
-            mode=args.mode,
+            local_threshold=args.local_threshold,
             superstep_engine=args.engine,
             skew_salt=args.skew_salt,
             refine_levels=args.refine_levels,

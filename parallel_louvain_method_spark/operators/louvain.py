@@ -8,7 +8,11 @@ an immutable edge table, with community totals recomputed by aggregation
 recompute is order-free and shuffle-parallel) and a zero-move sweep as the
 convergence signal (src/community.cpp:98).
 
-A level picks one of three execution strategies:
+A level runs one of three execution strategies.  ``local_threshold`` is
+the one switch between local and superstep (0 sends every non-empty
+level to the superstep engine, a value above every level's row count
+keeps every level local); ``superstep_engine="auto"`` picks the
+superstep engine from the level's vertex count and id density.
 
 1. **local** (≤ ``local_threshold`` symmetric rows): the whole level runs
    in the driver — ``local/sequential`` (≤ ``SEQUENTIAL_THRESHOLD``) is
@@ -68,7 +72,7 @@ from pyspark.storagelevel import StorageLevel
 from parallel_louvain_method_spark.functions import bsp, kernels
 from parallel_louvain_method_spark.operators.graph import (
     degrees as degrees_op,
-    symmetric_edges,
+    vertex_ids,
 )
 from parallel_louvain_method_spark.plans import strategy
 from parallel_louvain_method_spark.plans.strategy import small_side
@@ -844,94 +848,99 @@ def louvain_level(
     max_sweeps: int = 100,
     anneal: bool = False,
     level_no: int = 0,
-    mode: str = "auto",
     local_threshold: int = 1_500_000,
     min_moves_frac: float = MIN_MOVES_FRAC,
     superstep_engine: str = "auto",
-    n_vertices_hint: int | None = None,
-    dense_hint: bool | None = None,
-    pre_partitioned: str | None = None,
-    unique_pairs: bool = False,
     skew_salt: int = 0,
 ) -> tuple[DataFrame, DataFrame, float, LevelStats]:
     """One Louvain level.  Returns (assign, deg, m2_used, stats).  The
     barrier and local engines end in the driver, so their ``assign`` (and
     the barrier engine's ``deg``) is a DataFrame over driver arrays, built
-    without a Spark job.
+    without a Spark job; elsewhere ``deg`` is a lazy DataFrame.
 
-    ``sym_edges`` must already be symmetric + deduped.  ``unique_pairs``
-    declares the stronger invariant that (src, dst) is UNIQUE (parallel
-    edges already weight-summed — coarsen output and the multilevel
-    driver's level-0 build both guarantee it); it only enables the sql
-    engine's sweep-0 aggregation skip, never changes semantics, and must
-    stay False for raw set-deduped input where parallel edges with
-    distinct weights survive.  ``m2`` defaults to
+    ``sym_edges`` must already be symmetric + deduped; parallel edges with
+    distinct weights may remain and their weights sum.  ``m2`` defaults to
     Σ degree = total symmetric weight, which equals the reference's
     ``2·ecount`` on unit-weight simple graphs (SURVEY.md §1.5) and is the
-    standard 2m on weighted/coarse graphs.
+    standard 2m on weighted/coarse graphs.  The level first runs the
+    vertex check :func:`louvain` runs on its input (one aggregation over
+    the distinct vertex set): its count and id density feed the engine
+    choice.
 
-    ``n_vertices_hint`` / ``dense_hint``: the multilevel driver always
-    knows both (level 0 runs after its own dense check / renumber; coarse
-    graphs are dense 0..k-1 by construction), which reduces level setup to
-    ONE count+sum scan of the (checkpointed) symmetric table — the degree
-    table is then computed by whichever engine runs, on its own cached
-    partitioning.  Direct callers may omit them.
-
-    ``mode``:
-    - ``"superstep"`` — bulk-synchronous supersteps on the engine that
-      ``superstep_engine`` names: ``"barrier"`` (whole level in one barrier
-      stage; needs dense ids and per-vertex state under
+    ``local_threshold`` picks where the level runs:
+    - at most ``local_threshold`` symmetric rows — the whole level runs to
+      convergence in the driver.  At or below ``SEQUENTIAL_THRESHOLD``
+      rows it uses the reference-sequential kernel (ascending visit order
+      — the golden-test semantics); above, the whole-graph vectorized
+      numpy loop.  No Spark job per sweep — per-job overhead dominates
+      below ~10^6 edges, and coarsening shrinks every real graph into
+      this regime after a level or two;
+    - more rows — bulk-synchronous supersteps on the engine that
+      ``superstep_engine`` names: ``"barrier"`` (whole level in one
+      barrier stage; needs dense ids 0..n-1 and per-vertex state under
       ``strategy.BARRIER_VERTICES``), ``"sql"`` (pure DataFrame sweeps),
       or ``"auto"`` (barrier while it fits and no task holds more than
       ``strategy.BARRIER_ROWS_PER_TASK`` rows, else sql).  Whenever the
-      barrier engine does not fit or cannot be scheduled the level runs on sql; a
-      worker-side error inside the barrier stage propagates;
-    - ``"local"`` — the whole level runs to convergence in the driver.
-      At or below ``SEQUENTIAL_THRESHOLD`` symmetric rows it uses the
-      reference-sequential kernel (ascending visit order — the
-      golden-test semantics); above, the whole-graph vectorized numpy
-      loop.  No Spark job per sweep — per-job overhead dominates below
-      ~10^6 edges, and coarsening shrinks every real graph into this regime
-      after a level or two;
-    - ``"auto"`` — local iff the symmetric table has ≤ ``local_threshold``
-      rows.
+      barrier engine does not fit or cannot be scheduled the level runs
+      on sql; a worker-side error inside the barrier stage propagates.
+
+    ``local_threshold=0`` therefore sends every non-empty level to the
+    superstep engine.
     """
+    n_vertices, dense = _vertex_check(sym_edges)
     assign, deg, m2, stats, _ = _level(
-        spark, sym_edges, m2=m2, max_sweeps=max_sweeps, anneal=anneal,
-        level_no=level_no, mode=mode, local_threshold=local_threshold,
-        min_moves_frac=min_moves_frac, superstep_engine=superstep_engine,
-        n_vertices_hint=n_vertices_hint, dense_hint=dense_hint,
-        pre_partitioned=pre_partitioned, unique_pairs=unique_pairs,
-        skew_salt=skew_salt,
+        spark, sym_edges, n_vertices=n_vertices, dense=dense, m2=m2,
+        max_sweeps=max_sweeps, anneal=anneal, level_no=level_no,
+        local_threshold=local_threshold, min_moves_frac=min_moves_frac,
+        superstep_engine=superstep_engine, skew_salt=skew_salt,
     )
     return _frame(spark, assign), _frame(spark, deg, DEGREE_SCHEMA), m2, stats
+
+
+def _vertex_check(edges: DataFrame) -> tuple[int, bool]:
+    """The distinct vertex count of ``edges`` and whether its ids are
+    dense, exactly 0..n-1: max == n-1 AND min >= 0 (a negative id can hide
+    behind a matching max, e.g. {-1, 0, 1, 3}, and would wrap numpy
+    indexing in the barrier engine).  One aggregation over the distinct
+    vertex set; an empty graph counts as dense."""
+    row = vertex_ids(edges).agg(F.count("*"), F.max("v"), F.min("v")).first()
+    n = int(row[0] or 0)
+    return n, row[1] is None or (int(row[1]) == n - 1 and int(row[2]) >= 0)
 
 
 def _level(
     spark: SparkSession,
     sym_edges: DataFrame,
     *,
+    n_vertices: int,
+    dense: bool,
     m2: float | None,
     max_sweeps: int,
     anneal: bool,
     level_no: int,
-    mode: str,
     local_threshold: int,
     min_moves_frac: float,
     superstep_engine: str,
-    n_vertices_hint: int | None,
-    dense_hint: bool | None,
-    pre_partitioned: str | None,
-    unique_pairs: bool,
     skew_salt: int,
+    pre_partitioned: str | None = None,
+    unique_pairs: bool = False,
 ) -> tuple:
-    """:func:`louvain_level`, except that the engines that end in the
-    driver hand back driver arrays instead of DataFrames: the barrier and
-    local engines return ``assign`` as a ``(vtx, comm)`` array pair, and
-    the barrier engine ``deg`` as ``(vtx, degree)``; :func:`_frame` turns
-    either form into a DataFrame.  The fifth value, None on sql, is their
-    edges under the final labels, ``(src_comm, dst_comm, weight)``, from
-    which :func:`louvain` sums the next level's graph."""
+    """:func:`louvain_level` on a graph of ``n_vertices`` vertices whose
+    ids are ``dense`` 0..n-1 or not, except that the engines that end in
+    the driver hand back driver arrays instead of DataFrames: the barrier
+    and local engines return ``assign`` as a ``(vtx, comm)`` array pair,
+    and the barrier engine ``deg`` as ``(vtx, degree)``; :func:`_frame`
+    turns either form into a DataFrame.  The fifth value, None on sql, is
+    their edges under the final labels, ``(src_comm, dst_comm, weight)``,
+    from which :func:`louvain` sums the next level's graph.
+
+    Two more facts only :func:`louvain` knows about its own tables:
+    ``pre_partitioned`` names the key (``"src"`` or ``"dst"``) ``sym_edges``
+    is already partitioned and cached on, which saves the engine that
+    needs that key its exchange; ``unique_pairs`` declares that (src, dst)
+    is unique (parallel edges weight-summed, as level 0's build and every
+    coarsen guarantee), which lets the sql engine skip sweep 0's
+    aggregation.  Neither changes the result."""
     if superstep_engine not in SUPERSTEP_ENGINES:
         raise ValueError(
             f"superstep_engine must be one of {SUPERSTEP_ENGINES}, "
@@ -941,48 +950,15 @@ def _level(
     spark_parts = int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    if n_vertices_hint is not None and dense_hint is not None:
-        # hinted path: ONE count+sum scan for m2 + row count; no degree
-        # shuffle here — each engine derives degrees on its own partitioning
-        row = sym_edges.agg(F.count("*"), F.sum("weight")).first()
-        n_edges_sym = int(row[0] or 0)
-        if m2 is None:
-            m2 = float(row[1] or 0.0)
-        n_vertices = int(n_vertices_hint)
-        is_dense = bool(dense_hint)
-        deg: DataFrame | None = None
-    else:
-        # ONE shuffle + ONE tiny aggregation yields every statistic the
-        # strategy decision needs — n_vertices, m2 (= Σ degree), max id
-        # (dense check) and the symmetric row count (Σ per-vertex adjacency
-        # counts).  Separate full-table jobs here were several serial
-        # seconds that no executor count can parallelize away.
-        deg_full = (
-            sym_edges.groupBy(F.col("src").alias("vtx"))
-            .agg(F.sum("weight").alias("degree"), F.count("*").alias("_adj"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        row = deg_full.agg(
-            F.count("*"), F.sum("degree"), F.max("vtx"), F.sum("_adj"),
-            F.min("vtx"),
-        ).first()
-        n_vertices = int(row[0] or 0)
-        if m2 is None:
-            m2 = float(row[1] or 0.0)
-        max_id = row[2]
-        n_edges_sym = int(row[3] or 0)
-        # dense = ids exactly 0..n-1; the min >= 0 clause stops negative ids
-        # (which satisfy the max check, e.g. {-1,0,1,3}) from reaching the
-        # numpy-indexing engines
-        is_dense = (
-            max_id is not None
-            and int(max_id) == n_vertices - 1
-            and int(row[4]) >= 0
-        )
-        deg = deg_full.select("vtx", "degree")
+    # ONE count+sum scan for the row count and m2; no degree shuffle here —
+    # each engine derives degrees on its own partitioning
+    row = sym_edges.agg(F.count("*"), F.sum("weight")).first()
+    n_edges_sym = int(row[0] or 0)
+    if m2 is None:
+        m2 = float(row[1] or 0.0)
     stats = LevelStats(level=level_no, n_vertices=n_vertices, n_edges_sym=n_edges_sym)
 
-    if _runs_local(mode, n_edges_sym, local_threshold):
+    if n_edges_sym <= local_threshold:
         # the kernel runs in the driver on one Arrow toPandas; it sorts
         # internally, so the arrival order of the rows does not matter
         pdf = sym_edges.select("src", "dst", "weight").toPandas()
@@ -991,9 +967,8 @@ def _level(
             m2, max_sweeps, anneal, stats,
         )
         stats.wall_sec = time.monotonic() - t0
-        if deg is None:
-            deg = degrees_op(sym_edges)  # lazy; callers rarely consume it
-        return assign, deg, m2, stats, labelled
+        # lazy; callers rarely consume it
+        return assign, degrees_op(sym_edges), m2, stats, labelled
 
     # Engine auto-selection (the same broadcast-vs-shuffle decision Catalyst
     # makes for dimension tables): while per-vertex state fits executor
@@ -1011,7 +986,7 @@ def _level(
     # memory" rule as the vertex limit.
     engine = superstep_engine
     if engine in ("auto", "barrier"):
-        fits = is_dense and n_vertices <= strategy.BARRIER_VERTICES
+        fits = dense and n_vertices <= strategy.BARRIER_VERTICES
         if engine == "auto":
             n_parts_eff = max(
                 1, min(spark_parts, spark.sparkContext.defaultParallelism)
@@ -1053,31 +1028,34 @@ def _level(
     # CALLER already built the table partitioned+cached on dst
     # (pre_partitioned — the multilevel driver does at level 0), skipping
     # the repartition here saves one full exchange + duplicate cache of the
-    # biggest table of the run.
+    # biggest table of the run.  The caches this level makes are released
+    # once Q is computed: the returned assignment is checkpointed, and the
+    # returned degree table is lazy.
+    cached = []
+    edges_p = sym_edges
     if pre_partitioned != "dst":
-        sym_edges = sym_edges.repartition(spark_parts, "dst").persist(
+        edges_p = sym_edges.repartition(spark_parts, "dst").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-    if deg is None:
-        deg = degrees_op(sym_edges).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # pure-SQL supersteps: broadcast-hash-join the small state onto the
-    # edges, codegen'd gain/argmax, one partial-agg shuffle per sweep —
-    # the edge table never moves and no Python touches it
-    assign = _sql_superstep_level(
-        spark, sym_edges, deg, m2, n_vertices,
-        max_sweeps, anneal, stats, min_moves_frac,
-        unique_pairs=unique_pairs, skew_salt=skew_salt,
-    )
+        cached.append(edges_p)
+    deg = degrees_op(edges_p).persist(StorageLevel.MEMORY_AND_DISK)
+    cached.append(deg)
+    try:
+        # pure-SQL supersteps: broadcast-hash-join the small state onto the
+        # edges, codegen'd gain/argmax, one partial-agg shuffle per sweep —
+        # the edge table never moves and no Python touches it
+        assign = _sql_superstep_level(
+            spark, edges_p, deg, m2, n_vertices,
+            max_sweeps, anneal, stats, min_moves_frac,
+            unique_pairs=unique_pairs, skew_salt=skew_salt,
+        )
+        stats.modularity = modularity_df(edges_p, assign, deg, m2)
+    finally:
+        for df in cached:
+            df.unpersist()
     stats.engine = "sql"
-    stats.modularity = modularity_df(sym_edges, assign, deg, m2)
     stats.wall_sec = time.monotonic() - t0
-    return assign, deg, m2, stats, None
-
-
-def _runs_local(mode: str, n_edges_sym: int, local_threshold: int) -> bool:
-    """Does :func:`louvain_level`'s ``mode`` rule run the level locally?"""
-    return mode == "local" or (mode == "auto" and n_edges_sym <= local_threshold)
+    return assign, degrees_op(sym_edges), m2, stats, None
 
 
 def _local_level(
@@ -1176,7 +1154,6 @@ def louvain(
     anneal: bool = False,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    mode: str = "auto",
     local_threshold: int = 1_500_000,
     superstep_engine: str = "auto",
     n_vertices: int | None = None,
@@ -1219,10 +1196,13 @@ def louvain(
     reference's unimplemented TODO, src/distcommunity.cpp:899);
     checkpointing does not change the coarsen path.
 
-    ``skew_salt > 1`` enables explicit salting of the sql engine's
-    per-sweep state⋈totals join (the one join in the engine keyed by
-    community id, hence the one a mega-community skews) — see
-    :func:`_sql_sweep_loop`'s Skew note for the mechanics and cost model.
+    ``local_threshold`` and ``superstep_engine`` pick each level's engine
+    by :func:`louvain_level`'s rules; ``local_threshold=0`` runs every
+    non-empty level on the superstep engine.  ``skew_salt > 1`` enables
+    explicit salting of the sql engine's per-sweep state⋈totals join (the
+    one join in the engine keyed by community id, hence the one a
+    mega-community skews) — see :func:`_sql_sweep_loop`'s Skew note for
+    the mechanics and cost model.
 
     ``n_vertices`` + ``assume_dense=True`` skip the level-0 dense-id check
     (one count-distinct over the full vertex set) when the PRODUCER
@@ -1253,20 +1233,12 @@ def louvain(
     # renumber is needed it rewrites the RAW edge table (half the rows of
     # the symmetric one) and symmetrizes afterwards — renumbering is a
     # bijection, so the two orders commute.
-    from parallel_louvain_method_spark.operators.graph import vertex_ids
-
     restore_map: DataFrame | None = None
     if assume_dense and n_vertices is not None:
         n_verts = int(n_vertices)
     else:
-        vrow = vertex_ids(edges).agg(F.count("*"), F.max("v"), F.min("v")).first()
-        n_verts = int(vrow[0] or 0)
-        # dense means ids are EXACTLY 0..n-1: max == n-1 AND min >= 0 (a
-        # negative id can hide behind a matching max and would wrap numpy
-        # indexing in the barrier engine)
-        if vrow[1] is not None and (
-            int(vrow[1]) != n_verts - 1 or int(vrow[2]) < 0
-        ):
+        n_verts, dense = _vertex_check(edges)
+        if not dense:
             from parallel_louvain_method_spark.operators.graph import renumber_edges
 
             edges, restore_map = renumber_edges(edges)
@@ -1301,12 +1273,12 @@ def louvain(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     level0_cache: DataFrame | None = sym
-    pre_part: str | None = part_key
 
-    # hints for louvain_level: entering level 0 the ids are dense (just
-    # renumbered or verified); each coarsen emits dense 0..k-1 ids, k from
-    # its renumber map — so every level skips its own stats shuffle
-    nv_hint: int | None = n_verts
+    # the level's vertex count and id density: entering level 0 the ids
+    # are dense (just renumbered or verified); each coarsen emits dense
+    # 0..k-1 ids, k from its renumber map; a level loaded on resume gets
+    # the vertex check level 0's input had
+    nv, dense = n_verts, True
 
     if checkpoint_dir and resume:
         lvl = latest_level(spark, checkpoint_dir)
@@ -1314,18 +1286,17 @@ def louvain(
             sym, flat, meta = load_level(spark, checkpoint_dir, lvl)
             q_prev = meta["modularity"]
             start_level = lvl + 1
-            nv_hint = None  # unknown from the checkpoint; level re-derives
-            pre_part = None
+            nv, dense = _vertex_check(sym)
 
     final_q = q_prev if q_prev != -math.inf else float("nan")
     # the level's graph as driver arrays (src, dst, weight); ``sym`` is
     # stale while it is set
     sym_np: tuple | None = None
     for level_no in range(start_level, max_levels):
-        if sym_np is not None and _runs_local(mode, len(sym_np[0]), local_threshold):
+        if sym_np is not None and len(sym_np[0]) <= local_threshold:
             # the kernel runs straight on the arrays: no Spark job
             t0 = time.monotonic()
-            stats = LevelStats(level_no, nv_hint, len(sym_np[0]))
+            stats = LevelStats(level_no, nv, len(sym_np[0]))
             m2 = float(sym_np[2].sum())
             assign, labelled = _local_level(sym_np, m2, max_sweeps, anneal, stats)
             stats.wall_sec = time.monotonic() - t0
@@ -1335,22 +1306,22 @@ def louvain(
             assign, deg, m2, stats, labelled = _level(
                 spark,
                 sym,
+                n_vertices=nv,
+                dense=dense,
                 m2=None,
                 min_moves_frac=MIN_MOVES_FRAC,
                 max_sweeps=max_sweeps,
                 anneal=anneal,
                 level_no=level_no,
-                mode=mode,
                 local_threshold=local_threshold,
                 superstep_engine=superstep_engine,
-                n_vertices_hint=nv_hint,
-                dense_hint=True if nv_hint is not None else None,
-                pre_partitioned=pre_part if level_no == start_level else None,
+                skew_salt=skew_salt,
+                # only the level-0 build above is partitioned on a key
+                pre_partitioned=part_key if level_no == 0 else None,
                 # level 0 collapsed parallel edges above; coarsen's groupBy
                 # guarantees it for every later level (and for checkpointed
                 # tables, which this driver wrote from one of the two)
                 unique_pairs=True,
-                skew_salt=skew_salt,
             )
         # Coarsen.  At or under the budget that admits the barrier engine
         # the community renumber is np.unique (sorted distinct = dense_ids'
@@ -1392,7 +1363,7 @@ def louvain(
             av = assign[0]
             uniq, newc = np.unique(assign[1], return_inverse=True)
             newc = newc.astype(np.int64)
-            nv_hint = len(uniq)
+            nv = len(uniq)
             if labelled is None:
                 amap = _frame(spark, (av, newc))
                 coarse = _coarse_edges(sym, amap, n_level)
@@ -1403,10 +1374,11 @@ def louvain(
                     np.searchsorted(uniq, ls), np.searchsorted(uniq, ld), lw
                 )
         else:
-            amap, _, nv_hint = _dense_comm_map(_frame(spark, assign))
+            amap, _, nv = _dense_comm_map(_frame(spark, assign))
             # computed once: it feeds both coarse-edge joins and the flat
             amap = fresh_checkpoint(amap)
             coarse = _coarse_edges(sym, amap, n_level)
+        dense = True  # the coarse ids are 0..nv-1
         # the flat stays in numpy while it is (level 0 ran in this call
         # under the budget; levels only shrink, so every later map is a
         # numpy one too), composed through a lookup table; otherwise —

@@ -60,7 +60,7 @@ def test_golden16_barrier_engine(spark, golden16_df):
     tasks (assignment covers every vertex exactly once)."""
     sym = G.symmetric_edges(golden16_df)
     assign, deg, m2, stats = louvain_level(
-        spark, sym, mode="superstep", superstep_engine="barrier"
+        spark, sym, local_threshold=0, superstep_engine="barrier"
     )
     assert m2 == pytest.approx(56.0)
     assert stats.moves_per_sweep[-1] == 0
@@ -130,14 +130,14 @@ def test_louvain_presymmetrized_input_parity(spark, golden16_df):
     b = {r["vtx"]: r["comm"] for r in skip.assignment.collect()}
     assert a == b
     # the distributed paths read the same level-0 cache; compare against
-    # the raw-input run of the SAME mode/engine (superstep's visit order
-    # differs from local mode's, so cross-mode Q equality is not the
-    # invariant)
+    # the raw-input run of the SAME threshold/engine (superstep's visit
+    # order differs from the local kernel's, so cross-engine Q equality is
+    # not the invariant)
     for eng in ("auto", "sql"):
         base_ss = louvain(
-            spark, golden16_df, mode="superstep", superstep_engine=eng
+            spark, golden16_df, local_threshold=0, superstep_engine=eng
         )
-        skip_ss = louvain(spark, pre, mode="superstep", superstep_engine=eng)
+        skip_ss = louvain(spark, pre, local_threshold=0, superstep_engine=eng)
         assert skip_ss.modularity == pytest.approx(
             base_ss.modularity, abs=1e-9
         ), eng
@@ -170,6 +170,10 @@ def test_checkpoint_resume(spark, golden16_df, tmp_path):
         assert latest_level(spark, str(ck)) == k - 1
         res2 = louvain(spark, golden16_df, checkpoint_dir=str(ck), resume=True)
         assert res2.levels[0].level == k
+        # the loaded level gets the vertex check: same engine, same count
+        assert [(lv.engine, lv.n_vertices) for lv in res2.levels] == [
+            (lv.engine, lv.n_vertices) for lv in res1.levels[k:]
+        ], k
         assert abs(res2.modularity - res1.modularity) <= 1e-9, k
         assert _partition(res2) == _partition(res1), k
         assert latest_level(spark, str(ck)) == last
@@ -234,7 +238,7 @@ def test_barrier_partial_sums_match_coarsen(spark, golden16_df, monkeypatch, gra
     # the driver's call only: the barrier tasks import their own module
     monkeypatch.setattr(kernels, "pair_sums", kept)
     edges = golden16_df if graph == "golden16" else _planted_ring(spark)
-    res = louvain(spark, edges, mode="superstep", max_levels=1)
+    res = louvain(spark, edges, local_threshold=0, max_levels=1)
     assert res.levels[0].engine == "barrier"
     assert n_tasks and n_tasks[0] >= 2, n_tasks
     assert len(driver_sums) == 1
@@ -331,7 +335,7 @@ def test_golden16_engine_matrix(spark, golden16_df, engine):
     sparse/overflow graphs and is the barrier fallback)."""
     sym = G.symmetric_edges(golden16_df)
     assign, deg, m2, stats = louvain_level(
-        spark, sym, mode="superstep", superstep_engine=engine
+        spark, sym, local_threshold=0, superstep_engine=engine
     )
     assert m2 == pytest.approx(56.0)
     assert stats.moves_per_sweep[-1] == 0  # converged, not capped
@@ -348,7 +352,7 @@ def test_barrier_engine_deterministic(spark, golden16_df):
     runs = []
     for _ in range(2):
         assign, _, _, _ = louvain_level(
-            spark, sym, mode="superstep", superstep_engine="barrier"
+            spark, sym, local_threshold=0, superstep_engine="barrier"
         )
         runs.append(sorted((r["vtx"], r["comm"]) for r in assign.collect()))
     assert runs[0] == runs[1]
@@ -374,19 +378,32 @@ def test_barrier_error_classification_unit():
     assert _is_worker_python_error(kern)
 
 
+def _run_level(spark, sym, **kw):
+    """``_level`` with :func:`louvain_level`'s defaults, its vertex check
+    and the superstep engines; ``kw`` overrides any of them."""
+    from parallel_louvain_method_spark.operators import louvain as lv
+
+    n, dense = lv._vertex_check(sym)
+    args = dict(
+        n_vertices=n, dense=dense, m2=None, max_sweeps=100, anneal=False,
+        level_no=0, local_threshold=0, min_moves_frac=lv.MIN_MOVES_FRAC,
+        superstep_engine="auto", skew_salt=0,
+    )
+    return lv._level(spark, sym, **{**args, **kw})
+
+
 def test_barrier_kernel_error_propagates(spark, golden16_df, capfd):
-    """A worker-side bug inside the barrier stage (injected: an n_vertices
-    hint too small for the real id range -> out-of-bounds numpy indexing)
+    """A worker-side bug inside the barrier stage (injected: a vertex
+    count too small for the real id range -> out-of-bounds numpy indexing)
     must RAISE, not silently rerun on the sql fallback."""
     sym = G.symmetric_edges(golden16_df)
     with pytest.raises(Exception):
-        louvain_level(
+        _run_level(
             spark,
             sym,
-            mode="superstep",
             superstep_engine="barrier",
-            n_vertices_hint=4,  # graph really has 16 vertices
-            dense_hint=True,
+            n_vertices=4,  # graph really has 16 vertices
+            dense=True,
         )
     err = capfd.readouterr().err
     assert "falling back" not in err
@@ -402,7 +419,7 @@ def test_barrier_probe_failed_falls_back_to_sql(
 
     monkeypatch.setitem(_BARRIER_PROBED, spark.sparkContext.applicationId, False)
     sym = G.symmetric_edges(golden16_df)
-    assign, deg, m2, stats = louvain_level(spark, sym, mode="superstep")
+    assign, deg, m2, stats = louvain_level(spark, sym, local_threshold=0)
     assert stats.engine == "sql"
     assert stats.moves_per_sweep[-1] == 0
     assert stats.modularity >= 0.25
@@ -414,7 +431,7 @@ def test_barrier_probe_failed_falls_back_to_sql(
 def test_louvain_rejects_unknown_engine(spark, golden16_df):
     sym = G.symmetric_edges(golden16_df)
     with pytest.raises(ValueError, match="superstep_engine"):
-        louvain_level(spark, sym, mode="superstep", superstep_engine="block")
+        louvain_level(spark, sym, local_threshold=0, superstep_engine="block")
 
 
 def test_louvain_engine_cutover_and_telemetry(spark, golden16_df, monkeypatch):
@@ -423,18 +440,18 @@ def test_louvain_engine_cutover_and_telemetry(spark, golden16_df, monkeypatch):
     telemetry records which strategy ran each level."""
     with monkeypatch.context() as m:
         m.setattr(strategy, "BARRIER_VERTICES", 4)  # golden16 has 16 > 4
-        res = louvain(spark, golden16_df, mode="superstep")
+        res = louvain(spark, golden16_df, local_threshold=0)
     assert res.levels[0].engine == "sql"
     assert res.modularity >= 0.25
     assert res.assignment.count() == 16
     # below the limit auto picks barrier again (both directions tested)
-    res2 = louvain(spark, golden16_df, mode="superstep")
+    res2 = louvain(spark, golden16_df, local_threshold=0)
     assert res2.levels[0].engine == "barrier"
     # the PER-TASK adjacency gate also cuts over to sql: a barrier task
     # materializes its whole partition in worker memory, so rows/task —
     # not total edges — is the binding constraint
     monkeypatch.setattr(strategy, "BARRIER_ROWS_PER_TASK", 2)
-    res3 = louvain(spark, golden16_df, mode="superstep")
+    res3 = louvain(spark, golden16_df, local_threshold=0)
     assert res3.levels[0].engine == "sql"
     assert res3.modularity >= 0.25
 
@@ -456,6 +473,50 @@ def test_checkpoint_metrics_record_engine(spark, golden16_df, tmp_path):
         assert metrics.get("engine"), metrics
 
 
+def test_louvain_level_negative_ids_run_sql(spark, monkeypatch):
+    """``louvain_level`` on ids {-1, 0, 1, 3} (n=4, max=3: the max check
+    alone calls them dense) runs the sql engine, never the barrier one,
+    and assigns all four ids."""
+    from parallel_louvain_method_spark.operators import louvain as lv
+
+    def no_barrier(*a, **kw):
+        raise AssertionError("barrier engine on sparse ids")
+
+    monkeypatch.setattr(lv, "_barrier_superstep_level", no_barrier)
+    edges = spark.createDataFrame(
+        [(-1, 0, 1.0), (0, 1, 1.0), (1, 3, 1.0), (3, -1, 1.0)],
+        "src long, dst long, weight double",
+    )
+    assign, _, _, stats = louvain_level(
+        spark, G.symmetric_edges(edges), local_threshold=0
+    )
+    assert stats.engine == "sql"
+    assert stats.n_vertices == 4
+    assert {r["vtx"] for r in assign.collect()} == {-1, 0, 1, 3}
+
+
+def test_sql_engine_releases_its_caches(spark, golden16_df):
+    """The sql engine persists the dst-partitioned edge table and its
+    degree table for its sweeps and releases both once Q is computed:
+    neither a ``louvain`` run nor a ``louvain_level`` call leaves a
+    persisted cache behind, and the returned tables still read."""
+    from tests.test_algos import _persisted_caches
+
+    before = _persisted_caches(spark)
+    res = louvain(spark, golden16_df, local_threshold=0, superstep_engine="sql")
+    assert [lv.engine for lv in res.levels] == ["sql"] * len(res.levels)
+    assert len(res.levels) >= 2, res.levels
+    assert _persisted_caches(spark) == before
+    assign, deg, _, stats = louvain_level(
+        spark, G.symmetric_edges(golden16_df), local_threshold=0,
+        superstep_engine="sql",
+    )
+    assert stats.engine == "sql"
+    assert _persisted_caches(spark) == before
+    assert assign.count() == 16 and deg.count() == 16
+    assert res.assignment.count() == 16
+
+
 def test_louvain_negative_ids_renumbered(spark):
     """Negative vertex ids pass the old max==n-1 dense check ({-1,0,1,3}:
     n=4, max=3) but must NOT reach the numpy-indexing engines; louvain
@@ -464,7 +525,7 @@ def test_louvain_negative_ids_renumbered(spark):
         [(-1, 0, 1.0), (0, 1, 1.0), (1, 3, 1.0), (3, -1, 1.0)],
         "src long, dst long, weight double",
     )
-    res = louvain(spark, edges, mode="superstep")
+    res = louvain(spark, edges, local_threshold=0)
     rows = {r["vtx"] for r in res.assignment.collect()}
     assert rows == {-1, 0, 1, 3}
 
@@ -492,9 +553,9 @@ def test_sql_engine_quality_parity_planted(spark):
             edges.append((min(a, b), max(a, b), 1.0))
     df = spark.createDataFrame(edges, "src long, dst long, weight double")
 
-    res_seq = louvain(spark, df, mode="local")
+    res_seq = louvain(spark, df, local_threshold=10**9)
     res_sql = louvain(
-        spark, df, mode="superstep", superstep_engine="sql", max_sweeps=15
+        spark, df, local_threshold=0, superstep_engine="sql", max_sweeps=15
     )
     assert res_sql.levels[0].engine == "sql"
     assert res_sql.modularity >= res_seq.modularity - 0.03, (
@@ -511,10 +572,10 @@ def test_sql_engine_skew_salt_parity(spark, golden16_df):
     AND a hub-heavy star-of-cliques where one community absorbs most
     vertices (the skew shape the salt exists for)."""
     base = louvain(
-        spark, golden16_df, mode="superstep", superstep_engine="sql"
+        spark, golden16_df, local_threshold=0, superstep_engine="sql"
     )
     salted = louvain(
-        spark, golden16_df, mode="superstep", superstep_engine="sql",
+        spark, golden16_df, local_threshold=0, superstep_engine="sql",
         skew_salt=4,
     )
     assert salted.modularity == pytest.approx(base.modularity, abs=EPS)
@@ -541,11 +602,11 @@ def test_sql_engine_skew_salt_parity(spark, golden16_df):
     )
     hub = star.union(ring)
     a0, _, _, s0 = louvain_level(
-        spark, G.symmetric_edges(hub), mode="superstep",
+        spark, G.symmetric_edges(hub), local_threshold=0,
         superstep_engine="sql", max_sweeps=6,
     )
     a4, _, _, s4 = louvain_level(
-        spark, G.symmetric_edges(hub), mode="superstep",
+        spark, G.symmetric_edges(hub), local_threshold=0,
         superstep_engine="sql", max_sweeps=6, skew_salt=4,
     )
     assert s4.moves_per_sweep == s0.moves_per_sweep
@@ -581,7 +642,7 @@ def test_sql_engine_end_to_end_past_cutover(spark):
     res = louvain(
         spark,
         intra.union(ring),
-        mode="superstep",
+        local_threshold=0,
         superstep_engine="sql",
         max_sweeps=8,
     )
@@ -626,13 +687,13 @@ def test_multigraph_parallel_edges_sum(spark, golden16_df):
     sym_sum = sym_multi.groupBy("src", "dst").agg(
         F.sum("weight").alias("weight")
     )
-    a_fast, _, _, _ = louvain_level(
-        spark, sym_sum, mode="superstep", superstep_engine="sql",
-        max_sweeps=1, unique_pairs=True,
+    a_fast, _, _, _, _ = _run_level(
+        spark, sym_sum, superstep_engine="sql", max_sweeps=1,
+        unique_pairs=True,
     )
-    a_agg, _, _, _ = louvain_level(
-        spark, sym_multi, mode="superstep", superstep_engine="sql",
-        max_sweeps=1, unique_pairs=False,
+    a_agg, _, _, _, _ = _run_level(
+        spark, sym_multi, superstep_engine="sql", max_sweeps=1,
+        unique_pairs=False,
     )
     fast = {r["vtx"]: r["comm"] for r in a_fast.collect()}
     agg = {r["vtx"]: r["comm"] for r in a_agg.collect()}
@@ -677,7 +738,7 @@ def test_barrier_transport_death_midlevel_retries_on_allgather(
     sym = G.symmetric_edges(golden16_df)
     t0 = time.monotonic()
     assign, deg, m2, stats = louvain_level(
-        spark, sym, mode="superstep", superstep_engine="barrier"
+        spark, sym, local_threshold=0, superstep_engine="barrier"
     )
     wall = time.monotonic() - t0
     assert wall < 300.0, wall
@@ -708,7 +769,7 @@ def test_barrier_unreachable_hub_reruns_on_coordinator(
 
     def run():
         assign, _, _, stats = louvain_level(
-            spark, sym, mode="superstep", superstep_engine="barrier"
+            spark, sym, local_threshold=0, superstep_engine="barrier"
         )
         assert stats.engine == "barrier"
         return {r["vtx"]: r["comm"] for r in assign.collect()}

@@ -75,7 +75,8 @@ def test_read_corpus_parquet_seam(spark, tmp_path):
 def test_cli_louvain_engine_flags(spark, tmp_path, golden16_df, capsys,
                                   monkeypatch):
     """``plm louvain --help`` parses and offers only the barrier and sql
-    engines (no ``--blocks``, no ``numpy_broadcast``), and ``--engine sql``
+    engines (no ``--blocks``, no ``numpy_broadcast``), takes
+    ``--local-threshold`` in place of ``--mode``, and ``--engine sql``
     reaches ``louvain(superstep_engine="sql")``."""
     from parallel_louvain_method_spark import cli
     from parallel_louvain_method_spark.operators import louvain as L
@@ -86,7 +87,11 @@ def test_cli_louvain_engine_flags(spark, tmp_path, golden16_df, capsys,
     helptext = capsys.readouterr().out
     assert "--engine" in helptext and "{auto,barrier,sql}" in helptext
     assert "--blocks" not in helptext and "numpy_broadcast" not in helptext
-    for bad in (["--blocks", "4"], ["--engine", "numpy_broadcast"]):
+    assert "--local-threshold" in helptext and "--mode" not in helptext
+    for bad in (
+        ["--blocks", "4"], ["--engine", "numpy_broadcast"],
+        ["--mode", "superstep"],
+    ):
         with pytest.raises(SystemExit) as ex:
             cli.main(["louvain", "--edges", "e", "--out", "o", *bad])
         assert ex.value.code == 2, bad
@@ -117,10 +122,10 @@ def test_cli_louvain_sql_skew_salt(spark, tmp_path, golden16_df):
     golden16_df.write.parquet(edges_path)
     out = str(tmp_path / "comms")
     assert main(["louvain", "--edges", edges_path, "--out", out,
-                 "--mode", "superstep", "--engine", "sql",
+                 "--local-threshold", "0", "--engine", "sql",
                  "--skew-salt", "4"]) == 0
     got = {r["vtx"]: r["comm"] for r in spark.read.parquet(out).collect()}
-    ref = louvain(spark, golden16_df, mode="superstep",
+    ref = louvain(spark, golden16_df, local_threshold=0,
                   superstep_engine="sql")
     want = {r["vtx"]: r["comm"] for r in ref.assignment.collect()}
     assert got == want

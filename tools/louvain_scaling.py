@@ -18,10 +18,14 @@ north rule needs evidenced separately from the barrier engine's PASS
 Pair with tools/shuffle_scaling.py (the pure-JVM shuffle ceiling of the
 same box) to attribute any shortfall: if the engine's efficiency matches
 the shuffle ceiling, the residual is the one-box proxy, not the plan.
+
+Usage: ``python tools/louvain_scaling.py``; it takes no arguments and is
+configured by the environment variables ``--help`` lists.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -114,7 +118,27 @@ def run(cpus: int, path: str, nverts: int, engine: str) -> dict:
     raise RuntimeError(out.stderr[-2000:])
 
 
-def main() -> None:
+_ENVIRONMENT = """environment:
+  SCALING_REPOS   repos in the built graph (default 200000: 87M edges)
+  SCALING_FILES   files per repo, the mean-degree knob (default 30)
+  PLM_EDGES       edge parquet path, built when absent
+                  (default /tmp/plm_edges_<repos>_f<files>.parquet)
+  SCALING_LO      cores of the low leg (default 4)
+  SCALING_HI      cores of the high leg (default 16)
+  SCALING_ENGINE  louvain superstep_engine (default sql)
+  SCALING_PRESYM  1: run on the symmetric weight-summed table
+  SCALING_PAIRS   interleaved lo/hi pairs, medians reported (default 1)
+"""
+
+
+def main(argv=None) -> None:
+    # parsed before anything is built: --help and a bad argument start no
+    # Spark session
+    argparse.ArgumentParser(
+        description=__doc__.split("\n\n")[0],
+        epilog=_ENVIRONMENT,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    ).parse_args(argv)
     repos = int(os.environ.get("SCALING_REPOS", "200000"))
     # mean-degree knob: edges/repo = C(files, 2), vertices = repos*files —
     # SCALING_FILES=60 doubles the bench default's mean degree at half the
